@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (sf0.001 smoke → sf0.01 oracle → sf0.1 bench → production paths).
   *
   * Scale notes (100 TB design stance):
-  *   - We return the raw `spark.read.parquet` scan — no cache, no
+  *   - We return the raw parquet file scan — no cache, no
   *     repartition — so Catalyst sees the file source directly and
   *     predicate pushdown + column pruning reach the parquet reader
   *     (`PushedFilters` / `ReadSchema` in `.explain`).
@@ -20,28 +20,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     table roots; nothing here assumes single-file inputs.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  /** Declared-schema read over the once-inferred footer schema: schema
-    * inference (file listing + footer decode, `mergeSchemasInParallel`)
-    * otherwise re-runs on the driver for EVERY `read.parquet` of every
-    * query — a fixed per-query planning tax across the whole bench.
-    * The cache holds SCHEMAS ONLY (metadata, never rows or results),
-    * in-memory per JVM, keyed on (path, length, mtime, nanos-conf) so a
-    * replaced or re-written file re-infers; multi-file table roots fall
-    * back to plain inference. Declaring the inference's own output is
-    * bit-identical to inferring it, so plans (ReadSchema/PushedFilters)
-    * are unchanged. */
+  /** A table read planned from its file's metadata
+    * ([[org.apache.spark.sql.graft.ParquetFiles.table]]): one stat for
+    * file identity and the footer, cached per JVM on that identity, so
+    * a query starts no listing or schema-inference job for its inputs —
+    * inference otherwise re-runs a Spark job for EVERY `read.parquet`
+    * of every query, a fixed per-query planning tax across the whole
+    * bench. A replaced or rewritten file is a new identity and is read
+    * again. The schema is the one inference derives from the same
+    * footer, so plans (ReadSchema/PushedFilters) are unchanged. */
   private def t(name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val f = new java.io.File(path)
-    if (!f.isFile) spark.read.parquet(path)
-    else {
-      val key = (f.getAbsolutePath, f.length, f.lastModified,
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
-      if (Tables.schemaCache.size > 256) Tables.schemaCache.clear()
-      val schema = Tables.schemaCache.computeIfAbsent(key,
-        (_: (String, Long, Long, String)) => spark.read.parquet(path).schema)
-      spark.read.schema(schema).parquet(path)
-    }
+    org.apache.spark.sql.graft.ParquetFiles.table(spark, path)
+      .getOrElse(spark.read.parquet(path))
   }
 
   def region: DataFrame     = t("region")
@@ -87,13 +78,6 @@ final case class Tables(spark: SparkSession, dir: String) {
 
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
-
-  /** See [[Tables.t]]: schemas only, keyed on file identity + the one
-    * conf that changes parquet schema inference. Size-bounded the same
-    * way as SnapshotLog's footer cache — a handful of fixture tables ×
-    * a handful of SF dirs in practice. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, String), org.apache.spark.sql.types.StructType]
 
   /** Spread a SMALL relation across the full shuffle-partition count
     * before a compute-heavy expansion stage (per-row hashing ×

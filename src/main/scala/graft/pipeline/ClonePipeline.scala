@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetFiles
+import org.apache.spark.sql.types._
 
 /** Namespace-clone pipeline — the Spark re-expression of the reference's
   * actual capability (clone_databases.sh: bulk copy of databases under a
@@ -16,7 +18,9 @@ import org.apache.spark.sql.functions._
   *   - optional pre-clone backup (clone_databases.sh:203-217,768-781)
   *     → snapshot write that must succeed before the clone proceeds;
   *   - post-clone verification probes (clone_databases.sh:480-551,
-  *     920-941) → schema equality + row-count read-back;
+  *     920-941) → the footer of every written file: each file's schema
+  *     equals the source's, and the footer row counts sum to the row
+  *     count the copy observed;
   *   - per-run success accounting and summary (clone_databases.sh:
   *     1026-1103) → `Seq[CloneResult]` + report DataFrame.
   *
@@ -27,6 +31,12 @@ import org.apache.spark.sql.functions._
   * rows through the driver. Unlike the reference's strictly sequential
   * per-DB loop (clone_databases.sh:1029), independent tables are
   * submitted as concurrent Spark jobs.
+  *
+  * A parquet table clones in ONE Spark job, the copy itself: the
+  * source is planned from its file statuses and the footer Spark's
+  * inference would read (no inference job, see [[org.apache.spark.sql
+  * .graft.ParquetFiles]]), the source row count is observed during the
+  * copy, and verification reads footers on the driver.
   */
 final case class CloneResult(
     table: String,
@@ -54,8 +64,7 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
     * JDBC source attaches metadata (scale, CHAR/VARCHAR type strings)
     * that a lossless parquet round trip does not preserve, and neither
     * difference is a data-loss condition. */
-  private def relaxed(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+  private def relaxed(s: StructType): StructType = {
     def relax(dt: DataType): DataType = dt match {
       case st: StructType => StructType(st.fields.map(f =>
         f.copy(dataType = relax(f.dataType), nullable = true,
@@ -69,15 +78,22 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
 
   /** Source reader, dispatching on the configured connector: path-based
     * formats read `sourceDir/table`; connector formats (JDBC/Mongo/
-    * custom DSv2) read from options with the table name injected. */
-  private def readSource(table: String): DataFrame =
-    if (config.pathBasedSource)
-      spark.read.format(config.sourceFormat)
-        .options(config.sourceOptions).load(config.sourcePath(table))
-    else
-      spark.read.format(config.sourceFormat)
-        .options(config.sourceOptions + (config.tableOptionKey -> table))
-        .load()
+    * custom DSv2) read from options with the table name injected. A
+    * plain parquet source is planned from its files' metadata, without
+    * the listing and inference jobs of `spark.read`. */
+  private def readSource(table: String): DataFrame = {
+    val plainParquet = config.sourceFormat.equalsIgnoreCase("parquet") &&
+      config.sourceOptions.isEmpty
+    (if (plainParquet) ParquetFiles.table(spark, config.sourcePath(table))
+     else None).getOrElse(
+      if (config.pathBasedSource)
+        spark.read.format(config.sourceFormat)
+          .options(config.sourceOptions).load(config.sourcePath(table))
+      else
+        spark.read.format(config.sourceFormat)
+          .options(config.sourceOptions + (config.tableOptionKey -> table))
+          .load())
+  }
 
   /** Connectivity probe — the `SELECT 1` / `ping` analogue
     * (clone_databases.sh:137-190): cheap read of one source table. */
@@ -163,24 +179,41 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
         .write.mode(if (config.overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
         .parquet(tgt)
       val srcN = obs.get("rows").asInstanceOf[Long]
-
-      // post-clone verification (clone_databases.sh:480-551): read back,
-      // compare schema and row count. Structure (names + types) must
-      // match exactly; nullability is normalized — a connector source
-      // may declare NOT NULL fields that parquet reads back as nullable,
-      // and that physical relaxation is not a data-loss condition.
-      val back = spark.read.parquet(tgt)
-      val schemaOk = relaxed(back.schema) == relaxed(src.schema)
-      val n = back.count()
-      if (!schemaOk || n != srcN)
-        CloneResult(table, tgt, "failed", n, schemaOk, backedUp,
-          s"verification mismatch: rows $n vs $srcN, schema ok = $schemaOk")
-      else CloneResult(table, tgt, "cloned", n, schemaMatches = true, backedUp, "")
+      verify(table, src.schema, srcN).copy(backedUp = backedUp)
     } catch {
       case e: Throwable =>
         CloneResult(table, tgt, "failed", 0L, schemaMatches = false,
           backedUp = false, String.valueOf(e.getMessage))
     }
+  }
+
+  /** Post-clone verification (clone_databases.sh:480-551) from the
+    * footer of every file under the table's target, read on the
+    * driver: each file's schema must equal `sourceSchema`, and the
+    * footer row counts must sum to `sourceRows`. Structure (names +
+    * types) must match exactly; nullability and field metadata are
+    * normalized — a connector source may declare NOT NULL fields that
+    * parquet reads back as nullable, and that physical relaxation is
+    * not a data-loss condition. Checking every file, not one, also
+    * catches a stray part file or one written with another type. */
+  def verify(table: String, sourceSchema: StructType,
+      sourceRows: Long): CloneResult = {
+    val tgt = targetPath(table)
+    val files = ParquetFiles.dataFiles(spark, tgt)
+    val footers = ParquetFiles.footers(
+      spark.sparkContext.hadoopConfiguration, files)
+    val want = relaxed(sourceSchema)
+    val schemaOk = files.nonEmpty && files.zip(footers).forall {
+      case (f, footer) =>
+        relaxed(ParquetFiles.schemaOf(spark, f.getPath, footer)) == want
+    }
+    val n = footers.map(ParquetFiles.rowCount).sum
+    if (!schemaOk || n != sourceRows)
+      CloneResult(table, tgt, "failed", n, schemaOk, backedUp = false,
+        s"verification mismatch: rows $n vs $sourceRows over " +
+          s"${files.size} files, schema ok = $schemaOk")
+    else CloneResult(table, tgt, "cloned", n, schemaMatches = true,
+      backedUp = false, "")
   }
 
   /** Incremental (delta) clone: append only source rows with

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Path}
+import org.apache.spark.sql.graft.ParquetFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1136,10 +1137,8 @@ object SnapshotLog {
       * fill — these return candidate FILES' rows for a key test, not
       * the logical table view; [[asOf]]/[[scanAsOf]] are that). */
     private def readRawAt(files: Seq[String], at: Int): DataFrame = {
-      val w = widenings(at)
-      spark.read.option("basePath", dataDir)
-        .schema(widenSchema(footerSchemaOf(files.head), w))
-        .parquet(files.map(p => s"$dataDir/$p"): _*)
+      relationOf(files, widenSchema(footerSchemaOf(files.head),
+        widenings(at)))
     }
 
     /** Reads: project PHYSICAL columns to the logical view of `v` —
@@ -1404,18 +1403,17 @@ object SnapshotLog {
           dfl.map(d => carriesCol(r, d._1))))
         .toSeq.sortBy { case ((lk, era), _) => (lk, era.mkString) }
         .map { case ((_, era), fs) =>
-          val reader0 = spark.read.option("basePath", dataDir)
-            .option("mergeSchema", mergeSchema.toString)
           val base =
             if (!mergeSchema)
               // declared schema from one CACHED footer: bit-identical
               // to what inference would pick (same head file, same
-              // footer decoder) without inference's per-read Spark job
-              reader0.schema(widenSchema(footerSchemaOf(fs.head), w))
-                .parquet(fs.map(p => s"$dataDir/$p"): _*)
+              // footer decoder) without inference's per-read Spark
+              // job, over manifest statuses without a listing job
+              relationOf(fs, widenSchema(footerSchemaOf(fs.head), w))
             else {
-              val merged =
-                reader0.parquet(fs.map(p => s"$dataDir/$p"): _*)
+              val merged = spark.read.option("basePath", dataDir)
+                .option("mergeSchema", "true")
+                .parquet(fs.map(p => s"$dataDir/$p"): _*)
               merged.select(merged.columns.toIndexedSeq.map(c =>
                 w.get(c).map(t => col(c).cast(t).as(c))
                   .getOrElse(col(c))): _*)
@@ -1428,14 +1426,15 @@ object SnapshotLog {
         .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
     }
 
-    private def readFiles(rels: Seq[String],
+    private[graft] def readFiles(rels: Seq[String],
         mergeSchema: Boolean, at: Int): DataFrame =
       readGroups(rels, at, mergeSchema, identity)
 
     /** [[readFiles]] with (__f, __pos) = (file rel, row position)
       * materialized PER LAYOUT GROUP before the union — `_metadata`
       * is a file-source pseudo-column and does not survive a union. */
-    private def readFilesWithPos(rels: Seq[String], at: Int): DataFrame = {
+    private[graft] def readFilesWithPos(rels: Seq[String],
+        at: Int): DataFrame = {
       val seg = split(input_file_name(), "/")
       readGroups(rels, at, mergeSchema = false, df => df
         .withColumn("__f",
@@ -1512,13 +1511,7 @@ object SnapshotLog {
       writeTmp(df, partCol, tmp, version)
       // adopt with a branch prefix (no version exists yet — the
       // version is assigned at publish time)
-      val added = leaves(tmp).map { case (partDir, file) =>
-        val rel = s"$partDir/b$branch-${file.getName}"
-        val dest = new Path(s"$dataDir/$rel")
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(file, dest), s"rename $file -> $dest failed")
-        rel
-      }
+      val added = adoptAs(tmp, s"b$branch")
       fs.delete(tmp, true)
       val out = fs.create(sp, false)
       try (added.map(Entry(0, "add", _)) ++ statsEntries(0, added))
@@ -1652,6 +1645,15 @@ object SnapshotLog {
       * default, overridable via spark.graft.write.distributeMinBytes. */
     private val DistributeMinBytesDefault = 2L << 20
 
+    /** Caller confs a write session must follow (see [[writeSession]]):
+      * the shape of the write plan, the files' timestamps and codec,
+      * and the file-size cap. */
+    private val WriteConfs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.session.timeZone", "spark.sql.parquet.compression.codec",
+      "spark.sql.files.maxRecordsPerFile", "spark.sql.adaptive.enabled",
+      "spark.graft.write.distributeMinBytes")
+    private val MaxWriteSessions = 8
+
     private def bloomPath(rel: String, c: String): Path =
       new Path(s"$root/index/$rel.$c.bloom")
 
@@ -1683,72 +1685,46 @@ object SnapshotLog {
         .collect().map(_.getLong(0)).toSeq
     }
 
-    /** Per-instance parquet FOOTER cache, keyed by data-relative path.
-      * Adopted files are immutable (adopt() renames exactly once; every
-      * rewrite lands under a fresh `v<N>-` name), so a footer read once
-      * is valid for the table handle's lifetime; files a later commit
-      * retires simply stop being referenced. One commit previously
-      * opened the same footers several times over (stats entries, bloom
-      * sizing, schema probes) and — worse — every multi-file read ran
-      * Spark's schema-INFERENCE job over footers the driver had already
-      * seen; this cache plus [[footerSchemaOf]] feeds all of them from
-      * one driver-side read per file. Bounded defensively: overflow
-      * clears (refill is one ~ms driver read per file), so a
-      * long-lived handle over a churning table cannot hold unbounded
-      * metadata. */
-    private val footerCache = new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.parquet.hadoop.metadata.ParquetMetadata]()
-    private def footerOf(rel: String)
-        : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-      if (footerCache.size > 4096) footerCache.clear()
-      footerCache.computeIfAbsent(rel, { _ =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(s"$dataDir/$rel"), hadoopConf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter finally r.close()
-      })
+    /** Each new file's length from [[adopt]]'s own listing, handed to
+      * [[statsEntries]], which takes it out when it records the
+      * file's `fsize` entry: a rename keeps the length, so the commit
+      * needs no status call per new file. */
+    private val adopted = new java.util.concurrent.ConcurrentHashMap[
+      String, java.lang.Long]()
+
+    private lazy val dataBase = fs.makeQualified(new Path(dataDir))
+
+    /** The FileStatus of each data file from the manifest's `fsize`
+      * entries ([[org.apache.spark.sql.graft.ParquetFiles.statusOf]]),
+      * with one status call only for a file that predates them. The
+      * last fold this JVM resolved answers when it records every file
+      * (a file's length never changes), so a read of known files does
+      * not list the log again. */
+    private def statusesOf(rels: Seq[String]): Seq[FileStatus] = {
+      val sizes = Option(foldCache.get(cacheKey)).map(_._2.fileSizes)
+        .filter(m => rels.forall(m.contains)).getOrElse(fileSizes)
+      rels.map(r => ParquetFiles.statusOf(fs, dataBase, r, sizes.get(r)))
     }
 
     /** The Spark schema of one adopted file, derived DRIVER-SIDE from
       * its (cached) footer through the same decoder Spark's inference
-      * uses — [[org.apache.spark.sql.execution.datasources.parquet
-      * .ParquetFileFormat.readSchemaFromFooter]] prefers the exact
-      * serialized Spark schema every Spark-written footer carries and
-      * falls back to the parquet→Spark type converter for foreign
-      * files. `.asNullable` mirrors what `spark.read.parquet(f).schema`
-      * returns (file relations are nullable on read), so declaring this
-      * schema is bit-identical to the inference it replaces — minus
-      * inference's per-read footer JOB (mergeSchemasInParallel launches
-      * a Spark job even for the one-footer mergeSchema=false case). */
+      * uses, nullable throughout as `spark.read.parquet(f).schema` is
+      * — declaring it is bit-identical to the inference it replaces,
+      * minus inference's per-read footer JOB. */
     private def footerSchemaOf(rel: String)
-        : org.apache.spark.sql.types.StructType = {
-      import org.apache.spark.sql.execution.datasources.parquet._
-      val footer = new org.apache.parquet.hadoop.Footer(
-        new Path(s"$dataDir/$rel"), footerOf(rel))
-      val conv = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-      val raw = ParquetFileFormat.readSchemaFromFooter(footer, conv)
-      // recursively nullable, not a top-level copy(nullable = true):
-      // the schema this replaces (spark.read.parquet(f).schema)
-      // relaxes NESTED slots too (struct fields, array containsNull,
-      // map valueContainsNull) — a multi-file read null-fills nested
-      // slots a single footer declared non-nullable (StructType
-      // .asNullable is private[sql], so mirror it here)
-      import org.apache.spark.sql.types._
-      def relax(dt: DataType): DataType = dt match {
-        case StructType(fields) => StructType(fields.map(f =>
-          f.copy(dataType = relax(f.dataType), nullable = true)))
-        case ArrayType(et, _) => ArrayType(relax(et), containsNull = true)
-        case MapType(kt, vt, _) =>
-          MapType(relax(kt), relax(vt), valueContainsNull = true)
-        case other => other
-      }
-      relax(raw).asInstanceOf[StructType]
-    }
+        : org.apache.spark.sql.types.StructType =
+      ParquetFiles.schema(spark, statusesOf(Seq(rel)).head)
 
-    private def footerRowCount(rel: String): Long = {
-      import scala.jdk.CollectionConverters._
-      footerOf(rel).getBlocks.asScala.map(_.getRowCount).sum
-    }
+    /** A parquet relation over data files with no listing job:
+      * statuses from [[statusesOf]], partition columns discovered
+      * under `dataDir` with inferred types, as
+      * `spark.read.option("basePath", dataDir).parquet(files)` reads
+      * them — which lists every file, and above 32 paths does it in a
+      * Spark job. */
+    private def relationOf(rels: Seq[String],
+        dataSchema: org.apache.spark.sql.types.StructType): DataFrame =
+      ParquetFiles.relation(spark, statusesOf(rels), Some(dataDir),
+        dataSchema)
 
     /** Build one bloom sidecar per (adopted file, indexed column) in a
       * SINGLE distributed pass per column: hash → k positions → 64-bit
@@ -1761,16 +1737,18 @@ object SnapshotLog {
       * conservatively (kept), never wrongly. */
     private def buildBlooms(v: Int, added: Seq[String]): Unit = {
       if (bloomCols.isEmpty || added.isEmpty) return
-      val files = added.map(p => s"$dataDir/$p")
-      val df = spark.read.option("basePath", dataDir)
-        .schema(footerSchemaOf(added.head)).parquet(files: _*)
+      val sts = statusesOf(added)
+      val df = ParquetFiles.relation(spark, sts, Some(dataDir),
+        ParquetFiles.schema(spark, sts.head))
       val present = bloomCols.filter(df.columns.contains)
       if (present.isEmpty) return
       // per-file m from footer row counts (metadata-only), rounded to
       // whole 64-bit words
-      val mByFile: Map[String, Long] = added.map { rel =>
-        val n = math.max(1L, footerRowCount(rel))
-        rel -> (((n * BloomBitsPerRow + 63) / 64) * 64)
+      val mByFile: Map[String, Long] = added.zip(sts).map {
+        case (rel, st) =>
+          val n = math.max(1L, ParquetFiles.rowCount(
+            ParquetFiles.footer(hadoopConf, st)))
+          rel -> (((n * BloomBitsPerRow + 63) / 64) * 64)
       }.toMap
       val seg = split(input_file_name(), "/")
       val rel = concat_ws("/", element_at(seg, -2), element_at(seg, -1))
@@ -1917,17 +1895,18 @@ object SnapshotLog {
 
     /** Zone-map `stats`/`stats_s` entries for freshly adopted files,
       * plus an `fsize` entry per file: recording the byte length in
-      * the manifest at commit time (one status call per NEW file,
-      * delta-scale) is what lets read PLANNING build its FileStatus
+      * the manifest at commit time (carried over from adopt's own
+      * listing through [[adopted]]) is what lets read PLANNING build its FileStatus
       * set from the log fold alone — at 100 TB, one RPC per live file
       * per query is the planning cost production formats eliminated
       * by putting sizes in the manifest (Delta's add.size, Iceberg's
       * file_size_in_bytes). */
     private def statsEntries(v: Int, added: Seq[String]): Seq[Entry] =
       added.flatMap { rel =>
-        val p = new Path(s"$dataDir/$rel")
-        val (longs, strs, nulls) = footerStats(rel)
-        Entry(v, "fsize", s"$rel|${fs.getFileStatus(p).getLen}") +:
+        val st = ParquetFiles.statusOf(fs, dataBase, rel,
+          Option(adopted.remove(rel)).map(_.longValue))
+        val (longs, strs, nulls) = footerStats(st)
+        Entry(v, "fsize", s"$rel|${st.getLen}") +:
           (longs.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
             Entry(v, "stats", s"$rel|$c|$lo|$hi")
           } ++ strs.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
@@ -2051,11 +2030,11 @@ object SnapshotLog {
       * pruning comparison is Java-String-wise — the orders agree
       * exactly on ASCII, so a non-ASCII bound gets no stat rather than
       * a wrong one. */
-    private def footerStats(rel: String):
+    private def footerStats(st: FileStatus):
         (Map[String, (Long, Long)], Map[String, (String, String)],
           Map[String, (Long, Long)]) = {
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      val footer = footerOf(rel)
+      val footer = ParquetFiles.footer(hadoopConf, st)
       locally {
         import scala.jdk.CollectionConverters._
         val accL = scala.collection.mutable.Map[String, (Long, Long)]()
@@ -2226,52 +2205,59 @@ object SnapshotLog {
     }
 
     /** The micros-pinned write session, cloned ONCE per (caller
-      * session, shuffle-partition setting) instead of per commit: the
-      * clone copies the full session state (conf, catalog, listener
+      * session, write-shaping confs) instead of per commit: the clone
+      * copies the full session state (conf, catalog, listener
       * registrations) — pure driver overhead paid on every commit of
-      * every fixture-building query. Keyed by the caller's session
-      * (a Table handle can serve cloned SQL sessions too) AND its live
-      * `spark.sql.shuffle.partitions`, the one conf commit callers
-      * change dynamically (the streaming harness drops it to 8 around
-      * its foreachBatch commits) that shapes the write plan; every
-      * other relevant conf is session-static, so a cached clone never
-      * goes stale. */
+      * every fixture-building query. A clone freezes the caller's
+      * confs, so the key carries every caller conf that shapes a
+      * write ([[WriteConfs]]): a caller that changes one (the
+      * streaming harness drops the shuffle partitions to 8 around its
+      * foreachBatch commits) gets a clone that honors it. Bounded: at
+      * [[MaxWriteSessions]] the map starts over, so a caller cycling
+      * through conf values or sessions cannot pin them all. */
     @transient private var writeSessions =
-      Map.empty[(SparkSession, String), SparkSession]
+      Map.empty[(SparkSession, Seq[Option[String]]), SparkSession]
     private def writeSession(caller: SparkSession): SparkSession =
       synchronized {
-        val key = (caller,
-          caller.conf.getOption("spark.sql.shuffle.partitions")
-            .getOrElse(""))
+        val key = (caller, WriteConfs.map(caller.conf.getOption))
         writeSessions.getOrElse(key, {
           val ws = org.apache.spark.sql.graft.SparkInternals
             .cloneSession(caller)
           ws.conf.set("spark.sql.parquet.outputTimestampType",
             "TIMESTAMP_MICROS")
+          if (writeSessions.size >= MaxWriteSessions)
+            writeSessions = Map.empty
           writeSessions += key -> ws
           ws
         })
       }
 
     /** List the `part=val/part-*.parquet` leaves Spark wrote under
-      * `tmp`, relative to `tmp`. */
-    private def leaves(tmp: Path): Seq[(String, Path)] = {
+      * `tmp`: (partition dir name, file status). */
+    private def leaves(tmp: Path): Seq[(String, FileStatus)] = {
       val parts = fs.listStatus(tmp).filter(_.isDirectory)
       parts.flatMap { d =>
         fs.listStatus(d.getPath)
           .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => (d.getPath.getName, f.getPath))
-      }.toSeq.sortBy { case (d, f) => (d, f.getName) }
+          .map(f => (d.getPath.getName, f))
+      }.toSeq.sortBy { case (d, f) => (d, f.getPath.getName) }
     }
 
     /** Move Spark-written leaves into the unified data tree with a
       * version prefix; returns the relative paths added. */
     private def adopt(tmp: Path, v: Int): Seq[String] =
+      adoptAs(tmp, s"v$v")
+
+    /** [[adopt]] under any name prefix. Each file's length goes from
+      * the listing into [[adopted]] for [[statsEntries]]. */
+    private def adoptAs(tmp: Path, prefix: String): Seq[String] =
       leaves(tmp).map { case (partDir, file) =>
-        val rel = s"$partDir/v$v-${file.getName}"
+        val rel = s"$partDir/$prefix-${file.getPath.getName}"
         val dest = new Path(s"$dataDir/$rel")
         fs.mkdirs(dest.getParent)
-        require(fs.rename(file, dest), s"rename $file -> $dest failed")
+        require(fs.rename(file.getPath, dest),
+          s"rename ${file.getPath} -> $dest failed")
+        adopted.put(rel, file.getLen)
         rel
       }
 
@@ -3376,7 +3362,7 @@ object SnapshotLog {
       * for every reader AND double-counting them in the change feed.
       * Production formats apply DVs in every rewrite (Delta OPTIMIZE /
       * MERGE, Iceberg rewrites) for exactly this reason. */
-    private def readFilesMorAt(v: Int, rels: Seq[String],
+    private[graft] def readFilesMorAt(v: Int, rels: Seq[String],
         mergeSchema: Boolean = false): DataFrame = {
       val dvs = dvFor(v).filter { case (rel, _) => rels.contains(rel) }
       if (dvs.isEmpty) readFiles(rels, mergeSchema, v)

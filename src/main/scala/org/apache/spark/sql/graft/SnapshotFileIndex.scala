@@ -69,23 +69,19 @@ final class SnapshotFileIndex(
     * byte length (`fsize` log entries), so the FileStatus set Spark's
     * split planning needs is pure log-fold arithmetic — zero
     * per-query filesystem calls for any file a current commit wrote
-    * (Delta's add.size / Iceberg's file_size_in_bytes move). Files
-    * predating the entry type fall back to one status call each.
-    * Fabricated statuses carry modtime 0 — batch parquet planning
-    * uses only path + length (locality/streaming would need more). */
-  private lazy val statusFor: Map[String, FileStatus] = {
-    // qualify the BASE once: per-file makeQualified walks the
-    // FileSystem's URI/working-dir resolution and dominates first-plan
-    // cost at 10^5 files (measured ~1.8 s; ~0.3 s resolved once)
-    val base = fs.makeQualified(new Path(dataDir))
-    files.map { r =>
-      r -> (sizes.get(r) match {
-        case Some(len) =>
-          new FileStatus(len, false, 1, 134217728L, 0L, new Path(base, r))
-        case None => fs.getFileStatus(new Path(s"$dataDir/$r"))
-      })
-    }.toMap
-  }
+    * (Delta's add.size / Iceberg's file_size_in_bytes move), built by
+    * [[ParquetFiles.statusOf]]. Statuses are made only for the files
+    * that survive pruning. A file predating the entry type costs one
+    * status call per index, remembered in [[statted]]. */
+  private def statusOf(r: String): FileStatus =
+    if (sizes.contains(r)) ParquetFiles.statusOf(fs, base, r, sizes.get(r))
+    else statted.computeIfAbsent(r, _ =>
+      ParquetFiles.statusOf(fs, base, r, None))
+
+  private val statted =
+    new java.util.concurrent.ConcurrentHashMap[String, FileStatus]()
+
+  private lazy val base = fs.makeQualified(new Path(dataDir))
 
   /** Each file's partition values in `partitionSchema` order, parsed
     * from its own `col=value` path segments (files are grouped by
@@ -276,7 +272,7 @@ final class SnapshotFileIndex(
       .map { case (vals, fsOfPart) =>
         PartitionDirectory(
           new GenericInternalRow(vals.toArray),
-          fsOfPart.sorted.map(statusFor).toArray)
+          fsOfPart.sorted.map(statusOf).toArray)
       }
   }
 
@@ -286,5 +282,5 @@ final class SnapshotFileIndex(
   override def refresh(): Unit = ()
 
   override lazy val sizeInBytes: Long =
-    statusFor.valuesIterator.map(_.getLen).sum
+    files.map(r => sizes.getOrElse(r, statusOf(r).getLen)).sum
 }

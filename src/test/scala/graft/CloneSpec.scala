@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.pipeline.{CloneConfig, ClonePipeline, ConnectorOptions}
+import org.apache.spark.graft.JobCount
 
 /** Reference-semantics battery (SURVEY.md §5.2(4)): clone with prefix,
   * skip-if-exists idempotency, backup gating, post-write verification,
@@ -30,6 +31,51 @@ class CloneSpec extends SparkSpec {
     assert(cloned.count() == src.count())
     // content identity as multiset (clone is identity on content)
     assert(cloned.exceptAll(src).isEmpty && src.exceptAll(cloned).isEmpty)
+  }
+
+  test("a parquet clone starts one Spark job per table: the copy") {
+    val tables = Seq("region.parquet", "nation.parquet", "supplier.parquet")
+    val cfg = freshCfg().copy(tables = tables)
+    val (results, jobs) = JobCount(spark)(ClonePipeline(spark, cfg).run())
+    assert(results.forall(_.status == "cloned"), results.mkString("; "))
+    assert(jobs == tables.size, s"$jobs jobs for ${tables.size} tables")
+  }
+
+  test("verification fails a target with an extra part file or a retyped column") {
+    import org.apache.spark.sql.functions.col
+    val cfg = freshCfg().copy(tables = Seq("region.parquet"))
+    val pipe = ClonePipeline(spark, cfg)
+    assert(pipe.run().forall(_.status == "cloned"))
+    val src = spark.read.parquet(s"$sf/region.parquet")
+    val n = src.count()
+    val tgt = new java.io.File(s"${cfg.targetDir}/preprod_region.parquet")
+    assert(pipe.verify("region.parquet", src.schema, n).status == "cloned")
+
+    val part = tgt.listFiles.filter(_.getName.startsWith("part-")).head
+    val extra = new java.io.File(tgt, "part-99999-extra.parquet")
+    Files.copy(part.toPath, extra.toPath)
+    val withExtra = pipe.verify("region.parquet", src.schema, n)
+    assert(withExtra.status == "failed" && withExtra.rows == 2 * n &&
+      withExtra.schemaMatches, withExtra.toString)
+    assert(extra.delete())
+
+    src.withColumn("r_regionkey", col("r_regionkey").cast("string"))
+      .write.mode("overwrite").parquet(tgt.getPath)
+    val retyped = pipe.verify("region.parquet", src.schema, n)
+    assert(retyped.status == "failed" && retyped.rows == n &&
+      !retyped.schemaMatches, retyped.toString)
+  }
+
+  test("an empty source table clones and passes verification") {
+    val srcDir = Files.createTempDirectory("graft_clone_empty_src_").toString
+    spark.read.parquet(s"$sf/region.parquet").limit(0)
+      .write.parquet(s"$srcDir/empty.parquet")
+    val cfg = freshCfg().copy(sourceDir = srcDir, tables = Seq("empty.parquet"))
+    val results = ClonePipeline(spark, cfg).run()
+    assert(results.map(r => (r.status, r.rows, r.schemaMatches)) ==
+      Seq(("cloned", 0L, true)), results.mkString("; "))
+    assert(spark.read.parquet(s"${cfg.targetDir}/preprod_empty.parquet")
+      .schema == spark.read.parquet(s"$srcDir/empty.parquet").schema)
   }
 
   test("re-run is an idempotent skip (clone_databases.sh:227-231)") {

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
-/** The Tables schema cache declares the once-inferred footer schema on
-  * every subsequent read — the declared read must be indistinguishable
-  * from plain inference (same schema incl. nullability/nested types,
-  * same rows), and the events NTZ normalization must still apply on
-  * top of it. */
+/** Tables reads declare the schema decoded from the file's cached
+  * footer instead of inferring it — the declared read must be
+  * indistinguishable from plain inference (same schema incl.
+  * nullability/nested types, same rows), and the events NTZ
+  * normalization must still apply on top of it. */
 class TablesSchemaCacheSpec extends SparkSpec {
 
   test("declared-schema reads are schema- and row-identical to plain inference") {

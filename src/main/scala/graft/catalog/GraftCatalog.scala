@@ -18,7 +18,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** SQL-addressable snapshot tables: a DSv2 [[TableCatalog]] that
   * exposes [[SnapshotLog.Table]]s to the full SQL front end —
@@ -771,47 +771,24 @@ private[catalog] final class GraftSqlTable(tableName: String,
       case Array(In(a, vs)) => morKeyDelete(a, vs.toIndexedSeq)
       case fs if fs.nonEmpty =>
         // conjunction of bounds on a single integer-family column
-        val cols = fs.flatMap {
-          case EqualTo(a, _) => Some(a)
-          case GreaterThan(a, _) => Some(a)
-          case GreaterThanOrEqual(a, _) => Some(a)
-          case LessThan(a, _) => Some(a)
-          case LessThanOrEqual(a, _) => Some(a)
+        def cmp(a: String, op: String, v: Any) =
+          asLong(v).map(KeyRange.Longs.cmp(a, op, _))
+        val ranges = fs.toSeq.map {
+          case EqualTo(a, v) => cmp(a, "=", v)
+          case GreaterThan(a, v) => cmp(a, ">", v)
+          case GreaterThanOrEqual(a, v) => cmp(a, ">=", v)
+          case LessThan(a, v) => cmp(a, "<", v)
+          case LessThanOrEqual(a, v) => cmp(a, "<=", v)
           case _ => None
-        }.distinct
-        if (cols.length != 1 || fs.exists {
-          case EqualTo(_, v) => asLong(v).isEmpty
-          case GreaterThan(_, v) => asLong(v).isEmpty
-          case GreaterThanOrEqual(_, v) => asLong(v).isEmpty
-          case LessThan(_, v) => asLong(v).isEmpty
-          case LessThanOrEqual(_, v) => asLong(v).isEmpty
-          case _ => true
-        }) None
+        }
+        if (ranges.exists(_.isEmpty) ||
+            ranges.flatten.map(_.col).distinct.length != 1) None
         else {
-          var lo = Long.MinValue
-          var hi = Long.MaxValue
-          var empty = false // `k > MaxValue` matches nothing; +1 would
-          //                   WRAP to MinValue and delete everything
-          fs.foreach {
-            case EqualTo(_, v) =>
-              lo = math.max(lo, asLong(v).get)
-              hi = math.min(hi, asLong(v).get)
-            case GreaterThan(_, v) =>
-              val x = asLong(v).get
-              if (x == Long.MaxValue) empty = true
-              else lo = math.max(lo, x + 1)
-            case GreaterThanOrEqual(_, v) => lo = math.max(lo, asLong(v).get)
-            case LessThan(_, v) =>
-              val x = asLong(v).get
-              if (x == Long.MinValue) empty = true
-              else hi = math.min(hi, x - 1)
-            case LessThanOrEqual(_, v) => hi = math.min(hi, asLong(v).get)
-            case _ => ()
-          }
-          if (empty || lo > hi) Some(() => ()) // provably zero rows
+          val range = ranges.flatten.reduce(_ intersect _)
+          if (range.isEmpty) Some(() => ()) // provably zero rows
           else {
-            val (c, pc, l, h) = (cols(0), partColOrFail, lo, hi)
-            Some(() => { log.commitDeleteRange(pc, c, l, h); () })
+            val pc = partColOrFail
+            Some(() => { log.commitDeleteRange(pc, range); () })
           }
         }
       case _ => None

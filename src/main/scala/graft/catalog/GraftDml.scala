@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import graft.sources.KeyRange
 
 /** SQL `MERGE INTO` for graft catalog tables — the Delta pattern: a
   * post-hoc RESOLUTION rule (installed by [[graft.GraftExtensions]])
@@ -84,11 +86,11 @@ object GraftMergeRule extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  /** `UPDATE t SET ... WHERE <bounds on one integer column>` →
-    * [[graft.sources.SnapshotLog.Table.commitUpdateRange]] (the
-    * zone-map-pruned COW). Bounds extractor: a conjunction of
-    * comparisons between ONE column and integer literals. */
-  private def rangeOf(cond: Expression): Option[(String, Long, Long)] = {
+  /** Bounds extractor for integer-keyed UPDATE ranges: a conjunction
+    * of comparisons between ONE column and integer literals, as the
+    * intersection of [[KeyRange.Longs.cmp]] ranges (so `k > MaxValue`
+    * is empty, never wrapped). */
+  private def rangeOf(cond: Expression): Option[KeyRange.Longs] = {
     // literals arrive Cast-wrapped (`k >= 2` resolves as
     // `k >= CAST(2 AS BIGINT)`): any foldable integer-family
     // expression is a literal for our purposes
@@ -110,38 +112,26 @@ object GraftMergeRule extends Rule[LogicalPlan] {
         case _ => None
       }
     }
+    def cmp(a: Expression, op: String, v: Expression)
+        : Option[KeyRange.Longs] =
+      for { n <- nameOf(a); x <- longLit(v) }
+        yield KeyRange.Longs.cmp(n, op, x)
     import org.apache.spark.sql.catalyst.expressions._
-    def bounds(e: Expression): Option[(String, Long, Long)] = e match {
+    def bounds(e: Expression): Option[KeyRange.Longs] = e match {
       case Between(input, lower, upper, _) =>
         bounds(And(GreaterThanOrEqual(input, lower),
           LessThanOrEqual(input, upper)))
       case And(l, r) =>
-        for { (cl, ll, hl) <- bounds(l); (cr, lr, hr) <- bounds(r)
-          if cl.equalsIgnoreCase(cr) }
-          yield (cl, math.max(ll, lr), math.min(hl, hr))
+        for { a <- bounds(l); b <- bounds(r)
+          if a.col.equalsIgnoreCase(b.col) } yield a.intersect(b)
       // the literal-side guard makes the reversed (`2 = k`) arm
       // reachable: an unguarded first arm would swallow every EqualTo
-      case EqualTo(a, v) if longLit(v).isDefined =>
-        for { n <- nameOf(a) } yield (n, longLit(v).get, longLit(v).get)
-      case EqualTo(v, a) if longLit(v).isDefined =>
-        for { n <- nameOf(a) } yield (n, longLit(v).get, longLit(v).get)
-      // `k > Long.MaxValue` matches nothing: +1 would WRAP to
-      // MinValue and silently update every row. An inverted range
-      // (lo > hi) is the honest encoding — the command no-ops on it.
-      case GreaterThan(a, v) =>
-        for { n <- nameOf(a); x <- longLit(v) }
-          yield if (x == Long.MaxValue) (n, 1L, 0L)
-          else (n, x + 1, Long.MaxValue)
-      case GreaterThanOrEqual(a, v) =>
-        for { n <- nameOf(a); x <- longLit(v) }
-          yield (n, x, Long.MaxValue)
-      case LessThan(a, v) =>
-        for { n <- nameOf(a); x <- longLit(v) }
-          yield if (x == Long.MinValue) (n, 1L, 0L)
-          else (n, Long.MinValue, x - 1)
-      case LessThanOrEqual(a, v) =>
-        for { n <- nameOf(a); x <- longLit(v) }
-          yield (n, Long.MinValue, x)
+      case EqualTo(a, v) if longLit(v).isDefined => cmp(a, "=", v)
+      case EqualTo(v, a) if longLit(v).isDefined => cmp(a, "=", v)
+      case GreaterThan(a, v) => cmp(a, ">", v)
+      case GreaterThanOrEqual(a, v) => cmp(a, ">=", v)
+      case LessThan(a, v) => cmp(a, "<", v)
+      case LessThanOrEqual(a, v) => cmp(a, "<=", v)
       case _ => None
     }
     bounds(cond)
@@ -149,14 +139,14 @@ object GraftMergeRule extends Rule[LogicalPlan] {
 
   /** Bounds extractor for STRING- and DATE-keyed UPDATE ranges:
     * a conjunction of comparisons between ONE column and same-type
-    * foldable literals → (kind, column, lo, hi) with INCLUSIVE prune
-    * bounds (strictness lives in the row predicate — the statement's
-    * own WHERE rides along to the commit, so `< 'm'` prunes with
-    * hi='m' but updates only rows genuinely below it). Dates are
-    * carried as epoch-day ints (the zone-map convention). Both bounds
-    * are required — that is what makes the shape zone-map-prunable. */
-  private def typedRangeOf(cond: Expression)
-      : Option[(String, String, String, String)] = {
+    * foldable literals → a [[KeyRange.Strings]] or [[KeyRange.Dates]]
+    * with INCLUSIVE prune bounds (strictness lives in the row
+    * predicate — the statement's own WHERE rides along to the commit,
+    * so `< 'm'` prunes with hi='m' but updates only rows genuinely
+    * below it). Dates are carried as epoch-day ints (the zone-map
+    * convention). Both bounds are required — that is what makes the
+    * shape zone-map-prunable. */
+  private def typedRangeOf(cond: Expression): Option[KeyRange] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.{DateType, StringType}
     def litOf(e: Expression): Option[(String, String)] =
@@ -201,7 +191,9 @@ object GraftMergeRule extends Rule[LogicalPlan] {
       case _ => None
     }
     walk(cond).collect {
-      case B(c, k, Some(lo), Some(hi)) => (k, c, lo, hi)
+      case B(c, "str", Some(lo), Some(hi)) => KeyRange.Strings(c, lo, hi)
+      case B(c, _, Some(lo), Some(hi)) =>
+        KeyRange.Dates(c, lo.toInt, hi.toInt)
     }
   }
 
@@ -233,20 +225,21 @@ object GraftMergeRule extends Rule[LogicalPlan] {
 
   /** Shape dispatch for SQL UPDATE (round 15 — DELETE parity):
     *  - partition equality / IN on the partition column →
-    *    [[GraftUpdatePartitionsCommand]] (directory-prefix victims —
-    *    partition values have no per-file zone maps, the layout IS the
-    *    index);
+    *    [[GraftUpdateCommand]] over a [[KeyRange.Partitions]]
+    *    (directory-prefix victims — partition values have no per-file
+    *    zone maps, the layout IS the index);
     *  - `key IN (list | subquery)` on a non-partition column →
     *    [[GraftUpdateKeysCommand]]: the candidate-pruned keyed rewrite
     *    through the CDC commit, O(candidate files), never a table
     *    scan;
     *  - otherwise, per-column bounds from the WHERE's conjunction —
-    *    prune on the BEST-bounded column (two-sided integer range
-    *    first, then string/date, then a one-sided integer bound), the
-    *    statement's FULL WHERE riding along as the exact row
-    *    predicate. A column whose bounds are provably empty
-    *    (`k > 5 AND k < 3`) makes the whole conjunction false →
-    *    no-op, no commit (mirrors DELETE's provably-empty contract).
+    *    [[GraftUpdateCommand]] pruning on the BEST-bounded column
+    *    (two-sided integer range first, then string/date, then a
+    *    one-sided integer bound), the statement's FULL WHERE riding
+    *    along as the exact row predicate. A column whose bounds are
+    *    provably empty (`k > 5 AND k < 3`) makes the whole conjunction
+    *    false → no-op, no commit (mirrors DELETE's provably-empty
+    *    contract).
     *  Anything else refuses loudly — a silent table rewrite would
     *  betray the cost model. */
   private def updatePlanFor(t: GraftSqlTable, cond: Expression,
@@ -263,12 +256,12 @@ object GraftMergeRule extends Rule[LogicalPlan] {
     cond match {
       case EqualTo(a, v) if nameOf(a).exists(_.equalsIgnoreCase(pc)) &&
           strLit(v).isDefined =>
-        GraftUpdatePartitionsCommand(t.rootPath, pc,
-          Seq(strLit(v).get), set, rowPred)
+        GraftUpdateCommand(t.rootPath, pc,
+          KeyRange.Partitions(pc, Seq(strLit(v).get)), set, rowPred)
       case In(a, vs) if nameOf(a).exists(_.equalsIgnoreCase(pc)) &&
           vs.nonEmpty && vs.forall(strLit(_).isDefined) =>
-        GraftUpdatePartitionsCommand(t.rootPath, pc,
-          vs.flatMap(strLit(_)), set, rowPred)
+        GraftUpdateCommand(t.rootPath, pc,
+          KeyRange.Partitions(pc, vs.flatMap(strLit(_))), set, rowPred)
       case InSubquery(Seq(a), lq: ListQuery)
           if a.resolved && lq.plan.resolved && lq.outerAttrs.isEmpty =>
         val keyCol = nameOf(a).getOrElse(unsupported(
@@ -312,24 +305,12 @@ object GraftMergeRule extends Rule[LogicalPlan] {
           .map { case (_, es) => es.map(_._2).reduce(And(_, _)) }
         val ints = groups.flatMap(rangeOf)
         val typed = groups.flatMap(typedRangeOf)
-        def intCmd(c: String, lo: Long, hi: Long): LogicalPlan =
-          if (lo > hi) GraftUpdateNoopCommand(t.rootPath)
-          else GraftUpdateCommand(t.rootPath, pc, c, lo, hi, set,
-            Some(rowPred))
-        ints.find { case (_, lo, hi) =>
-          lo > hi || (lo != Long.MinValue && hi != Long.MaxValue) }
-          .map { case (c, lo, hi) => intCmd(c, lo, hi) }
-          .orElse(typed.headOption.map {
-            case ("str", c, lo, hi) =>
-              GraftUpdateStrCommand(t.rootPath, pc, c, lo, hi, set,
-                rowPred)
-            case (_, c, lo, hi) =>
-              GraftUpdateDateCommand(t.rootPath, pc, c,
-                lo.toInt, hi.toInt, set, rowPred)
-          })
-          .orElse(ints.headOption.map {
-            case (c, lo, hi) => intCmd(c, lo, hi) })
+        val range = ints.find(r => r.isEmpty ||
+            (r.lo != Long.MinValue && r.hi != Long.MaxValue))
+          .orElse(typed.headOption)
+          .orElse(ints.headOption)
           .getOrElse(unsupported(s"condition ${cond.sql}"))
+        GraftUpdateCommand(t.rootPath, pc, range, set, rowPred)
     }
   }
 
@@ -658,8 +639,7 @@ final case class GraftMergeCondCommand(root: String, partCol: String,
       s"MERGE target has ${dup(0).getLong(1)} rows for matched key " +
         s"${dup(0).get(0)}: deduplicate the target first")
 
-    def cc(e: Expression): Column =
-      org.apache.spark.sql.graftbridge.ColumnBridge.column(e)
+    def cc(e: Expression): Column = ColumnBridge.column(e)
     // first-match-wins: one shared when-chain shape drives both the
     // op tag and every column's value, so a row can never take
     // clause A's op with clause B's values
@@ -762,46 +742,26 @@ final case class GraftDeleteKeysCommand(root: String, keyCol: String,
   }
 }
 
-/** SQL UPDATE → the zone-map-pruned COW range update; the statement's
-  * FULL WHERE (which implies the prune bounds by construction) rides
-  * along as the exact row predicate, so multi-column conjunctions
-  * prune on the bounded column and stay row-exact on the rest. */
-final case class GraftUpdateCommand(root: String, partCol: String,
-    c: String, lo: Long, hi: Long, set: Map[String, Expression],
-    cond: Option[GraftExpr] = None)
-    extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftSqlTable.handleFor(spark, root)
-    t.commitUpdateRange(partCol, c, lo, hi,
-      set.map { case (k, e) =>
-        k -> org.apache.spark.sql.graftbridge.ColumnBridge.column(e) },
-      cond.map(x =>
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(x.e)))
-    Seq.empty
-  }
-}
-
-/** A provably-empty UPDATE predicate (`k > 5 AND k < 3`): zero rows,
-  * no commit — mirrors the DELETE path's provably-empty contract
+/** SQL UPDATE → [[graft.sources.SnapshotLog.Table.commitUpdate]], the
+  * COW rewrite of `range`'s candidate files. The statement's FULL WHERE
+  * (which implies the range by construction) rides along as the exact
+  * row predicate, so multi-column conjunctions prune on the bounded
+  * column and stay row-exact on the rest, and the inclusive prune
+  * bounds never leak strictness into the rows. A provably-empty
+  * integer range (`k > 5 AND k < 3`, `k > Long.MaxValue`) is zero
+  * rows and no commit — the DELETE path's provably-empty contract
   * (overflow/crossed bounds must never degrade into a rewrite). */
-final case class GraftUpdateNoopCommand(root: String)
+final case class GraftUpdateCommand(root: String, partCol: String,
+    range: KeyRange, set: Map[String, Expression], cond: GraftExpr)
     extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = Seq.empty
-}
-
-/** `UPDATE t SET … WHERE part = 'x' / part IN (…)` → the
-  * partition-scoped COW ([[graft.sources.SnapshotLog.Table
-  * .commitUpdatePartitions]]): victims are the named partitions'
-  * directory prefixes, blast radius = those partitions. */
-final case class GraftUpdatePartitionsCommand(root: String,
-    partCol: String, values: Seq[String], set: Map[String, Expression],
-    cond: GraftExpr) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftSqlTable.handleFor(spark, root)
-    t.commitUpdatePartitions(partCol, values,
-      set.map { case (k, e) =>
-        k -> org.apache.spark.sql.graftbridge.ColumnBridge.column(e) },
-      Some(org.apache.spark.sql.graftbridge.ColumnBridge.column(cond.e)))
+    range match {
+      case r: KeyRange.Longs if r.isEmpty => ()
+      case _ =>
+        GraftSqlTable.handleFor(spark, root).commitUpdate(partCol, range,
+          set.map { case (k, e) => k -> ColumnBridge.column(e) },
+          Some(ColumnBridge.column(cond.e)))
+    }
     Seq.empty
   }
 }
@@ -834,8 +794,7 @@ final case class GraftUpdateKeysCommand(root: String, partCol: String,
       s"UPDATE SET targets unknown column $k"))
     val changes = matched.select(sch.fields.toIndexedSeq.map(f =>
       set.get(f.name)
-        .map(e => org.apache.spark.sql.graftbridge.ColumnBridge
-          .column(e).cast(f.dataType).as(f.name))
+        .map(e => ColumnBridge.column(e).cast(f.dataType).as(f.name))
         .getOrElse(col(f.name))): _*)
       .withColumn("__op", lit("U"))
       // victims-sized by construction; pin so the commit's several
@@ -853,34 +812,3 @@ final case class GraftUpdateKeysCommand(root: String, partCol: String,
   * commit time (the GraftUpdateCommand Map escapes that walk the
   * same way). */
 final case class GraftExpr(e: Expression)
-
-/** SQL UPDATE with STRING bounds → the string-zone-map-pruned COW;
-  * the statement's own WHERE rides along as the exact row predicate
-  * (prune bounds are inclusive-widened, strictness must not leak). */
-final case class GraftUpdateStrCommand(root: String, partCol: String,
-    c: String, lo: String, hi: String, set: Map[String, Expression],
-    cond: GraftExpr) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftSqlTable.handleFor(spark, root)
-    t.commitUpdateRangeStr(partCol, c, lo, hi,
-      set.map { case (k, e) =>
-        k -> org.apache.spark.sql.graftbridge.ColumnBridge.column(e) },
-      Some(org.apache.spark.sql.graftbridge.ColumnBridge.column(cond.e)))
-    Seq.empty
-  }
-}
-
-/** SQL UPDATE with DATE bounds → epoch-day zone maps prune, the
-  * statement's WHERE is the row predicate. */
-final case class GraftUpdateDateCommand(root: String, partCol: String,
-    c: String, loDays: Int, hiDays: Int, set: Map[String, Expression],
-    cond: GraftExpr) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftSqlTable.handleFor(spark, root)
-    t.commitUpdateRangeDate(partCol, c, loDays, hiDays,
-      set.map { case (k, e) =>
-        k -> org.apache.spark.sql.graftbridge.ColumnBridge.column(e) },
-      Some(org.apache.spark.sql.graftbridge.ColumnBridge.column(cond.e)))
-    Seq.empty
-  }
-}

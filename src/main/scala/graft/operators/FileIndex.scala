@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** Round-8 additions: the file-index wave over the snapshot log.
   * Round 7 built the versioned table (time travel, change feed, COW
@@ -299,8 +299,8 @@ object FileIndex {
           col("o_date_days") >= lo && col("o_date_days") < hi),
           "o_orderstatus")
       }
-      t.commitDeleteRange("o_orderstatus", "o_date_days",
-        Wave8.days("1997-06-01"), Wave8.days("1997-12-31"))
+      t.commitDeleteRange("o_orderstatus", KeyRange.Longs("o_date_days",
+        Wave8.days("1997-06-01"), Wave8.days("1997-12-31")))
       fs.create(marker, true).close()
     }
     t
@@ -399,7 +399,8 @@ object FileIndex {
           "o_orderstatus")
       }
       val (lo, hi) = (Wave8.days("1997-06-01"), Wave8.days("1997-12-31"))
-      t.commitReplaceWhere("o_orderstatus", "o_date_days", lo, hi,
+      t.commitReplaceWhere("o_orderstatus",
+        KeyRange.Longs("o_date_days", lo, hi),
         orders.filter(col("o_date_days").between(lo, hi))
           .withColumn("price_cents", col("price_cents") + 100))
       fs.create(marker, true).close()
@@ -546,7 +547,8 @@ object FileIndex {
         |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
       val t = idxStagedTable(spark, dir)
       val (lo, hi) = (Wave8.days("1997-06-01"), Wave8.days("1998-06-01"))
-      val pruned = t.asOfWhere(t.version, "o_date", lo, hi)
+      val pruned = t.asOfWhere(t.version,
+        KeyRange.Dates("o_date", lo.toInt, hi.toInt))
         .getOrElse(sys.error("range must intersect the table"))
       pruned
         .filter(col("o_date").between(
@@ -588,7 +590,8 @@ object FileIndex {
         |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
       val t = clusterStagedTable(spark, dir)
       val (lo, hi) = (10000000L, 20000000L) // the $100k..$200k band
-      val pruned = t.asOfWhere(t.version, "price_cents", lo, hi)
+      val pruned = t.asOfWhere(t.version,
+        KeyRange.Longs("price_cents", lo, hi))
         .getOrElse(sys.error("band must intersect the table"))
       pruned
         .filter(col("price_cents").between(lo, hi)) // rows, not files
@@ -1056,13 +1059,15 @@ object FileIndex {
       // the layout claim, both halves: pre-cluster (v4) stats keep
       // everything on each dimension; post-z-order each prunes alone
       val pre = v - 1
-      require(t.pruneFiles(pre, "price_cents", loP, hiP).size ==
+      val priceBand = KeyRange.Longs("price_cents", loP, hiP)
+      val dayBand = KeyRange.Longs("o_date_days", loD, hiD)
+      require(t.pruneFiles(pre, priceBand).size ==
         t.liveFiles(pre).size, "fixture must scatter price pre-cluster")
-      require(t.pruneFiles(pre, "o_date_days", loD, hiD).size ==
+      require(t.pruneFiles(pre, dayBand).size ==
         t.liveFiles(pre).size, "fixture must scatter days pre-cluster")
-      require(t.pruneFiles(v, "price_cents", loP, hiP).size < live,
+      require(t.pruneFiles(v, priceBand).size < live,
         "z-order must make the price dimension prune")
-      require(t.pruneFiles(v, "o_date_days", loD, hiD).size < live,
+      require(t.pruneFiles(v, dayBand).size < live,
         "z-order must make the day dimension prune")
       val rect = t.scanAsOf(v)
         .filter(col("price_cents").between(loP, hiP) &&
@@ -1149,7 +1154,8 @@ object FileIndex {
       // INT32-era stats vs an INT64 probe: only post-widening files
       // can contain keys past 10^10
       val live = t.liveFiles(4)
-      val pruned = t.pruneFiles(4, "k", 10000000000L, Long.MaxValue)
+      val pruned = t.pruneFiles(4,
+        KeyRange.Longs("k", 10000000000L, Long.MaxValue))
       require(pruned.nonEmpty && pruned.size < live.size,
         s"INT64 probe must prune the INT32-era files " +
           s"(${pruned.size} of ${live.size} survived)")

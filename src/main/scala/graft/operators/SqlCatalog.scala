@@ -662,7 +662,7 @@ object SqlCatalog {
     },
 
     // ---- SQL UPDATE (round 13): integer-bounded WHERE → the
-    //      zone-map-pruned COW range update (commitUpdateRange); SET
+    //      zone-map-pruned COW range update (commitUpdate); SET
     //      expressions reference the row's own columns. Oracle = the
     //      same CASE over the raw table — an update leaking outside
     //      the range, a lost non-updated column, or a double-applied

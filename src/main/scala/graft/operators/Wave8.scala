@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** Round-7 additions, second wave: snapshot versioning. A commit log
   * over immutable parquet files ([[graft.sources.SnapshotLog]]) gives
@@ -381,7 +381,8 @@ object Wave8 {
          |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
       val t = skipStagedTable(spark, dir)
       val (lo, hi) = (days("1997-06-01"), days("1998-06-01"))
-      val pruned = t.asOfWhere(t.version, "o_date_days", lo, hi)
+      val pruned = t.asOfWhere(t.version,
+        KeyRange.Longs("o_date_days", lo, hi))
         .getOrElse(sys.error("range must intersect the table"))
       pruned
         .filter(col("o_date_days").between(lo, hi)) // rows, not files

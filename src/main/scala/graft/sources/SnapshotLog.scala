@@ -852,15 +852,21 @@ object SnapshotLog {
           if (autoVacuumLog) vacuumLog()
         } catch { case scala.util.control.NonFatal(_) => () }
 
-    /** Publish, and on a lost race reclaim the data files this writer
-      * adopted (they are covered by no segment — orphans by
-      * construction — and this writer knows their exact names). */
+    /** Publish, and on a lost race reclaim what this writer made for
+      * the commit: the data files it adopted, then the DV sidecars its
+      * `dv` lines bind (each a writer-unique name this writer just
+      * built). Both are covered by no segment — orphans by
+      * construction — and this writer knows their exact names. */
     private def publishOrCleanup(v: Int, lines: Seq[Entry],
         added: Seq[String]): Unit =
       try publishSegment(v, lines)
       catch {
         case e: java.util.ConcurrentModificationException =>
           added.foreach(p => fs.delete(new Path(s"$dataDir/$p"), false))
+          lines.filter(_.action == "dv").foreach { en =>
+            val Array(rel, id) = en.path.split('|')
+            fs.delete(dvPath(rel, id), false)
+          }
           throw e
       }
 
@@ -1641,17 +1647,15 @@ object SnapshotLog {
     private val BloomProbeMaxKeys = 1024
 
     /** Minimum optimizer-estimated batch bytes before [[writeTmp]]
-      * hash-distributes the partitioned write (see there). Local
-      * default, overridable via spark.graft.write.distributeMinBytes. */
-    private val DistributeMinBytesDefault = 2L << 20
+      * hash-distributes the partitioned write (see there). */
+    private val DistributeMinBytes = 2L << 20
 
     /** Caller confs a write session must follow (see [[writeSession]]):
       * the shape of the write plan, the files' timestamps and codec,
       * and the file-size cap. */
     private val WriteConfs = Seq("spark.sql.shuffle.partitions",
       "spark.sql.session.timeZone", "spark.sql.parquet.compression.codec",
-      "spark.sql.files.maxRecordsPerFile", "spark.sql.adaptive.enabled",
-      "spark.graft.write.distributeMinBytes")
+      "spark.sql.files.maxRecordsPerFile", "spark.sql.adaptive.enabled")
     private val MaxWriteSessions = 8
 
     private def bloomPath(rel: String, c: String): Path =
@@ -1947,55 +1951,31 @@ object SnapshotLog {
     def zoneMapsStr: Map[String, Map[String, (String, String)]] =
       foldState().zoneMapsStr
 
-    /** The live files at `v` that can contain a row with
-      * `col ∈ [lo, hi]`, by zone-map pruning — files with no recorded
-      * stats for `col` are conservatively kept. This is the manifest-
-      * level skipping that makes a selective AS-OF read touch only the
-      * files whose range intersects the predicate, BEFORE any parquet
-      * footer is opened on the read path. Integer-physical columns
-      * (long, int, date-as-days). */
-    def pruneFiles(v: Int, col: String, lo: Long, hi: Long): Seq[String] = {
-      val zm = zoneMaps
-      val ph = physicalAt(v, col) // stats are keyed by physical name
-      liveFiles(v).filter { p =>
-        zm.get(p).flatMap(_.get(ph)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None           => true
-        }
-      }
+    /** The live files at `v` that can hold a row of `range`, by the
+      * range's manifest prune (zone maps, or directory prefixes for a
+      * partition set) — files with no recorded stats for the column
+      * are conservatively kept. This is the manifest-level skipping
+      * that makes a selective AS-OF read touch only the files whose
+      * range intersects the predicate, BEFORE any parquet footer is
+      * opened on the read path. */
+    def pruneFiles(v: Int, range: KeyRange): Seq[String] =
+      prunePhysical(v, range, physicalAt(v, range.col))
+
+    /** [[pruneFiles]] with the column's physical name already resolved
+      * (stats are keyed by it). */
+    private def prunePhysical(v: Int, range: KeyRange, ph: String)
+        : Seq[String] = {
+      val fold = foldState()
+      range.prune(fold.liveFiles(v), ph, fold)
     }
 
-    /** [[pruneFiles]] for string columns: keeps files whose recorded
-      * [min, max] (byte-order bounds; max truncation-bumped) intersects
-      * [lo, hi] lexicographically. */
-    def pruneFilesStr(v: Int, col: String, lo: String, hi: String):
-        Seq[String] = {
-      val zm = zoneMapsStr
-      val ph = physicalAt(v, col)
-      liveFiles(v).filter { p =>
-        zm.get(p).flatMap(_.get(ph)) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None           => true
-        }
-      }
-    }
-
-    /** [[asOf]] restricted to zone-map-surviving files for
-      * `col BETWEEN lo AND hi`. The row-level filter must still be
-      * applied downstream (zone maps bound files, not rows); returns
-      * None when no file can match (the empty relation needs a schema
-      * the manifest doesn't carry). */
-    def asOfWhere(v: Int, col: String, lo: Long, hi: Long):
-        Option[DataFrame] = {
-      val files = pruneFiles(v, col, lo, hi)
-      if (files.isEmpty) None
-      else Some(readRawAt(files, v))
-    }
-
-    /** String twin of [[asOfWhere]]. */
-    def asOfWhereStr(v: Int, col: String, lo: String, hi: String):
-        Option[DataFrame] = {
-      val files = pruneFilesStr(v, col, lo, hi)
+    /** [[asOf]] restricted to the files [[pruneFiles]] keeps for
+      * `range`. The row-level filter must still be applied downstream
+      * (the prune bounds files, not rows); returns None when no file
+      * can match (the empty relation needs a schema the manifest
+      * doesn't carry). */
+    def asOfWhere(v: Int, range: KeyRange): Option[DataFrame] = {
+      val files = pruneFiles(v, range)
       if (files.isEmpty) None
       else Some(readRawAt(files, v))
     }
@@ -2181,19 +2161,16 @@ object SnapshotLog {
       // (a MOR delete's few-file victim set) measured ×0.7-0.8 with an
       // unconditional shuffle. The gate is the optimizer's own size
       // estimate of the write plan (scan bytes × selectivity — free,
-      // no execution), threshold parameterised via
-      // spark.graft.write.distributeMinBytes; at production batch
-      // sizes every commit clears it, so the local default only
-      // decides bench-scale behavior.
+      // no execution), against the fixed [[DistributeMinBytes]]; at
+      // production batch sizes every commit clears it, so the
+      // threshold only decides small-batch behavior.
       val shaped =
         if (!distribute) out
         else {
           val est = out.queryExecution.optimizedPlan.stats.sizeInBytes
-          val minBytes = out.sparkSession.conf
-            .getOption("spark.graft.write.distributeMinBytes")
-            .map(_.toLong).getOrElse(DistributeMinBytesDefault)
-          CommitTiming.timed(s"writeTmp:est=$est dist=${est >= minBytes}")(())
-          if (est < minBytes) out
+          CommitTiming.timed(
+            s"writeTmp:est=$est dist=${est >= DistributeMinBytes}")(())
+          if (est < DistributeMinBytes) out
           else {
             val n = out.sparkSession.conf
               .get("spark.sql.shuffle.partitions").toInt
@@ -2261,6 +2238,37 @@ object SnapshotLog {
         rel
       }
 
+    /** The landing half of every data commit: write `df` into a fresh
+      * temp dir (see [[writeTmp]]; `distribute = false` keeps a
+      * caller-shaped layout), adopt its leaves as version `v`'s files,
+      * and drop the temp dir. Returns the adopted relative paths.
+      * `op` names the commit in the `CommitTiming` spans. */
+    private def land(df: DataFrame, partCol: String, v: Int, op: String,
+        distribute: Boolean = true): Seq[String] = {
+      val tmp = new Path(s"$root/_tmp_v$v-${
+        java.util.UUID.randomUUID.toString.take(8)}")
+      CommitTiming.timed(s"$op:writeTmp")(
+        writeTmp(df, partCol, tmp, v - 1, distribute))
+      val added = CommitTiming.timed(s"$op:adopt")(adopt(tmp, v))
+      fs.delete(tmp, true)
+      added
+    }
+
+    /** The publishing half of every commit that [[land]]s files under
+      * an explicit version: one segment of remove(`victims`) +
+      * add(`added`) + the added files' footer stats + `extra`, with
+      * the lost-race cleanup of [[publishOrCleanup]]; then the added
+      * files' bloom sidecars (after the publish — see
+      * [[buildBlooms]]). */
+    private def publishRewrite(v: Int, victims: Seq[String],
+        added: Seq[String], extra: Seq[Entry], op: String): Unit = {
+      CommitTiming.timed(s"$op:stats+publish")(
+        publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
+          added.map(Entry(v, "add", _)) ++ statsEntries(v, added) ++
+          extra, added))
+      buildBlooms(v, added)
+    }
+
     /** Rebase-on-conflict publish for APPEND-shaped commits: a pure
       * append COMMUTES with any concurrent commit — its read set is
       * empty (it removes nothing and asserts nothing about current
@@ -2308,12 +2316,7 @@ object SnapshotLog {
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
       checkConstraints(df)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      CommitTiming.timed("append:writeTmp")(
-        writeTmp(df, partCol, tmp, v - 1))
-      val added = CommitTiming.timed("append:adopt")(adopt(tmp, v))
-      fs.delete(tmp, true)
+      val added = land(df, partCol, v, "append")
       val base = added.map(Entry(v, "add", _)) ++
         CommitTiming.timed("append:stats")(statsEntries(v, added))
       val ver = CommitTiming.timed("append:publish") {
@@ -2339,14 +2342,8 @@ object SnapshotLog {
       val v = casCheck(expectedVersion)
       checkConstraints(df)
       val victims = liveFiles(v - 1)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(df, partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+      val added = land(df, partCol, v, "overwrite")
+      publishRewrite(v, victims, added, Nil, "overwrite")
       v
     }
 
@@ -2396,15 +2393,9 @@ object SnapshotLog {
       val withId = ranked
         .withColumn(idCol, col("__id_rn") + lit(wm)).drop("__id_rn")
       checkConstraints(withId)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(withId, partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, added.map(Entry(v, "add", _)) ++
-        statsEntries(v, added) :+
-        Entry(v, "idwm", s"$idPhys|${wm + total}"), added)
-      buildBlooms(v, added)
+      val added = land(withId, partCol, v, "identity")
+      publishRewrite(v, Nil, added,
+        Seq(Entry(v, "idwm", s"$idPhys|${wm + total}")), "identity")
       maybeAutoCompact(partCol)
       v
     }
@@ -2624,11 +2615,7 @@ object SnapshotLog {
       else {
         val v = version + 1
         checkConstraints(df)
-        val tmp = new Path(s"$root/_tmp_v$v-${
-          java.util.UUID.randomUUID.toString.take(8)}")
-        writeTmp(df, partCol, tmp, v - 1)
-        val added = adopt(tmp, v)
-        fs.delete(tmp, true)
+        val added = land(df, partCol, v, "txn")
         // rebase-safe: only THIS writer ever publishes this txnId (the
         // sink owns its batch ids), so re-stamping onto a new tip can
         // never race a duplicate of itself into the log
@@ -2742,24 +2729,19 @@ object SnapshotLog {
       val prefix = s"${physicalAt(v - 1, partCol)}=${escapePart(value)}/"
       val victims = liveFiles(v - 1).filter(_.startsWith(prefix))
       require(victims.nonEmpty, s"no live files under $prefix")
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
       // read exactly the victim files (they ARE the partition's live
       // set), through their active DVs — the rewrite retires them
-      writeTmp(readFilesMorAt(v - 1, victims).filter(keep), partCol, tmp,
-        v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+      val added = land(readFilesMorAt(v - 1, victims).filter(keep),
+        partCol, v, "deleteWhere")
+      publishRewrite(v, victims, added, Nil, "deleteWhere")
       v
     }
 
-    /** Row-level DELETE of `col ∈ [lo, hi]` ACROSS partitions: the
-      * copy-on-write blast radius is the ZONE-MAP candidate set —
-      * only files whose recorded [min, max] intersects the range (or
-      * that carry no stats for `col`, kept conservatively) are
+    /** Row-level DELETE of the rows in `range` ACROSS partitions: the
+      * copy-on-write blast radius is the range's candidate set
+      * ([[pruneFiles]]) — only files whose recorded stats intersect the
+      * range (or that carry no stats for its column, kept
+      * conservatively) are
       * rewritten without their matching rows; every file provably
       * outside the range carries over by log reference, unread and
       * unmoved. The stats-bounded generalization of
@@ -2769,170 +2751,107 @@ object SnapshotLog {
       * contain no matching rows is rewritten as-is — correct, and
       * bounded by the same candidate set. Deleting a range no file
       * can contain publishes an empty commit (the version advances,
-      * the fold is unchanged — an honest audit record of the no-op). */
-    def commitDeleteRange(partCol: String, c: String, lo: Long, hi: Long,
-        expectedVersion: Int = -1): Int = {
-      deleteRangeImpl(partCol, expectedVersion,
-        v => pruneFiles(v, physicalAt(v, c), lo, hi),
-        // NULL-safe keep: `NOT (c BETWEEN lo AND hi)` is NULL for a
-        // NULL key, and a NULL-filtered row is DROPPED — a range
-        // delete must never destroy NULL-keyed rows (SQL `DELETE
-        // WHERE c BETWEEN lo AND hi` does not match NULLs). Files
-        // without stats are conservatively rewritten, so all-null
-        // columns are exactly the exposed case. Victims are read RAW
-        // (physical names), resolved at the SAME v - 1 snapshot as
-        // the candidate prune — never the live `version`.
-        v => { val pc = physicalAt(v, c)
-          col(pc).isNull || !col(pc).between(lo, hi) })
+      * the fold is unchanged — an honest audit record of the no-op).
+      * A [[KeyRange.Partitions]] range needs no rewrite at all: it is
+      * the metadata-only [[commitDeletePartitions]]. */
+    def commitDeleteRange(partCol: String, range: KeyRange,
+        expectedVersion: Int = -1): Int = range match {
+      case KeyRange.Partitions(c, values) =>
+        commitDeletePartitions(c, values, expectedVersion)
+      case _ =>
+        val v = casCheck(expectedVersion)
+        // victims are read RAW (physical names), resolved at the SAME
+        // v - 1 snapshot as the candidate prune — never the live
+        // `version`
+        val pc = physicalAt(v - 1, range.col)
+        val victims = prunePhysical(v - 1, range, pc)
+        if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
+        val added = land(readFilesMorAt(v - 1, victims) // DV-applied
+          .filter(outside(range, pc)), partCol, v, "delete")
+        publishRewrite(v, victims, added, Nil, "delete")
+        v
     }
 
-    /** [[commitDeleteRange]] for string-keyed ranges: the candidate
-      * set comes from the string zone maps ([[pruneFilesStr]] —
-      * truncation-bumped upper bounds, so candidates are a superset),
-      * everything else is the same COW contract. */
-    def commitDeleteRangeStr(partCol: String, c: String,
-        lo: String, hi: String, expectedVersion: Int = -1): Int = {
-      deleteRangeImpl(partCol, expectedVersion,
-        v => pruneFilesStr(v, physicalAt(v, c), lo, hi),
-        v => { val pc = physicalAt(v, c)
-          col(pc).isNull || !col(pc).between(lo, hi) })
-    }
+    /** The rows a range delete or replace keeps, over physical column
+      * `pc`. NULL-safe: `NOT (c BETWEEN lo AND hi)` is NULL for a NULL
+      * key, and a NULL-filtered row is DROPPED — a range delete must
+      * never destroy NULL-keyed rows (SQL `DELETE WHERE c BETWEEN lo
+      * AND hi` does not match NULLs). Files without stats are
+      * conservatively rewritten, so all-null columns are exactly the
+      * exposed case. */
+    private def outside(range: KeyRange, pc: String): Column =
+      col(pc).isNull || !range.rows(pc)
 
-    private def deleteRangeImpl(partCol: String, expectedVersion: Int,
-        prune: Int => Seq[String], keep0: Int => Column): Int = {
-      val v = casCheck(expectedVersion)
-      val keep = keep0(v - 1)
-      val victims = prune(v - 1)
-      if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(readFilesMorAt(v - 1, victims).filter(keep), // DV-applied
-        partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
-      v
-    }
-
-    /** Atomic REPLACE WHERE — ONE commit that deletes every row with
-      * `c ∈ [lo, hi]` and lands `df` in its place: the backfill /
+    /** Atomic REPLACE WHERE — ONE commit that deletes every row in
+      * `range` and lands `df` in its place: the backfill /
       * partition-reload shape (Delta's `replaceWhere`, Hive/Iceberg
-      * `INSERT OVERWRITE` with a predicate). Without it the same
-      * effect is [[commitDeleteRange]] + [[commitAppend]] = TWO
-      * versions, and a reader (or change-feed consumer) between them
-      * sees the region's hole as real state. Mechanics are the range
-      * delete's: the COW blast radius is the zone-map candidate set,
-      * victims are read through their DVs, survivors outside the
+      * `INSERT OVERWRITE` with a predicate) — by number, by name (the
+      * reload-one-source / reload-one-tenant shape) or by date. Without
+      * it the same effect is [[commitDeleteRange]] + [[commitAppend]] =
+      * TWO versions, and a reader (or change-feed consumer) between
+      * them sees the region's hole as real state. Mechanics are the
+      * range delete's: the COW blast radius is the range's candidate
+      * set, victims are read through their DVs, survivors outside the
       * range are rewritten, untouched files carry by log reference —
       * plus the replacement rows ride the same adopted file set and
       * the same segment CAS, so the swap is atomic under concurrency
       * and the change feed records remove(victims) + add(survivors ⊎
       * replacement) under one version.
       *
-      * The incoming batch must itself satisfy the predicate (every
-      * row's `c` non-null and within [lo, hi]) — Delta's replaceWhere
-      * contract: a batch that smuggled rows into the UNTOUCHED region
-      * would silently duplicate keys there, so it is rejected loudly
-      * before any byte moves. */
-    def commitReplaceWhere(partCol: String, c: String, lo: Long, hi: Long,
-        df: DataFrame, expectedVersion: Int = -1): Int = {
-      replaceWhereImpl(partCol, df, expectedVersion,
-        v => pruneFiles(v, physicalAt(v, c), lo, hi),
-        v => { val pc = physicalAt(v, c)
-          col(pc).isNull || !col(pc).between(lo, hi) },
-        s"$c in [$lo, $hi]")
-    }
-
-    /** [[commitReplaceWhere]] for STRING-keyed regions (candidates
-      * from the truncation-safe string zone maps) — the
-      * reload-one-source / reload-one-tenant shape, whose region key
-      * is a name as often as a number. */
-    def commitReplaceWhereStr(partCol: String, c: String,
-        lo: String, hi: String, df: DataFrame,
+      * The incoming batch must itself lie in the range (every row's
+      * key non-null and inside it) — Delta's replaceWhere contract: a
+      * batch that smuggled rows into the UNTOUCHED region would
+      * silently duplicate keys there, so it is rejected loudly before
+      * any byte moves. */
+    def commitReplaceWhere(partCol: String, range: KeyRange, df0: DataFrame,
         expectedVersion: Int = -1): Int = {
-      replaceWhereImpl(partCol, df, expectedVersion,
-        v => pruneFilesStr(v, physicalAt(v, c), lo, hi),
-        v => { val pc = physicalAt(v, c)
-          col(pc).isNull || !col(pc).between(lo, hi) },
-        s"$c in ['$lo', '$hi']")
+      val v = casCheck(expectedVersion)
+      val pc = physicalAt(v - 1, range.col)
+      val keep = outside(range, pc)
+      checkConstraints(df0)
+      val df = toPhysical(df0, v - 1) // keep is physical; victims read raw
+      require(df.filter(keep).limit(1).count() == 0,
+        s"replaceWhere batch carries rows outside $range — " +
+          "the replacement may only write the region it replaces")
+      val victims = prunePhysical(v - 1, range, pc)
+      val survivors = // victims read through DVs; NULL-keyed rows are
+        // OUTSIDE any range and must survive (as in commitDeleteRange)
+        if (victims.isEmpty) df.limit(0)
+        else readFilesMorAt(v - 1, victims)
+          .filter(keep)
+          .select(df.columns.toIndexedSeq.map(col): _*)
+      val added = land(survivors.unionByName(df), partCol, v, "replace")
+      publishRewrite(v, victims, added, Nil, "replace")
+      v
     }
 
-    /** Copy-on-write UPDATE over a zone-map-pruned integer range:
-      * rewrite the candidate files with `set` applied to the rows
-      * whose `c ∈ [lo, hi]` (SQL `UPDATE t SET ... WHERE c BETWEEN`),
-      * everything else carried unchanged — the COW blast radius is
-      * the candidate set, exactly [[commitDeleteRange]]'s contract
-      * with a projection instead of a filter. Rows whose `c` is NULL
-      * never match (SQL semantics). `set` keys and value expressions
-      * speak LOGICAL names: victims are read through the column
-      * mapping and active DVs, updated in logical space, and
+    /** Copy-on-write UPDATE of the rows in `range` (SQL `UPDATE t SET
+      * … WHERE c BETWEEN …`, or `WHERE part IN (…)` for a
+      * [[KeyRange.Partitions]] range): rewrite the range's candidate
+      * files ([[pruneFiles]]) with `set` applied to the matching rows,
+      * everything else carried unchanged — exactly
+      * [[commitDeleteRange]]'s blast radius with a projection instead
+      * of a filter. `cond` (default: the range's own inclusive row
+      * predicate) is the exact row predicate, evaluated in logical
+      * space; it MUST imply the range — the caller owns that (the SQL
+      * front end passes the statement's own WHERE, whose extracted
+      * bounds ARE the range, so the implication holds by
+      * construction). Rows whose key is NULL, or where `cond` is NULL,
+      * are untouched (SQL WHERE semantics). `set` keys and value
+      * expressions speak LOGICAL names: victims are read through the
+      * column mapping and active DVs, updated in logical space, and
       * [[writeTmp]] maps back to physical — so UPDATE composes with
-      * renames, widenings, defaults and MOR deletes for free.
-      * Updated rows re-validate the table's CHECK constraints. */
-    def commitUpdateRange(partCol: String, c: String, lo: Long, hi: Long,
+      * renames, widenings, defaults and MOR deletes for free. Updated
+      * rows re-validate the table's CHECK constraints. */
+    def commitUpdate(partCol: String, range: KeyRange,
         set: Map[String, Column], cond: Option[Column] = None,
-        expectedVersion: Int = -1): Int =
-      updateRangeImpl(partCol, c, set, expectedVersion,
-        v => pruneFiles(v, physicalAt(v, c), lo, hi),
-        col(c).isNotNull && cond.getOrElse(col(c).between(lo, hi)))
-
-    /** Copy-on-write UPDATE scoped to a partition-value SET — `UPDATE t
-      * SET … WHERE part IN ('a','b')`: victims are exactly the listed
-      * partitions' live files (directory prefixes — no stats probe
-      * needed, the layout IS the index), every other partition carries
-      * by log reference. `cond` defaults to the partition membership
-      * itself; the SQL front end passes the statement's full WHERE so
-      * extra conjuncts stay row-exact. One commit, blast radius = the
-      * named partitions — the reload-one-tenant cost model. */
-    def commitUpdatePartitions(partCol: String, values: Seq[String],
-        set: Map[String, Column], cond: Option[Column] = None,
-        expectedVersion: Int = -1): Int =
-      updateRangeImpl(partCol, partCol, set, expectedVersion,
-        v => { val pc = physicalAt(v, partCol)
-          val prefixes = values.map(x => s"$pc=${escapePart(x)}/")
-          liveFiles(v).filter(f => prefixes.exists(f.startsWith)) },
-        col(partCol).isNotNull &&
-          cond.getOrElse(col(partCol).isin(values: _*)))
-
-    /** [[commitUpdateRange]] for STRING-keyed ranges: candidates come
-      * from the string zone maps ([[pruneFilesStr]] — truncation-
-      * bumped upper bounds, so candidates are a superset), same COW
-      * contract. `cond` (default: inclusive between) is the exact row
-      * predicate, evaluated in logical space; it MUST imply
-      * `c ∈ [lo, hi]` — the caller owns that (the SQL front end
-      * passes the statement's own WHERE, whose extracted bounds ARE
-      * the prune range, so the implication holds by construction). A
-      * row where `cond` is NULL is untouched (SQL WHERE semantics). */
-    def commitUpdateRangeStr(partCol: String, c: String,
-        lo: String, hi: String, set: Map[String, Column],
-        cond: Option[Column] = None, expectedVersion: Int = -1): Int =
-      updateRangeImpl(partCol, c, set, expectedVersion,
-        v => pruneFilesStr(v, physicalAt(v, c), lo, hi),
-        col(c).isNotNull && cond.getOrElse(col(c).between(lo, hi)))
-
-    /** [[commitUpdateRange]] for DATE-keyed ranges: DATE zone maps
-      * are epoch-day-widened INT32 (the convention [[mergeCandidates]]
-      * probes with), so the candidate prune rides the integer stats
-      * while the row predicate compares real dates. Bounds are
-      * inclusive epoch days; `cond` as in [[commitUpdateRangeStr]]. */
-    def commitUpdateRangeDate(partCol: String, c: String,
-        loDays: Int, hiDays: Int, set: Map[String, Column],
-        cond: Option[Column] = None, expectedVersion: Int = -1): Int =
-      updateRangeImpl(partCol, c, set, expectedVersion,
-        v => pruneFiles(v, physicalAt(v, c), loDays.toLong, hiDays.toLong),
-        col(c).isNotNull && cond.getOrElse(col(c).between(
-          date_from_unix_date(lit(loDays)),
-          date_from_unix_date(lit(hiDays)))))
-
-    private def updateRangeImpl(partCol: String, c: String,
-        set: Map[String, Column], expectedVersion: Int,
-        prune: Int => Seq[String], inRange: Column): Int = {
+        expectedVersion: Int = -1): Int = {
       require(set.nonEmpty, "UPDATE needs at least one assignment")
       val v = casCheck(expectedVersion)
-      val victims = prune(v - 1)
+      val victims = pruneFiles(v - 1, range)
       if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
+      val c = range.col
+      val inRange = col(c).isNotNull && cond.getOrElse(range.rows(c))
       val logical = applyMapping(v - 1, readFilesMorAt(v - 1, victims))
       val cols = logical.columns
       set.keys.foreach(k => require(cols.contains(k),
@@ -2944,44 +2863,8 @@ object SnapshotLog {
           .map(e => when(inRange, e).otherwise(col(cn)).as(cn))
           .getOrElse(col(cn))): _*)
       checkConstraints(updated)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(updated, partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
-      v
-    }
-
-    private def replaceWhereImpl(partCol: String, df0: DataFrame,
-        expectedVersion: Int, prune: Int => Seq[String],
-        keep0: Int => Column, regionDesc: String): Int = {
-      val v = casCheck(expectedVersion)
-      val keep = keep0(v - 1)
-      checkConstraints(df0)
-      val df = toPhysical(df0, v - 1) // keep is physical; victims read raw
-      val outside = df.filter(keep).limit(1).count()
-      require(outside == 0,
-        s"replaceWhere batch carries rows outside $regionDesc — " +
-          "the replacement may only write the region it replaces")
-      val victims = prune(v - 1)
-      val survivors = // victims read through DVs; NULL-keyed rows are
-        // OUTSIDE any range and must survive (as in commitDeleteRange)
-        if (victims.isEmpty) df.limit(0)
-        else readFilesMorAt(v - 1, victims)
-          .filter(keep)
-          .select(df.columns.toIndexedSeq.map(col): _*)
-      val rewritten = survivors.unionByName(df)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(rewritten, partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+      val added = land(updated, partCol, v, "update")
+      publishRewrite(v, victims, added, Nil, "update")
       v
     }
 
@@ -3027,69 +2910,59 @@ object SnapshotLog {
 
     private def mergeCandidates(vPrev: Int, source: DataFrame,
         keyCol: String, live: Seq[String]): Seq[String] = {
-      import org.apache.spark.sql.types.{DateType, IntegerType, LongType,
-        StringType, TimestampType, TimestampNTZType}
+      import org.apache.spark.sql.types.{DateType, DecimalType,
+        IntegerType, LongType, StringType, TimestampType, TimestampNTZType}
       lastMergeFallback = None
-      val rangeCand = source.schema(keyCol).dataType match {
-        case LongType | IntegerType =>
-          val r = source.agg(min(col(keyCol)).cast("long"),
-            max(col(keyCol)).cast("long")).head()
-          if (r.isNullAt(0)) Seq.empty // empty source: no hits possible
-          else pruneFiles(vPrev, keyCol, r.getLong(0), r.getLong(1))
-        case DateType => // DATE zone maps are epoch-day-widened INT32
-          val r = source.agg(min(unix_date(col(keyCol))).cast("long"),
-            max(unix_date(col(keyCol))).cast("long")).head()
-          if (r.isNullAt(0)) Seq.empty
-          else pruneFiles(vPrev, keyCol, r.getLong(0), r.getLong(1))
-        case TimestampType => // TIMESTAMP is INT64 micros in parquet, so
-          // the footer zone maps already carry it — widen the probe the
-          // same way DATE widens to epoch days (event-time-keyed CDC
-          // prunes like any long key)
-          val r = source.agg(min(unix_micros(col(keyCol))),
-            max(unix_micros(col(keyCol)))).head()
-          if (r.isNullAt(0)) Seq.empty
-          else pruneFiles(vPrev, keyCol, r.getLong(0), r.getLong(1))
-        case TimestampNTZType =>
-          // same INT64-micros physical widening as TIMESTAMP, but the
-          // probe must be ZONE-FREE: parquet NTZ stats
-          // (isAdjustedToUTC=false) store the raw WALL-CLOCK micros,
-          // while `unix_micros(cast(c as timestamp))` interprets the
-          // wall clock in the SESSION timezone and returns UTC-instant
-          // micros — offset by the zone delta in any non-UTC session,
-          // which would wrongly prune files that contain matching keys
-          // (and commitMerge would then silently keep stale rows). So
-          // derive the micros arithmetically from the wall-clock parts
-          // — no timezone enters anywhere.
-          val r = source.agg(min(ntzMicros(col(keyCol))),
-            max(ntzMicros(col(keyCol)))).head()
-          if (r.isNullAt(0)) Seq.empty
-          else pruneFiles(vPrev, keyCol, r.getLong(0), r.getLong(1))
-        case d: org.apache.spark.sql.types.DecimalType
-            if d.precision <= 18 =>
-          // parquet stores DECIMAL(p<=18) as INT32/INT64 with UNSCALED
-          // stats, so the footer zone maps already carry it — widen
-          // the probe by the scale in DECIMAL arithmetic (exact:
-          // unscaled = value * 10^s; a double multiply could round
-          // above 2^53)
+      val dt = source.schema(keyCol).dataType
+      // the key as its zone maps record it: integer-physical keys
+      // widen to long (DATE to epoch days, TIMESTAMP to micros,
+      // DECIMAL(p<=18) to its unscaled value), strings stay strings
+      val probe: Option[Column] = dt match {
+        case LongType | IntegerType => Some(col(keyCol).cast("long"))
+        case DateType => Some(unix_date(col(keyCol)).cast("long"))
+        // TIMESTAMP is INT64 micros in parquet, so the footer zone maps
+        // already carry it (event-time-keyed CDC prunes like any long
+        // key)
+        case TimestampType => Some(unix_micros(col(keyCol)))
+        // same INT64-micros physical widening as TIMESTAMP, but the
+        // probe must be ZONE-FREE: parquet NTZ stats
+        // (isAdjustedToUTC=false) store the raw WALL-CLOCK micros,
+        // while `unix_micros(cast(c as timestamp))` interprets the
+        // wall clock in the SESSION timezone and returns UTC-instant
+        // micros — offset by the zone delta in any non-UTC session,
+        // which would wrongly prune files that contain matching keys
+        // (and commitMerge would then silently keep stale rows). So
+        // derive the micros arithmetically from the wall-clock parts
+        // — no timezone enters anywhere.
+        case TimestampNTZType => Some(ntzMicros(col(keyCol)))
+        // parquet stores DECIMAL(p<=18) as INT32/INT64 with UNSCALED
+        // stats — widen the probe by the scale in DECIMAL arithmetic
+        // (exact: unscaled = value * 10^s; a double multiply could
+        // round above 2^53)
+        case d: DecimalType if d.precision <= 18 =>
           val f = lit(BigDecimal(10).pow(d.scale))
-          val r = source.agg(
-            min((col(keyCol) * f).cast("long")),
-            max((col(keyCol) * f).cast("long"))).head()
-          if (r.isNullAt(0)) Seq.empty
-          else pruneFiles(vPrev, keyCol, r.getLong(0), r.getLong(1))
-        case StringType =>
-          val r = source.agg(min(col(keyCol)), max(col(keyCol))).head()
-          if (r.isNullAt(0)) Seq.empty
-          else pruneFilesStr(vPrev, keyCol, r.getString(0), r.getString(1))
-        case other => // exotic key types (float/binary/nested): the
+          Some((col(keyCol) * f).cast("long"))
+        case StringType => Some(col(keyCol))
+        case _ => None
+      }
+      val rangeCand = probe match {
+        case Some(p) =>
+          val r = source.agg(min(p), max(p)).head()
+          if (r.isNullAt(0)) Seq.empty // empty source: no hits possible
+          else prunePhysical(vPrev,
+            if (dt == StringType)
+              KeyRange.Strings(keyCol, r.getString(0), r.getString(1))
+            else KeyRange.Longs(keyCol, r.getLong(0), r.getLong(1)),
+            keyCol)
+        case None => // exotic key types (float/binary/nested): the
           // conservative full-candidate scan is still CORRECT, but it
           // silently costs O(live files) per merge — surface it, so a
           // mis-typed key is an observable event instead of a
           // mysterious slowdown (these are all bad merge keys anyway)
-          lastMergeFallback = Some(other.simpleString)
+          lastMergeFallback = Some(dt.simpleString)
           org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
             s"merge key '$keyCol' has unprunable type " +
-              s"${other.simpleString}: falling back to a full " +
+              s"${dt.simpleString}: falling back to a full " +
               s"${live.size}-file candidate scan")
           live
       }
@@ -3097,7 +2970,7 @@ object SnapshotLog {
       // exactly when the source's keys are sparse in the range — cap
       // the probe at a bounded distinct-key collect so a wide merge
       // never hauls its key set to the driver.
-      source.schema(keyCol).dataType match {
+      dt match {
         case LongType if bloomCols.contains(keyCol) && rangeCand.nonEmpty =>
           val ks = source.select(col(keyCol))
             .where(col(keyCol).isNotNull).distinct()
@@ -3146,16 +3019,8 @@ object SnapshotLog {
         if (hits.isEmpty) source
         else survivors.select(source.columns.toIndexedSeq.map(col): _*)
           .unionByName(source)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      CommitTiming.timed("merge:writeTmp")(
-        writeTmp(rewritten, partCol, tmp, v - 1))
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      CommitTiming.timed("merge:stats+publish")(
-        publishOrCleanup(v, hits.map(Entry(v, "remove", _)) ++
-          added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added))
-      buildBlooms(v, added)
+      val added = land(rewritten, partCol, v, "merge")
+      publishRewrite(v, hits, added, Nil, "merge")
       v
     }
 
@@ -3289,15 +3154,9 @@ object SnapshotLog {
       val rewritten = survivors
         .select(upserts.columns.toIndexedSeq.map(col): _*)
         .unionByName(upserts)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(rewritten, partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, hits.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added) ++
-        idEntries ++ extraEntries, added)
-      buildBlooms(v, added)
+      val added = land(rewritten, partCol, v, "applyChanges")
+      publishRewrite(v, hits, added, idEntries ++ extraEntries,
+        "applyChanges")
       v
     }
 
@@ -3418,9 +3277,8 @@ object SnapshotLog {
         if (affected.isEmpty) { publishSegment(v, Seq.empty); return v }
         val dvId = CommitTiming.timed("delkeys:dvSidecars")(
           buildDvSidecars(v, matched, affected))
-        publishOrCleanupDv(v,
-          affected.map(rel => Entry(v, "dv", s"$rel|$dvId")),
-          affected.map(rel => dvPath(rel, dvId)))
+        publishOrCleanup(v,
+          affected.map(rel => Entry(v, "dv", s"$rel|$dvId")), Nil)
         v
       } finally matched.unpersist(false)
     }
@@ -3553,45 +3411,18 @@ object SnapshotLog {
         else matched.select("__f").distinct()
           .collect().map(_.getString(0)).toSeq.sorted
       // adopt the source batch first (plain adds), then the tombstones
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(source, partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
+      val added = land(source, partCol, v, "mergeMor")
       val dvEntries =
         if (affected.isEmpty) Seq.empty[Entry]
         else {
           val dvId = buildDvSidecars(v, matched, affected)
           affected.map(rel => Entry(v, "dv", s"$rel|$dvId"))
         }
-      try publishOrCleanup(v,
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added) ++
-          dvEntries, added)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // publishOrCleanup reclaimed the adds; the (writer-unique)
-          // sidecars are equally unreferenced — sweep them too
-          dvEntries.foreach { en =>
-            val Array(rel, id) = en.path.split('|')
-            fs.delete(dvPath(rel, id), false)
-          }
-          throw e
-      }
-      buildBlooms(v, added)
+      // a lost race reclaims the adds AND the (writer-unique) sidecars
+      publishRewrite(v, Nil, added, dvEntries, "mergeMor")
       v
       } finally { if (matchedKeyed != null) matchedKeyed.unpersist(false) }
     }
-
-    /** Publish a DV commit; on a lost CAS race reclaim this writer's
-      * (uniquely named) sidecars — they are bound by no log entry. */
-    private def publishOrCleanupDv(v: Int, lines: Seq[Entry],
-        sidecars: Seq[Path]): Unit =
-      try publishSegment(v, lines)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          sidecars.foreach(p => fs.delete(p, false))
-          throw e
-      }
 
     /** Merge-on-read AS-OF: [[asOf]] with the version's active
       * deletion vectors applied — an anti-join on (file, position)
@@ -3624,15 +3455,9 @@ object SnapshotLog {
       val dvs = dvFor(v - 1)
       if (dvs.isEmpty) { publishSegment(v, Seq.empty); return v }
       val victims = dvs.keys.toSeq.sorted
-      val rewritten = readFilesMorAt(v - 1, victims)
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(rewritten, partCol, tmp, v - 1)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+      val added = land(readFilesMorAt(v - 1, victims), partCol, v,
+        "materializeDv")
+      publishRewrite(v, victims, added, Nil, "materializeDv")
       v
     }
 
@@ -3736,8 +3561,6 @@ object SnapshotLog {
       // commit (version advances, fold unchanged), as the range
       // delete does for a range no file can contain
       if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
       // rows of one partition value spread over at most
       // filesPerPartition shuffle tasks (the __bin column), so each
       // partition dir compacts to at most that many files — one task
@@ -3745,16 +3568,12 @@ object SnapshotLog {
       // through their DVs: compaction removes every file, retiring
       // every DV binding, so it must apply them (it doubles as a
       // materialization — exactly Delta's OPTIMIZE contract).
-      writeTmp(readFilesMorAt(v - 1, victims)
+      val added = land(readFilesMorAt(v - 1, victims)
         .withColumn("__bin", pmod(monotonically_increasing_id(),
           lit(filesPerPartition.toLong)).cast("int"))
         .repartition(col(partCol), col("__bin"))
-        .drop("__bin"), partCol, tmp, v - 1, distribute = false)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+        .drop("__bin"), partCol, v, "compact", distribute = false)
+      publishRewrite(v, victims, added, Nil, "compact")
       v
     }
 
@@ -3895,23 +3714,17 @@ object SnapshotLog {
       if (victims.size <= bins) {
         publishSegment(v, Seq.empty); return v
       }
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
       // RANGE exchange on the bin id, not hash: hash-repartitioning k
       // bin keys into the default partition count can land two bins in
       // one task (the output would have FEWER, larger files than the
       // byte target sized — harmless for count-targeted whole-table
       // compaction, wrong for a byte-targeted contract)
-      writeTmp(readFilesMorAt(v - 1, victims)
+      val added = land(readFilesMorAt(v - 1, victims)
         .withColumn("__bin", pmod(monotonically_increasing_id(),
           lit(bins.toLong)).cast("int"))
         .repartitionByRange(bins, col("__bin"))
-        .drop("__bin"), partCol, tmp, v - 1, distribute = false)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+        .drop("__bin"), partCol, v, "compactPartition", distribute = false)
+      publishRewrite(v, victims, added, Nil, "compactPartition")
       v
     }
 
@@ -4020,16 +3833,10 @@ object SnapshotLog {
         if (r.isNullAt(0) || r.isNullAt(2)) lit(0L) // all-null dims
         else shiftleft(spread(bucket(colA, r.getLong(0), r.getLong(1))), 1)
           .bitwiseOR(spread(bucket(colB, r.getLong(2), r.getLong(3))))
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(src.withColumn("__z", z)
+      val added = land(src.withColumn("__z", z)
         .repartitionByRange(filesPerRange, col("__z"))
-        .drop("__z"), partCol, tmp, v - 1, distribute = false)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+        .drop("__z"), partCol, v, "clusterZ", distribute = false)
+      publishRewrite(v, victims, added, Nil, "clusterZ")
       v
     }
 
@@ -4038,17 +3845,11 @@ object SnapshotLog {
       val v = casCheck(expectedVersion)
       val victims = liveFiles(v - 1)
       if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
-      val tmp = new Path(s"$root/_tmp_v$v-${
-        java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(readFilesMorAt(v - 1, victims) // DV-applied (commitCompact)
+      val added = land(readFilesMorAt(v - 1, victims) // DV-applied
         .repartitionByRange(filesPerRange,
-          col(physicalAt(v - 1, clusterCol))), partCol, tmp, v - 1,
+          col(physicalAt(v - 1, clusterCol))), partCol, v, "cluster",
         distribute = false)
-      val added = adopt(tmp, v)
-      fs.delete(tmp, true)
-      publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added), added)
-      buildBlooms(v, added)
+      publishRewrite(v, victims, added, Nil, "cluster")
       v
     }
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** Real-concurrency stress of the commit protocol: N threads race
   * commits through [[SnapshotLog.Table.withRetry]] against one table
@@ -381,6 +381,59 @@ class CommitRaceSpec extends SparkSpec {
     assert(t.orphanFiles().isEmpty)
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
+  }
+
+  // the same seam under every rewrite shape: a commit that REMOVES
+  // files wins the reservation and dies before its segment body lands.
+  // Each op is (table, expectedVersion) => committed version.
+  private val k23 = KeyRange.Longs("k", 2L, 3L)
+  for ((op, rewrite) <- Seq[(String, (SnapshotLog.Table, Int) => Int)](
+      "range delete" -> ((t, e) => t.commitDeleteRange("part", k23, e)),
+      "range update" -> ((t, e) => t.commitUpdate("part", k23,
+        Map("v" -> (col("v") + 1)), expectedVersion = e)),
+      "replace-where" -> ((t, e) => {
+        import spark.implicits._
+        t.commitReplaceWhere("part", k23,
+          Seq((2L, "a", 99L)).toDF("k", "part", "v"), e)
+      }),
+      "compaction" -> ((t, e) => t.commitCompact("part",
+        expectedVersion = e)))) {
+  test(s"crashed $op at the publish seam: tip unchanged, version " +
+    "recoverable, orphans reclaimable [s3sim]") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_crashrw_").toString
+    val t = new SnapshotLog.Table(spark, root,
+      binder = SnapshotLog.ConditionalPutBinder)
+    t.commitAppend(Seq((1L, "a", 10L), (2L, "a", 20L)).toDF("k", "part", "v")
+      .coalesce(1), "part")                                     // v1
+    t.commitAppend(Seq((3L, "a", 30L), (4L, "a", 40L)).toDF("k", "part", "v")
+      .coalesce(1), "part")                                     // v2
+    def rows(v: Int) = t.asOfMor(v).select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    val before = rows(2)
+    SnapshotLog.ConditionalPutBinder.crashNextBody = true
+    intercept[SnapshotLog.SimulatedWriterCrash](rewrite(t, -1)) // torn v3
+    // the torn rewrite is invisible: same tip, same rows
+    assert(t.version == 2)
+    assert(rows(2) == before)
+    assert(t.orphanFiles().nonEmpty, "the torn rewrite adopted no files")
+    // past the grace window the same withRetry loop every production
+    // writer uses supersedes the dead reservation and takes v3
+    Thread.sleep(
+      SnapshotLog.ConditionalPutBinder.RecoveryGraceNanos / 1000000 + 100)
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    val v = t.withRetry(maxAttempts = 100) { expected =>
+      assert(System.nanoTime < deadline, "recovery livelocked")
+      rewrite(t, expected)
+    }
+    assert(v == 3, s"recovered $op must take the wedged version, got $v")
+    // the crashed writer's adopted files are orphans, and reclaimable
+    t.cleanOrphans()
+    assert(t.orphanFiles().isEmpty)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(root))
+  }
   }
 
   test("crashed writer pre-publish leaves only orphans [posix]") {

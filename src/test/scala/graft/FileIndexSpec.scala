@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{FileIndex, Wave8}
+import graft.sources.KeyRange
 
 /** Invariants for the file-index wave: the oracle proves value
   * equality; these prove the SKIPPING is real (files actually pruned)
@@ -14,7 +15,7 @@ class FileIndexSpec extends SparkSpec {
     val all = t.liveFiles(t.version)
     // o_orderkey is uniform over ingest time: every file's [min,max]
     // spans ~the whole domain, so the RANGE prune keeps everything...
-    val byRange = t.pruneFiles(t.version, "o_orderkey", 11L, 123L)
+    val byRange = t.pruneFiles(t.version, KeyRange.Longs("o_orderkey", 11L, 123L))
     assert(byRange.size == all.size, "range stats should not help here")
     // ...and the bloom MEMBERSHIP prune skips most files
     val byBloom = t.pointLookupFiles(t.version, "o_orderkey",
@@ -45,7 +46,7 @@ class FileIndexSpec extends SparkSpec {
     val t = FileIndex.idxStagedTable(spark, sf)
     val (lo, hi) = (Wave8.days("1997-06-01"), Wave8.days("1998-06-01"))
     val all = t.liveFiles(t.version)
-    val pruned = t.pruneFiles(t.version, "o_date", lo, hi)
+    val pruned = t.pruneFiles(t.version, KeyRange.Longs("o_date", lo, hi))
     // the [97-06, 98-06] window lies inside commit 2's [97-01, 99-01)
     // batch: only v2- files survive
     assert(pruned.nonEmpty && pruned.size < all.size)
@@ -99,8 +100,8 @@ class FileIndexSpec extends SparkSpec {
     assert(all.size == 4)
     val probe = Seq(did(11), did(222))
     // range stats keep everything...
-    val byRange = t.pruneFilesStr(t.version, "doc_id",
-      probe.min, probe.max)
+    val byRange = t.pruneFiles(t.version, KeyRange.Strings("doc_id",
+      probe.min, probe.max))
     assert(byRange.size == all.size, "range stats should not help here")
     // ...bloom membership prunes to ~the files holding the ids
     val byBloom = t.pointLookupFilesStr(t.version, "doc_id", probe)
@@ -190,10 +191,10 @@ class FileIndexSpec extends SparkSpec {
     val (lo, hi) = (10000000L, 20000000L)
     // pre-cluster (version 4): price scattered by the key-hash ingest,
     // every file's [min,max] spans the band — stats prune NOTHING
-    val pre = t.pruneFiles(4, "price_cents", lo, hi)
+    val pre = t.pruneFiles(4, KeyRange.Longs("price_cents", lo, hi))
     assert(pre.size == t.liveFiles(4).size, "scattered layout must not prune")
     // post-cluster: narrow per-file slices — the same stats now skip
-    val post = t.pruneFiles(t.version, "price_cents", lo, hi)
+    val post = t.pruneFiles(t.version, KeyRange.Longs("price_cents", lo, hi))
     assert(post.nonEmpty && post.size < t.liveFiles(t.version).size,
       s"kept ${post.size} of ${t.liveFiles(t.version).size}")
     // pure reorganization: row identity across the cluster commit
@@ -278,7 +279,7 @@ class FileIndexSpec extends SparkSpec {
       .createTempDirectory("graft_droprange_nop_").toString
     val s = new SnapshotLog.Table(spark, root)
     s.commitAppend(Seq((1L, "a", 5L)).toDF("k", "part", "v"), "part")
-    val nop = s.commitDeleteRange("part", "v", -99L, -90L)
+    val nop = s.commitDeleteRange("part", KeyRange.Longs("v", -99L, -90L))
     assert(nop == 2)
     assert(s.entries.filter(e => e.version == nop &&
       (e.action == "add" || e.action == "remove")).isEmpty)
@@ -297,7 +298,7 @@ class FileIndexSpec extends SparkSpec {
       "part")
     t.commitAppend((41L to 80L).map(k => (k, "a", k)).toDF("k", "part", "v"),
       "part")
-    t.commitDeleteRange("part", "k", 10L, 20L)
+    t.commitDeleteRange("part", KeyRange.Longs("k", 10L, 20L))
     val es0 = t.entries
     val live0 = t.liveFiles(t.version)
     // checkpoint consolidates verbatim: entries identical
@@ -314,7 +315,8 @@ class FileIndexSpec extends SparkSpec {
     assert(t.entries == es0)
     assert(t.liveFiles(3) == live0)
     assert(t.asOf(3).filter(col("k").between(10L, 20L)).count() == 0)
-    assert(t.pruneFiles(3, "k", 1L, 5L).size < live0.size + 1) // stats live
+    assert(t.pruneFiles(3, KeyRange.Longs("k", 1L, 5L)).size <
+      live0.size + 1) // stats live
     assert(t.entries.exists(e => e.version == 1 && e.action == "add"))
     // the log keeps working past the checkpoint
     t.commitAppend(Seq((100L, "a", 100L)).toDF("k", "part", "v"), "part")
@@ -397,7 +399,7 @@ class FileIndexSpec extends SparkSpec {
     assert(t.asOf(4).count() == 4)
     // zone maps recorded at stage time survive re-stamping: the
     // k=20 batch's file is prunable by range
-    val hit = t.pruneFiles(4, "k", 20L, 20L)
+    val hit = t.pruneFiles(4, KeyRange.Longs("k", 20L, 20L))
     assert(hit.exists(_.contains("by-")) && hit.size < t.liveFiles(4).size)
     // time travel: version 2 (the interleaved commit) never saw
     // either staged batch
@@ -667,7 +669,7 @@ class FileIndexSpec extends SparkSpec {
     }
     val repl = (100L to 120L).map(v => (v, "x")).toDF("v", "part")
     val v0 = t.version
-    t.commitReplaceWhere("part", "v", 100L, 199L, repl)
+    t.commitReplaceWhere("part", KeyRange.Longs("v", 100L, 199L), repl)
     // ATOMIC: exactly one version carries the whole swap
     assert(t.version == v0 + 1, "replace-where must be one commit")
     // blast radius: bands 1 and 3 carried over by log reference
@@ -688,7 +690,7 @@ class FileIndexSpec extends SparkSpec {
     // contract: a batch outside the region is rejected before commit
     val bad = Seq((999L, "x")).toDF("v", "part")
     intercept[IllegalArgumentException](
-      t.commitReplaceWhere("part", "v", 100L, 199L, bad))
+      t.commitReplaceWhere("part", KeyRange.Longs("v", 100L, 199L), bad))
     assert(t.version == v0 + 1, "rejected batch must not commit")
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
@@ -705,7 +707,7 @@ class FileIndexSpec extends SparkSpec {
         .toDF("src", "n", "part").coalesce(1), "part")
     }
     // reload the 'mike' source region atomically, string-keyed
-    t.commitReplaceWhereStr("part", "src", "mike", "mike",
+    t.commitReplaceWhere("part", KeyRange.Strings("src", "mike", "mike"),
       (0L until 5L).map(i => (s"mike-$i", 100L + i, "x"))
         .toDF("src", "n", "part"))
     val rem = t.entries.filter(e =>
@@ -717,7 +719,7 @@ class FileIndexSpec extends SparkSpec {
       !got.contains("mike-19") && got("alpha-3") == 3L)
     // out-of-region batch rejected
     intercept[IllegalArgumentException](
-      t.commitReplaceWhereStr("part", "src", "mike", "mike",
+      t.commitReplaceWhere("part", KeyRange.Strings("src", "mike", "mike"),
         Seq(("zulu-99", 1L, "x")).toDF("src", "n", "part")))
     // vacuum dry-run: names the replaced file and its manifest bytes,
     // deletes nothing
@@ -839,14 +841,16 @@ class FileIndexSpec extends SparkSpec {
     }
     val pre = t.version
     // pre-cluster: stats exist but prune NOTHING on either dimension
-    assert(t.pruneFiles(pre, "a", 10L, 15L).size == t.liveFiles(pre).size)
-    assert(t.pruneFiles(pre, "b", 10L, 15L).size == t.liveFiles(pre).size)
+    assert(t.pruneFiles(pre, KeyRange.Longs("a", 10L, 15L)).size ==
+      t.liveFiles(pre).size)
+    assert(t.pruneFiles(pre, KeyRange.Longs("b", 10L, 15L)).size ==
+      t.liveFiles(pre).size)
     t.commitClusterZ("part", "a", "b", filesPerRange = 16)
     val v = t.version
     val live = t.liveFiles(v).size
     // post-cluster: a narrow band on EITHER dimension prunes files
-    val pa = t.pruneFiles(v, "a", 10L, 15L).size
-    val pb = t.pruneFiles(v, "b", 10L, 15L).size
+    val pa = t.pruneFiles(v, KeyRange.Longs("a", 10L, 15L)).size
+    val pb = t.pruneFiles(v, KeyRange.Longs("b", 10L, 15L)).size
     assert(pa < live, s"z-order did not make dim a prune: $pa/$live")
     assert(pb < live, s"z-order did not make dim b prune: $pb/$live")
     // ... and the ambient path composes: a rectangle query through
@@ -888,7 +892,7 @@ class FileIndexSpec extends SparkSpec {
     // content: data files, zone-map stats, and DV bindings all carried
     assert(keys(dst) == want)
     assert(dst.zoneMaps.nonEmpty, "stats must carry verbatim")
-    assert(dst.pruneFiles(1, "k", 200L, 210L).size <
+    assert(dst.pruneFiles(1, KeyRange.Longs("k", 200L, 210L)).size <
       dst.liveFiles(1).size, "carried stats must prune on the clone")
     // divergence: each side's commits are invisible to the other
     dst.commitAppend(Seq((999L, "x")).toDF("k", "part"), "part")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.MergeOnRead
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** Structural contracts of the merge-on-read wave: the oracle proves
   * the VALUES; these prove the deletes were actually deferred (zero
@@ -177,7 +177,7 @@ class MergeOnReadSpec extends SparkSpec {
       .toDF("k", "part", "v", "__op"), "part", "k")
     check(t2, file2Rewritten = false)
     val (r3, t3) = fresh("rng") // range delete v∈[50,60] prunes to file 1
-    t3.commitDeleteRange("part", "v", 50L, 60L)
+    t3.commitDeleteRange("part", KeyRange.Longs("v", 50L, 60L))
     check(t3, file2Rewritten = false)
     val (r4, t4) = fresh("whr") // partition-scoped COW delete on file 1;
     // the keep predicate RETAINS k=5 — only the DV may kill it

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 import graft.sources.SnapshotLog.Entry
 
 /** The manifest read path at manifest SCALE: the memoized fold
@@ -91,7 +91,7 @@ class SnapshotFoldSpec extends SparkSpec {
       val th = new SnapshotLog.Table(spark, root)
       assert(th.liveFiles(10).size == 100000)
       // zone prune over the memoized stats: narrow band keeps ~1 file
-      val hits = th.pruneFiles(10, "k", 500005L, 500050L)
+      val hits = th.pruneFiles(10, KeyRange.Longs("k", 500005L, 500050L))
       assert(hits.nonEmpty && hits.size < 100, s"prune kept ${hits.size}")
     }
     val perRep = (System.nanoTime - t1) / 1e9 / reps
@@ -149,7 +149,7 @@ class SnapshotFoldSpec extends SparkSpec {
     t.renameColumn("v", "val2")                             // v2
     // range delete addressed by the NEW logical name: victims carry
     // the physical column, the keep predicate must still hit it
-    t.commitDeleteRange("part", "val2", 10L, 30L)           // v3: k=1..3
+    t.commitDeleteRange("part", KeyRange.Longs("val2", 10L, 30L)) // v3: k=1..3
     // merge (COW) with the batch speaking the new name
     t.commitMerge(Seq((4L, "x", 999L), (21L, "x", 210L))
       .toDF("k", "part", "val2").coalesce(1), "part", "k")  // v4
@@ -179,6 +179,26 @@ class SnapshotFoldSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       t.renameColumn("k", "part")
     }
+    rm(root)
+  }
+
+  test("column mapping: a range update prunes by its own column when " +
+    "another column took its physical name") {
+    import spark.implicits._
+    val root = tmp("graft_colmap_swap_")
+    val t = new SnapshotLog.Table(spark, root)
+    // file 1: a in 1..5, c in 100..105; file 2: a in 10..15, c in 1..5
+    t.commitAppend((1L to 5L).map(i => (i, "x", i, 100L + i))
+      .toDF("k", "part", "a", "c").coalesce(1), "part")     // v1
+    t.commitAppend((10L to 15L).map(i => (i, "x", i, i - 9L))
+      .toDF("k", "part", "a", "c").coalesce(1), "part")     // v2
+    t.renameColumn("a", "b")                                // v3
+    t.renameColumn("c", "a")                                // v4
+    // logical b is physical a; logical a is physical c. The prune must
+    // map b once (to a), never twice (to c, which is file 2's range)
+    t.commitUpdate("part", KeyRange.Longs("b", 1L, 5L),
+      Map("k" -> (col("k") + 1000L)))                       // v5
+    assert(t.asOf(t.version).filter(col("k") > 1000L).count() == 5)
     rm(root)
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** Round-9 storage-layer hardening contracts: pruning parity for
   * non-integer merge keys, bloom-assisted merge candidates, NULL-safe
@@ -78,7 +78,7 @@ class SnapshotHardeningSpec extends SparkSpec {
     val live = t.liveFiles(t.version).size
     assert(live >= 3)
     // range-only truth: the source key range spans all files
-    assert(t.pruneFiles(t.version, "k", 30L, 31L).size == live,
+    assert(t.pruneFiles(t.version, KeyRange.Longs("k", 30L, 31L)).size == live,
       "fixture broken: range stats were supposed to be useless here")
     val src = Seq((30L, "x", 123L)).toDF("k", "part", "v") // lives in r=0
     t.commitMerge(src, "part", "k")
@@ -93,20 +93,31 @@ class SnapshotHardeningSpec extends SparkSpec {
 
   test("range delete preserves NULL-keyed rows in rewritten files") {
     import spark.implicits._
-    val root = tmpRoot("snulldel")
-    val t = new SnapshotLog.Table(spark, root)
-    val rows = Seq[(java.lang.Long, String)]((1L, "x"), (5L, "x"),
-      (null, "x"), (9L, "x"), (null, "x"))
-    t.commitAppend(rows.toDF("k", "part").coalesce(1), "part")
-    // the file HAS stats for k (nulls plus values), intersects [4,6] →
-    // it is rewritten; SQL DELETE WHERE k BETWEEN 4 AND 6 must not
-    // match the NULL rows
-    t.commitDeleteRange("part", "k", 4L, 6L)
-    val after = t.asOf(t.version)
-    assert(after.count() == 4, "NULL-keyed rows were destroyed")
-    assert(after.filter(col("k").isNull).count() == 2)
-    assert(after.filter(col("k") === 5L).count() == 0)
-    rm(root)
+    // once per key kind a range delete rewrites (long, string, date)
+    val day = java.time.LocalDate.parse(_: String)
+    val cases = Seq(
+      ("long", Seq[java.lang.Long](1L, 5L, null, 9L, null).toDF("k"),
+        KeyRange.Longs("k", 4L, 6L), lit(5L)),
+      ("string", Seq("a", "e", null, "i", null).toDF("k"),
+        KeyRange.Strings("k", "d", "f"), lit("e")),
+      ("date", Seq(day("2026-01-01"), day("2026-01-05"), null,
+        day("2026-01-09"), null).toDF("k"),
+        KeyRange.Dates("k", day("2026-01-04").toEpochDay.toInt,
+          day("2026-01-06").toEpochDay.toInt), lit(day("2026-01-05"))))
+    cases.foreach { case (kind, keys, range, hit) =>
+      val root = tmpRoot(s"snulldel$kind")
+      val t = new SnapshotLog.Table(spark, root)
+      t.commitAppend(keys.withColumn("part", lit("x")).coalesce(1), "part")
+      // the file HAS stats for k (nulls plus values), intersects the
+      // range → it is rewritten; SQL DELETE WHERE k BETWEEN lo AND hi
+      // must not match the NULL rows
+      t.commitDeleteRange("part", range)
+      val after = t.asOf(t.version)
+      assert(after.count() == 4, s"[$kind] NULL-keyed rows were destroyed")
+      assert(after.filter(col("k").isNull).count() == 2)
+      assert(after.filter(col("k") === hit).count() == 0)
+      rm(root)
+    }
   }
 
   test("string range delete: COW blast radius is the string-stat set") {
@@ -118,7 +129,7 @@ class SnapshotHardeningSpec extends SparkSpec {
         .toDF("k", "part").coalesce(1), "part")
     }
     val before = t.liveFiles(t.version)
-    val v = t.commitDeleteRangeStr("part", "k", "b000", "b009")
+    val v = t.commitDeleteRange("part", KeyRange.Strings("k", "b000", "b009"))
     // only the b-file was rewritten: the others carry over by reference
     val removed = before.filterNot(t.liveFiles(v).contains)
     assert(removed.size == 1, s"rewrote ${removed.size} files, wanted 1")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotLog
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** Model-based randomized testing of the snapshot log: a seeded random
   * sequence of write operations is applied BOTH to a [[SnapshotLog
@@ -119,7 +119,7 @@ class SnapshotModelSpec extends SparkSpec {
         case 10 => // value-range COW delete (zone-map-pruned path)
           val lo = rnd.nextLong(math.max(1L, nextKey * 10))
           val hi = lo + 500
-          t.commitDeleteRange("part", vName, lo, hi)
+          t.commitDeleteRange("part", KeyRange.Longs(vName, lo, hi))
           model = model.filterNot { case (_, v) => v >= lo && v <= hi }
         case 11 => // clustered rewrite (pure reorganization)
           t.commitCluster("part", "k", filesPerRange = 2)
@@ -136,7 +136,7 @@ class SnapshotModelSpec extends SparkSpec {
           val ks = (nextKey until nextKey + 1 + rnd.nextInt(3))
           nextKey = ks.last + 1
           val rows = ks.map(k => k -> (lo + k % 501)) // inside [lo, hi]
-          t.commitReplaceWhere("part", vName, lo, hi, df(rows))
+          t.commitReplaceWhere("part", KeyRange.Longs(vName, lo, hi), df(rows))
           model = model.filterNot { case (_, v) =>
             v >= lo && v <= hi } ++ rows
         case 15 => // metadata-only RENAME COLUMN of the value column
@@ -152,7 +152,7 @@ class SnapshotModelSpec extends SparkSpec {
         case 19 => // pruned COW range UPDATE on the key
           val lo = rnd.nextLong(math.max(1L, nextKey))
           val hi = lo + 20
-          t.commitUpdateRange("part", "k", lo, hi,
+          t.commitUpdate("part", KeyRange.Longs("k", lo, hi),
             Map(vName -> (col(vName) + lit(9))))
           model = model.map { case (k, v) =>
             k -> (if (k >= lo && k <= hi) v + 9 else v) }
@@ -170,7 +170,7 @@ class SnapshotModelSpec extends SparkSpec {
           // degrades conservatively to every live file and the row
           // predicate does the filtering — the typed variant soaked
           // against DVs, widening, defaults and renames
-          t.commitUpdateRangeStr("part", "part", "a", "z",
+          t.commitUpdate("part", KeyRange.Strings("part", "a", "z"),
             Map(vName -> (col(vName) + lit(4))))
           model = model.map { case (k, v) => k -> (v + 4) }
         case 21 => // absent-partition delete: zero rows, honest

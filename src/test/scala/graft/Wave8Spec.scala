@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Wave8
+import graft.sources.KeyRange
 
 /** Invariants for the snapshot-versioning wave (the oracle proves value
   * equality; these prove the storage semantics are the intended ones —
@@ -218,7 +219,7 @@ class Wave8Spec extends SparkSpec {
     val t = Wave8.skipStagedTable(spark, sf)
     val (lo, hi) = (Wave8.days("1997-06-01"), Wave8.days("1998-06-01"))
     val all = t.liveFiles(t.version)
-    val pruned = t.pruneFiles(t.version, "o_date_days", lo, hi)
+    val pruned = t.pruneFiles(t.version, KeyRange.Longs("o_date_days", lo, hi))
     // the [97-06, 98-06] window lies inside commit 2's [97-01, 99-01)
     // batch: only v2- files survive, and the skip is real
     assert(pruned.nonEmpty && pruned.size < all.size)
@@ -226,10 +227,12 @@ class Wave8Spec extends SparkSpec {
     // every file of the table carries stats for the ingest column
     assert(all.forall(p => t.zoneMaps.get(p).exists(_.contains("o_date_days"))))
     // pruning is conservative: a column with no stats keeps everything
-    assert(t.pruneFiles(t.version, "no_such_col", 0, 1) == all)
+    assert(t.pruneFiles(t.version, KeyRange.Longs("no_such_col", 0, 1)) == all)
     // a range beyond the data proves files can be skipped entirely
-    assert(t.pruneFiles(t.version, "o_date_days", -5000, -4000).isEmpty)
-    assert(t.asOfWhere(t.version, "o_date_days", -5000, -4000).isEmpty)
+    assert(t.pruneFiles(t.version,
+      KeyRange.Longs("o_date_days", -5000, -4000)).isEmpty)
+    assert(t.asOfWhere(t.version,
+      KeyRange.Longs("o_date_days", -5000, -4000)).isEmpty)
   }
 
   test("commit protocol: two writers race, exactly one wins") {
@@ -398,26 +401,27 @@ class Wave8Spec extends SparkSpec {
       .toDF("k", "part", "d", "nm"), "part")
     val all = t.liveFiles(2)
     // DATE column (parquet INT32/date): pruning by epoch-day range
-    val d97 = t.pruneFiles(2, "d", days("1997-01-01"), days("1997-12-31"))
+    val d97 = t.pruneFiles(2,
+      KeyRange.Longs("d", days("1997-01-01"), days("1997-12-31")))
     assert(d97.nonEmpty && d97.forall(_.contains("/v1-")) &&
       d97.size < all.size)
-    assert(t.pruneFiles(2, "d", days("2005-01-01"),
-      days("2005-12-31")).isEmpty)
+    assert(t.pruneFiles(2, KeyRange.Longs("d", days("2005-01-01"),
+      days("2005-12-31"))).isEmpty)
     // STRING column: byte-order bounds with truncation-safe upper
-    val sLo = t.pruneFilesStr(2, "nm", "aaaa", "c")
+    val sLo = t.pruneFiles(2, KeyRange.Strings("nm", "aaaa", "c"))
     assert(sLo.nonEmpty && sLo.forall(_.contains("/v1-")) &&
       sLo.size < all.size)
     // the >16-char value: its file must still match a range that only
     // its TRUE value (not a naive truncation) intersects
-    val sHi = t.pruneFilesStr(2, "nm", "zulu-with-a-suffix-l", "zz")
+    val sHi = t.pruneFiles(2, KeyRange.Strings("nm", "zulu-with-a-suffix-l", "zz"))
     assert(sHi.nonEmpty && sHi.forall(_.contains("/v2-")))
-    assert(t.pruneFilesStr(2, "nm", "zzz", "zzzz").isEmpty)
+    assert(t.pruneFiles(2, KeyRange.Strings("nm", "zzz", "zzzz")).isEmpty)
     // the pruned read + row filter equals the full read + row filter
     val full = t.asOf(2)
       .filter(col("d").between(day("1997-01-01"), day("1997-12-31")))
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
-    val pruned = t.asOfWhere(2, "d", days("1997-01-01"),
-      days("1997-12-31")).get
+    val pruned = t.asOfWhere(2, KeyRange.Longs("d", days("1997-01-01"),
+      days("1997-12-31"))).get
       .filter(col("d").between(day("1997-01-01"), day("1997-12-31")))
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(full == pruned && full == Seq(1L, 2L))

@@ -14,27 +14,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // dev loop: SPARK_GRAFT_ONLY=q_a,q_b restricts the run (driver unsets it).
-    // Unknown names fail fast — a misspelling must not silently yield an
-    // empty/partial benchmark indistinguishable from a full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY contains unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    val spark = DevSession.start()
+    val only = DevSession.only
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => DevSession.selected(n) }
 
     // Previous round's per-query times (read BEFORE this run overwrites
     // BENCH_FULL.json, and only when the prior run measured the SAME SF
@@ -62,20 +45,6 @@ object Bench {
       }
     }
 
-    // Between queries, drop blocks pinned by the engine's
-    // localCheckpoint() call sites: checkpointed RDDs stay registered in
-    // the context until unpersisted, so a 350+-query session accumulates
-    // hundreds of block sets, and the resulting storage pressure taxes
-    // LATER queries by run-order — measured as unexplained 2-8× swings
-    // on unchanged code (q_label_prop 1.4 ↔ 11.5 s run-to-run). Queries
-    // are independent here, so nothing can reuse a prior query's
-    // checkpoint; timing stops before the cleanup.
-    def dropPinnedBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
-    }
-
     // per-query progress on stderr (not the driver-parsed stdout):
     // wall offsets let a slow query be correlated with external events
     // (GC log timestamps, co-tenant load) when diagnosing variance
@@ -88,7 +57,7 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(
         f"[bench] $name%-28s ${dt}%8.3fs @${(t0 - runT0) / 1e9}%8.1fs")
-      dropPinnedBlocks()
+      DevSession.dropPinnedBlocks(spark) // after the timer stops
       (name, dt, ok)
     }
     val firstPass = ordered.map { case (name, fn) => timeOne(name, fn) }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-dump main: writes `EXPLAINS.md` with the formatted physical plan
   * of each headline query at the given scale factor — the artifact for
   * "is this the plan you'd want" review (builder prompt / SURVEY §7.3
@@ -139,14 +137,7 @@ object Explain {
     val restrict = args.lift(2).map(_.split(",").map(_.trim)
       .filter(_.nonEmpty).toSeq)
     val suffix = args.lift(3).getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession.start("ERROR")
 
     // Staged scratch dirs (graft.util.Staging fingerprints, 16 hex
     // chars) and java.io.tmpdir temp suffixes are machine/run-local;

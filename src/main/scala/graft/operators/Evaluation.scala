@@ -323,7 +323,7 @@ object Evaluation {
       // spread before the ×26 char crossJoin (Tables.spread contract):
       // the length-delta letter counting scans every doc's text 26
       // times, and the one-split documents scan ran BOTH the train and
-      // test counting stages in single 0.5-0.65 s tasks (JobProbe r16);
+      // test counting stages in single 0.5-0.65 s tasks (job trace, r16);
       // the repartition moves only the pre-expansion doc rows
       val docs = graft.Tables.spread(Tables(spark, dir).documents)
         .select(col("doc_id"), col("lang"), lower(col("text")).as("txt"))

@@ -39,7 +39,7 @@ final case class MinHashDedup(k: Int, bands: Int) {
     // spread before the shingle explode (Tables.spread contract, same
     // as Dedup.gramRelation): the one-split doc scan ran the whole
     // explode+hash+partial-distinct in a single 0.54 s task at bench
-    // SF (JobProbe r16); the repartition moves only the pre-expansion
+    // SF (job trace, r16); the repartition moves only the pre-expansion
     // doc rows and is split-count-gated, so it is a no-op at scale
     graft.Tables.spread(docs)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))

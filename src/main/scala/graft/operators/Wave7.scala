@@ -303,7 +303,7 @@ object Wave7 {
         // spreadBy pins the pair join's exchange at full width: the
         // levenshtein verify over ~64·n blocked pairs is the query's
         // whole cost, and AQE's byte-based coalescing ran it in ONE
-        // task off the kilobyte key relation (JobProbe r16: a 0.96 s
+        // task off the kilobyte key relation (job trace, r16: a 0.96 s
         // single-task job; the keyed repartition IS the join's
         // exchange, not an extra one — guide §2.5)
         val lev = levenshtein(col("nm"), col("dn"))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Path}
-import org.apache.spark.sql.graft.ParquetFiles
+import org.apache.spark.sql.graft.{ParquetFiles, Trace}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,23 +63,6 @@ object SnapshotLog {
     * to the table's data root. A remove never deletes bytes — old
     * versions stay readable. */
   final case class Entry(version: Int, action: String, path: String)
-
-  /** Env-gated commit-phase wall timer (`SPARK_GRAFT_STEPTIME=1`):
-    * attribution for the fixture-heavy snapshot queries' bench seconds
-    * (write vs candidate-prune vs stats vs publish). A plain branch on
-    * a cached flag — zero cost when off. */
-  private[sources] object CommitTiming {
-    private val enabled = sys.env.get("SPARK_GRAFT_STEPTIME").contains("1")
-    @inline def timed[T](label: => String)(f: => T): T =
-      if (!enabled) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[ctime] ${label}%-34s ${(System.nanoTime() - t0) / 1e9}%7.3fs")
-        r
-      }
-  }
 
   private[graft] def hexStr(s: String): String =
     s.getBytes("UTF-8").map(b => f"$b%02x").mkString
@@ -1166,9 +1149,11 @@ object SnapshotLog {
 
     /** Writes: a user batch arrives with LOGICAL (current) names —
       * store it under the PHYSICAL ones so all files of a column
-      * agree forever. Internal COW rewrites pass through here too but
-      * already carry physical names (they read raw), so the renames
-      * no-op. Dropped logical names are rejected loudly.
+      * agree forever. Apply it once, at the boundary where the batch
+      * enters: frames read raw already carry physical names, and
+      * mapping them again is wrong once a logical name equals another
+      * column's physical one (see [[land]]). Dropped logical names are
+      * rejected loudly.
       *
       * `at` is the mapping snapshot — commits pass the version their
       * casCheck planned on (v - 1), NEVER the live `version`: `version`
@@ -1514,7 +1499,8 @@ object SnapshotLog {
       require(!fs.exists(sp), s"branch $branch already has a staged batch")
       val tmp = new Path(s"$root/_tmp_b$branch-${
         java.util.UUID.randomUUID.toString.take(8)}")
-      writeTmp(df, partCol, tmp, version)
+      val at = version
+      writeTmp(toPhysical(df, at), partCol, tmp, at)
       // adopt with a branch prefix (no version exists yet — the
       // version is assigned at publish time)
       val added = adoptAs(tmp, s"b$branch")
@@ -2107,15 +2093,8 @@ object SnapshotLog {
       * and two concurrent table writes can't see each other's value.
       * Clone cost is driver-side milliseconds against a commit that
       * runs a Spark job. */
-    private def writeTmp(df: DataFrame, partCol: String, tmp: Path,
+    private def writeTmp(phys0: DataFrame, partCol: String, tmp: Path,
         at: Int, distribute: Boolean = true): Unit = {
-      // column mapping: user batches arrive under logical names; the
-      // footers, partition dirs and stats must use PHYSICAL ones.
-      // Internal COW rewrites already carry physical names (raw
-      // reads), so this is identity for them. `at` = the commit's
-      // casCheck snapshot (v - 1) — see toPhysical on why the live
-      // `version` must not be consulted mid-commit.
-      val phys0 = toPhysical(df, at)
       // schema evolution at the write boundary: widened columns are
       // CAST so post-widening footers carry the wide type (readers
       // would upcast anyway — this keeps footer stats at the declared
@@ -2144,8 +2123,8 @@ object SnapshotLog {
       // scale (the many-small-files problem), and at bench SF the
       // single-split batch writes all P partition dirs in ONE task,
       // serializing the encode (measured 0.44–1.07 s per commit, the
-      // dominant phase of every snapshot fixture — JobProbe/StepProfile
-      // r16). The explicit count pins the exchange against AQE
+      // dominant phase of every snapshot fixture in the r16 job
+      // profiles). The explicit count pins the exchange against AQE
       // byte-based coalescing (tiny commits would collapse back to one
       // task); rows of one value land in ONE task → exactly one file
       // per partition value per commit, the same file count the
@@ -2168,8 +2147,7 @@ object SnapshotLog {
         if (!distribute) out
         else {
           val est = out.queryExecution.optimizedPlan.stats.sizeInBytes
-          CommitTiming.timed(
-            s"writeTmp:est=$est dist=${est >= DistributeMinBytes}")(())
+          Trace.note("est" -> est, "dist" -> (est >= DistributeMinBytes))
           if (est < DistributeMinBytes) out
           else {
             val n = out.sparkSession.conf
@@ -2242,14 +2220,19 @@ object SnapshotLog {
       * temp dir (see [[writeTmp]]; `distribute = false` keeps a
       * caller-shaped layout), adopt its leaves as version `v`'s files,
       * and drop the temp dir. Returns the adopted relative paths.
-      * `op` names the commit in the `CommitTiming` spans. */
+      * `op` names the commit in its [[Trace]] spans. `df` must speak
+      * PHYSICAL column names (`partCol` stays logical): rewrites read
+      * raw files, and a logical batch is mapped once, by
+      * [[toPhysical]] at v - 1, before it lands. Mapping a raw frame
+      * again breaks once a logical name is another column's physical
+      * one (after `rename a -> b`, `rename c -> a`). */
     private def land(df: DataFrame, partCol: String, v: Int, op: String,
         distribute: Boolean = true): Seq[String] = {
       val tmp = new Path(s"$root/_tmp_v$v-${
         java.util.UUID.randomUUID.toString.take(8)}")
-      CommitTiming.timed(s"$op:writeTmp")(
+      Trace.span(s"$op:writeTmp")(
         writeTmp(df, partCol, tmp, v - 1, distribute))
-      val added = CommitTiming.timed(s"$op:adopt")(adopt(tmp, v))
+      val added = Trace.span(s"$op:adopt")(adopt(tmp, v))
       fs.delete(tmp, true)
       added
     }
@@ -2262,7 +2245,7 @@ object SnapshotLog {
       * [[buildBlooms]]). */
     private def publishRewrite(v: Int, victims: Seq[String],
         added: Seq[String], extra: Seq[Entry], op: String): Unit = {
-      CommitTiming.timed(s"$op:stats+publish")(
+      Trace.span(s"$op:stats+publish")(
         publishOrCleanup(v, victims.map(Entry(v, "remove", _)) ++
           added.map(Entry(v, "add", _)) ++ statsEntries(v, added) ++
           extra, added))
@@ -2316,10 +2299,10 @@ object SnapshotLog {
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
       checkConstraints(df)
-      val added = land(df, partCol, v, "append")
+      val added = land(toPhysical(df, v - 1), partCol, v, "append")
       val base = added.map(Entry(v, "add", _)) ++
-        CommitTiming.timed("append:stats")(statsEntries(v, added))
-      val ver = CommitTiming.timed("append:publish") {
+        Trace.span("append:stats")(statsEntries(v, added))
+      val ver = Trace.span("append:publish") {
         if (expectedVersion >= 0) { publishOrCleanup(v, base, added); v }
         else publishAppendRebase(v, base, added)
       }
@@ -2342,7 +2325,7 @@ object SnapshotLog {
       val v = casCheck(expectedVersion)
       checkConstraints(df)
       val victims = liveFiles(v - 1)
-      val added = land(df, partCol, v, "overwrite")
+      val added = land(toPhysical(df, v - 1), partCol, v, "overwrite")
       publishRewrite(v, victims, added, Nil, "overwrite")
       v
     }
@@ -2393,7 +2376,7 @@ object SnapshotLog {
       val withId = ranked
         .withColumn(idCol, col("__id_rn") + lit(wm)).drop("__id_rn")
       checkConstraints(withId)
-      val added = land(withId, partCol, v, "identity")
+      val added = land(toPhysical(withId, v - 1), partCol, v, "identity")
       publishRewrite(v, Nil, added,
         Seq(Entry(v, "idwm", s"$idPhys|${wm + total}")), "identity")
       maybeAutoCompact(partCol)
@@ -2501,7 +2484,8 @@ object SnapshotLog {
       val v = casCheck(expectedVersion)
       require(targetVersion >= 1 && targetVersion < v,
         s"tag target $targetVersion out of range [1, ${v - 1}]")
-      publishSegment(v, Seq(Entry(v, "tag", s"$name|$targetVersion")))
+      Trace.span("tag:publish")(
+        publishSegment(v, Seq(Entry(v, "tag", s"$name|$targetVersion"))))
       v
     }
 
@@ -2589,7 +2573,8 @@ object SnapshotLog {
           s"cannot restore to $targetVersion: deletion-vector sidecar " +
             s"${dvPath(rel, id)} was vacuumed")
       }
-      publishSegment(v, removes ++ adds ++ rebinds)
+      Trace.span("restore:publish")(
+        publishSegment(v, removes ++ adds ++ rebinds))
       v
     }
 
@@ -2615,7 +2600,7 @@ object SnapshotLog {
       else {
         val v = version + 1
         checkConstraints(df)
-        val added = land(df, partCol, v, "txn")
+        val added = land(toPhysical(df, v - 1), partCol, v, "txn")
         // rebase-safe: only THIS writer ever publishes this txnId (the
         // sink owns its batch ids), so re-stamping onto a new tip can
         // never race a duplicate of itself into the log
@@ -2863,7 +2848,7 @@ object SnapshotLog {
           .map(e => when(inRange, e).otherwise(col(cn)).as(cn))
           .getOrElse(col(cn))): _*)
       checkConstraints(updated)
-      val added = land(updated, partCol, v, "update")
+      val added = land(toPhysical(updated, v - 1), partCol, v, "update")
       publishRewrite(v, victims, added, Nil, "update")
       v
     }
@@ -2997,14 +2982,14 @@ object SnapshotLog {
       val source = toPhysical(source0, v - 1)
       val keyCol = physicalAt(v - 1, keyCol0)
       val live = liveFiles(v - 1)
-      val candidates = CommitTiming.timed("merge:candidates")(
+      val candidates = Trace.span("merge:candidates")(
         mergeCandidates(v - 1, source, keyCol, live))
       lastMergeScan = Some((candidates.size, live.size))
       val srcKeys = source.select(col(keyCol)).distinct()
       // driver-side file list: bounded by candidate-file count
       // (metadata scale), not row count; layout-aware reads so merges
       // work across partition evolution
-      val hits = CommitTiming.timed("merge:hitScan") {
+      val hits = Trace.span("merge:hitScan") {
         if (candidates.isEmpty) Seq.empty[String]
         else readFilesWithPos(candidates, v - 1)
           .join(broadcast(srcKeys), Seq(keyCol))
@@ -3254,7 +3239,7 @@ object SnapshotLog {
       val keys = toPhysical(keys0, v - 1) // column mapping at the boundary
       val keyCol = physicalAt(v - 1, keyCol0)
       val live = liveFiles(v - 1)
-      val candidates = CommitTiming.timed("delkeys:candidates")(
+      val candidates = Trace.span("delkeys:candidates")(
         mergeCandidates(v - 1, keys, keyCol, live))
       lastMergeScan = Some((candidates.size, live.size))
       if (candidates.isEmpty) { publishSegment(v, Seq.empty); return v }
@@ -3271,11 +3256,11 @@ object SnapshotLog {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // affected file list: bounded by candidate count, driver-side
-        val affected = CommitTiming.timed("delkeys:affected")(
+        val affected = Trace.span("delkeys:affected")(
           matched.select("__f").distinct()
             .collect().map(_.getString(0)).toSeq.sorted)
         if (affected.isEmpty) { publishSegment(v, Seq.empty); return v }
-        val dvId = CommitTiming.timed("delkeys:dvSidecars")(
+        val dvId = Trace.span("delkeys:dvSidecars")(
           buildDvSidecars(v, matched, affected))
         publishOrCleanup(v,
           affected.map(rel => Entry(v, "dv", s"$rel|$dvId")), Nil)
@@ -3571,7 +3556,7 @@ object SnapshotLog {
       val added = land(readFilesMorAt(v - 1, victims)
         .withColumn("__bin", pmod(monotonically_increasing_id(),
           lit(filesPerPartition.toLong)).cast("int"))
-        .repartition(col(partCol), col("__bin"))
+        .repartition(col(physicalAt(v - 1, partCol)), col("__bin"))
         .drop("__bin"), partCol, v, "compact", distribute = false)
       publishRewrite(v, victims, added, Nil, "compact")
       v

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Dev-loop diagnostic: prints, for each named query, every global
@@ -13,12 +12,7 @@ object PlanProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.DevSession.start("ERROR")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)
       // presence check on the PHYSICAL plan (what the sweep gates on)...
@@ -42,9 +36,7 @@ object PlanProbe {
         println(s"[probe] $n window#$i childRows=$rows " +
           s"child=${child.getClass.getSimpleName}")
       }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      graft.DevSession.dropPinnedBlocks(spark)
     }
     spark.stop()
   }

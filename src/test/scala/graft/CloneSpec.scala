@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.pipeline.{CloneConfig, ClonePipeline, ConnectorOptions}
-import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.graft.Trace
 
 /** Reference-semantics battery (SURVEY.md §5.2(4)): clone with prefix,
   * skip-if-exists idempotency, backup gating, post-write verification,
@@ -36,7 +36,7 @@ class CloneSpec extends SparkSpec {
   test("a parquet clone starts one Spark job per table: the copy") {
     val tables = Seq("region.parquet", "nation.parquet", "supplier.parquet")
     val cfg = freshCfg().copy(tables = tables)
-    val (results, jobs) = JobCount(spark)(ClonePipeline(spark, cfg).run())
+    val (results, jobs) = Trace.jobCount(spark)(ClonePipeline(spark, cfg).run())
     assert(results.forall(_.status == "cloned"), results.mkString("; "))
     assert(jobs == tables.size, s"$jobs jobs for ${tables.size} tables")
   }

@@ -44,9 +44,7 @@ class HashDomainSweepSpec extends SparkSpec {
       val wide = df.schema.fields.toSeq.flatMap(f =>
         wideDecimals(f.dataType, f.name))
       if (wide.nonEmpty) offenders += s"$name (${wide.mkString("; ")})"
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      DevSession.dropPinnedBlocks(spark)
     }
     assert(offenders.isEmpty,
       "queries emitting >15-digit decimals (cast the statistic to " +

@@ -41,9 +41,7 @@ class SinglePartitionSweepSpec extends SparkSpec {
       if (globals.nonEmpty && !boundedAllowlist.contains(name))
         offenders += s"$name (${globals.mkString(",")})"
       // mirror Verify's per-query cleanup: some builders pin/collect
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      DevSession.dropPinnedBlocks(spark)
     }
     assert(offenders.isEmpty,
       s"unreviewed global windows (add to allowlist ONLY with a bounded-" +

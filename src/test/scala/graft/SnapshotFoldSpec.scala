@@ -185,21 +185,42 @@ class SnapshotFoldSpec extends SparkSpec {
   test("column mapping: a range update prunes by its own column when " +
     "another column took its physical name") {
     import spark.implicits._
-    val root = tmp("graft_colmap_swap_")
-    val t = new SnapshotLog.Table(spark, root)
-    // file 1: a in 1..5, c in 100..105; file 2: a in 10..15, c in 1..5
-    t.commitAppend((1L to 5L).map(i => (i, "x", i, 100L + i))
-      .toDF("k", "part", "a", "c").coalesce(1), "part")     // v1
-    t.commitAppend((10L to 15L).map(i => (i, "x", i, i - 9L))
-      .toDF("k", "part", "a", "c").coalesce(1), "part")     // v2
-    t.renameColumn("a", "b")                                // v3
-    t.renameColumn("c", "a")                                // v4
-    // logical b is physical a; logical a is physical c. The prune must
-    // map b once (to a), never twice (to c, which is file 2's range)
-    t.commitUpdate("part", KeyRange.Longs("b", 1L, 5L),
-      Map("k" -> (col("k") + 1000L)))                       // v5
-    assert(t.asOf(t.version).filter(col("k") > 1000L).count() == 5)
-    rm(root)
+    // rows as (k, b, a) once the renames below have run
+    val file1 = (1L to 5L).map(i => (i, i, 100L + i))
+    val file2 = (10L to 15L).map(i => (i, i, i - 9L))
+    val inB = KeyRange.Longs("b", 1L, 5L)
+    // each rewrite over the swapped history, with the rows it must leave
+    val ops: Seq[(String, SnapshotLog.Table => Unit, Seq[(Long, Long, Long)])] = Seq(
+      ("range update", _.commitUpdate("part", inB,
+        Map("k" -> (col("k") + 1000L))),
+        file1.map { case (k, b, a) => (k + 1000L, b, a) } ++ file2),
+      ("range delete", _.commitDeleteRange("part", inB), file2),
+      ("replace-where", _.commitReplaceWhere("part", inB,
+        Seq((100L, "x", 3L, 7L)).toDF("k", "part", "b", "a")),
+        file2 :+ ((100L, 3L, 7L))),
+      ("merge", _.commitMerge(Seq((1L, "x", 1L, 500L))
+        .toDF("k", "part", "b", "a"), "part", "k"),
+        ((1L, 1L, 500L) +: file1.tail) ++ file2),
+      ("compaction", _.commitCompact("part"), file1 ++ file2))
+    ops.foreach { case (name, op, expected) =>
+      val root = tmp("graft_colmap_swap_")
+      val t = new SnapshotLog.Table(spark, root)
+      // file 1: a in 1..5, c in 100..105; file 2: a in 10..15, c in 1..5
+      t.commitAppend((1L to 5L).map(i => (i, "x", i, 100L + i))
+        .toDF("k", "part", "a", "c").coalesce(1), "part")     // v1
+      t.commitAppend((10L to 15L).map(i => (i, "x", i, i - 9L))
+        .toDF("k", "part", "a", "c").coalesce(1), "part")     // v2
+      t.renameColumn("a", "b")                                // v3
+      t.renameColumn("c", "a")                                // v4
+      // logical b is physical a; logical a is physical c. The prune
+      // must map b once (to a), never twice (to c, which is file 2's
+      // range), and frames read raw must land unmapped
+      op(t)                                                   // v5
+      val rows = t.asOf(t.version).select("k", "b", "a").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      assert(rows == expected.sorted, s"$name: $rows")
+      rm(root)
+    }
   }
 
   test("column mapping survives a zero-copy clone, including swap cycles") {
@@ -260,6 +281,11 @@ class SnapshotFoldSpec extends SparkSpec {
     // partition-keyed delete under the logical name
     t.commitDeletePartition("grp", "y")                       // v4
     assert(t.asOf(4).select("k").collect().map(_.getLong(0)).toSeq.sorted ==
+      Seq(1L, 3L))
+    // compaction bins its raw read by the PHYSICAL partition column
+    t.commitCompact("grp")                                    // v5
+    assert(t.liveFiles(5).map(_.split('/').head).distinct == Seq("part=x"))
+    assert(t.asOf(5).select("k").collect().map(_.getLong(0)).toSeq.sorted ==
       Seq(1L, 3L))
     rm(root)
   }

@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graft.ParquetFiles
+import org.apache.spark.sql.graft.{ParquetFiles, Trace}
 import graft.sources.SnapshotLog
 
 /** Reads planned from metadata the engine already holds: snapshot
@@ -33,9 +32,9 @@ class SnapshotReadPlanSpec extends SparkSpec {
     val live = t.liveFiles(v)
     assert(live.size > 32, s"${live.size} live files")
     val (candidates, candidateJobs) =
-      JobCount(spark)(t.readFilesWithPos(live, v))
+      Trace.jobCount(spark)(t.readFilesWithPos(live, v))
     assert(candidateJobs == 0, s"$candidateJobs jobs building the candidate read")
-    val (victims, compactJobs) = JobCount(spark)(t.readFilesMorAt(v, live))
+    val (victims, compactJobs) = Trace.jobCount(spark)(t.readFilesMorAt(v, live))
     assert(compactJobs == 0, s"$compactJobs jobs building the compaction read")
     assert(candidates.count() == 4000 && victims.count() == 4000)
     assert(candidates.select("__f").distinct().count() == live.size)

@@ -39,13 +39,16 @@ object DevSession {
 
   def selected(name: String): Boolean = only.forall(_.contains(name))
 
-  /** Drops the blocks pinned by the engine's `localCheckpoint()` call
-    * sites. Checkpointed RDDs stay registered in the context until
-    * unpersisted, so a 350+-query session accumulates hundreds of
-    * block sets, and the storage pressure taxes LATER queries by
-    * run order — measured as 2-8× swings on unchanged code
-    * (q_label_prop 1.4 ↔ 11.5 s run to run). Queries are independent,
-    * so nothing can reuse a prior query's blocks. */
+  /** Drops the blocks that the engine's barriers pinned
+    * (`org.apache.spark.sql.graft.Checkpoint.localCheckpoint` with no
+    * checkpoint dir set). Locally checkpointed RDDs stay registered in
+    * the context until unpersisted, so a 350+-query session
+    * accumulates hundreds of block sets, and the storage pressure
+    * taxes LATER queries by run order — measured as 2-8× swings on
+    * unchanged code (q_label_prop 1.4 ↔ 11.5 s run to run). Queries
+    * are independent, so nothing can reuse a prior query's blocks.
+    * With a checkpoint dir set, barriers write files there instead
+    * and hold no blocks; this leaves those files in place. */
   def dropPinnedBlocks(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.sources.KeyRange
 
@@ -572,7 +573,7 @@ final case class GraftMergeCommand(root: String, partCol: String,
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] = {
     val src = org.apache.spark.sql.GraftBridge.ofRows(spark, source)
-      .localCheckpoint() // the uniqueness guard and the commit must
+      .transform(localCheckpoint) // the uniqueness guard and the commit must
     //                      see the SAME batch (a nondeterministic
     //                      source re-evaluated twice could pass the
     //                      guard and still commit duplicates)
@@ -615,7 +616,7 @@ final case class GraftMergeCondCommand(root: String, partCol: String,
     import org.apache.spark.sql.functions.{broadcast, count, countDistinct, lit, when}
     val t = GraftSqlTable.handleFor(spark, root)
     val src0 = org.apache.spark.sql.GraftBridge.ofRows(spark, source)
-      .localCheckpoint() // guards and commit must see the same batch
+      .transform(localCheckpoint) // guards and commit must see the same batch
     val u = src0.agg(count(lit(1)), countDistinct(col(keyCol))).head()
     if (u.getLong(0) != u.getLong(1))
       throw new UnsupportedOperationException(
@@ -713,7 +714,7 @@ final case class GraftMergeCondCommand(root: String, partCol: String,
       case Some(c) => c
       case None => return Seq.empty // no applicable clauses: no-op
     }
-    val batch = changes.localCheckpoint()
+    val batch = changes.transform(localCheckpoint)
     val nullPart = batch.filter(col("__op") =!= "D" &&
       col(partCol).isNull).limit(1).count()
     if (nullPart > 0) throw new IllegalArgumentException(
@@ -785,7 +786,7 @@ final case class GraftUpdateKeysCommand(root: String, partCol: String,
     if (t.version == 0 || t.liveFiles(t.version).isEmpty)
       return Seq.empty // empty table: zero rows, no commit
     val keysDf = org.apache.spark.sql.GraftBridge.ofRows(spark, keys)
-      .toDF(keyCol).distinct().localCheckpoint()
+      .toDF(keyCol).distinct().transform(localCheckpoint)
     val matched = t.scanMergeCandidates(keysDf, keyCol)
       .join(org.apache.spark.sql.functions.broadcast(keysDf),
         Seq(keyCol)) // candidates are a superset; the join is exact
@@ -799,7 +800,7 @@ final case class GraftUpdateKeysCommand(root: String, partCol: String,
       .withColumn("__op", lit("U"))
       // victims-sized by construction; pin so the commit's several
       // consumers (key probe, tombstone join, rewrite) share one eval
-      .localCheckpoint()
+      .transform(localCheckpoint)
     t.commitApplyChanges(changes, partCol, keyCol)
     Seq.empty
   }

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import graft.operators.QueryDef
 
@@ -629,7 +630,7 @@ object Multimodal {
         // full pixel transform into every element_at of the hash lambda
         // — re-hex-encoding the blob ~4096× per row (measured 39 s at
         // sf0.1; ~2 s with the 2-column, doc-count-sized checkpoint)
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val keyed = ah.select(col("doc_id"), col("h"),
           explode(expr("sequence(0, 1)")).as("b"))
         .withColumn("bk", expr("(h >> cast(b * 16 as int)) & 65535"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Alignment-data construction: the operators that turn scored corpora
@@ -106,7 +107,7 @@ object Alignment {
         .agg(count(lit(1)).as("n"),
           sum(when(col("event_type") === "click" && cents >= 5000L, 1L)
             .otherwise(0L)).as("c"))
-        .localCheckpoint() // one log pass feeds all three k arms
+        .transform(localCheckpoint) // one log pass feeds all three k arms
       PassKs.map { k =>
         per.filter(col("n") >= k).agg(
           count(lit(1)).as("n_tasks"),
@@ -162,7 +163,7 @@ object Alignment {
         .withColumn("rworst", row_number().over(Window.partitionBy("group_id")
           .orderBy(col("score_fp").asc, col("doc_id").desc)))
         .withColumn("n_cands", count(lit(1)).over(Window.partitionBy("group_id")))
-        .localCheckpoint() // best and worst sides of the pair join
+        .transform(localCheckpoint) // best and worst sides of the pair join
       rk.filter(col("rbest") === 1)
         .select(col("group_id"), col("doc_id").as("chosen_id"),
           col("score_fp").as("sb"), col("n_cands"))
@@ -244,7 +245,7 @@ object Alignment {
       val b = scored(Tables(spark, dir).documents)
         .select(col("doc_id"), col("source"), (col("kh") % 100).as("bucket"),
           col("score_fp"))
-        .localCheckpoint() // both sides of the bucket self-join
+        .transform(localCheckpoint) // both sides of the bucket self-join
       b.select(col("bucket"), col("source").as("source_a"),
           col("score_fp").as("sa"))
         .join(b.select(col("bucket"), col("source").as("source_b"),

@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
-import graft.util.Checkpoint.PinOps
 
 /** Duplicate-cluster assignment: connected components over the near-dup
   * pair graph (north star, SURVEY.md §2B dedup family).
@@ -54,10 +54,10 @@ object Clusters {
     // symmetrize once so "neighbours of n" is a single equi-join on src
     val sym = edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .pin()
+      .transform(localCheckpoint)
     var labels = sym.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
-      .pin()
+      .transform(localCheckpoint)
     var prevSum: java.math.BigDecimal = null
     var iter = 0
     var converged = false
@@ -69,7 +69,7 @@ object Clusters {
       val ck = df
         .observe(obs, sum(col("label")
           .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-        .pin()
+        .transform(localCheckpoint)
       (ck, obs.get("s").asInstanceOf[java.math.BigDecimal])
     }
     while (!converged && iter < maxIter) {
@@ -87,7 +87,7 @@ object Clusters {
       // relation, but stay total.
       val (next, s) = if (iter < 6) checkpointWithSum(propagated)
       else {
-        val base = propagated.pin()
+        val base = propagated.transform(localCheckpoint)
         val lookup = base.select(col("node").as("label"), col("label").as("ll"))
         checkpointWithSum(base
           .join(lookup, Seq("label"), "left")
@@ -175,7 +175,7 @@ object Clusters {
       // triangle exactly once
       val edges = Dedup.minhashPairs(Tables(spark, dir).documents)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .localCheckpoint() // feeds sym, deg, and the triple self-join
+        .transform(localCheckpoint) // feeds sym, deg, and the triple self-join
       val sym = edges.union(edges.select(col("b"), col("a"))).distinct()
       val deg = sym.groupBy(col("a").as("node"))
         .agg(count(lit(1)).as("degree"))
@@ -246,13 +246,13 @@ object Clusters {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("l_suppkey").as("s"), col("o_custkey").as("c"))
         .distinct()
-        .localCheckpoint() // feeds the hub-degree cap and the capped graph
+        .transform(localCheckpoint) // feeds the hub-degree cap and the capped graph
       // hub cap BEFORE the self-join: the d² expansion of a celebrity
       // customer never materializes (see oracle CTE `e`)
       val cdeg = e0.groupBy("c").agg(count(lit(1)).as("dc"))
       val e = e0.join(cdeg.filter(col("dc") <= 30), Seq("c"))
         .select("s", "c")
-        .localCheckpoint() // feeds degrees and both pair-join sides
+        .transform(localCheckpoint) // feeds degrees and both pair-join sides
       val deg = e.groupBy("s").agg(count(lit(1)).as("d"))
       // the pair join EXPANDS ~20× past its byte-sized inputs — an
       // explicit-count repartition on the join key keeps AQE from

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import Parity._
@@ -233,7 +234,7 @@ object Concentration {
       // distinct's own shuffle, serial with the checkpoint barrier
       val li = Tables(spark, dir).lineitem
         .select("l_orderkey", "l_partkey").distinct()
-        .localCheckpoint() // feeds both self-join sides, freq, and tot
+        .transform(localCheckpoint) // feeds both self-join sides, freq, and tot
       val pairs = li.toDF("l_orderkey", "part_a")
         .join(li.toDF("l_orderkey2", "part_b"),
           col("l_orderkey") === col("l_orderkey2") &&
@@ -347,7 +348,7 @@ object Concentration {
         .select(col("o_custkey"),
           (year(col("d0")) * 4 + expr("(month(d0) - 1) div 3")).cast("long")
             .as("cq"))
-        .localCheckpoint() // sizes + the fact join both read it
+        .transform(localCheckpoint) // sizes + the fact join both read it
       val sizes = cohorts.groupBy("cq").agg(count(lit(1)).as("n_members"))
       val rev = orders
         .join(cohorts, Seq("o_custkey"))
@@ -416,7 +417,7 @@ object Concentration {
         .select(col("o_custkey"),
           datediff(col("dmax"), col("dlast")).as("recency_days"),
           col("n_orders"), col("cents"))
-        .localCheckpoint() // three independent ntile passes read it
+        .transform(localCheckpoint) // three independent ntile passes read it
       val parts = spark.sessionState.conf.numShufflePartitions
       def tile(df: org.apache.spark.sql.DataFrame, out: String,
           keys: org.apache.spark.sql.Column*) =

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Round-10 corpus-evaluation wave: the measurement operators a
@@ -49,7 +50,7 @@ object CorpusEval {
         "fixed-size sets — curate or sample the panel upstream, or " +
         "generate candidates with the IVF/LSH operators instead of " +
         "broadcasting a corpus fraction")
-    panel.localCheckpoint()
+    panel.transform(localCheckpoint)
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 
@@ -113,7 +114,7 @@ object Curation {
             Window.partitionBy("doc_id").orderBy("pos")).as("y"))
         .filter(col("y").isNotNull)
       val pairs = bg.groupBy("x", "y").agg(count(lit(1)).as("cxy"))
-        .localCheckpoint() // feeds marginals and the final join once
+        .transform(localCheckpoint) // feeds marginals and the final join once
       val mx = pairs.groupBy("x").agg(sum(col("cxy")).cast("long").as("cx"))
       val my = pairs.groupBy("y").agg(sum(col("cxy")).cast("long").as("cy"))
       val n = pairs.agg(sum(col("cxy")).cast("double").as("total"))
@@ -543,11 +544,11 @@ object Curation {
         .withColumn("keep_id", min(col("doc_id")).over(hashWin))
         .filter(col("doc_id") =!= col("keep_id"))
         .select("doc_id")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       // stage 2: near-dup losers (keep-first over minhash LSH pairs)
       val losers = Dedup.minhashPairs(docs)
         .select(col("doc_b").as("doc_id")).distinct()
-        .localCheckpoint()
+        .transform(localCheckpoint)
       // stage 3: quality funnel verdicts. The feature projection is
       // CHECKPOINTED before the keep-filter: fused into a Filter (or the
       // scan's DataFilters), the collapsed expression loses projection-
@@ -562,7 +563,7 @@ object Curation {
           size(expr(s"filter(toks, t -> array_contains($stopArr, t))")).as("n_stop"),
           size(expr(Dedup.gramsExpr)).as("n_grams"),
           size(array_distinct(expr(Dedup.gramsExpr))).as("n_distinct_grams"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val verdicts = feats
         .select(col("doc_id"), col("lang"), col("n_tokens"),
           when(col("n_tokens") < 20, "too_short")
@@ -572,7 +573,7 @@ object Curation {
               "repetitive")
             .otherwise("keep").as("reason"))
       // stage 4: decontamination (broadcast benchmark grams)
-      val grams = Dedup.gramRelation(docs).localCheckpoint()
+      val grams = Dedup.gramRelation(docs).transform(localCheckpoint)
       val bench = grams.filter(col("doc_id") % 97 === 0)
         .select("gram").distinct().withColumn("hit", lit(1))
       val contaminated = grams.filter(col("doc_id") % 97 =!= 0)
@@ -581,7 +582,7 @@ object Curation {
         .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_hits"))
         .filter(col("n_hits") * 4 >= col("n_grams"))
         .select("doc_id")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       // final pass: three broadcast drop-set anti joins over the thin
       // relation (anti on exact losers ≡ semi on exact winners)
       verdicts
@@ -931,7 +932,7 @@ object Curation {
          |GROUP BY d.source
          |ORDER BY d.source""".stripMargin) { (spark, dir) =>
       val docs = Tables(spark, dir).documents
-      val grams = Dedup.gramRelation(docs).localCheckpoint()
+      val grams = Dedup.gramRelation(docs).transform(localCheckpoint)
       val df = grams.groupBy("gram").agg(count(lit(1)).as("df"))
       val flagged = grams.join(df, Seq("gram"))
         .select(col("doc_id"), (col("df") >= 3).as("boiler"))
@@ -1018,7 +1019,7 @@ object Curation {
           coalesce(col("n_orders"), lit(0L)).as("n_orders"),
           expr("CAST(floor(COALESCE(avg_price, 0) / 50000) AS INT)")
             .as("price_band"))
-        .localCheckpoint() // both sides of the blocked self-join
+        .transform(localCheckpoint) // both sides of the blocked self-join
       val a = feats.select(col("c_nationkey"), col("c_mktsegment"),
         col("c_custkey").as("ka"), col("bal_band").as("b1"),
         col("n_orders").as("o1"), col("price_band").as("p1"))
@@ -1043,7 +1044,7 @@ object Curation {
         (lit(0.01) * lik(0.9, 0.1, 0.8, 0.2, 0.7, 0.3))
           / (lit(0.01) * lik(0.9, 0.1, 0.8, 0.2, 0.7, 0.3)
             + lit(0.99) * lik(0.1, 0.9, 0.2, 0.8, 0.3, 0.7)))
-        .localCheckpoint() // totals and the long-form unpivot (8 rows)
+        .transform(localCheckpoint) // totals and the long-form unpivot (8 rows)
       val tot = post.agg(sum(col("n") * col("p")).as("sp"),
         sum(col("n") * (lit(1) - col("p"))).as("su"), sum(col("n")).as("nt"))
       def lf(f: String, g: org.apache.spark.sql.Column) =
@@ -1105,7 +1106,7 @@ object Curation {
       val parts = spark.sessionState.conf.numShufflePartitions
       val d = Tables(spark, dir).documents
         .select(col("doc_id"), col("source"), col("n_chars"))
-        .localCheckpoint() // per-source rank pass AND the pooled rank pass
+        .transform(localCheckpoint) // per-source rank pass AND the pooled rank pass
       val ranked = d
         .withColumn("rn", row_number().over(
           Window.partitionBy("source").orderBy(col("n_chars"), col("doc_id"))))
@@ -1198,22 +1199,22 @@ object Curation {
             |  IF(i + 2 <= size(t), concat(x, ' ', t[i + 1]), NULL)),
             |  v -> v IS NOT NULL)""".stripMargin)).as("tok"))
         .distinct()
-        .localCheckpoint() // three rounds share the posting relation
+        .transform(localCheckpoint) // three rounds share the posting relation
       def pick(remaining: org.apache.spark.sql.DataFrame) = {
         val w = remaining.groupBy("doc_id")
           .agg(count(lit(1)).as("gain"))
           .orderBy(col("gain").desc, col("doc_id")).limit(1)
-          .localCheckpoint() // 1 row; feeds the cover join AND the output
+          .transform(localCheckpoint) // 1 row; feeds the cover join AND the output
         val cov = remaining
           .join(broadcast(w.select("doc_id")), Seq("doc_id"))
           .select("tok").distinct()
         (w, cov)
       }
       val (w1, cov1) = pick(tok)
-      val c1 = cov1.localCheckpoint()
+      val c1 = cov1.transform(localCheckpoint)
       val r2 = tok.join(broadcast(c1), Seq("tok"), "left_anti")
       val (w2, cov2) = pick(r2)
-      val c2 = c1.unionAll(cov2).distinct().localCheckpoint()
+      val c2 = c1.unionAll(cov2).distinct().transform(localCheckpoint)
       val r3 = tok.join(broadcast(c2), Seq("tok"), "left_anti")
       val (w3, cov3) = pick(r3)
       val c3 = c2.unionAll(cov3).distinct()

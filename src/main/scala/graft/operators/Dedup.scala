@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import graft.functions.VectorFunctions
 
@@ -143,7 +144,7 @@ object Dedup {
         md5(concat(col(s"mh${2 * b}").cast("string"), lit(","),
           col(s"mh${2 * b + 1}").cast("string"))).as("bval"))): _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bval").as("bval"))
-      .localCheckpoint()
+      .transform(localCheckpoint)
     val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("bval"))
     val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("bval"))
     a.join(b, Seq("band", "bval"))
@@ -300,7 +301,7 @@ object Dedup {
          |ORDER BY doc_a""".stripMargin) { (spark, dir) =>
       // grams feeds four downstream branches (sizes ×2, inter ×2) that
       // plan as independent stages — materialize it once
-      val grams = gramRelation(Tables(spark, dir).documents).localCheckpoint()
+      val grams = gramRelation(Tables(spark, dir).documents).transform(localCheckpoint)
       val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val inter = grams.as("a")
         .join(grams.as("b"),
@@ -346,7 +347,7 @@ object Dedup {
          |ORDER BY doc_a""".stripMargin) { (spark, dir) =>
       // both sides of the consecutive-id self-join would recompute the
       // full tokenize→md5→bit-vote pipeline — materialize it once
-      val sh = Dedup.simhash16(Tables(spark, dir).documents).localCheckpoint()
+      val sh = Dedup.simhash16(Tables(spark, dir).documents).transform(localCheckpoint)
       val a = sh.select(col("doc_id").as("doc_a"), col("simhash16").as("ha"))
       val b = sh.select(col("doc_id").as("doc_b"), col("simhash16").as("hb"))
       a.join(b, col("doc_b") === col("doc_a") + 1)
@@ -408,15 +409,15 @@ object Dedup {
           simhash16(docs), "rn",
           spark.sessionState.conf.numShufflePartitions,
           col("simhash16"), col("doc_id"))
-        .localCheckpoint() // both sides of the rank-equi join
+        .transform(localCheckpoint) // both sides of the rank-equi join
       val cand = ranked
         .select(col("doc_id").as("doc_a"), col("rn"),
           explode(expr("sequence(1, 3)")).as("d"))
         .join(ranked.select(col("doc_id").as("doc_b"), col("rn").as("rnb")),
           col("rnb") === col("rn") + col("d"))
         .select(col("doc_a"), col("doc_b"), col("d").as("rank_dist"))
-        .localCheckpoint() // feeds the intersection join AND the final join
-      val grams = gramRelation(docs).localCheckpoint() // sizes + 2 joins
+        .transform(localCheckpoint) // feeds the intersection join AND the final join
+      val grams = gramRelation(docs).transform(localCheckpoint) // sizes + 2 joins
       val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val inter = cand
         .join(grams.select(col("doc_id").as("doc_a"), col("gram")), Seq("doc_a"))
@@ -463,10 +464,10 @@ object Dedup {
       // AND the report — the gate's marginal cost is the md5-twin pair
       // generation plus two pair-bounded verification joins
       val grams = dd.shinglesOf(docs)
-      val cand64 = dd.candidatesOf(grams).localCheckpoint()
+      val cand64 = dd.candidatesOf(grams).transform(localCheckpoint)
       val twinScored = dd
         .verifyPairs(grams, Dedup.minhashPairs(docs), 0.6)
-        .localCheckpoint()
+        .transform(localCheckpoint)
       // ONE gate job instead of four serial actions (2× left_anti
       // count + count + count — each was its own job with full
       // scheduling latency): a left join marks candidate hits, and a
@@ -546,11 +547,11 @@ object Dedup {
       val cut = docs.agg(expr("CAST(max(doc_id) * 4 div 5 AS LONG)").as("c"))
       // one materialized shingle relation feeds BOTH the LSH candidate
       // generation and the exact verification — the corpus tokenizes once
-      val hg = hashedGrams(docs).localCheckpoint()
+      val hg = hashedGrams(docs).transform(localCheckpoint)
       val cand = minhashPairsFromHg(hg).crossJoin(broadcast(cut))
         .filter(col("doc_b") > col("c"))
         .select("doc_a", "doc_b")
-        .localCheckpoint() // feeds inter, verdict and ncand branches
+        .transform(localCheckpoint) // feeds inter, verdict and ncand branches
       val scored = pairVerify(cand, hg)
         .select(col("doc_a"), col("doc_b"),
           round(col("n_int").cast("double") /
@@ -600,8 +601,8 @@ object Dedup {
       val docs = Tables(spark, dir).documents
       // one materialized shingle relation feeds BOTH candidate
       // generation and verification — the corpus tokenizes once
-      val hg = hashedGrams(docs).localCheckpoint()
-      val pairs = minhashPairsFromHg(hg).localCheckpoint()
+      val hg = hashedGrams(docs).transform(localCheckpoint)
+      val pairs = minhashPairsFromHg(hg).transform(localCheckpoint)
       val contA = round(col("n_int").cast("double") / col("n_a"), 6)
       val contB = round(col("n_int").cast("double") / col("n_b"), 6)
       val jac = round(col("n_int").cast("double") /
@@ -643,8 +644,8 @@ object Dedup {
          |JOIN embeddings eb ON eb.vec_id = p.doc_b
          |ORDER BY p.doc_a, p.doc_b""".stripMargin) { (spark, dir) =>
       val t = Tables(spark, dir)
-      val hg = hashedGrams(t.documents).localCheckpoint()
-      val pairs = minhashPairsFromHg(hg).localCheckpoint()
+      val hg = hashedGrams(t.documents).transform(localCheckpoint)
+      val pairs = minhashPairsFromHg(hg).transform(localCheckpoint)
       val jac = round(col("n_int").cast("double") /
         (col("n_a") + col("n_b") - col("n_int")), 6)
       val emb = t.embeddings
@@ -796,7 +797,7 @@ object Dedup {
       // and shuffle below keys on the long h (the MinHash path's trick)
       val toks = hashedGrams(Tables(spark, dir).documents)
         .distinct()
-        .localCheckpoint() // feeds sz/df/prefix/candidates/verify
+        .transform(localCheckpoint) // feeds sz/df/prefix/candidates/verify
       val sz = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))
       val df = toks.groupBy("h").agg(count(lit(1)).as("df"))
       // per-doc rarity rank — window bounded by the doc's shingle count
@@ -987,7 +988,7 @@ object Dedup {
       val sg = hashedGrams(docs)
         .join(docs.select("doc_id", "source"), Seq("doc_id"))
         .select("source", "h").distinct()
-        .localCheckpoint() // sizes + both self-join sides
+        .transform(localCheckpoint) // sizes + both self-join sides
       val sz = sg.groupBy("source").agg(count(lit(1)).as("n"))
       val inter = sg.select(col("source").as("src_a"), col("h"))
         .join(sg.select(col("source").as("src_b"), col("h")), Seq("h"))
@@ -1076,7 +1077,7 @@ object Dedup {
         // same "full 4-hash windows only" cut is pos <= n_pos - 4
         .filter(col("pos") <= col("n_pos") - 4)
         .select("doc_id", "fp").distinct()
-        .localCheckpoint() // frequency cap, sizes, and both join sides
+        .transform(localCheckpoint) // frequency cap, sizes, and both join sides
       val kept = fps.join(
         fps.groupBy("fp").agg(count(lit(1)).as("df")).filter(col("df") <= 20)
           .select("fp"), Seq("fp"))
@@ -1167,7 +1168,7 @@ object Dedup {
         .distinct()
         .select(col("source"), col("doc_id"),
           (md5h64(col("gram")) % 1073741824L).as("h"))
-        .localCheckpoint() // direct sigs, per-doc sigs, and exact sets
+        .transform(localCheckpoint) // direct sigs, per-doc sigs, and exact sets
       def sigAggs = (0 until 4).map(j =>
         min((lit(A(j)) * col("h") + lit(B(j))) % lit(P)).as(s"mh$j"))
       val direct = hg.groupBy("source").agg(sigAggs.head, sigAggs.tail: _*)
@@ -1177,7 +1178,7 @@ object Dedup {
         .agg(min("mh0").as("mh0"), min("mh1").as("mh1"),
           min("mh2").as("mh2"), min("mh3").as("mh3"))
       val sh = hg.select("source", "h").distinct()
-        .localCheckpoint() // both sides of the intersection join + card
+        .transform(localCheckpoint) // both sides of the intersection join + card
       val exact = sh.select(col("source").as("src_a"), col("h"))
         .join(sh.select(col("source").as("src_b"), col("h")), Seq("h"))
         .filter(col("src_b") > col("src_a"))

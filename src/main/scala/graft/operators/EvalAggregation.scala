@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Model-evaluation aggregation: the statistics an eval harness
@@ -201,7 +202,7 @@ object EvalAggregation {
           sum(when(col("sa") === col("sb"), 1L).otherwise(0L)).as("ties"))
         .withColumn("winrate_fp",
           expr("wins_a * 1000000 div n_pairs"))
-        .localCheckpoint() // 4 rows; feeds both aggregate variants
+        .transform(localCheckpoint) // 4 rows; feeds both aggregate variants
       val raw = per.agg(sum("n_pairs").as("n_pairs"),
           sum("wins_a").as("wins_a"), sum("ties").as("ties"))
         .withColumn("winrate_fp", expr("wins_a * 1000000 div n_pairs"))
@@ -282,7 +283,7 @@ object EvalAggregation {
         .agg(expr("sum(CAST(w AS BIGINT) * delta)").as("sw"),
           expr("sum(CAST(w AS BIGINT))").as("tw"))
         .select(col("replica"), expr("sw * 1000000 div tw").as("m"))
-        .localCheckpoint() // 32 rows; feeds ranks + win fraction
+        .transform(localCheckpoint) // 32 rows; feeds ranks + win fraction
       // global window over EXACTLY 32 rows (one per replica — constant
       // at any corpus size; the q_bootstrap_ci bound): allowlisted in
       // SinglePartitionSweepSpec

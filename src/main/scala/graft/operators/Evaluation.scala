@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Statistical-test and classifier-evaluation operators: one-way ANOVA,
@@ -239,7 +240,7 @@ object Evaluation {
       val s = Tables(spark, dir).events
         .select(col("event_id"), col("event_type"),
           expr("CAST(round(value * 1000000) AS BIGINT)").as("v"))
-        .localCheckpoint() // ranks AND the tie profile read the same rows
+        .transform(localCheckpoint) // ranks AND the tie profile read the same rows
       val r = graft.util.RangeRank
         .withGlobalRank(s, "rn", parts, col("v"), col("event_id"))
         .withColumn("rk", avg(col("rn").cast("double"))
@@ -551,7 +552,7 @@ object Evaluation {
         .filter(col("event_type").isin("purchase", "click"))
         .select(col("event_type"), col("event_id"), col("value"),
           expr("CAST(round(value * 1000000) AS BIGINT)").as("v"))
-        .localCheckpoint() // moments AND the rank pass share one scan
+        .transform(localCheckpoint) // moments AND the rank pass share one scan
       val w = ev.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum((col("value")).cast("decimal(38,12)")).cast("double").as("s"),
           sum((col("value") * col("value")).cast("decimal(38,12)")).cast("double").as("q"))
@@ -637,7 +638,7 @@ object Evaluation {
         .withGlobalNtile(s, "bin", 50, parts, col("score"), col("event_id"))
       val b = t.groupBy("bin")
         .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-        .localCheckpoint() // 50 rows; feeds prefix sums AND the final join
+        .transform(localCheckpoint) // 50 rows; feeds prefix sums AND the final join
       // everything below runs on the bounded bin relation: measured 50
       // rows @ sf0.01 AND sf0.1 (PlanProbe r7)
       val c = b

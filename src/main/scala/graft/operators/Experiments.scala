@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Experiment-analysis and model-evaluation statistics: Kaplan-Meier
@@ -391,7 +392,7 @@ object Experiments {
       val ranked = graft.util.RangeRank.withGlobalRank(
           cal, "grn", spark.sessionState.conf.numShufflePartitions,
           col("event_type"), col("s"), col("event_id"))
-        .localCheckpoint() // feeds the offset aggregate AND the k-row pick
+        .transform(localCheckpoint) // feeds the offset aggregate AND the k-row pick
       val offs = ranked.groupBy("event_type")
         .agg(min(col("grn")).as("g0"), count(lit(1)).as("n_cal"))
       val qhat = ranked.join(broadcast(offs), Seq("event_type"))
@@ -583,7 +584,7 @@ object Experiments {
         .toDF("removed")
       val st = scen.join(p,
           col("from_s") =!= col("removed") && col("to_s") =!= col("removed"))
-        .localCheckpoint() // feeds all four walk steps
+        .transform(localCheckpoint) // feeds all four walk steps
       def step(v: org.apache.spark.sql.DataFrame) = {
         val a = v.filter(col("state") =!= "CONV")
           .select(col("removed").as("r2"), col("state").as("from2"),
@@ -594,9 +595,9 @@ object Experiments {
       }
       val v1 = st.filter(col("from_s") === "START")
         .select(col("removed"), col("to_s").as("state"), col("p"))
-        .localCheckpoint()
-      val v2 = step(v1).localCheckpoint()
-      val v3 = step(v2).localCheckpoint()
+        .transform(localCheckpoint)
+      val v2 = step(v1).transform(localCheckpoint)
+      val v3 = step(v2).transform(localCheckpoint)
       val v4 = step(v3)
       val conv = v1.unionAll(v2).unionAll(v3).unionAll(v4)
         .filter(col("state") === "CONV")

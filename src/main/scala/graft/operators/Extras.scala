@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.CentroidAggregator
@@ -601,7 +602,7 @@ object Extras {
       // 16-coalition lattice: every join below is over bounded relations
       val v = coal.join(jm, (col("mask").bitwiseAND(col("s"))) === col("mask"), "left")
         .groupBy("s").agg(coalesce(sum(col("conv")), lit(0L)).as("v"))
-        .localCheckpoint() // both sides of the S / S∪{c} self-join
+        .transform(localCheckpoint) // both sides of the S / S∪{c} self-join
       val w = expr("""CASE bit_count(CAST(s AS BIGINT)) WHEN 0 THEN 6
         WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 6 ELSE 0 END""")
       val vs = v.select(col("s"), col("v").as("v_s"), w.as("w"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.sources.{KeyRange, SnapshotLog}
 
 /** Round-8 additions: the file-index wave over the snapshot log.
@@ -692,7 +693,7 @@ object FileIndex {
         .size < live, "bloom prune must survive the rename")
       t.resetScanPrune()
       t.scanAsOf(v).filter(col("order_id").isin(11L, 97L, 123L))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val Some((scanned, _)) = t.lastScanPrune
       require(scanned < live,
         s"ambient prune through the rename failed: $scanned of $live")
@@ -841,7 +842,7 @@ object FileIndex {
         .outputMode("complete").start()
       try { q.processAllAvailable() } finally { q.stop() }
       val out = spark.table("graft_stream_cdf_tail")
-        .orderBy("change").localCheckpoint()
+        .orderBy("change").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(ckpt))
       out
@@ -909,12 +910,12 @@ object FileIndex {
       // each probe a second time (the require pass used to double
       // this query's cost)
       t.resetScanPrune()
-      val bandC = band.localCheckpoint()
+      val bandC = band.transform(localCheckpoint)
       val Some((bandScan, live)) = t.lastScanPrune
       require(bandScan < live,
         s"ambient date-range prune failed: $bandScan of $live")
       t.resetScanPrune()
-      val pointC = point.localCheckpoint()
+      val pointC = point.transform(localCheckpoint)
       val Some((ptScan, _)) = t.lastScanPrune
       require(ptScan < live,
         s"ambient bloom prune failed: $ptScan of $live")
@@ -1017,7 +1018,7 @@ object FileIndex {
         .outputMode("complete").start()
       try { q.processAllAvailable() } finally { q.stop() }
       val out = spark.table("graft_stream_cdf_since")
-        .orderBy("change").localCheckpoint()
+        .orderBy("change").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(ckpt))
       out
@@ -1081,7 +1082,7 @@ object FileIndex {
       t.resetScanPrune()
       // eager checkpoint: one execution records the prune telemetry
       // AND materializes the result the query returns
-      val rectC = rect.localCheckpoint()
+      val rectC = rect.transform(localCheckpoint)
       val Some((scanned, _)) = t.lastScanPrune
       require(scanned < live,
         s"ambient rectangle prune failed: $scanned of $live")

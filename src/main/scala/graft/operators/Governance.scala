@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Data-governance operators: the privacy-audit and evaluation-hygiene
@@ -275,7 +276,7 @@ object Governance {
       val t = Tables(spark, dir)
       val subj = t.customer.filter(col("c_custkey") % 37 === 0)
         .select("c_custkey", "c_nationkey")
-        .localCheckpoint() // three consumers, keep the scan one-shot
+        .transform(localCheckpoint) // three consumers, keep the scan one-shot
       val ns = subj.groupBy("c_nationkey").agg(count(lit(1)).as("n_subjects"))
       val ords = t.orders.join(broadcast(subj),
         col("o_custkey") === col("c_custkey"))
@@ -421,7 +422,7 @@ object Governance {
           col("n_nationkey") === col("c_nationkey"))
         .select(col("c_nationkey"), col("n_regionkey"), col("c_mktsegment"),
           (col("c_acctbal") >= 0).as("bal_pos"))
-        .localCheckpoint() // four level aggregates of one scan
+        .transform(localCheckpoint) // four level aggregates of one scan
       def level(l: Int, keys: String*) = qi.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("n")).select(lit(l).as("level"), col("n"))
       val sizes = level(0, "c_nationkey", "c_mktsegment", "bal_pos")
@@ -535,7 +536,7 @@ object Governance {
       val t = Tables(spark, dir).customer
         .select(col("c_nationkey"), col("c_mktsegment"),
           expr("CAST(floor(c_acctbal / 2000) AS INT)").as("band"))
-        .localCheckpoint() // group and global distributions of one scan
+        .transform(localCheckpoint) // group and global distributions of one scan
       val gb = t.groupBy("c_nationkey", "c_mktsegment", "band")
         .agg(count(lit(1)).as("n"))
       val gt = gb.groupBy("c_nationkey", "c_mktsegment")

@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
-import graft.util.Checkpoint.PinOps
 
 /** Iterative graph computation done as dataflow: PageRank over the
   * supplier↔customer trade graph (who supplies whom, via
@@ -74,7 +74,7 @@ object GraphRank {
         col("l_orderkey") === col("o_orderkey"))
       .select(col("l_suppkey").as("s"), (col("o_custkey") + custOffset).as("c"))
       .distinct()
-    val pairs = if (pin) pairs0.pin() else pairs0
+    val pairs = if (pin) pairs0.transform(localCheckpoint) else pairs0
     pairs.select(col("s").as("src"), col("c").as("dst"))
       .unionAll(pairs.select(col("c").as("src"), col("s").as("dst")))
   }
@@ -120,7 +120,7 @@ object GraphRank {
       // spread's split-count probe would execute those stages eagerly.)
       val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val ed = edges.join(deg, Seq("src"))
-        .repartition(shuffleN, col("src")).pin()
+        .repartition(shuffleN, col("src")).transform(localCheckpoint)
       // node set from the CHECKPOINTED relation — deriving it from
       // `edges` would re-run the whole lineitem⋈orders+distinct subtree
       var ranks = ed.select(col("src").as("node")).distinct()
@@ -178,7 +178,7 @@ object GraphRank {
       // second serial barrier, the spread an uncompensated exchange
       val edges = tradeEdges(Tables(spark, dir), Some(col("l_quantity") >= 49),
           spread = false, pin = false)
-        .localCheckpoint() // feeds both self-join sides + deg
+        .transform(localCheckpoint) // feeds both self-join sides + deg
       val hops = edges.select(col("src"), col("dst").as("mid"))
         .join(edges.select(col("src").as("mid"), col("dst")), Seq("mid"))
         .filter(col("dst") =!= col("src"))
@@ -227,7 +227,7 @@ object GraphRank {
         |ORDER BY round""".stripMargin) { (spark, dir) =>
       // one materialization feeds all three peel rounds + the census
       var e = tradeEdges(Tables(spark, dir), Some(col("l_quantity") >= 49))
-        .pin()
+        .transform(localCheckpoint)
       def census(round: Int, ed: org.apache.spark.sql.DataFrame) =
         ed.agg(countDistinct(col("src")).as("n_nodes"),
           count(lit(1)).as("n_dir_edges"))
@@ -239,7 +239,7 @@ object GraphRank {
         e = e.join(keep, Seq("src"), "left_semi")
           .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
           .select("src", "dst")
-          .pin() // each round feeds the next round + census
+          .transform(localCheckpoint) // each round feeds the next round + census
         out = out.unionAll(census(r, e))
       }
       out.orderBy("round")
@@ -327,7 +327,7 @@ object GraphRank {
           col("l_orderkey") === col("o_orderkey"))
         .select(col("l_suppkey").as("s"), col("o_custkey").as("c"))
         .distinct()
-        .pin() // feeds all four half-iterations
+        .transform(localCheckpoint) // feeds all four half-iterations
       val auth1 = pairs.groupBy("c").agg(count(lit(1)).cast("long").as("a"))
       val hub1 = pairs.join(auth1, Seq("c"))
         .groupBy("s").agg(sum(col("a")).cast("long").as("h"))
@@ -457,7 +457,7 @@ object GraphRank {
         .join(t.customer.select(col("c_custkey"),
           col("c_nationkey").as("cc")), col("c_custkey") === col("c"))
         .select("cs", "cc")
-        .localCheckpoint() // m, degrees, and intra counts of one build
+        .transform(localCheckpoint) // m, degrees, and intra counts of one build
       val m = e.agg(count(lit(1)).as("m"))
       val deg = e.select(col("cs").as("comm"))
         .unionAll(e.select(col("cc").as("comm")))
@@ -508,7 +508,7 @@ object GraphRank {
       // shape as q_graph_2hop — the consumer checkpoints the union)
       val edges = tradeEdges(Tables(spark, dir), None,
           spread = false, pin = false)
-        .localCheckpoint() // degree build + both endpoint joins
+        .transform(localCheckpoint) // degree build + both endpoint joins
       val deg = edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("d"))
       val de = edges
@@ -605,7 +605,7 @@ object GraphRank {
           col("cu").as("csrc"), col("cv").as("cdst"))
         .unionAll(e0.select(col("v").as("src"), col("u").as("dst"),
           col("cv").as("csrc"), col("cu").as("cdst")))
-        .pin() // m2, deg, and kin all read the edge build
+        .transform(localCheckpoint) // m2, deg, and kin all read the edge build
       val m2 = edges.agg(count(lit(1)).as("m2"))
       val deg = edges.groupBy(col("src").as("node"))
         .agg(max(col("csrc")).as("comm"), count(lit(1)).as("k"))
@@ -674,19 +674,19 @@ object GraphRank {
         |  CAST(CAST(sum(node) AS BIGINT) AS VARCHAR) AS sum_nodes
         |FROM joined GROUP BY d ORDER BY dist""".stripMargin) { (spark, dir) =>
       val edges = tradeEdges(Tables(spark, dir), None)
-        .pin() // reused by 3 relaxation rounds + the census
+        .transform(localCheckpoint) // reused by 3 relaxation rounds + the census
       val nodes = edges.select(col("src").as("node")).distinct()
       var dist = nodes
         .filter(col("node") % 20 === 0 && col("node") < custOffset)
         .select(col("node"), lit(0).as("d"))
-        .pin()
+        .transform(localCheckpoint)
       for (_ <- 1 to 3) {
         dist = dist
           .join(edges, col("node") === col("src"))
           .select(col("dst").as("node"), (col("d") + 1).as("d"))
           .unionAll(dist)
           .groupBy("node").agg(min(col("d")).as("d"))
-          .pin() // truncate the per-round lineage
+          .transform(localCheckpoint) // truncate the per-round lineage
       }
       nodes.join(dist, Seq("node"), "left")
         .select(col("node"), coalesce(col("d"), lit(-1)).as("d"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import Parity._
@@ -241,7 +242,7 @@ object Layout {
           .agg(min(col("l_orderkey")).as("min_key"),
             max(col("l_orderkey")).as("max_key"),
             count(lit(1)).as("n_rows"))
-          .localCheckpoint() // materialize under the pushdown confs
+          .transform(localCheckpoint) // materialize under the pushdown confs
       } finally prev.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Learning-adjacent batch operators: the distributed halves of model
@@ -261,7 +262,7 @@ object Learning {
           round(col("x").cast("double") * col("y").cast("double") * lit(1e9))
             .cast("long").as("t"))
       val g = terms.groupBy("i", "j").agg(sum(col("t")).cast("long").as("gij"))
-        .localCheckpoint() // 4096 rows; feeds both iterations
+        .transform(localCheckpoint) // 4096 rows; feeds both iterations
       val v1 = g.groupBy("i").agg(sum(col("gij")).cast("long").as("v"))
       val v1max = v1.agg(max(abs(col("v"))).as("m"))
       val v1n = v1.crossJoin(broadcast(v1max))
@@ -654,7 +655,7 @@ object Learning {
           col("o_orderpriority").as("f_prio"),
           col("c_mktsegment").as("f_seg"),
           when(col("o_orderstatus") === "F", 1).otherwise(0).as("y"))
-        .localCheckpoint() // the label unpivot AND six pair unpivots
+        .transform(localCheckpoint) // the label unpivot AND six pair unpivots
       def lf(feat: String, c: org.apache.spark.sql.Column) =
         w.select(lit(feat).as("feat"), c.cast("string").as("v"), col("y"))
       val fv = lf("price", col("f_price"))
@@ -662,7 +663,7 @@ object Learning {
         .unionAll(lf("prio", col("f_prio")))
         .unionAll(lf("seg", col("f_seg")))
       val njl = fv.groupBy("feat", "v", "y").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // marginals and the MI sum re-read it
+        .transform(localCheckpoint) // marginals and the MI sum re-read it
       val nf = njl.groupBy("feat", "v").agg(sum(col("n")).as("nv"))
       val ny = njl.groupBy("feat", "y").agg(sum(col("n")).as("nyc"))
       val nt = njl.groupBy("feat").agg(sum(col("n")).as("ntc"))
@@ -684,7 +685,7 @@ object Learning {
         .unionAll(pf("year", "seg", col("f_year"), col("f_seg")))
         .unionAll(pf("prio", "seg", col("f_prio"), col("f_seg")))
       val pn = pj.groupBy("fa", "fb", "a", "b").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // three marginals + the pair-MI sum
+        .transform(localCheckpoint) // three marginals + the pair-MI sum
       val pa = pn.groupBy("fa", "fb", "a").agg(sum(col("n")).as("na"))
       val pb = pn.groupBy("fa", "fb", "b").agg(sum(col("n")).as("nb"))
       val pt = pn.groupBy("fa", "fb").agg(sum(col("n")).as("ntc"))
@@ -697,7 +698,7 @@ object Learning {
             / (col("na").cast("double") * col("nb")))).as("mi"))
       val mis = mif.select(col("fa"), col("fb"), col("mi"))
         .unionAll(mif.select(col("fb").as("fa"), col("fa").as("fb"), col("mi")))
-        .localCheckpoint() // redundancy average AND the top1 lookup join
+        .transform(localCheckpoint) // redundancy average AND the top1 lookup join
       val red = mis.groupBy(col("fa").as("feat"))
         .agg((sum(col("mi")) / count(lit(1))).as("avg_red"))
       val top1 = rel.orderBy(col("mi_y").desc, col("feat")).limit(1)
@@ -884,7 +885,7 @@ object Learning {
       val s = Tables(spark, dir).events
         .select(when(col("event_type") === "purchase", 1).otherwise(0).as("y"),
           col("value").as("x"))
-        .localCheckpoint() // moments pass AND the scoring pass
+        .transform(localCheckpoint) // moments pass AND the scoring pass
       val m = s.agg(count(lit(1)).as("n"), sum((col("x")).cast("decimal(38,12)")).cast("double").as("sx"),
         sum((col("x") * col("x")).cast("decimal(38,12)")).cast("double").as("sxx"),
         sum(col("y") - 0.5).as("g0"),
@@ -990,7 +991,7 @@ object Learning {
       val g = s.groupBy("q")
         .agg(count(lit(1)).as("n"), sum(col("y")).as("s"),
           sum(col("y") * col("y")).as("qq"))
-        .localCheckpoint() // <=50 rows; everything below is bounded
+        .transform(localCheckpoint) // <=50 rows; everything below is bounded
       val tot = g.agg(sum(col("n")).as("nt"), sum(col("s")).as("st"),
         sum(col("qq")).as("qqt"))
       val r1 = g.crossJoin(broadcast(tot))

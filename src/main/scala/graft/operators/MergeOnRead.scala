@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.sources.SnapshotLog
 
 /** Round-9 storage wave: merge-on-read deletion vectors and full CDC
@@ -471,7 +472,7 @@ object MergeOnRead {
         .option("checkpointLocation", ckpt)
         .outputMode("append").start()
       try { q.processAllAvailable() } finally { q.stop() }
-      val feed = spark.table("graft_stream_cdf_mor").localCheckpoint()
+      val feed = spark.table("graft_stream_cdf_mor").transform(localCheckpoint)
       // materialization nets to zero, row count AND mass
       val sgn = when(col("_change") === "insert", 1L).otherwise(-1L)
       val net5 = feed.filter(col("_version") === 5)
@@ -481,7 +482,7 @@ object MergeOnRead {
       val out = feed.groupBy("event_type")
         .agg(sum(sgn).cast("long").as("n_rows"),
           sum(sgn * col("cents")).cast("long").as("sum_cents"))
-        .orderBy("event_type").localCheckpoint()
+        .orderBy("event_type").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -521,7 +522,7 @@ object MergeOnRead {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang").localCheckpoint()
+        .orderBy("lang").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -577,7 +578,7 @@ object MergeOnRead {
           sum(col("price_cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"))
-        .orderBy("o_orderstatus").localCheckpoint()
+        .orderBy("o_orderstatus").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -637,7 +638,7 @@ object MergeOnRead {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("cents")).as("sum_cents"))
-        .orderBy("event_type").localCheckpoint()
+        .orderBy("event_type").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -719,7 +720,7 @@ object MergeOnRead {
           sum(col("price_cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"))
-        .orderBy("o_orderstatus").localCheckpoint()
+        .orderBy("o_orderstatus").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -784,7 +785,7 @@ object MergeOnRead {
         .option("checkpointLocation", ckpt)
         .outputMode("append").start()
       try { q.processAllAvailable() } finally { q.stop() }
-      val feed = spark.table("graft_stream_cdf_evo").localCheckpoint()
+      val feed = spark.table("graft_stream_cdf_evo").transform(localCheckpoint)
       // v1 (own layout): path-recovered status AND the band data column
       val v1 = feed.filter(col("_version") === 1)
       require(v1.filter(col("o_orderstatus").isNull ||
@@ -802,7 +803,7 @@ object MergeOnRead {
       val out = feed.groupBy((col("o_orderkey") % 8).as("bucket"))
         .agg(sum(sgn).cast("long").as("n_rows"),
           sum(sgn * col("cents")).cast("long").as("sum_cents"))
-        .orderBy("bucket").localCheckpoint()
+        .orderBy("bucket").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -856,7 +857,7 @@ object MergeOnRead {
           sum(col("price_cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"))
-        .orderBy("o_orderstatus").localCheckpoint()
+        .orderBy("o_orderstatus").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -923,7 +924,7 @@ object MergeOnRead {
           sum(col("price_cents")).as("sum_cents"),
           sum(when(col("price_band") === "low", 1L).otherwise(0L))
             .as("n_low_band"))
-        .orderBy("o_orderstatus").localCheckpoint()
+        .orderBy("o_orderstatus").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 
 /** Production MinHash-LSH near-duplicate detector (north star operator).
   *
@@ -88,7 +89,7 @@ final case class MinHashDedup(k: Int, bands: Int) {
     // self-join: its two shuffle-map stages are independent (shuffle on
     // different key aliases), so each would otherwise re-run the
     // signature aggregation — concurrently, defeating a lazy cache
-    val bk = bucketsFromGrams(grams).localCheckpoint()
+    val bk = bucketsFromGrams(grams).transform(localCheckpoint)
     val a = bk.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
     val b = bk.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
     a.join(b, Seq("band", "bucket"))
@@ -133,7 +134,7 @@ final case class MinHashDedup(k: Int, bands: Int) {
     * several passes ([[verifyPairs]], [[dedupReport]]) from one
     * tokenization. */
   def shinglesOf(docs: DataFrame): DataFrame =
-    shingles(docs).localCheckpoint()
+    shingles(docs).transform(localCheckpoint)
 
   /** LSH candidates over a pre-materialized gram relation. */
   def candidatesOf(grams: DataFrame): DataFrame =
@@ -150,19 +151,19 @@ final case class MinHashDedup(k: Int, bands: Int) {
       .select(count(lit(1)).as("n_verified_dups"))
     nDocs.crossJoin(nCand).crossJoin(nVer)
       .withColumn("k", lit(k)).withColumn("bands", lit(bands))
-      .localCheckpoint(eager = true)
+      .transform(localCheckpoint)
   }
 
   /** [[dedupReport]] over a pre-materialized gram relation. */
   def dedupReportFromGrams(grams: DataFrame, docs: DataFrame): DataFrame = {
-    val cand = candidatesFromGrams(grams).localCheckpoint()
+    val cand = candidatesFromGrams(grams).transform(localCheckpoint)
     val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val nCand = cand.select(count(lit(1)).as("n_candidates"))
     val nVer = verifyFromGrams(grams, cand, 0.6)
       .select(count(lit(1)).as("n_verified_dups"))
     nDocs.crossJoin(nCand).crossJoin(nVer)
       .withColumn("k", lit(k)).withColumn("bands", lit(bands))
-      .localCheckpoint(eager = true)
+      .transform(localCheckpoint)
   }
 
   /** Deduplicated corpus: drops the higher-id member of every verified

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types._
 import graft.Tables
 
@@ -98,7 +99,7 @@ object Modern {
       val perSeg = joined.groupBy("c_mktsegment")
         .agg(countDistinct(col("o_custkey")).as("exact_custs"),
           hll_sketch_agg(col("o_custkey")).as("sketch"))
-        .localCheckpoint() // feeds the union roll-up AND the result scan
+        .transform(localCheckpoint) // feeds the union roll-up AND the result scan
       val exactTotal = t.orders.select(countDistinct(col("o_custkey")))
         .first().getLong(0)
       // roll the per-segment sketches up into one global sketch — the
@@ -172,7 +173,7 @@ object Modern {
          |GROUP BY g.doc_id
          |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
       val grams = Dedup.gramRelation(Tables(spark, dir).documents)
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val benchGrams = grams.filter(col("doc_id") % 97 === 0)
         .select("gram").distinct()
       // Size the filter from a capacity bound, not an extra counting pass:

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Sequence packing, passage windowing, and corpus-mixture operators —
@@ -438,7 +439,7 @@ object Packing {
           (expr("""CAST(conv(substring(md5(concat(
             CAST(doc_id AS STRING), ':', CAST(s AS STRING))), 1, 13), 16, 10)
             AS BIGINT)""") * 16 + col("s")).as("wk"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val a8 = w.filter(col("s") < 8).groupBy("doc_id")
         .agg((max(col("wk")) % 16).cast("long").as("shard8"))
       val a9 = w.groupBy("doc_id")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import graft.pipeline.{CloneConfig, ClonePipeline}
 
@@ -109,7 +110,7 @@ object PipelineQueries {
         .select(col("o_orderkey").as("k"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
           col("o_orderstatus").as("st"))
-        .localCheckpoint() // feeds tgt construction AND the diff's source side
+        .transform(localCheckpoint) // feeds tgt construction AND the diff's source side
       val mx = src.agg(max(col("k")).as("mk"))
       val tgt = src.filter(col("k") % 97 =!= 0)
         .select(col("k"),
@@ -204,7 +205,7 @@ object PipelineQueries {
         .select(col("o_orderkey").as("k"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
           col("o_orderstatus").as("st"))
-        .localCheckpoint() // feeds base AND both clone constructions
+        .transform(localCheckpoint) // feeds base AND both clone constructions
       val ours = base.filter(col("k") % 31 =!= 0)
         .select(col("k").as("ok"),
           when(col("k") % 11 === 0, col("cents") + 2).otherwise(col("cents"))
@@ -358,7 +359,7 @@ object PipelineQueries {
       val o = Tables(spark, dir).orders
         .select(col("o_orderkey").as("k"), col("o_orderpriority").as("p"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .localCheckpoint() // base, cdc, and recompute all read it
+        .transform(localCheckpoint) // base, cdc, and recompute all read it
       val base = o.groupBy("p")
         .agg(count(lit(1)).as("n"), sum(col("cents")).cast("long").as("s"))
       val del = o.filter(col("k") % 97 === 0)

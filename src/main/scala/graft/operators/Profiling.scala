@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Data profiling, quality gates, and table-maintenance planning — the
@@ -438,7 +439,7 @@ object Profiling {
       // one distinct computation feeds the sizes and both join sides
       val au = Tables(spark, dir).events
         .select("event_type", "user_id").distinct()
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val sz = au.groupBy("event_type").agg(count(lit(1)).as("n"))
       val a = au.toDF("type_a", "user_id")
       val b = au.toDF("type_b", "user_id2")
@@ -649,7 +650,7 @@ object Profiling {
       val w = Window.orderBy(col("d"), col("source"))
       val dem = Tables(spark, dir).documents
         .groupBy("source").agg(sum(col("n_chars")).as("d"))
-        .localCheckpoint() // capacity aggregate + the ranked scan
+        .transform(localCheckpoint) // capacity aggregate + the ranked scan
       val cap = dem.agg(expr("sum(d) * 3 div 5").as("c"),
         count(lit(1)).as("n"))
       val flag = dem
@@ -660,7 +661,7 @@ object Profiling {
         .crossJoin(broadcast(cap))
         .withColumn("saturated",
           col("d") <= expr("(c - cumprev) div (n - rn + 1)"))
-        .localCheckpoint() // level aggregate + the allocation projection
+        .transform(localCheckpoint) // level aggregate + the allocation projection
       val lvl = flag.groupBy("c", "n")
         .agg(sum(when(col("saturated"), col("d")).otherwise(0L)).as("cumsat"),
           sum(when(col("saturated"), 1L).otherwise(0L)).as("nsat"))
@@ -860,7 +861,7 @@ object Profiling {
       val d = vals.groupBy("c", "bin").agg(count(lit(1)).as("n"))
       val p = d.join(d.groupBy("c").agg(sum(col("n")).as("nt")), Seq("c"))
         .select(col("c"), col("bin"), (col("n").cast("double") / col("nt")).as("pr"))
-        .localCheckpoint() // both sides of the bounded pair join
+        .transform(localCheckpoint) // both sides of the bounded pair join
       val cols_ = p.select("c").distinct()
       // full pair universe: disjoint-support pairs must report jsd = ln 2
       val pairsU = cols_.select(col("c").as("col_a"))
@@ -1003,12 +1004,12 @@ object Profiling {
       val s = Tables(spark, dir).events
         .select(col("event_type").as("g"), col("event_id"),
           expr("CAST(round(value * 1000000) AS BIGINT)").as("v"))
-        .localCheckpoint() // local-histogram pass AND the exact-decile pass
+        .transform(localCheckpoint) // local-histogram pass AND the exact-decile pass
       val hist = s
         .withColumn("tile", ntile(20).over(
           Window.partitionBy("g").orderBy(col("v"), col("event_id"))))
         .groupBy("g", "tile").agg(max(col("v")).as("ub"), count(lit(1)).as("cnt"))
-        .localCheckpoint() // bounded |groups|*20 rows; two windows below
+        .transform(localCheckpoint) // bounded |groups|*20 rows; two windows below
       // global windows over the sketch-bucket table: measured 100 rows @
       // sf0.01 AND sf0.1 (PlanProbe r7) — |groups|×20 tiles, constant
       val cum = hist
@@ -1094,7 +1095,7 @@ object Profiling {
           col("c_acctbal").as("y"), (col("c_custkey") % 11 === 0).as("masked"),
           coalesce(col("n_orders"), lit(0.0)).as("x1"),
           (coalesce(col("spend"), lit(0.0)) / 100000).as("x2"))
-        .localCheckpoint() // moments pass AND the masked scoring pass
+        .transform(localCheckpoint) // moments pass AND the masked scoring pass
       val m = feats.filter(!col("masked"))
         .agg(count(lit(1)).as("n"), sum(col("x1")).as("s1"),
           sum((col("x2")).cast("decimal(38,12)")).cast("double").as("s2"),

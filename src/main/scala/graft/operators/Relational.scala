@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import Parity._
@@ -405,7 +406,7 @@ object Relational {
       val r = Tables(spark, dir).lineitem
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(grouping_id().as("gid"), count(lit(1)).as("n"))
-        .localCheckpoint() // three self-join consumers of one rollup
+        .transform(localCheckpoint) // three self-join consumers of one rollup
       val d = r.filter(col("gid") === 0)
         .select(col("l_returnflag"), col("l_linestatus"), col("n"))
       val p = r.filter(col("gid") === 1)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import graft.functions.VectorFunctions
 
@@ -193,7 +194,7 @@ object Retrieval {
       val t = Tables(spark, dir)
       // both score relations feed a norm-constant aggregate AND the
       // fusion join — materialize each once
-      val bm = bm25Scored(t.documents).localCheckpoint()
+      val bm = bm25Scored(t.documents).transform(localCheckpoint)
       val qv = t.embeddings.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"))
       val cs = t.embeddings.filter(col("vec_id") =!= 0)
@@ -201,7 +202,7 @@ object Retrieval {
         .select(col("vec_id").as("doc_id"),
           round(VectorFunctions.cosineSim(col("qe"), col("embedding")), 6)
             .as("cosim"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val bmax = bm.agg(max(col("s")).cast("double").as("ms"))
       val crange = cs.agg(min(col("cosim")).as("cmin"), max(col("cosim")).as("cmax"))
       cs.join(bm.select(col("doc_id"), col("s")), Seq("doc_id"), "left")
@@ -337,7 +338,7 @@ object Retrieval {
         .select("doc_id")
       // the weights relation feeds both the mean and the filter —
       // materialize once (its two consumers plan as independent stages)
-      val weights = dsirScaled(docs).localCheckpoint()
+      val weights = dsirScaled(docs).transform(localCheckpoint)
       val wstats = weights.agg(sum(col("lws")).cast("long").as("total_lws"),
         count(lit(1)).as("n_total"))
       weights
@@ -442,7 +443,7 @@ object Retrieval {
          |)
          |SELECT tok AS expansion_term, w_fp, n_docs_with
          |FROM wgt ORDER BY w_fp DESC, tok LIMIT 10""".stripMargin) { (spark, dir) =>
-      val docs = Tables(spark, dir).documents.localCheckpoint()
+      val docs = Tables(spark, dir).documents.transform(localCheckpoint)
       val toks = docs
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))

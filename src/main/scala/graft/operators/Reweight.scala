@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Corpus reweighting by iterative proportional fitting (raking): make
@@ -91,7 +92,7 @@ object Reweight {
       val cells = Tables(spark, dir).documents
         .select(col("source"), expr(BucketSql).as("bucket"))
         .groupBy("source", "bucket").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // the model-sized relation every round reuses
+        .transform(localCheckpoint) // the model-sized relation every round reuses
       val t = cells.agg(sum("c").as("n"), countDistinct("source").as("ns"),
         countDistinct("bucket").as("nb")).head()
       val (n, ns, nb) = (t.getLong(0), t.getLong(1), t.getLong(2))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Deterministic sampling operators (training-data pipeline surface).
@@ -342,7 +343,7 @@ object Sampling {
         .select(col("doc_id"), col("lang"), col("n_chars"),
           when(col("lang") === "en", 0.10).otherwise(0.50).as("pi"),
           (Dedup.md5h64(col("doc_id").cast("string")) % 100).as("h"))
-        .localCheckpoint() // sample pass AND the truth pass share the scan
+        .transform(localCheckpoint) // sample pass AND the truth pass share the scan
       val s = d
         .filter(col("h") < when(col("lang") === "en", 10).otherwise(50))
         .groupBy("lang")

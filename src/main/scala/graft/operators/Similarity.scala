@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import graft.functions.VectorFunctions
 
@@ -276,17 +277,17 @@ object Similarity {
           round(VectorFunctions.cosineSim(col("qe"), col("embedding")), 6)
             .as("simq"))
         .orderBy(col("simq").desc, col("vec_id")).limit(20)
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val pw = cand.select(col("vec_id").as("aid"), col("embedding").as("ea"))
         .crossJoin(cand.select(col("vec_id").as("bid"), col("embedding").as("eb")))
         .filter(col("aid") =!= col("bid"))
         .select(col("aid"), col("bid"),
           round(VectorFunctions.cosineSim(col("ea"), col("eb")), 6).as("s"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       var picks = cand
         .select(col("vec_id"), lit(1).as("pick"), (lit(0.7) * col("simq")).as("score"))
         .orderBy(col("score").desc, col("vec_id")).limit(1)
-        .localCheckpoint()
+        .transform(localCheckpoint)
       for (i <- 2 to 5) {
         val selIds = picks.select("vec_id")
         val ms = pw.join(selIds.withColumnRenamed("vec_id", "bid"), Seq("bid"))
@@ -296,7 +297,7 @@ object Similarity {
           .select(col("vec_id"), lit(i).as("pick"),
             (lit(0.7) * col("simq") - lit(0.3) * col("ms")).as("score"))
           .orderBy(col("score").desc, col("vec_id")).limit(1)
-        picks = picks.union(next).localCheckpoint()
+        picks = picks.union(next).transform(localCheckpoint)
       }
       picks
         .select(col("pick"), col("vec_id"), round(col("score"), 6).as("mmr_score"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Spatial blocking operators: grid-cell kNN join, bounding-box
@@ -199,7 +200,7 @@ object Spatial {
       val base = withPoint(
           Tables(spark, dir).customer.select("c_custkey"), "c_custkey")
         .groupBy("cx", "cy").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // three level projections of one aggregate
+        .transform(localCheckpoint) // three level projections of one aggregate
       val levels = Seq(
         base.select(lit(0).as("level"), col("cx").as("gx"),
           col("cy").as("gy"), col("n")),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 
 /** The SQL-catalog seam, oracle-checked: snapshot tables addressed
   * through the DSv2 [[graft.catalog.GraftCatalog]] (`SELECT …
@@ -214,7 +215,7 @@ object SqlCatalog {
         "CAST(n_regionkey AS STRING), CAST(-n_nationkey AS BIGINT) " +
         "FROM nation_ck_src WHERE n_nationkey > 0")
       val out = spark.sql(
-        "SELECT k, part, v FROM gqck.nat ORDER BY k").localCheckpoint()
+        "SELECT k, part, v FROM gqck.nat ORDER BY k").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -261,7 +262,7 @@ object SqlCatalog {
         "identity watermark must equal the row count (dense, no gaps)")
       val out = spark.sql(
         "SELECT id, k, part, cents FROM gqid.cust ORDER BY id")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -316,7 +317,7 @@ object SqlCatalog {
         |  count(*) AS n_rows, CAST(sum(cents) AS BIGINT) AS sum_cents
         |FROM table_changes('gqcdf.ord', 2)
         |GROUP BY _version, _change
-        |ORDER BY _version""".stripMargin).localCheckpoint()
+        |ORDER BY _version""".stripMargin).transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -376,7 +377,7 @@ object SqlCatalog {
       require(reclaimed > 0, "vacuum reclaimed nothing after compact")
       val out = spark.sql(
         "SELECT k, part, name, cents FROM gqmnt.cust ORDER BY k")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -441,7 +442,7 @@ object SqlCatalog {
         |  CAST(sum(cents) AS BIGINT) AS total_cents,
         |  count(DISTINCT user_id) AS n_users
         |FROM gqsw.ev GROUP BY event_type
-        |ORDER BY event_type""".stripMargin).localCheckpoint()
+        |ORDER BY event_type""".stripMargin).transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
@@ -496,7 +497,7 @@ object SqlCatalog {
         s"INSERT + 2 typed UPDATEs = 3 commits, got v${t.version}")
       val out = spark.sql(
         "SELECT k, part, cents FROM gqus.ord ORDER BY k")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -592,7 +593,7 @@ object SqlCatalog {
       require(t.version == 2,
         s"conditional MERGE must be ONE commit, table at v${t.version}")
       val out = es.sql("SELECT k, part, name, cents, status " +
-        "FROM gqmc.sup ORDER BY k").localCheckpoint()
+        "FROM gqmc.sup ORDER BY k").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -655,7 +656,7 @@ object SqlCatalog {
         "subquery DELETE rewrote data files (must be MOR DVs)")
       val out = es.sql(
         "SELECT k, part, name, cents FROM gqdelk.cust ORDER BY k")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -747,7 +748,7 @@ object SqlCatalog {
         s"INSERT + 2 UPDATEs must be 3 commits, got v${t.version}")
       val out = es.sql(
         "SELECT k, part, cents FROM gqum.ord ORDER BY k")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -804,7 +805,7 @@ object SqlCatalog {
         s"subquery key-set UPDATE must be ONE commit, got v${t.version}")
       val out = es.sql(
         "SELECT k, part, name, cents FROM gquk.cust ORDER BY k")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -886,7 +887,7 @@ object SqlCatalog {
         "identity watermark must equal the row count (dense, no gaps)")
       val out = es.sql(
         "SELECT id, k, part, cents FROM gqmi.sup ORDER BY id")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -945,7 +946,7 @@ object SqlCatalog {
       require(t.version == 2,
         s"NMBS MERGE must be ONE commit, got v${t.version}")
       val out = es.sql("SELECT k, part, name, cents, status " +
-        "FROM gqnb.cust ORDER BY k").localCheckpoint()
+        "FROM gqnb.cust ORDER BY k").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out
@@ -1020,7 +1021,7 @@ object SqlCatalog {
       val out = spark.sql("""SELECT 'a_v1' AS src, k, v FROM gqcl.nsv.a_v1
         |UNION ALL SELECT 'ns2_a', k, v FROM gqcl.ns2.a
         |UNION ALL SELECT 'ns2_b', k, v FROM gqcl.ns2.b
-        |ORDER BY src, k""".stripMargin).localCheckpoint()
+        |ORDER BY src, k""".stripMargin).transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(wh))
       out

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import Parity._
 
@@ -442,7 +443,7 @@ object Stats {
         .agg((sum(col("w").cast("long") * col("cents")).cast("double") /
           sum(col("w").cast("long")).cast("long")).as("m"))
         .withColumn("rn", row_number().over(Window.orderBy(col("m"), col("replica"))))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val est = base.agg(
         (sum(col("cents")).cast("double") / count(lit(1))).as("full_mean"))
       est
@@ -547,7 +548,7 @@ object Stats {
         .join(t.customer, col("c_custkey") === col("o_custkey"))
         .select(col("c_mktsegment").as("seg"),
           col("o_orderpriority").as("pri"))
-        .localCheckpoint() // four aggregate consumers of one fact join
+        .transform(localCheckpoint) // four aggregate consumers of one fact join
       val joint = f.groupBy("seg", "pri").agg(count(lit(1)).as("nij"))
       val ms = f.groupBy("seg").agg(count(lit(1)).as("ni"))
       val mp = f.groupBy("pri").agg(count(lit(1)).as("nj"))
@@ -992,10 +993,10 @@ object Stats {
           " 15), 16, 10) AS BIGINT)").as("h"))
         .distinct()
       val ua = pop(ev.filter(col("event_type") === "click"))
-        .localCheckpoint() // sketch + exact union/intersection consumers
+        .transform(localCheckpoint) // sketch + exact union/intersection consumers
       val ub = pop(ev.filter(col("event_type") === "purchase" &&
           col("value") > 0.5))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val kmv64 = graft.functions.KMVAggregator.kmv(64)
       val sa = ua.agg(kmv64(col("h")).as("ma"), count(lit(1)).as("n_a_true"))
       val sb = ub.agg(kmv64(col("h")).as("mb"), count(lit(1)).as("n_b_true"))
@@ -1098,7 +1099,7 @@ object Stats {
         .orderBy(col("cents").desc, col("o_orderkey"))
         .limit(100)
         .select("cents")
-        .localCheckpoint() // threshold and the log-sum share the top-k
+        .transform(localCheckpoint) // threshold and the log-sum share the top-k
       val mn = topk.agg(min(col("cents")).as("xk"))
       topk.crossJoin(broadcast(mn))
         .agg(count(lit(1)).as("k"), max(col("xk")).as("threshold_cents"),

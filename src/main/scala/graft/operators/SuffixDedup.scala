@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Suffix-neighborhood substring dedup — the distributed approximation
@@ -80,11 +81,11 @@ object SuffixDedup {
         .select(col("doc_id"), col("pos"),
           expr(s"substring(array_join(slice(toks, pos + 1, $capToks), ' '), 1, $capChars)")
             .as("s"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val ranked = graft.util.RangeRank.withGlobalRank(
           sfx, "rn", spark.sessionState.conf.numShufflePartitions,
           col("s"), col("doc_id"), col("pos"))
-        .localCheckpoint() // both sides of the rank-equi neighbor join
+        .transform(localCheckpoint) // both sides of the rank-equi neighbor join
       ranked
         .select(col("doc_id").as("doc_a"), col("pos").as("pos_a"),
           col("s").as("s_a"), col("rn"))

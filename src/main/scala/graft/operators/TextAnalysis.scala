@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Text-analysis operator family (north star): corpus statistics,
@@ -302,7 +303,7 @@ object TextAnalysis {
         |ORDER BY doc_a""".stripMargin) { (spark, dir) =>
       val docs = Tables(spark, dir).documents
         .select(col("doc_id"), substring(col("text"), 1, 40).as("prefix"))
-        .localCheckpoint() // both sides of the consecutive-id self-join
+        .transform(localCheckpoint) // both sides of the consecutive-id self-join
       val a = docs.select(col("doc_id").as("doc_a"), col("prefix").as("pa"))
       val b = docs.select(col("doc_id").as("doc_b"), col("prefix").as("pb"))
       a.join(b, col("doc_b") === col("doc_a") + 1)
@@ -634,7 +635,7 @@ object TextAnalysis {
       import org.apache.spark.sql.expressions.Window
       val tok = Tables(spark, dir).documents
         .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-        .localCheckpoint() // feeds the local and global aggregates
+        .transform(localCheckpoint) // feeds the local and global aggregates
       val ltop = tok.groupBy("source", "tok").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(
           Window.partitionBy("source").orderBy(col("c").desc, col("tok"))))
@@ -702,7 +703,7 @@ object TextAnalysis {
       val u = docs
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // both sides of the clip join + lens
+        .transform(localCheckpoint) // both sides of the clip join + lens
       val bg = docs
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .select(col("doc_id"), explode(expr(
@@ -710,7 +711,7 @@ object TextAnalysis {
             |  IF(i + 2 <= size(t), concat(x, ' ', t[i + 1]), NULL)),
             |  v -> v IS NOT NULL)""".stripMargin)).as("g"))
         .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val lens = u.groupBy("doc_id").agg(sum(col("c")).cast("long").as("n1"))
       def clip(rel: org.apache.spark.sql.DataFrame, key: String, out: String) = {
         val b = rel.select((col("doc_id") - 1).as("doc_id"),
@@ -806,7 +807,7 @@ object TextAnalysis {
       val ew = cooc.select(col("u"), col("v"), col("w"))
         .unionAll(cooc.select(col("v").as("u"), col("u").as("v"), col("w")))
         .groupBy("u", "v").agg(sum(col("w")).as("w"))
-        .localCheckpoint() // the degree build and both rank iterations
+        .transform(localCheckpoint) // the degree build and both rank iterations
       val degw = ew.groupBy(col("u").as("node")).agg(sum(col("w")).as("sw"))
       val edgesD = ew.join(degw.withColumnRenamed("node", "u"), Seq("u"))
       def iterate(prev: org.apache.spark.sql.DataFrame) = edgesD

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Time-series diagnostics over the daily order volume: day-of-week
@@ -232,7 +233,7 @@ object TimeSeries {
           (dayofweek(col("day")) - 1).cast("int").as("dow"),
           sum(col("y")).over(w).as("s7"), count(lit(1)).over(w).as("n7"))
         .withColumn("d7", when(col("n7") === 7, lit(7) * col("y") - col("s7")))
-        .localCheckpoint() // feeds the seasonal profile AND the final join
+        .transform(localCheckpoint) // feeds the seasonal profile AND the final join
       val seas = det.filter(col("d7").isNotNull)
         .groupBy("dow")
         .agg(sum(col("d7")).cast("long").as("sd"), count(col("d7")).as("nd"))
@@ -420,7 +421,7 @@ object TimeSeries {
       val daily = Tables(spark, dir).events
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("d"))
         .agg(count(lit(1)).cast("double").as("y"))
-        .localCheckpoint() // feeds both sides of both smoothing passes
+        .transform(localCheckpoint) // feeds both sides of both smoothing passes
       def smooth(grid: org.apache.spark.sql.DataFrame, valCol: String,
           outCol: String): org.apache.spark.sql.DataFrame = {
         val b = grid.select(col("event_type").as("b_type"),
@@ -431,7 +432,7 @@ object TimeSeries {
           .groupBy(grid.columns.toIndexedSeq.map(col): _*)
           .agg((sum(decay * col("b_v")) / sum(decay)).as(outCol))
       }
-      val s1 = smooth(daily, "y", "s1").drop("y").localCheckpoint()
+      val s1 = smooth(daily, "y", "s1").drop("y").transform(localCheckpoint)
       smooth(s1, "s1", "s2")
         .select(col("event_type"), to_date(col("d")).as("d"),
           round(col("s1"), 6).as("s1"), round(col("s2"), 6).as("s2"),
@@ -614,7 +615,7 @@ object TimeSeries {
       val win = daily.crossJoin(broadcast(b))
         .filter(datediff(col("dmax"), col("day")) < 60)
         .select((datediff(col("day"), col("dmax")) + 59).as("t"), col("n"))
-        .localCheckpoint() // feeds pair join sides + the residual pass
+        .transform(localCheckpoint) // feeds pair join sides + the residual pass
       val wb = win.select(col("t").as("bt"), col("n").as("bn"))
       val sl = win.join(wb, col("bt") > col("t"))
         .select(((col("bn") - col("n")).cast("double") /
@@ -674,7 +675,7 @@ object TimeSeries {
       val win = daily.crossJoin(broadcast(b))
         .filter(datediff(col("dmax"), col("day")) < 60)
         .select((datediff(col("day"), col("dmax")) + 59).as("t"), col("n"))
-        .localCheckpoint() // pair join + tie groups + count
+        .transform(localCheckpoint) // pair join + tie groups + count
       val wb = win.select(col("t").as("bt"), col("n").as("bn"))
       val s = win.join(wb, col("bt") > col("t"))
         .agg(sum(when(col("bn") > col("n"), 1)
@@ -990,7 +991,7 @@ object TimeSeries {
         |  CAST(n_last AS BIGINT) AS last_n,
         |  round((sy - phi * sx) / np + phi * n_last, 6) AS forecast_next
         |FROM fit""".stripMargin) { (spark, dir) =>
-      val grid = dailyGrid(spark, dir).localCheckpoint() // lag pass + last-day
+      val grid = dailyGrid(spark, dir).transform(localCheckpoint) // lag pass + last-day
       // lag over dailyGrid: measured 2405 @ sf0.01 AND sf0.1 (PlanProbe
       // r7) — calendar-bounded
       val lagged = grid

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
-import graft.util.Checkpoint.PinOps
 
 /** Tokenizer-training and pipeline-evaluation operators: the first BPE
   * merge round (character-pair frequencies — what a tokenizer trainer
@@ -105,9 +105,9 @@ object TokenizerOps {
         |    ELSE round(n_tp * 1.0 / n_truth, 6) END AS recall
         |FROM m""".stripMargin) { (spark, dir) =>
       val hg = Dedup.hashedGrams(Tables(spark, dir).documents)
-        .localCheckpoint() // feeds the LSH pipeline, sizes, and the truth join
+        .transform(localCheckpoint) // feeds the LSH pipeline, sizes, and the truth join
       val cand = Dedup.minhashPairsFromHg(hg)
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b").transform(localCheckpoint)
       val sz = hg.groupBy("doc_id").agg(count(lit(1)).as("n"))
       // spreadBy pins the truth self-join's exchange at full width:
       // the per-h pair expansion is the query's heavy stage, and AQE's
@@ -122,7 +122,7 @@ object TokenizerOps {
         .join(broadcast(sz.toDF("doc_a", "n_a")), Seq("doc_a"))
         .join(broadcast(sz.toDF("doc_b", "n_b")), Seq("doc_b"))
         .filter(col("n_inter") * 2 >= col("n_a") + col("n_b") - col("n_inter"))
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b").transform(localCheckpoint)
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       val nCand = cand.agg(count(lit(1)).as("n_candidates"))
       val nTp = cand.join(truth, Seq("doc_a", "doc_b"))
@@ -170,7 +170,7 @@ object TokenizerOps {
       val srctok = Tables(spark, dir).documents
         .select(col("source"), explode(split(col("text"), " ")).as("tok"))
         .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // feeds per-source totals, corpus totals, terms
+        .transform(localCheckpoint) // feeds per-source totals, corpus totals, terms
       val srctot = srctok.groupBy("source").agg(sum(col("c")).as("t"))
       val corptok = srctok.groupBy("tok").agg(sum(col("c")).as("cc"))
       val corptot = corptok.agg(sum(col("cc")).as("tc"))
@@ -250,7 +250,7 @@ object TokenizerOps {
       // periodic-checkpoint discipline, here every round)
       var syms = words.select(
         concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("s"))
-        .pin()
+        .transform(localCheckpoint)
       val merges = Seq.newBuilder[(Long, String, String, String, Long)]
       for (round <- 1 to 3) {
         val top = syms
@@ -270,7 +270,7 @@ object TokenizerOps {
         // the last round's winner needs no re-application
         if (round < 3)
           syms = syms.select(expr(s"replace(s, ' $l $r ', ' $l$r ')").as("s"))
-            .pin()
+            .transform(localCheckpoint)
       }
       merges.result().toDF("round", "l", "r", "merged", "n")
     },

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import Parity._
 
@@ -115,7 +116,7 @@ object TpchFinal {
         .agg(sum(money(col("l_extendedprice")) *
           col("l_quantity").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
           .as("value"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val thr = value.agg((sum(col("value")).cast("double") * 0.005).as("thr"))
       value
         .crossJoin(broadcast(thr))
@@ -158,7 +159,7 @@ object TpchFinal {
           col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
         .groupBy(col("l_partkey"), col("l_suppkey"))
         .agg(sum(col("l_quantity").cast("long")).as("sq"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val tot = shipped.groupBy(col("l_partkey"))
         .agg(sum(col("sq")).as("tq"))
       val promoSupp = shipped

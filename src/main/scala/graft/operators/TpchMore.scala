@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import Parity._
@@ -242,7 +243,7 @@ object TpchMore {
         .groupBy(col("l_suppkey").as("supplier_no"))
         .agg(sum(discPrice(col("l_extendedprice"), col("l_discount")))
           .as("total_revenue"))
-        .localCheckpoint() // reused by the max subquery and the join
+        .transform(localCheckpoint) // reused by the max subquery and the join
       val mx = rev.agg(max(col("total_revenue")).as("mx"))
       rev.join(broadcast(mx), col("total_revenue") === col("mx"))
         .join(broadcast(t.supplier), col("s_suppkey") === col("supplier_no"))
@@ -390,7 +391,7 @@ object TpchMore {
         .join(forders, col("l_orderkey") === col("o_orderkey"))
         .filter(col("l_shipdate") > col("o_orderdate"))
         .select(col("l_orderkey"), col("l_suppkey"))
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val l2 = t.lineitem.select(col("l_orderkey").as("lo2"), col("l_suppkey").as("ls2"))
       val l3 = late.select(col("l_orderkey").as("lo3"), col("l_suppkey").as("ls3"))
       late

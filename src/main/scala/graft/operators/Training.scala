@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 
 /** Training-data curation operators (north star, SURVEY.md §2B): the
@@ -129,7 +130,7 @@ object Training {
          |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
       // the gram relation feeds both the benchmark set and the probe side
       val grams = Dedup.gramRelation(Tables(spark, dir).documents)
-        .localCheckpoint()
+        .transform(localCheckpoint)
       val bench = grams.filter(col("doc_id") % 97 === 0)
         .select("gram").distinct().withColumn("hit", lit(1))
       grams.filter(col("doc_id") % 97 =!= 0)
@@ -315,7 +316,7 @@ object Training {
           .as("chunks"))
         .select(col("doc_id"),
           posexplode(col("chunks")).as(Seq("pos", "chunk")))
-        .localCheckpoint() // feeds both the totals and the keep-first rank
+        .transform(localCheckpoint) // feeds both the totals and the keep-first rank
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("chunk").orderBy("doc_id", "pos")
       val tot = chunked.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
@@ -448,7 +449,7 @@ object Training {
           "transform(sequence(0, size(a) - 2)," +
             " i -> struct(a[i] AS w1, a[i + 1] AS w2))")).as("p"))
         .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .localCheckpoint() // four consumers share one explosion
+        .transform(localCheckpoint) // four consumers share one explosion
       val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("n2"))
       val c1 = bg.groupBy("w1").agg(count(lit(1)).as("n1"))
       val v = bg.agg(countDistinct(col("w2")).as("vs"))
@@ -554,9 +555,9 @@ object Training {
           "transform(sequence(0, size(a) - 2)," +
             " i -> struct(a[i] AS w1, a[i + 1] AS w2))")).as("p"))
         .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .localCheckpoint() // five consumers share one explosion
+        .transform(localCheckpoint) // five consumers share one explosion
       val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("n2"))
-        .localCheckpoint() // c1/cont/npairs all derive from c2
+        .transform(localCheckpoint) // c1/cont/npairs all derive from c2
       val c1 = c2.groupBy("w1")
         .agg(sum(col("n2")).cast("long").as("n1"), count(lit(1)).as("n_after"))
       val cont = c2.groupBy("w2").agg(count(lit(1)).as("n_before"))
@@ -688,7 +689,7 @@ object Training {
         .withColumn("is_train",
           conv(substring(md5(col("doc_id").cast("string")), 1, 6), 16, 10)
             .cast("int") % 10 < 8)
-        .localCheckpoint() // feeds the train profile AND the test scan
+        .transform(localCheckpoint) // feeds the train profile AND the test scan
       val trainFreq = toks.filter(col("is_train"))
         .groupBy("tok").agg(count(lit(1)).as("c"))
       val tot = trainFreq.agg(sum(col("c")).cast("long").as("t"),
@@ -770,7 +771,7 @@ object Training {
         .orderBy(col("n").desc, col("tok")).limit(50).select("tok")
       val v = toks.join(broadcast(vocab), Seq("tok"))
         .groupBy("source", "tok").agg(count(lit(1)).cast("double").as("x"))
-        .localCheckpoint() // source list, WᵀV, and the final join
+        .transform(localCheckpoint) // source list, WᵀV, and the final join
       val ks = Seq(0, 1).toDF("k")
       def hashInit(parts: org.apache.spark.sql.Column) =
         lit(0.5) + (conv(substring(md5(parts), 1, 8), 16, 10).cast("long")
@@ -783,7 +784,7 @@ object Training {
         .select(col("k"), col("tok"),
           hashInit(concat(col("k").cast("string"), lit("|"), col("tok")))
             .as("h"))
-        .localCheckpoint() // (WᵀW)H and the final update both read it
+        .transform(localCheckpoint) // (WᵀW)H and the final update both read it
       val wtv = w0.join(v, Seq("source"))
         .groupBy("k", "tok").agg(sum((col("w") * col("x"))
           .cast("decimal(38,15)")).cast("double").as("a"))

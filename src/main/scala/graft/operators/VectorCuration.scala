@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
-import graft.util.Checkpoint.PinOps
 import graft.functions.VectorFunctions
 
 /** Embedding-side curation operators (north star, SURVEY.md §2B):
@@ -223,7 +223,7 @@ object VectorCuration {
           Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))))
         .filter(col("rn") === 1)
         .select("vec_id", "cell", "embedding")
-        .localCheckpoint() // feeds the self-join's two sides + the report
+        .transform(localCheckpoint) // feeds the self-join's two sides + the report
       val dropped = assigned
         .select(col("cell"), col("vec_id").as("a_id"), col("embedding").as("ea"))
         .join(assigned.select(col("cell"), col("vec_id").as("b_id"),
@@ -387,7 +387,7 @@ object VectorCuration {
         .filter(round(VectorFunctions.cosineSim(col("embedding"), col("eb")), 6)
           > 0.25)
         .select(col("label"), col("vec_id").as("va"), col("vb"))
-        .localCheckpoint() // 5 consumers: degrees, edge count, 3 join sides
+        .transform(localCheckpoint) // 5 consumers: degrees, edge count, 3 join sides
       val deg = edges.select(col("label"), col("va").as("node"))
         .unionAll(edges.select(col("label"), col("vb").as("node")))
         .groupBy("label", "node").agg(count(lit(1)).as("d"))
@@ -653,7 +653,7 @@ object VectorCuration {
       val ivf = IvfIndex(nprobe = 1)
       val cents = ivf.centroids(emb)
         .select(col("label").as("cell"), col("centroid"))
-        .pin() // feeds the assignment AND the old-centroid diff
+        .transform(localCheckpoint) // feeds the assignment AND the old-centroid diff
       val assigned = emb.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("cell"), col("embedding"),
           ivf.mixedCosine("embedding", "centroid").as("csim"))
@@ -766,9 +766,9 @@ object VectorCuration {
               col("embedding"))) * 1000000).cast("long").as("d"))
       val s1 = emb.filter(col("vec_id") === 0)
       val d1 = distTo(s1, emb.filter(col("vec_id") =!= 0))
-        .pin() // reused by round 2's min() and the argmax
+        .transform(localCheckpoint) // reused by round 2's min() and the argmax
       val s2row = d1.orderBy(col("d").desc, col("vec_id")).limit(1)
-        .pin()
+        .transform(localCheckpoint)
       val s2vec = emb.join(broadcast(s2row.select("vec_id")), Seq("vec_id"))
       val d2 = d1.join(broadcast(s2row.select(col("vec_id").as("ex"))),
           col("vec_id") === col("ex"), "left_anti")
@@ -900,7 +900,7 @@ object VectorCuration {
         .filter(round(VectorFunctions.cosineSim(col("ea"), col("eb")), 6)
           > 0.3)
         .select("va", "vb")
-        .localCheckpoint() // feeds degree + border-adjacency
+        .transform(localCheckpoint) // feeds degree + border-adjacency
       val core = pairs.groupBy(col("va").as("vec_id"))
         .agg(count(lit(1)).as("n_nbrs"))
         .filter(col("n_nbrs") >= 3).select("vec_id")
@@ -978,7 +978,7 @@ object VectorCuration {
          |WHERE rn = 1
          |ORDER BY vec_id""".stripMargin) { (spark, dir) =>
       val emb = Tables(spark, dir).embeddings
-        .localCheckpoint() // anchor, positive, and negative sides
+        .transform(localCheckpoint) // anchor, positive, and negative sides
       val ivf = IvfIndex(nprobe = 1)
       val cents = ivf.centroids(emb)
         .select(col("label").as("cell"), col("centroid"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import graft.util.RangeRank
 
@@ -69,12 +70,12 @@ object Wave6 {
           col("l_orderkey") === col("o_orderkey"))
         .select(col("l_suppkey").as("s"), col("o_custkey").as("c"))
         .distinct()
-        .localCheckpoint() // feeds deg + both self-join sides
+        .transform(localCheckpoint) // feeds deg + both self-join sides
       val deg = pairs.groupBy("c").agg(count(lit(1)).as("d"))
       // the cap (see oracle comment) lands BEFORE the self-join, so the
       // d² blow-up never materializes; d rides along — no re-join
       val p = pairs.join(deg.filter(col("d") <= 30), Seq("c"))
-        .localCheckpoint() // both self-join sides
+        .transform(localCheckpoint) // both self-join sides
       p.select(col("s").as("s1"), col("c"), col("d"))
         .join(p.select(col("s").as("s2"), col("c").as("c2")),
           col("c2") === col("c") && col("s2") > col("s1"))
@@ -191,7 +192,7 @@ object Wave6 {
         .groupBy(col("o_orderpriority").as("grp"))
         .agg(count(lit(1)).as("n_i"),
           sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("s_i"))
-        .localCheckpoint() // 5 rows; feeds totals + the loo projection
+        .transform(localCheckpoint) // 5 rows; feeds totals + the loo projection
       val tot = g.agg(sum(col("n_i")).as("n"), sum(col("s_i")).as("s"),
         count(lit(1)).as("n_groups"))
       val loo = g.crossJoin(broadcast(tot))
@@ -294,7 +295,7 @@ object Wave6 {
         .groupBy("lang")
         .agg(sum(expr("(n_chars + 3) div 4")).as("n_tok"))
         .withColumn("wt", sqrt(col("n_tok").cast("double")))
-        .localCheckpoint() // |langs| rows; feeds normalizer + projection
+        .transform(localCheckpoint) // |langs| rows; feeds normalizer + projection
       val z = l.agg(
         sum(col("wt").cast("decimal(38,18)")).cast("double").as("tot"))
       l.crossJoin(broadcast(z))
@@ -359,7 +360,7 @@ object Wave6 {
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
           sum(col("x") * col("x")).as("sxx"))
-        .localCheckpoint() // |sources| rows; feeds totals + the ablation
+        .transform(localCheckpoint) // |sources| rows; feeds totals + the ablation
       val tot = per.agg(sum("n").as("tn"), sum("sx").as("tsx"),
         sum("sy").as("tsy"), sum("sxy").as("tsxy"), sum("sxx").as("tsxx"))
       per.crossJoin(broadcast(tot))
@@ -594,7 +595,7 @@ object Wave6 {
       (spark, dir) =>
       val words = Tables(spark, dir).documents
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .localCheckpoint() // bigram count + the rewrite pass share it
+        .transform(localCheckpoint) // bigram count + the rewrite pass share it
       val top3 = words.filter(length(col("w")) >= 2)
         .select(explode(expr(
           "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
@@ -664,7 +665,7 @@ object Wave6 {
         .groupBy("cand")
         .agg(sum(when(col("c") > col("cand"), lit(9) * (col("c") - col("cand")))
           .otherwise(col("cand") - col("c"))).as("pinball10"))
-        .localCheckpoint() // 20 rows; feeds argmin + the curve
+        .transform(localCheckpoint) // 20 rows; feeds argmin + the curve
       val best = loss.agg(
         expr("min(pinball10 * 32 + cand div 2500000)").as("bk"))
       loss.crossJoin(broadcast(best))
@@ -784,12 +785,12 @@ object Wave6 {
         .select(col("source"), col("doc_id"),
           explode(split(col("text"), " ")).as("term"))
         .distinct()
-        .localCheckpoint() // counts, incidence, and doc totals share it
+        .transform(localCheckpoint) // counts, incidence, and doc totals share it
       val cnt = toks.groupBy("source", "term").agg(count(lit(1)).as("df"))
       val top5 = cnt.withColumn("r", row_number().over(
           Window.partitionBy("source").orderBy(col("df").desc, col("term"))))
         .filter(col("r") <= 5).select("source", "term", "df")
-        .localCheckpoint() // 5 rows per source; broadcast everywhere
+        .transform(localCheckpoint) // 5 rows per source; broadcast everywhere
       val nd = toks.groupBy("source")
         .agg(countDistinct(col("doc_id")).as("n_docs"))
       val inc = toks.join(broadcast(top5.select("source", "term")),
@@ -1073,7 +1074,7 @@ object Wave6 {
         .select(col("o_orderkey").as("k"),
           (col("o_orderkey") % 16).as("s1"), (col("o_orderkey") % 256).as("s2"),
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("c"))
-        .localCheckpoint() // src and the planted-drift tgt share the scan
+        .transform(localCheckpoint) // src and the planted-drift tgt share the scan
       def hashed(df: org.apache.spark.sql.DataFrame) = df.select(
         col("k"), col("s1"), col("s2"),
         expr("""CAST(conv(substring(md5(concat(
@@ -1091,7 +1092,7 @@ object Wave6 {
           col("d").as("db")), Seq("s1"))
         .filter(col("da") =!= col("db") || col("na") =!= col("nb"))
         .select("s1")
-        .localCheckpoint() // tiny dirty-shard list; prunes both level-2 scans
+        .transform(localCheckpoint) // tiny dirty-shard list; prunes both level-2 scans
       val nDirty = l1.count()
       val l2 = digests(src.join(broadcast(l1), Seq("s1")), "s2")
         .select(col("s2"), col("n").as("na"), col("d").as("da"))
@@ -1300,7 +1301,7 @@ object Wave6 {
       val t = Tables(spark, dir).orders
         .groupBy(col("o_orderpriority").as("a"), col("o_orderstatus").as("b"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint() // ≤15 cells; feeds margins + the chi2 sum
+        .transform(localCheckpoint) // ≤15 cells; feeds margins + the chi2 sum
       val mar = t.groupBy("a").agg(sum(col("n")).as("na"))
       val mbr = t.groupBy("b").agg(sum(col("n")).as("nb"))
       val tot = t.agg(sum(col("n")).as("nt"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
 import graft.sources.{KeyRange, SnapshotLog}
 
@@ -350,7 +351,7 @@ object Wave8 {
         .outputMode("complete").start()
       try { q.processAllAvailable() } finally { q.stop() }
       val out = spark.table("graft_stream_cdf_feed")
-        .orderBy("change").localCheckpoint()
+        .orderBy("change").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(ckpt))
       out
@@ -446,7 +447,7 @@ object Wave8 {
          |ORDER BY split""".stripMargin) { (spark, dir) =>
       val docs = Tables(spark, dir).documents.select("doc_id")
       val pairs = Dedup.minhashPairs(Tables(spark, dir).documents)
-        .localCheckpoint() // feeds both the components and the leak audit
+        .transform(localCheckpoint) // feeds both the components and the leak audit
       val comp = Clusters.connectedComponents(
         pairs.select(col("doc_a").as("a"), col("doc_b").as("b")))
       val sp = docs
@@ -458,7 +459,7 @@ object Wave8 {
           when(col("h") < 80, "train").when(col("h") < 90, "val")
             .otherwise("test"))
         .select("doc_id", "cid", "split")
-        .localCheckpoint() // feeds the rollup and both sides of the audit
+        .transform(localCheckpoint) // feeds the rollup and both sides of the audit
       val leak = pairs
         .join(sp.as("sa"), col("doc_a") === col("sa.doc_id"))
         .join(sp.as("sb"), col("doc_b") === col("sb.doc_id"))

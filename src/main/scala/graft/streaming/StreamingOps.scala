@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import org.apache.spark.sql.types._
 import graft.operators.QueryDef
 
@@ -601,7 +602,7 @@ object StreamingOps {
           StructField("n", LongType))))
         .parquet(sinkDir)
         .orderBy("window_start")
-        .localCheckpoint()
+        .transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -1004,7 +1005,7 @@ object StreamingOps {
       land(0); runOnce() // phase 1: half the data, then a clean stop
       land(1); runOnce() // phase 2: restart from the checkpoint
       val out = spark.table("graft_stream_restart")
-        .orderBy("event_type").localCheckpoint()
+        .orderBy("event_type").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -1134,7 +1135,7 @@ object StreamingOps {
         .agg(count(lit(1)).as("n_events"),
           sum(col("cents")).cast("long").as("total_cents"),
           countDistinct(col("user_id")).as("n_users"))
-        .orderBy("event_type").localCheckpoint()
+        .orderBy("event_type").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -1214,7 +1215,7 @@ object StreamingOps {
           s"got ${summary.version}")
       val out = summary.asOf(summary.version)
         .select("event_type", "n_rows", "sum_cents")
-        .orderBy("event_type").localCheckpoint()
+        .orderBy("event_type").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     },
@@ -1251,7 +1252,7 @@ object StreamingOps {
       val ev = graft.Tables(spark, dir).events
         .select(col("event_id"), col("event_type"),
           expr("cast(round(value * 100) as bigint)").as("cents"))
-        .localCheckpoint() // feeds all four slices + the tombstone scan
+        .transform(localCheckpoint) // feeds all four slices + the tombstone scan
       // slice k: own upserts + tombstones for earlier slices' %7==k keys
       def land(k: Int): Unit = {
         val ups = ev.filter(col("event_id") % 4 === k)
@@ -1299,7 +1300,7 @@ object StreamingOps {
           sum(col("cents")).cast("long").as("sum_cents"),
           min(col("event_id")).as("min_key"),
           max(col("event_id")).as("max_key"))
-        .orderBy("event_type").localCheckpoint()
+        .orderBy("event_type").transform(localCheckpoint)
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
       out
     }

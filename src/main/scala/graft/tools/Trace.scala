@@ -46,22 +46,44 @@ object Trace {
     spark.stop()
   }
 
-  /** Samples the driver thread every 10 ms and counts its topmost
-    * engine, parquet or Catalyst frame: the job listener attributes
-    * executor time, this attributes the gaps between jobs (planning,
-    * manifest folds, file-system calls). */
+  /** The frame a driver-thread sample is credited to: the topmost
+    * engine, parquet or Catalyst frame. When that frame is one of
+    * QueryExecution's wrappers — `withInternalError`, the eager command
+    * execution and `toRdd`, which sit above every action and command
+    * that waits on a job and name none of them — the sample goes to the
+    * first graft frame below it instead: the graft call that is
+    * waiting. Lambda proxy frames are never credited; their body is the
+    * next frame. */
+  private[graft] def creditedFrame(st: Array[StackTraceElement]): Option[StackTraceElement] = {
+    val i = st.indexWhere { f =>
+      val c = f.getClassName
+      !c.contains("$$Lambda") && (c.startsWith("graft.") ||
+        c.startsWith("org.apache.parquet") || c.contains("catalyst") ||
+        c.contains("datasources") || c.contains("QueryExecution") ||
+        c.contains("RuleExecutor"))
+    }
+    if (i < 0) st.headOption
+    else {
+      val name = st(i).getClassName + "." + st(i).getMethodName
+      if (!name.contains("QueryExecution") || !queryExecutionWrappers.exists(name.contains))
+        Some(st(i))
+      else st.drop(i + 1).find(_.getClassName.startsWith("graft.")).orElse(Some(st(i)))
+    }
+  }
+
+  private val queryExecutionWrappers =
+    Seq("withInternalError", "eagerlyExecute", "toRdd", "ToRdd")
+
+  /** Samples the driver thread every 10 ms and counts its
+    * [[creditedFrame]]: the job listener attributes executor time, this
+    * attributes the gaps between jobs (planning, manifest folds,
+    * file-system calls). */
   private final class DriverSampler(target: Thread) {
     private val counts = new ConcurrentHashMap[String, Integer]()
     @volatile private var running = true
     private val thread = new Thread(() => {
       while (running) {
-        val st = target.getStackTrace
-        st.find { f =>
-          val c = f.getClassName
-          c.startsWith("graft.") || c.startsWith("org.apache.parquet") ||
-          c.contains("catalyst") || c.contains("datasources") ||
-          c.contains("QueryExecution") || c.contains("RuleExecutor")
-        }.orElse(st.headOption).foreach { f =>
+        creditedFrame(target.getStackTrace).foreach { f =>
           val k = s"${f.getClassName.split('.').takeRight(2).mkString(".")}.${f.getMethodName}"
           counts.merge(k, 1, (a, b) => a + b)
         }

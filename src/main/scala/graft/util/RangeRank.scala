@@ -3,6 +3,7 @@ package graft.util
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 
 /** Scale-safe global ranking: the DataFrame analogue of RDD
   * `zipWithIndex`, replacing `row_number().over(Window.orderBy(...))`
@@ -39,7 +40,7 @@ object RangeRank {
       numPartitions: Int, keys: Column*): (DataFrame, Long) = {
     val ranged = df.repartitionByRange(numPartitions, keys: _*)
       .withColumn("__rr_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(localCheckpoint)
     val counts = ranged.groupBy("__rr_pid").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = counts.map(_._1)
@@ -119,7 +120,7 @@ object RangeRank {
       numPartitions: Int, keys: Column*): DataFrame = {
     val ranged = df.repartitionByRange(numPartitions, keys: _*)
       .withColumn("__rr_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(localCheckpoint)
     val totals = ranged.groupBy("__rr_pid")
       .agg(sum(col(cols.head._1)).as(s"__t_${cols.head._1}"),
         cols.drop(1).map { case (v, _) => sum(col(v)).as(s"__t_$v") }: _*)
@@ -162,7 +163,7 @@ object RangeRank {
     require(frameEnd == 0 || frameEnd == -1, s"frameEnd $frameEnd")
     val ranged = df.repartitionByRange(numPartitions, keys: _*)
       .withColumn("__rr_pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(localCheckpoint)
     val totals = ranged.groupBy("__rr_pid")
       .agg(max(col(valueCol)).as(s"__t_$valueCol"))
     val offs = prefixOffsets(totals,

@@ -31,9 +31,9 @@ object Trace {
   final case class Job(id: Int, callSite: String, startMs: Long,
       endMs: Long, inBuild: Boolean, tasks: Int, taskMs: Long) {
     def wallMs: Long = endMs - startMs
-    /** The eager job of a `localCheckpoint()` or `checkpoint()`. */
-    def checkpoint: Boolean =
-      callSite.startsWith("localCheckpoint at ") || callSite.startsWith("checkpoint at ")
+    /** The eager job of a barrier, which [[Checkpoint.localCheckpoint]]
+      * labels with this prefix in either of its modes. */
+    def checkpoint: Boolean = callSite.startsWith("localCheckpoint at ")
   }
 
   /** One completed stage attempt; `rowsRead` counts scan and shuffle

@@ -50,4 +50,56 @@ class TraceSpec extends SparkSpec {
     assert(report.plans.exists(_.func == "count"))
     DevSession.dropPinnedBlocks(spark)
   }
+
+  test("q_pagerank: every checkpoint job names its operator file") {
+    // a barrier's job is labelled by the frame that placed it, never
+    // by the barrier's own file
+    val report = Trace.query(spark)(q("q_pagerank"))(_.count())
+    val checkpoints = report.checkpointJobs
+    assert(checkpoints.nonEmpty, report.jobs.mkString("; "))
+    val site = """localCheckpoint at (\w+\.scala):\d+""".r
+    checkpoints.foreach { j =>
+      j.callSite match {
+        case site(file) => assert(file != "Checkpoint.scala", j.callSite)
+        case other => fail(s"not a barrier label: $other")
+      }
+    }
+    DevSession.dropPinnedBlocks(spark)
+  }
+
+  test("driver sampler credits the graft frame below QueryExecution wrappers") {
+    def frame(cls: String, method: String) =
+      new StackTraceElement(cls, method, "X.scala", 1)
+    val qe = "org.apache.spark.sql.execution.QueryExecution"
+    val waiting = Array(
+      frame("jdk.internal.misc.Unsafe", "park"),
+      frame("org.apache.spark.scheduler.DAGScheduler", "runJob"),
+      frame(qe + "$", "withInternalError"),
+      frame(qe + "$$Lambda$3375/0x00007f2e80ef46e8", "apply"),
+      frame(qe, "$anonfun$lazyToRdd$1"),
+      frame(qe, "toRdd"),
+      frame(qe, "$anonfun$eagerlyExecuteCommands$2"),
+      frame(qe, "org$apache$spark$sql$execution$QueryExecution$$eagerlyExecute$1"),
+      frame(qe + "$$anonfun$eagerlyExecuteCommands$3", "applyOrElse"),
+      frame("org.apache.spark.sql.catalyst.trees.TreeNode", "transformDownWithPruning"),
+      frame("org.apache.spark.sql.classic.Dataset", "count"),
+      frame("graft.sources.SnapshotLog$Table", "commitMergeMor"),
+      frame("graft.tools.Trace$", "main"))
+    assert(tools.Trace.creditedFrame(waiting).map(_.getMethodName)
+      .contains("commitMergeMor"))
+    // planning above the wrapper is still credited to the planner
+    val planning = Array(
+      frame("org.apache.spark.sql.catalyst.rules.RuleExecutor", "execute"),
+      frame(qe + "$", "withInternalError"),
+      frame("graft.operators.Dedup$", "q"))
+    assert(tools.Trace.creditedFrame(planning).map(_.getMethodName)
+      .contains("execute"))
+    // a wrapper with no graft frame below keeps the sample
+    assert(tools.Trace.creditedFrame(waiting.take(3)).map(_.getMethodName)
+      .contains("withInternalError"))
+    // a stack with no candidate falls back to its top frame
+    assert(tools.Trace.creditedFrame(waiting.take(2)).map(_.getMethodName)
+      .contains("park"))
+    assert(tools.Trace.creditedFrame(Array.empty).isEmpty)
+  }
 }

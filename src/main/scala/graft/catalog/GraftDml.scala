@@ -572,17 +572,16 @@ final case class GraftMergeCommand(root: String, partCol: String,
     extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] = {
+    // the commit evaluates the source once, behind its own barrier, so
+    // the uniqueness guard and the write see the SAME batch even when
+    // the source is nondeterministic
     val src = org.apache.spark.sql.GraftBridge.ofRows(spark, source)
-      .transform(localCheckpoint) // the uniqueness guard and the commit must
-    //                      see the SAME batch (a nondeterministic
-    //                      source re-evaluated twice could pass the
-    //                      guard and still commit duplicates)
     val t = GraftSqlTable.handleFor(spark, root)
     if (delete) t.commitDeleteKeysMor(src.select(col(keyCol)), keyCol)
     // guardUniqueness: SQL MERGE refuses duplicate source keys and
     // duplicate-matched target rows (the Delta multiple-match error);
-    // the checks ride the batch and the candidate-pruned join inside
-    // the commit, never a table scan
+    // the checks ride the pinned batch and the candidate-pruned join
+    // inside the commit, never a table scan
     else t.commitMergeMor(src, partCol, keyCol, guardUniqueness = true)
     Seq.empty
   }
@@ -798,9 +797,8 @@ final case class GraftUpdateKeysCommand(root: String, partCol: String,
         .map(e => ColumnBridge.column(e).cast(f.dataType).as(f.name))
         .getOrElse(col(f.name))): _*)
       .withColumn("__op", lit("U"))
-      // victims-sized by construction; pin so the commit's several
-      // consumers (key probe, tombstone join, rewrite) share one eval
-      .transform(localCheckpoint)
+    // the commit pins the batch, so its key probe, tombstone join and
+    // rewrite share one evaluation
     t.commitApplyChanges(changes, partCol, keyCol)
     Seq.empty
   }

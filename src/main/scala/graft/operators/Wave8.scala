@@ -215,11 +215,9 @@ object Wave8 {
       }.toSeq.toDF("relpath", "add_v", "rm_v")
       val everAdded = es.filter(_.action == "add")
         .map(e => s"${t.root}/data/${e.path}")
-      val seg = split(input_file_name(), "/")
       val rows = spark.read.option("basePath", s"${t.root}/data")
         .parquet(everAdded: _*)
-        .select(concat_ws("/", element_at(seg, -2), element_at(seg, -1))
-          .as("relpath"))
+        .select(SnapshotLog.fileRel(input_file_name()).as("relpath"))
         .join(broadcast(fileMap), Seq("relpath"))
       val added = rows.groupBy(col("add_v").as("version"))
         .agg(count(lit(1)).as("n_added_rows"))

@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetFiles
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Namespace-clone pipeline — the Spark re-expression of the reference's
   * actual capability (clone_databases.sh: bulk copy of databases under a
@@ -25,18 +27,23 @@ import org.apache.spark.sql.types._
   *     1026-1103) → `Seq[CloneResult]` + report DataFrame.
   *
   * Scale stance: where `CREATE DATABASE … TEMPLATE` let the PG server
-  * copy files internally (clone_databases.sh:246), Spark's equivalent is
-  * a distributed scan→write per table: the copy parallelizes over file
-  * splits, preserves the source's partitioning columns, and never moves
-  * rows through the driver. Unlike the reference's strictly sequential
-  * per-DB loop (clone_databases.sh:1029), independent tables are
-  * submitted as concurrent Spark jobs.
+  * copy files internally (clone_databases.sh:246), a plain parquet
+  * table clones the same way: its data files are copied byte for byte,
+  * one Spark task per file, so no row is decoded, re-encoded or moved
+  * through the driver. Every other source (JDBC, DSv2, the document
+  * store, other file formats) is a distributed scan→write that
+  * parallelizes over the source's splits. Unlike the reference's
+  * strictly sequential per-DB loop (clone_databases.sh:1029),
+  * independent tables are submitted as concurrent Spark jobs.
   *
   * A parquet table clones in ONE Spark job, the copy itself: the
-  * source is planned from its file statuses and the footer Spark's
-  * inference would read (no inference job, see [[org.apache.spark.sql
-  * .graft.ParquetFiles]]), the source row count is observed during the
-  * copy, and verification reads footers on the driver.
+  * files a read of the source would scan are listed (hidden and `_`
+  * files are not copied), copied under their relative paths, partition
+  * directories included, into a staging directory next to the target,
+  * and published with one rename. The source row count is the sum of
+  * the source footers, and verification reads the published files'
+  * footers on the driver. A copy that fails leaves no target, so a
+  * later run clones the table again.
   */
 final case class CloneResult(
     table: String,
@@ -55,7 +62,7 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
     s"${config.targetDir}/${config.prefix}$table"
 
   private def exists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -82,8 +89,6 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
     * plain parquet source is planned from its files' metadata, without
     * the listing and inference jobs of `spark.read`. */
   private def readSource(table: String): DataFrame = {
-    val plainParquet = config.sourceFormat.equalsIgnoreCase("parquet") &&
-      config.sourceOptions.isEmpty
     (if (plainParquet) ParquetFiles.table(spark, config.sourcePath(table))
      else None).getOrElse(
       if (config.pathBasedSource)
@@ -115,7 +120,7 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
     * `_graft_lock` marker under the target namespace; a concurrent writer
     * holding it makes the clone abort rather than interleave writes.
     * `FileSystem.createNewFile` is atomic on the target store. */
-  private def lockPath = new org.apache.hadoop.fs.Path(
+  private def lockPath = new Path(
     s"${config.targetDir}/_graft_lock")
 
   /** False means "another writer holds the lock"; genuine I/O failures
@@ -155,36 +160,84 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
         return CloneResult(table, tgt, "skipped_exists", 0L,
           schemaMatches = true, backedUp = false, "")
 
-      val src = readSource(table)
-
       val backedUp = if (config.backupBeforeClone && exists(tgt)) {
         // pre-overwrite snapshot (clone_databases.sh:203-217): must
         // succeed before the clone may proceed
         // nanos suffix: two overwrite clones within one second must not
-        // collide on the ErrorIfExists snapshot path
+        // collide on the snapshot path
         val stamp = java.time.format.DateTimeFormatter
           .ofPattern("yyyyMMdd_HHmmss").withZone(java.time.ZoneOffset.UTC)
           .format(java.time.Instant.now()) + "_" + System.nanoTime()
-        spark.read.parquet(tgt).write.mode(SaveMode.ErrorIfExists)
-          .parquet(s"${config.backupDir}/${config.prefix}${table}_$stamp")
+        val backup = s"${config.backupDir}/${config.prefix}${table}_$stamp"
+        require(!exists(backup), s"backup path exists: $backup")
+        copyTable(tgt, ParquetFiles.dataFiles(spark, tgt), backup)
         true
       } else false
 
-      // the source row count is observed DURING the copy job (Observation
-      // metric on the write) — no separate source scan; at 100 TB a
-      // count-only re-pass over the source would be a full extra read
-      val obs = org.apache.spark.sql.Observation(s"clone_$table")
-      src.observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows"))
-        .write.mode(if (config.overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
-        .parquet(tgt)
-      val srcN = obs.get("rows").asInstanceOf[Long]
-      verify(table, src.schema, srcN).copy(backedUp = backedUp)
+      val files =
+        if (plainParquet && !mergesSchema)
+          ParquetFiles.dataFiles(spark, config.sourcePath(table))
+        else Nil
+      if (files.nonEmpty) {
+        // the copy: rows and schema from the source footers, bytes
+        // moved by the copy job
+        val footers = ParquetFiles.footers(
+          spark.sparkContext.hadoopConfiguration, files)
+        // the schema a read infers: the first data file's by path
+        val (first, footer) = files.zip(footers).minBy(_._1.getPath.toString)
+        copyTable(config.sourcePath(table), files, tgt)
+        verify(table, ParquetFiles.schemaOf(spark, first.getPath, footer),
+          footers.map(ParquetFiles.rowCount).sum).copy(backedUp = backedUp)
+      } else {
+        // the source row count is observed DURING the copy job
+        // (Observation metric on the write) — no separate source scan;
+        // at 100 TB a count-only re-pass over the source would be a
+        // full extra read
+        val src = readSource(table)
+        val obs = org.apache.spark.sql.Observation(s"clone_$table")
+        src.observe(obs, count(lit(1)).as("rows"))
+          .write.mode(if (config.overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
+          .parquet(tgt)
+        val srcN = obs.get("rows").asInstanceOf[Long]
+        verify(table, src.schema, srcN).copy(backedUp = backedUp)
+      }
     } catch {
       case e: Throwable =>
         CloneResult(table, tgt, "failed", 0L, schemaMatches = false,
           backedUp = false, String.valueOf(e.getMessage))
     }
+  }
+
+  private def plainParquet: Boolean =
+    config.sourceFormat.equalsIgnoreCase("parquet") &&
+      config.sourceOptions.isEmpty
+
+  /** A session that merges parquet schemas reads a table whose files
+    * differ in schema as their union, which a byte copy cannot give. */
+  private def mergesSchema: Boolean =
+    spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+
+  /** Copies `files`, which lie under `from`, to the same relative paths
+    * under a staging directory beside `to`, then renames the staging
+    * directory to `to`, replacing what is there. A failed copy removes
+    * the staging directory and leaves `to` as it was. */
+  private def copyTable(from: String, files: Seq[FileStatus],
+      to: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dst = new Path(to)
+    val fs = dst.getFileSystem(conf)
+    val src = new Path(from)
+    val staging = new Path(dst.getParent,
+      s"_staging_${dst.getName}_${System.nanoTime()}")
+    try {
+      fs.mkdirs(staging)
+      ClonePipeline.copyFiles(spark,
+        src.getFileSystem(conf).makeQualified(src), files, staging)
+      if (fs.exists(dst) && !fs.delete(dst, true))
+        throw new java.io.IOException(s"could not replace $dst")
+      if (!fs.rename(staging, dst))
+        throw new java.io.IOException(s"could not publish $staging as $dst")
+    } finally fs.delete(staging, true)
   }
 
   /** Post-clone verification (clone_databases.sh:480-551) from the
@@ -239,12 +292,10 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
         throw new IllegalStateException(
           s"incremental clone requires an existing full clone at $tgt")
       val delta = readSource(table)
-        .filter(org.apache.spark.sql.functions.col(watermarkCol) >
-          org.apache.spark.sql.functions.lit(lastValue))
+        .filter(col(watermarkCol) > lit(lastValue))
       val obs = org.apache.spark.sql.Observation(
         s"incr_${table}_${System.nanoTime()}")
-      delta.observe(obs, org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("rows"))
+      delta.observe(obs, count(lit(1)).as("rows"))
         .write.mode(SaveMode.Append).parquet(tgt)
       obs.get("rows").asInstanceOf[Long]
     } finally releaseLock()
@@ -291,4 +342,41 @@ final class ClonePipeline(spark: SparkSession, config: CloneConfig) {
 object ClonePipeline {
   def apply(spark: SparkSession, config: CloneConfig): ClonePipeline =
     new ClonePipeline(spark, config)
+
+  /** One Spark job with one task per file: each task copies one of
+    * `files` byte for byte to its path relative to `root` under `to` (a
+    * file root to its own name), and fails when the bytes it copied
+    * differ from the listed length. */
+  private def copyFiles(spark: SparkSession, root: Path,
+      files: Seq[FileStatus], to: Path): Unit = {
+    val rootPath = root.toUri.getPath.stripSuffix("/")
+    val work = files.map { st =>
+      val p = st.getPath.toUri.getPath
+      val rel =
+        if (p == rootPath) st.getPath.getName
+        else if (p.startsWith(rootPath + "/")) p.drop(rootPath.length + 1)
+        else throw new IllegalStateException(s"$p is not under $rootPath")
+      val dst = rel.split('/').foldLeft(to)((dir, name) =>
+        new Path(dir, new Path(null, null, name)))
+      (st.getPath.toUri, dst.toUri, st.getLen)
+    }
+    val conf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.parallelize(work, math.max(1, work.size)).foreach {
+      case (srcUri, dstUri, len) =>
+        val (s, d) = (new Path(srcUri), new Path(dstUri))
+        val in = s.getFileSystem(conf.value).open(s)
+        try {
+          val out = d.getFileSystem(conf.value).create(d, false)
+          try {
+            val buf = new Array[Byte](1 << 16)
+            var n = 0L
+            var r = in.read(buf)
+            while (r >= 0) { out.write(buf, 0, r); n += r; r = in.read(buf) }
+            if (n != len) throw new java.io.IOException(
+              s"copied $n bytes of $s, listed at $len")
+          } finally out.close()
+        } finally in.close()
+    }
+  }
 }

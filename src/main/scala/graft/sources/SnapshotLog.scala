@@ -1,9 +1,15 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Path}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.graft.{ParquetFiles, Trace}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders,
+  Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, DecimalType,
+  IntegerType, LongType, StringType, TimestampNTZType, TimestampType}
 
 /** Minimal snapshot-versioned parquet table: an append-only commit log
   * over immutable data files, giving AS-OF reads (time travel) and a
@@ -66,6 +72,20 @@ object SnapshotLog {
 
   private[graft] def hexStr(s: String): String =
     s.getBytes("UTF-8").map(b => f"$b%02x").mkString
+  /** What one pass over a merge or delete source says about its key
+    * of type `dt`: the row count, the key probe's min and max (None for
+    * an empty source or an unprunable type), and, for LONG and STRING
+    * keys, the distinct keys while there are at most
+    * `Table.BloomProbeMaxKeys` of them. */
+  private[sources] final case class SourceFacts(dt: DataType, rows: Long,
+      range: Option[(Any, Any)], keys: Option[Seq[Any]])
+
+  /** A data file's path relative to its table's data dir, as the log
+    * records it: the last two segments of `path` (`part=val/file`),
+    * cut out without building an array per row. */
+  private[graft] def fileRel(path: Column): Column =
+    substring_index(path, "/", -2)
+
   private[graft] def unhexStr(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
       "UTF-8")
@@ -1279,7 +1299,6 @@ object SnapshotLog {
       // expression blocks every filter from pushing below it, which
       // would disconnect the pruned scan from the very predicates the
       // FileIndex prunes on
-      val seg = split(col("_metadata.file_path"), "/")
       // schema evolution on the pruned path: widened declared types
       // (parquet upcasts narrow footers in-reader; zone probes keep
       // long-stat semantics) and DEFAULT-era grouping (files whose
@@ -1312,8 +1331,7 @@ object SnapshotLog {
             }
           if (!withPos) rel
           else rel
-            .withColumn("__f",
-              concat_ws("/", element_at(seg, -2), element_at(seg, -1)))
+            .withColumn("__f", fileRel(col("_metadata.file_path")))
             .withColumn("__pos", col("_metadata.row_index"))
         }
         .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
@@ -1426,10 +1444,8 @@ object SnapshotLog {
       * is a file-source pseudo-column and does not survive a union. */
     private[graft] def readFilesWithPos(rels: Seq[String],
         at: Int): DataFrame = {
-      val seg = split(input_file_name(), "/")
       readGroups(rels, at, mergeSchema = false, df => df
-        .withColumn("__f",
-          concat_ws("/", element_at(seg, -2), element_at(seg, -1)))
+        .withColumn("__f", fileRel(input_file_name()))
         .withColumn("__pos", col("_metadata.row_index")))
     }
 
@@ -1740,8 +1756,7 @@ object SnapshotLog {
             ParquetFiles.footer(hadoopConf, st)))
           rel -> (((n * BloomBitsPerRow + 63) / 64) * 64)
       }.toMap
-      val seg = split(input_file_name(), "/")
-      val rel = concat_ws("/", element_at(seg, -2), element_at(seg, -1))
+      val rel = fileRel(input_file_name())
       // file -> m as a broadcast join, not a literal map expression: a
       // thousand-file commit must not inflate the plan itself
       import spark.implicits._
@@ -2874,14 +2889,44 @@ object SnapshotLog {
       * remove(hit files) + add(rewritten survivors + all source
       * rows). Assumes `keyCol` is unique within `source`
       * (last-writer-wins semantics are the caller's to
-      * pre-aggregate). */
-    /** The live files at `vPrev` that can contain any of `source`'s
-      * keys: zone-map range pruning by key type (LONG/INT, DATE via
-      * epoch days, string via the truncation-safe string stats; other
-      * types keep everything), then — for bloom-indexed LONG keys — a
-      * membership pass that cuts the range candidates to ~the files
-      * actually containing a key. One tiny agg over the (delta-sized)
-      * source; the manifest does the rest driver-side. */
+      * pre-aggregate). The source is evaluated once ([[pinSource]]):
+      * the candidate probe, the hit scan, the survivors' anti join and
+      * the write all read the same rows, even from a nondeterministic
+      * source. */
+    def commitMerge(source0: DataFrame, partCol: String, keyCol0: String,
+        expectedVersion: Int = -1): Int = {
+      val v = casCheck(expectedVersion)
+      val (pinned, facts) = pinSource(source0, keyCol0)
+      checkConstraints(pinned)
+      // column mapping: the batch and key arrive LOGICAL; every file,
+      // stat and sidecar speaks PHYSICAL (identity unless renamed)
+      val source = toPhysical(pinned, v - 1)
+      val keyCol = physicalAt(v - 1, keyCol0)
+      val live = liveFiles(v - 1)
+      val candidates = Trace.span("merge:candidates")(
+        mergeCandidates(v - 1, facts, keyCol, live))
+      lastMergeScan = Some((candidates.size, live.size))
+      // driver-side file list: bounded by candidate-file count
+      // (metadata scale), not row count; layout-aware reads so merges
+      // work across partition evolution
+      val hits = Trace.span("merge:hitScan") {
+        if (candidates.isEmpty) Seq.empty[String]
+        else hitRows(v - 1, candidates, source, keyCol, facts)
+          .select("__f").distinct().collect().map(_.getString(0)).toSeq
+      }
+      val rewritten = // victims read through their DVs (see
+        // [[readFilesMorAt]] — a raw read would resurrect MOR deletes)
+        if (hits.isEmpty) source
+        else readFilesMorAt(v - 1, hits)
+          .join(broadcast(source.select(col(keyCol))), Seq(keyCol),
+            "left_anti")
+          .select(source.columns.toIndexedSeq.map(col): _*)
+          .unionByName(source)
+      val added = land(rewritten, partCol, v, "merge")
+      publishRewrite(v, hits, added, Nil, "merge")
+      v
+    }
+
     /** Wall-clock micros of a TIMESTAMP_NTZ column, computed
       * arithmetically from the date/time parts — exactly what parquet
       * footer stats record for NTZ columns (isAdjustedToUTC=false),
@@ -2893,16 +2938,12 @@ object SnapshotLog {
         minute(c).cast("long") * lit(60000000L) +
         (date_part(lit("SECOND"), c) * lit(1000000)).cast("long")
 
-    private def mergeCandidates(vPrev: Int, source: DataFrame,
-        keyCol: String, live: Seq[String]): Seq[String] = {
-      import org.apache.spark.sql.types.{DateType, DecimalType,
-        IntegerType, LongType, StringType, TimestampType, TimestampNTZType}
-      lastMergeFallback = None
-      val dt = source.schema(keyCol).dataType
-      // the key as its zone maps record it: integer-physical keys
-      // widen to long (DATE to epoch days, TIMESTAMP to micros,
-      // DECIMAL(p<=18) to its unscaled value), strings stay strings
-      val probe: Option[Column] = dt match {
+    /** The key as its zone maps record it: integer-physical keys widen
+      * to long (DATE to epoch days, TIMESTAMP to micros, DECIMAL(p<=18)
+      * to its unscaled value), strings stay strings. None for key types
+      * no zone map prunes. */
+    private def keyProbe(dt: DataType, keyCol: String): Option[Column] =
+      dt match {
         case LongType | IntegerType => Some(col(keyCol).cast("long"))
         case DateType => Some(unix_date(col(keyCol)).cast("long"))
         // TIMESTAMP is INT64 micros in parquet, so the footer zone maps
@@ -2930,83 +2971,98 @@ object SnapshotLog {
         case StringType => Some(col(keyCol))
         case _ => None
       }
-      val rangeCand = probe match {
-        case Some(p) =>
-          val r = source.agg(min(p), max(p)).head()
-          if (r.isNullAt(0)) Seq.empty // empty source: no hits possible
-          else prunePhysical(vPrev,
-            if (dt == StringType)
-              KeyRange.Strings(keyCol, r.getString(0), r.getString(1))
-            else KeyRange.Longs(keyCol, r.getLong(0), r.getLong(1)),
-            keyCol)
+
+    /** The aggregates behind [[SourceFacts]], none of them DISTINCT,
+      * so they can ride the pin's job as observed metrics. */
+    private def factColumns(dt: DataType, keyCol: String): Seq[Column] =
+      Seq(count(lit(1)).as("rows")) ++
+        keyProbe(dt, keyCol).toSeq.flatMap(p =>
+          Seq(min(p).as("lo"), max(p).as("hi"))) ++
+        (if (dt == LongType || dt == StringType)
+          Seq(udaf(new CappedDistinct(BloomProbeMaxKeys), Encoders.STRING)(
+            col(keyCol).cast("string")).as("keys"))
+        else Nil)
+
+    private def factsOf(dt: DataType, m: Map[String, Any]): SourceFacts =
+      SourceFacts(dt, m("rows").asInstanceOf[Long],
+        m.get("lo").filter(_ != null).map(lo => (lo, m("hi"))),
+        m.get("keys").map(_.asInstanceOf[scala.collection.Seq[String]])
+          .filter(_.size <= BloomProbeMaxKeys)
+          .map(ks => if (dt == LongType) ks.map(_.toLong).toSeq else ks.toSeq))
+
+    /** Evaluates a merge or delete source once: pinned behind the
+      * engine's one barrier, whose job also yields the source's key
+      * facts as observed metrics, so no other job reads the source
+      * itself. Every later step reads the pin, so the files a commit
+      * finds hits in and the rows it writes come from the same rows,
+      * even when the source is nondeterministic. */
+    private def pinSource(source: DataFrame,
+        keyCol: String): (DataFrame, SourceFacts) = {
+      val dt = source.schema(keyCol).dataType
+      val obs = Observation()
+      val aggs = factColumns(dt, keyCol)
+      val pinned = source.observe(obs, aggs.head, aggs.tail: _*)
+        .transform(localCheckpoint)
+      (pinned, factsOf(dt, obs.get))
+    }
+
+    /** The live files at `vPrev` that can contain any of the source's
+      * keys: zone-map range pruning by key type (LONG/INT, DATE via
+      * epoch days, string via the truncation-safe string stats; other
+      * types keep everything), then — for bloom-indexed keys — a
+      * membership pass that cuts the range candidates to ~the files
+      * actually containing a key. Everything comes from `facts` and
+      * the manifest, driver-side. */
+    private def mergeCandidates(vPrev: Int, facts: SourceFacts,
+        keyCol: String, live: Seq[String]): Seq[String] = {
+      lastMergeFallback = None
+      val rangeCand = keyProbe(facts.dt, keyCol) match {
+        case Some(_) => facts.range match {
+          case None => Seq.empty // empty source: no hits possible
+          case Some((lo: String, hi: String)) =>
+            prunePhysical(vPrev, KeyRange.Strings(keyCol, lo, hi), keyCol)
+          case Some((lo, hi)) => prunePhysical(vPrev,
+            KeyRange.Longs(keyCol, lo.asInstanceOf[Long],
+              hi.asInstanceOf[Long]), keyCol)
+        }
         case None => // exotic key types (float/binary/nested): the
           // conservative full-candidate scan is still CORRECT, but it
           // silently costs O(live files) per merge — surface it, so a
           // mis-typed key is an observable event instead of a
           // mysterious slowdown (these are all bad merge keys anyway)
-          lastMergeFallback = Some(dt.simpleString)
+          lastMergeFallback = Some(facts.dt.simpleString)
           org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
             s"merge key '$keyCol' has unprunable type " +
-              s"${dt.simpleString}: falling back to a full " +
+              s"${facts.dt.simpleString}: falling back to a full " +
               s"${live.size}-file candidate scan")
           live
       }
       // bloom pass on top of the range pass: membership beats range
-      // exactly when the source's keys are sparse in the range — cap
-      // the probe at a bounded distinct-key collect so a wide merge
-      // never hauls its key set to the driver.
-      dt match {
-        case LongType if bloomCols.contains(keyCol) && rangeCand.nonEmpty =>
-          val ks = source.select(col(keyCol))
-            .where(col(keyCol).isNotNull).distinct()
-            .limit(BloomProbeMaxKeys + 1).collect().map(_.getLong(0))
-          if (ks.length > BloomProbeMaxKeys) rangeCand
-          else bloomSurvivors(rangeCand, keyCol,
-            keyHashes(ks.toSeq).values.toSeq)
-        case StringType if bloomCols.contains(keyCol) && rangeCand.nonEmpty =>
-          val ks = source.select(col(keyCol))
-            .where(col(keyCol).isNotNull).distinct()
-            .limit(BloomProbeMaxKeys + 1).collect().map(_.getString(0))
-          if (ks.length > BloomProbeMaxKeys) rangeCand
-          else bloomSurvivors(rangeCand, keyCol, keyHashesStr(ks.toSeq))
+      // exactly when the source's keys are sparse in the range; the
+      // facts hold the keys only up to the cap, so a wide merge never
+      // hauls its key set to the driver
+      facts.keys match {
+        case Some(ks) if bloomCols.contains(keyCol) && rangeCand.nonEmpty =>
+          bloomSurvivors(rangeCand, keyCol,
+            if (facts.dt == LongType)
+              keyHashes(ks.map(_.asInstanceOf[Long])).values.toSeq
+            else keyHashesStr(ks.map(_.asInstanceOf[String])))
         case _ => rangeCand
       }
     }
 
-    def commitMerge(source0: DataFrame, partCol: String, keyCol0: String,
-        expectedVersion: Int = -1): Int = {
-      val v = casCheck(expectedVersion)
-      checkConstraints(source0)
-      // column mapping: the batch and key arrive LOGICAL; every file,
-      // stat and sidecar speaks PHYSICAL (identity unless renamed)
-      val source = toPhysical(source0, v - 1)
-      val keyCol = physicalAt(v - 1, keyCol0)
-      val live = liveFiles(v - 1)
-      val candidates = Trace.span("merge:candidates")(
-        mergeCandidates(v - 1, source, keyCol, live))
-      lastMergeScan = Some((candidates.size, live.size))
-      val srcKeys = source.select(col(keyCol)).distinct()
-      // driver-side file list: bounded by candidate-file count
-      // (metadata scale), not row count; layout-aware reads so merges
-      // work across partition evolution
-      val hits = Trace.span("merge:hitScan") {
-        if (candidates.isEmpty) Seq.empty[String]
-        else readFilesWithPos(candidates, v - 1)
-          .join(broadcast(srcKeys), Seq(keyCol))
-          .select("__f").distinct().collect().map(_.getString(0)).toSeq
+    /** (__f, __pos, key) of every row of `candidates` at `v` whose key
+      * is one of the pinned `source`'s: an IN filter when the facts
+      * hold the keys, else a broadcast semi join against the pin. */
+    private def hitRows(v: Int, candidates: Seq[String], source: DataFrame,
+        keyCol: String, facts: SourceFacts): DataFrame = {
+      val rows = readFilesWithPos(candidates, v)
+        .select(col("__f"), col("__pos"), col(keyCol))
+      facts.keys match {
+        case Some(ks) => rows.where(col(keyCol).isin(ks: _*))
+        case None => rows.join(broadcast(source.select(col(keyCol))),
+          Seq(keyCol), "left_semi")
       }
-      val survivors = // victims read through their DVs (see
-        // [[readFilesMorAt]] — a raw read would resurrect MOR deletes)
-        if (hits.isEmpty) source.sparkSession.emptyDataFrame
-        else readFilesMorAt(v - 1, hits)
-          .join(broadcast(srcKeys), Seq(keyCol), "left_anti")
-      val rewritten =
-        if (hits.isEmpty) source
-        else survivors.select(source.columns.toIndexedSeq.map(col): _*)
-          .unionByName(source)
-      val added = land(rewritten, partCol, v, "merge")
-      publishRewrite(v, hits, added, Nil, "merge")
-      v
     }
 
     /** CDC batch apply — the full tri-clause MERGE INTO semantics
@@ -3044,7 +3100,11 @@ object SnapshotLog {
       val keys = toPhysical(keys0, v)
       val keyCol = physicalAt(v, keyCol0)
       val live = liveFiles(v)
-      val candidates = mergeCandidates(v, keys, keyCol, live)
+      val dt = keys.schema(keyCol).dataType
+      val aggs = factColumns(dt, keyCol)
+      val r = keys.agg(aggs.head, aggs.tail: _*).head()
+      val candidates = mergeCandidates(v,
+        factsOf(dt, r.getValuesMap[Any](r.schema.fieldNames)), keyCol, live)
       lastMergeScan = Some((candidates.size, live.size))
       if (candidates.isEmpty) asOfMor(v).limit(0)
       else applyMapping(v, readFilesMorAt(v, candidates))
@@ -3091,14 +3151,15 @@ object SnapshotLog {
         keyCol0: String, opCol: String, v: Int,
         extraEntries: Seq[Entry],
         identityCol: Option[String] = None): Int = {
-      // column mapping at the boundary (identity unless renamed);
-      // opCol is transient batch metadata, never stored — no mapping
-      val changes = toPhysical(changes0, v - 1)
+      // one evaluation of the batch (see [[pinSource]]); column
+      // mapping at the boundary (identity unless renamed); opCol is
+      // transient batch metadata, never stored — no mapping
+      val (pinned, facts) = pinSource(changes0, keyCol0)
+      val changes = toPhysical(pinned, v - 1)
       val keyCol = physicalAt(v - 1, keyCol0)
       val live = liveFiles(v - 1)
-      val candidates = mergeCandidates(v - 1, changes, keyCol, live)
+      val candidates = mergeCandidates(v - 1, facts, keyCol, live)
       lastMergeScan = Some((candidates.size, live.size))
-      val srcKeys = changes.select(col(keyCol)).distinct()
       val upserts0 = changes.filter(col(opCol) =!= "D").drop(opCol)
       // identity assignment (see commitApplyChanges doc): NULL-id
       // upsert rows — MERGE INSERTs — are numbered wm+1..wm+n by the
@@ -3128,14 +3189,14 @@ object SnapshotLog {
       checkConstraints(upserts) // tombstones carry no rows INTO the table
       val hits =
         if (candidates.isEmpty) Seq.empty[String]
-        else readFilesWithPos(candidates, v - 1)
-          .join(broadcast(srcKeys), Seq(keyCol))
+        else hitRows(v - 1, candidates, changes, keyCol, facts)
           .select("__f").distinct().collect().map(_.getString(0)).toSeq
       val survivors = // victims read through their DVs: the rewrite
         // retires a file's DV binding, so it must APPLY the deletes
         if (hits.isEmpty) upserts.limit(0)
         else readFilesMorAt(v - 1, hits)
-          .join(broadcast(srcKeys), Seq(keyCol), "left_anti")
+          .join(broadcast(changes.select(col(keyCol))), Seq(keyCol),
+            "left_anti")
       val rewritten = survivors
         .select(upserts.columns.toIndexedSeq.map(col): _*)
         .unionByName(upserts)
@@ -3180,13 +3241,10 @@ object SnapshotLog {
       val paths = dvs.toSeq.sortBy(_._1).map { case (rel, id) =>
         dvPath(rel, id).toString
       }
-      val seg = split(input_file_name(), "/")
       spark.read.textFile(paths: _*)
         .select(
-          concat_ws("/", element_at(seg, -2),
-            regexp_replace(element_at(seg, -1),
-              "\\.\\d+(-[0-9a-f]+)?\\.dv$", ""))
-            .as("__f"),
+          regexp_replace(fileRel(input_file_name()),
+            "\\.\\d+(-[0-9a-f]+)?\\.dv$", "").as("__f"),
           col("value").cast("long").as("__pos"))
     }
 
@@ -3227,8 +3285,9 @@ object SnapshotLog {
       * delete shape that keeps a high-frequency GDPR queue from
       * rewriting the table once per request.
       *
-      * Mechanics: candidate files = the same zone-map + bloom pruning
-      * as [[commitMerge]]; positions come from `_metadata.row_index`
+      * Mechanics: the key set is pinned once ([[pinSource]]);
+      * candidate files = the same zone-map + bloom pruning as
+      * [[commitMerge]]; positions come from `_metadata.row_index`
       * (stable per immutable parquet file); a file's new sidecar is
       * the UNION of its previous positions and this batch's, written
       * executor-side (repartitioned by file), so no position rides
@@ -3236,93 +3295,134 @@ object SnapshotLog {
     def commitDeleteKeysMor(keys0: DataFrame, keyCol0: String,
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
-      val keys = toPhysical(keys0, v - 1) // column mapping at the boundary
+      val (pinned, facts) = pinSource(keys0, keyCol0)
+      val keys = toPhysical(pinned, v - 1) // column mapping at the boundary
       val keyCol = physicalAt(v - 1, keyCol0)
       val live = liveFiles(v - 1)
       val candidates = Trace.span("delkeys:candidates")(
-        mergeCandidates(v - 1, keys, keyCol, live))
+        mergeCandidates(v - 1, facts, keyCol, live))
       lastMergeScan = Some((candidates.size, live.size))
-      if (candidates.isEmpty) { publishSegment(v, Seq.empty); return v }
-      val srcKeys = keys.select(col(keyCol)).distinct()
-      // persisted across the two consumers (affected-file collect +
-      // DV sidecar build): un-cached, each would re-read every
-      // candidate file — at scale the candidate scan IS the commit's
-      // dominant I/O, and the cached relation is O(victim positions),
-      // spilling to disk if large
-      val matched = readFilesWithPos(candidates, v - 1)
-        .select(col("__f"), col("__pos"), col(keyCol))
-        .join(broadcast(srcKeys), Seq(keyCol))
-        .select("__f", "__pos")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // affected file list: bounded by candidate count, driver-side
-        val affected = Trace.span("delkeys:affected")(
-          matched.select("__f").distinct()
-            .collect().map(_.getString(0)).toSeq.sorted)
-        if (affected.isEmpty) { publishSegment(v, Seq.empty); return v }
-        val dvId = Trace.span("delkeys:dvSidecars")(
-          buildDvSidecars(v, matched, affected))
-        publishOrCleanup(v,
-          affected.map(rel => Entry(v, "dv", s"$rel|$dvId")), Nil)
-        v
-      } finally matched.unpersist(false)
+      val dvEntries =
+        if (candidates.isEmpty) Nil
+        else Trace.span("delkeys:dvSidecars")(buildDvSidecars(v,
+          hitRows(v - 1, candidates, keys, keyCol, facts), candidates))
+      if (dvEntries.isEmpty) publishSegment(v, Seq.empty)
+      else publishOrCleanup(v, dvEntries, Nil)
+      v
     }
 
-    /** Write one superseding DV sidecar per `affected` file: `matched`
-      * (__f, __pos) unioned with each file's PRIOR positions (the
-      * newest-wins fold reads exactly one dv per file — one multi-path
-      * scan over all prior sidecars, not a per-file union chain),
-      * written EXECUTOR-SIDE (repartitioned by file) so no position
-      * rides the driver. Returns the writer-unique sidecar id: a
+    /** Write one superseding DV sidecar for each file that `matched`
+      * (__f, __pos) hits: its new positions merged with the positions
+      * of its prior sidecar at v - 1 (the newest-wins fold reads exactly
+      * one dv per file), which the writer task reads itself. Rows are
+      * repartitioned by file and sorted by position, and the job
+      * returns the files it wrote, so no position rides the driver and
+      * the affected-file list needs no job of its own. Returns one dv
+      * entry per affected file, under a writer-unique sidecar id: a
       * racing committer targeting the same version writes under a
       * DIFFERENT name, so the CAS loser's sidecar job leaves an
       * orphan, never bytes under the winner's binding (task retries
       * within ONE job still converge — same id, identical content,
       * delete-then-rename). Shared by the MOR delete and MOR merge. */
     private def buildDvSidecars(v: Int, matched: DataFrame,
-        affected: Seq[String]): String = {
-      val prior = dvFor(v - 1).filter(kv => affected.contains(kv._1))
-      val withPrior =
-        (if (prior.isEmpty) matched
-         else matched.unionByName(dvRelationFor(prior))).distinct()
+        candidates: Seq[String]): Seq[Entry] = {
+      val cand = candidates.toSet
+      val prior = dvFor(v - 1).collect {
+        case (rel, id) if cand(rel) => rel -> dvPath(rel, id).toString
+      }
       val conf = new org.apache.spark.util.SerializableConfiguration(
         hadoopConf)
       val dvRoot = s"$root/dv"
       val dvId = s"$v-${java.util.UUID.randomUUID.toString
         .replace("-", "").take(8)}"
-      withPrior.repartition(col("__f")).sortWithinPartitions("__f", "__pos")
-        .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      val written = matched.select("__f", "__pos")
+        .repartition(col("__f")).sortWithinPartitions("__f", "__pos")
+        .mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
           val pfs = new Path(dvRoot).getFileSystem(conf.value)
+          val done = scala.collection.mutable.ArrayBuffer.empty[String]
           var cur: String = null
           var out: org.apache.hadoop.fs.FSDataOutputStream = null
           var tmp: Path = null
+          var olds: BufferedIterator[Long] = Iterator.empty.buffered
+          var last = -1L
+          def emit(pos: Long): Unit = if (pos != last) {
+            // the sidecar format (and the CDF reader's BitSet) is
+            // Int-indexed; a single parquet file holding > 2^31 rows
+            // must fail loudly at build time, not mis-filter at read
+            require(pos <= Int.MaxValue,
+              s"DV position $pos exceeds Int range for file $cur")
+            out.write(s"$pos\n".getBytes("UTF-8"))
+            last = pos
+          }
           def flush(): Unit = if (cur != null) {
+            olds.foreach(emit)
             out.close()
             val dst = new Path(s"$dvRoot/$cur.$dvId.dv")
             pfs.mkdirs(dst.getParent) // rel carries the part=val subdir
             pfs.delete(dst, false) // retried attempt: identical content
             require(pfs.rename(tmp, dst), s"dv publish failed: $dst")
+            done += cur
           }
           it.foreach { r =>
             val f = r.getString(0)
             if (f != cur) {
-              flush(); cur = f
+              flush(); cur = f; last = -1L
               tmp = new Path(s"$dvRoot/.tmp-${
                 java.util.UUID.randomUUID.toString.take(12)}")
               pfs.mkdirs(tmp.getParent)
               out = pfs.create(tmp, false)
+              olds = prior.get(f).map { p =>
+                val in = scala.io.Source.fromInputStream(
+                  pfs.open(new Path(p)), "UTF-8")
+                try in.getLines().filter(_.nonEmpty).map(_.toLong)
+                  .toArray.sorted
+                finally in.close()
+              }.getOrElse(Array.empty[Long]).iterator.buffered
             }
             val pos = r.getLong(1)
-            // the sidecar format (and the CDF reader's BitSet) is
-            // Int-indexed; a single parquet file holding > 2^31 rows
-            // must fail loudly at build time, not mis-filter at read
-            require(pos <= Int.MaxValue,
-              s"DV position $pos exceeds Int range for file $f")
-            out.write(s"$pos\n".getBytes("UTF-8"))
+            while (olds.hasNext && olds.head < pos) emit(olds.next())
+            emit(pos)
           }
           flush()
+          done.iterator
+        }(org.apache.spark.sql.Encoders.STRING).collect()
+      written.sorted.toSeq.map(rel => Entry(v, "dv", s"$rel|$dvId"))
+    }
+
+    /** SQL MERGE's two refusals (the Delta multiple-match error), in
+      * one aggregate over the pinned source's keys and the `matched`
+      * target rows: a source key on more than one row — or a NULL
+      * key, which the DISTINCT count of the message never counts —
+      * would land twice as adds, and a matched key on more than one
+      * target row would have all of them tombstoned and collapse to
+      * one source row, a silent cardinality change. Source refusals
+      * come first. Never a table scan: `matched` rides the
+      * candidate-pruned join. */
+    private def guardMerge(source: DataFrame, matched: Option[DataFrame],
+        keyCol: String, keyName: String, rows: Long): Unit = {
+      val s = source.select(col(keyCol), lit(1L).as("__s"), lit(0L).as("__t"))
+      val all = matched.fold(s)(m => s.unionByName(
+        m.select(col(keyCol), lit(0L).as("__s"), lit(1L).as("__t"))))
+      val srcDup = col("__s") > 1 || (col("__s") > 0 && col(keyCol).isNull)
+      val bad = all.groupBy(col(keyCol))
+        .agg(sum("__s").as("__s"), sum("__t").as("__t"))
+        .where(srcDup || col("__t") > 1)
+        .orderBy(srcDup.desc).limit(1).collect()
+      bad.headOption.foreach { r =>
+        if (r.getLong(1) > 1 || r.isNullAt(0)) {
+          val distinct = source.agg(countDistinct(col(keyCol))).head()
+            .getLong(0)
+          throw new UnsupportedOperationException(
+            s"MERGE source has duplicate join keys ($rows " +
+              s"rows, $distinct distinct $keyName): SQL MERGE " +
+              "forbids a target row matching multiple source rows — " +
+              "pre-collapse the source to one row per key")
         }
-      dvId
+        throw new UnsupportedOperationException(
+          s"MERGE target has ${r.getLong(2)} rows for matched " +
+            s"key ${r.get(0)}: the MOR upsert would collapse " +
+            "them to one source row — deduplicate the target first")
+      }
     }
 
     /** Merge-on-read MERGE (upsert): [[commitMerge]] rewrites every
@@ -3341,72 +3441,36 @@ object SnapshotLog {
       * DV-based MERGE of production formats — the shape that keeps a
       * high-frequency upsert stream from rewriting the table once per
       * batch. Assumes `keyCol` unique within `source` (as
-      * [[commitMerge]]). */
+      * [[commitMerge]]); `guardUniqueness` refuses a source or matched
+      * target that breaks it ([[guardMerge]]). The source is evaluated
+      * once ([[pinSource]]), and the candidate scan once: the hit rows
+      * are persisted across the guard and the DV build. */
     def commitMergeMor(source0: DataFrame, partCol: String,
         keyCol0: String, expectedVersion: Int = -1,
         guardUniqueness: Boolean = false): Int = {
       val v = casCheck(expectedVersion)
-      checkConstraints(source0)
-      val source = toPhysical(source0, v - 1) // column mapping at the boundary
+      val (pinned, facts) = pinSource(source0, keyCol0)
+      checkConstraints(pinned)
+      val source = toPhysical(pinned, v - 1) // column mapping at the boundary
       val keyCol = physicalAt(v - 1, keyCol0)
-      if (guardUniqueness) {
-        // SQL MERGE semantics (the Delta multiple-match error):
-        // duplicate SOURCE keys would land twice as adds — refuse.
-        // One aggregation over the batch, never the table.
-        val r = source.agg(count(lit(1)),
-          countDistinct(col(keyCol))).head()
-        if (r.getLong(0) != r.getLong(1))
-          throw new UnsupportedOperationException(
-            s"MERGE source has duplicate join keys (${r.getLong(0)} " +
-              s"rows, ${r.getLong(1)} distinct $keyCol0): SQL MERGE " +
-              "forbids a target row matching multiple source rows — " +
-              "pre-collapse the source to one row per key")
-      }
       val live = liveFiles(v - 1)
-      val candidates = mergeCandidates(v - 1, source, keyCol, live)
+      val candidates = mergeCandidates(v - 1, facts, keyCol, live)
       lastMergeScan = Some((candidates.size, live.size))
-      val srcKeys = source.select(col(keyCol)).distinct()
-      // persisted across its consumers (uniqueness guard, affected
-      // collect, DV build) — same candidate-scan-once rationale as
-      // commitDeleteKeysMor; unpersisted before return below
-      val matchedKeyed =
-        if (candidates.isEmpty) null
-        else readFilesWithPos(candidates, v - 1)
-          .select(col("__f"), col("__pos"), col(keyCol))
-          .join(broadcast(srcKeys), Seq(keyCol))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-      if (guardUniqueness && matchedKeyed != null) {
-        // duplicate TARGET rows under a matched key would ALL be
-        // tombstoned and collapse to one source row — a silent
-        // cardinality change. The check rides the candidate-pruned
-        // join, not a table scan.
-        val dup = matchedKeyed.groupBy(col(keyCol)).count()
-          .filter(col("count") > 1).limit(1).collect()
-        if (dup.nonEmpty) throw new UnsupportedOperationException(
-          s"MERGE target has ${dup(0).getLong(1)} rows for matched " +
-            s"key ${dup(0).get(0)}: the MOR upsert would collapse " +
-            "them to one source row — deduplicate the target first")
-      }
       val matched =
-        if (matchedKeyed == null) null
-        else matchedKeyed.select("__f", "__pos")
-      val affected =
-        if (matched == null) Seq.empty[String]
-        else matched.select("__f").distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      // adopt the source batch first (plain adds), then the tombstones
-      val added = land(source, partCol, v, "mergeMor")
-      val dvEntries =
-        if (affected.isEmpty) Seq.empty[Entry]
-        else {
-          val dvId = buildDvSidecars(v, matched, affected)
-          affected.map(rel => Entry(v, "dv", s"$rel|$dvId"))
-        }
-      // a lost race reclaims the adds AND the (writer-unique) sidecars
-      publishRewrite(v, Nil, added, dvEntries, "mergeMor")
-      v
-      } finally { if (matchedKeyed != null) matchedKeyed.unpersist(false) }
+        if (candidates.isEmpty) None
+        else Some(hitRows(v - 1, candidates, source, keyCol, facts)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      try {
+        if (guardUniqueness)
+          guardMerge(source, matched, keyCol, keyCol0, facts.rows)
+        // adopt the source batch first (plain adds), then the tombstones
+        val added = land(source, partCol, v, "mergeMor")
+        val dvEntries =
+          matched.map(buildDvSidecars(v, _, candidates)).getOrElse(Nil)
+        // a lost race reclaims the adds AND the (writer-unique) sidecars
+        publishRewrite(v, Nil, added, dvEntries, "mergeMor")
+        v
+      } finally matched.foreach(_.unpersist(false))
     }
 
     /** Merge-on-read AS-OF: [[asOf]] with the version's active
@@ -3938,4 +4002,27 @@ object SnapshotLog {
     }.toList
     finally in.close()
   }
+}
+
+/** The distinct non-null values of a column while there are at most
+  * `cap` of them. Past that the buffer holds `cap + 1` values and
+  * stops growing, so a result longer than `cap` says "more than `cap`"
+  * in O(cap) memory. */
+private[sources] final class CappedDistinct(cap: Int)
+    extends Aggregator[String, scala.collection.mutable.HashSet[String],
+      Array[String]] {
+  private type Buf = scala.collection.mutable.HashSet[String]
+  def zero: Buf = scala.collection.mutable.HashSet.empty[String]
+  def reduce(b: Buf, a: String): Buf = {
+    if (a != null && b.size <= cap) b += a
+    b
+  }
+  def merge(a: Buf, b: Buf): Buf = {
+    val it = b.iterator
+    while (a.size <= cap && it.hasNext) a += it.next()
+    a
+  }
+  def finish(b: Buf): Array[String] = b.toArray
+  def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
+  def outputEncoder: Encoder[Array[String]] = ExpressionEncoder[Array[String]]()
 }

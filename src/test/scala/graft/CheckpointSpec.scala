@@ -180,7 +180,7 @@ class CheckpointSpec extends SparkSpec {
         val (got, report) = merged("t_durable")
         assert(got == local)
         assert(report.checkpointJobs.exists(
-          _.callSite.startsWith("localCheckpoint at GraftDml.scala")),
+          _.callSite.startsWith("localCheckpoint at SnapshotLog.scala")),
           report.jobs.map(_.callSite).mkString("; "))
         assert(files(dir) > 0, s"the merge wrote no checkpoint file under $dir")
       }

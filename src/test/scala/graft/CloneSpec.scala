@@ -41,6 +41,119 @@ class CloneSpec extends SparkSpec {
     assert(jobs == tables.size, s"$jobs jobs for ${tables.size} tables")
   }
 
+  /** The data files under `dir` by relative path, with their bytes;
+    * hidden and `_` entries are left out, as a parquet read leaves them. */
+  private def tree(dir: java.io.File): Map[String, Seq[Byte]] = {
+    def walk(f: java.io.File, rel: String): Seq[(String, Seq[Byte])] =
+      if (f.getName.startsWith(".") || f.getName.startsWith("_")) Nil
+      else if (f.isDirectory) f.listFiles.toSeq.flatMap(c =>
+        walk(c, if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
+      else Seq(rel -> Files.readAllBytes(f.toPath).toSeq)
+    dir.listFiles.toSeq.flatMap(c => walk(c, c.getName)).toMap
+  }
+
+  private def footerRows(path: String): Long = {
+    import org.apache.spark.sql.graft.ParquetFiles
+    val files = ParquetFiles.dataFiles(spark, path)
+    ParquetFiles.footers(spark.sparkContext.hadoopConfiguration, files)
+      .map(ParquetFiles.rowCount).sum
+  }
+
+  test("a parquet clone copies each source file byte for byte") {
+    val tables = Seq("region.parquet", "nation.parquet", "supplier.parquet")
+    val cfg = freshCfg().copy(tables = tables)
+    val results = ClonePipeline(spark, cfg).run()
+    assert(results.forall(_.status == "cloned"), results.mkString("; "))
+    tables.zip(results).foreach { case (t, r) =>
+      val tgt = new java.io.File(s"${cfg.targetDir}/preprod_$t")
+      val want = Files.readAllBytes(java.nio.file.Paths.get(s"$sf/$t")).toSeq
+      assert(tree(tgt) == Map(t -> want), s"$t: ${tree(tgt).keys}")
+      assert(r.rows == footerRows(s"$sf/$t") && r.rows > 0, r.toString)
+    }
+  }
+
+  test("a partitioned multi-file source keeps its layout and reads row-identical") {
+    import org.apache.spark.sql.functions._
+    val srcDir = Files.createTempDirectory("graft_clone_parts_src_").toString
+    // partition values Spark escapes in directory names (%20 stays a
+    // space on disk, but '%', ':' and '=' are escaped)
+    spark.read.parquet(s"$sf/nation.parquet")
+      .withColumn("grp", element_at(array(lit("a b"), lit("x%y"),
+        lit("t:1"), lit("k=v")), (col("n_nationkey") % 4 + 1).cast("int")))
+      .repartition(3).write.partitionBy("grp").parquet(s"$srcDir/parts")
+    val cfg = freshCfg().copy(sourceDir = srcDir, tables = Seq("parts"))
+    val results = ClonePipeline(spark, cfg).run()
+    assert(results.map(_.status) == Seq("cloned"), results.mkString("; "))
+    val src = new java.io.File(s"$srcDir/parts")
+    val tgt = new java.io.File(s"${cfg.targetDir}/preprod_parts")
+    val srcTree = tree(src)
+    assert(srcTree.size > 4 && srcTree.keys.forall(_.contains("/")),
+      srcTree.keys.mkString(", "))
+    assert(tree(tgt) == srcTree, tree(tgt).keys.mkString(", "))
+    assert(results.head.rows == footerRows(src.getPath))
+    val (a, b) = (spark.read.parquet(src.getPath), spark.read.parquet(tgt.getPath))
+    assert(a.schema == b.schema)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
+  test("a copy that fails inside its job leaves no target; a later run clones") {
+    val srcDir = Files.createTempDirectory("graft_clone_poison_src_").toString
+    spark.read.parquet(s"$sf/nation.parquet").repartition(3)
+      .write.parquet(s"$srcDir/t")
+    val parts = new java.io.File(s"$srcDir/t").listFiles
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(parts.length == 3)
+    assert(parts(1).renameTo(new java.io.File(parts(1).getParent,
+      "part-00001-poison.parquet")))
+    val cfg = freshCfg().copy(sourceDir = srcDir, tables = Seq("t"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[PoisonedLocalFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val failed =
+      try ClonePipeline(spark, cfg).run()
+      finally {
+        conf.unset("fs.file.impl")
+        conf.unset("fs.file.impl.disable.cache")
+      }
+    assert(failed.map(_.status) == Seq("failed") &&
+      failed.head.error.contains("injected"), failed.mkString("; "))
+    val left = new java.io.File(cfg.targetDir).list().toSeq
+    assert(left.isEmpty, s"a failed copy left ${left.mkString(", ")}")
+    val again = ClonePipeline(spark, cfg).run()
+    assert(again.map(_.status) == Seq("cloned"), again.mkString("; "))
+    assert(again.head.rows == spark.read.parquet(s"$srcDir/t").count())
+    assert(tree(new java.io.File(s"${cfg.targetDir}/preprod_t")) ==
+      tree(new java.io.File(s"$srcDir/t")))
+  }
+
+  test("an overwrite backs the target up byte for byte; a failed backup stops the clone") {
+    val cfg = freshCfg(overwrite = true, backup = true)
+      .copy(tables = Seq("region.parquet"))
+    assert(ClonePipeline(spark, cfg).run().forall(_.status == "cloned"))
+    val tgt = new java.io.File(s"${cfg.targetDir}/preprod_region.parquet")
+    val before = tree(tgt)
+    // mark the target, so a backup of it differs from the source file
+    val marker = new java.io.File(tgt, "part-99999-marker.parquet")
+    Files.copy(java.nio.file.Paths.get(s"$sf/nation.parquet"), marker.toPath)
+    val marked = tree(tgt)
+    assert(marked.size == before.size + 1)
+    val second = ClonePipeline(spark, cfg).run()
+    assert(second.forall(r => r.status == "cloned" && r.backedUp),
+      second.mkString("; "))
+    val backups = new java.io.File(cfg.backupDir).listFiles
+      .filter(_.getName.startsWith("preprod_region"))
+    assert(backups.length == 1 && tree(backups.head) == marked)
+    assert(tree(tgt) == before, "the overwrite did not replace the target")
+
+    // a backup that cannot be written stops the clone; the target stays
+    Files.copy(java.nio.file.Paths.get(s"$sf/nation.parquet"), marker.toPath)
+    val blocked = Files.createTempFile("graft_clone_backup_blocked_", "")
+    val third = ClonePipeline(spark,
+      cfg.copy(backupDir = s"$blocked/sub")).run()
+    assert(third.map(_.status) == Seq("failed"), third.mkString("; "))
+    assert(tree(tgt) == marked, "a failed backup let the clone proceed")
+  }
+
   test("verification fails a target with an extra part file or a retyped column") {
     import org.apache.spark.sql.functions.col
     val cfg = freshCfg().copy(tables = Seq("region.parquet"))
@@ -51,7 +164,7 @@ class CloneSpec extends SparkSpec {
     val tgt = new java.io.File(s"${cfg.targetDir}/preprod_region.parquet")
     assert(pipe.verify("region.parquet", src.schema, n).status == "cloned")
 
-    val part = tgt.listFiles.filter(_.getName.startsWith("part-")).head
+    val part = tgt.listFiles.filter(_.getName.endsWith(".parquet")).head
     val extra = new java.io.File(tgt, "part-99999-extra.parquet")
     Files.copy(part.toPath, extra.toPath)
     val withExtra = pipe.verify("region.parquet", src.schema, n)
@@ -464,5 +577,17 @@ class CloneSpec extends SparkSpec {
     assert((row.getLong(0), row.getLong(1), row.getLong(2)) ==
       ((1L, 10L, 7L)),
       s"evolved member served wrong logical view: $row")
+  }
+}
+
+/** A local file system whose reads of a file named `*poison*` fail
+  * inside Spark tasks: a copy job that fails part way. */
+class PoisonedLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (org.apache.spark.TaskContext.get() != null &&
+        f.getName.contains("poison"))
+      throw new java.io.IOException(s"injected read failure: $f")
+    super.open(f, bufferSize)
   }
 }

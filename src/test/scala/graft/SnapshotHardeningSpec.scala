@@ -63,6 +63,58 @@ class SnapshotHardeningSpec extends SparkSpec {
     rm(root)
   }
 
+  test("a merge evaluates a nondeterministic source once: no duplicate keys") {
+    // one key per block of 500, drawn anew by every evaluation of the
+    // source (rand() would not do: its seed is fixed in the plan, so a
+    // re-evaluation repeats its values); a commit that reads the source
+    // twice finds the hits of one draw and writes the rows of another
+    val draw = udf(() => java.util.concurrent.ThreadLocalRandom.current()
+      .nextLong(500)).asNondeterministic()
+    val src = spark.range(0, 40, 1, 4).select(
+      (col("id") * 500 + draw()).as("k"), lit("x").as("part"),
+      lit(-1L).as("v"))
+    val n = 20000L
+    def merged(commit: (SnapshotLog.Table, String) => Unit,
+        read: SnapshotLog.Table => org.apache.spark.sql.DataFrame): Unit = {
+      val root = tmpRoot("smergedraw")
+      val t = new SnapshotLog.Table(spark, root)
+      t.commitAppend(spark.range(0, n, 1, 4)
+        .select(col("id").as("k"), lit("x").as("part"), col("id").as("v")),
+        "part")
+      commit(t, root)
+      val r = read(t).agg(count(lit(1)), countDistinct(col("k")),
+        count(when(col("v") === -1L, 1)),
+        countDistinct(when(col("v") === -1L, col("k")))).head()
+      assert(r.getLong(1) == r.getLong(0), s"duplicate keys: $r")
+      // every source key replaced one existing row: none lost or added
+      assert(r.getLong(0) == n, s"row count: $r")
+      assert(r.getLong(2) == 40 && r.getLong(3) == 40, s"source rows: $r")
+      rm(root)
+    }
+    merged((t, _) => t.commitMerge(src, "part", "k"), t => t.asOf(t.version))
+    merged((t, _) => t.commitMergeMor(src, "part", "k"),
+      t => t.asOfMor(t.version))
+  }
+
+  test("fileRel equals the split-and-join of a file path's last two segments") {
+    import spark.implicits._
+    val paths = Seq(
+      "file:/tmp/t/data/part=a%20b/v3-part-00000-x.c000.snappy.parquet",
+      "file:///tmp/t/data/part=k%3Dv/v1-part-00001.parquet",
+      "file:/tmp/t/dv/part=t%3A1/v2-part-00000.parquet.4-0a1b2c3d.dv",
+      "file:/tmp/t/data/v7-part-00002-unpartitioned.parquet")
+    val df = paths.toDF("p")
+    val seg = split(col("p"), "/")
+    val got = df.select(SnapshotLog.fileRel(col("p")),
+      concat_ws("/", element_at(seg, -2), element_at(seg, -1))).collect()
+    got.foreach(r => assert(r.getString(0) == r.getString(1), r.toString))
+    assert(got.map(_.getString(0)).toSeq == Seq(
+      "part=a%20b/v3-part-00000-x.c000.snappy.parquet",
+      "part=k%3Dv/v1-part-00001.parquet",
+      "part=t%3A1/v2-part-00000.parquet.4-0a1b2c3d.dv",
+      "data/v7-part-00002-unpartitioned.parquet"))
+  }
+
   test("bloom probe cuts merge candidates below the range-stat set") {
     import spark.implicits._
     val root = tmpRoot("smergebloom")

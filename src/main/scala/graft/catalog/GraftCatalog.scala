@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownF
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.{KeyRange, SnapshotLog}
@@ -39,8 +39,8 @@ import graft.sources.{KeyRange, SnapshotLog}
   * zone-map/bloom pruning, MOR deletes) was Scala-API-only.
   *
   * Design, Spark-first:
-  *  - READS delegate to the existing manifest-pruned scan
-  *    ([[SnapshotLog.Table.scanAsOf]], which plans through
+  *  - READS delegate to the table's manifest-pruned read
+  *    ([[SnapshotLog.Table.asOfMor]], which plans through
   *    [[org.apache.spark.sql.graft.SnapshotFileIndex]]): the
   *    ScanBuilder accepts pushed filters + required columns and
   *    replays them INSIDE that DataFrame, so a SQL `WHERE day = x`
@@ -251,8 +251,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"partition column $partCol is not in the schema")
     require(schema(partCol).dataType ==
       org.apache.spark.sql.types.StringType,
-      s"partition column $partCol must be STRING: the manifest read " +
-        "path surfaces dir-encoded partition values as strings " +
+      s"partition column $partCol must be STRING: partition values " +
+        "are path segments, and every read declares the column STRING " +
         "(cast in queries for typed comparisons)")
     identityCol.foreach(ic => require(!ic.equalsIgnoreCase(partCol),
       "the partition column cannot be the identity column"))
@@ -609,10 +609,10 @@ private[catalog] final class GraftSqlTable(tableName: String,
 
   /** Live schema when the table has commits (reflects column mapping
     * and additive evolution AT the read version — exactly what
-    * scanAsOf serves); declared schema before the first commit.
+    * [[GraftScan]] serves); declared schema before the first commit.
     *
     * Field ORDER is pinned to the declared (CREATE TABLE) order:
-    * scanAsOf surfaces the partition column LAST (parquet partition
+    * the read surfaces the partition column LAST (parquet partition
     * discovery appends it), and a table whose column order flips
     * after the first commit breaks every positional INSERT (found by
     * CatalogSqlSpec — the second insert cast 'a' into a BIGINT).
@@ -622,7 +622,7 @@ private[catalog] final class GraftSqlTable(tableName: String,
   override def schema(): StructType = {
     val live =
       if (readVersion > 0 && log.liveFiles(readVersion).nonEmpty)
-        Some(log.scanAsOf(readVersion).schema)
+        Some(log.asOf(readVersion, partTypes = partTypes).schema)
       else None
     (live, meta) match {
       case (None, Some(m)) => m.schema
@@ -650,6 +650,12 @@ private[catalog] final class GraftSqlTable(tableName: String,
         })
     }
   }
+
+  /** The declared partition column, handed to every read as a
+    * user-specified schema is handed to `spark.read`: a STRING column
+    * whose values look numeric still reads as STRING. */
+  private[catalog] def partTypes: StructType =
+    StructType(meta.map(m => StructField(m.partCol, StringType)).toSeq)
 
   override def partitioning(): Array[Transform] =
     meta.map(m => Array(Expressions.identity(m.partCol)))
@@ -872,7 +878,7 @@ private[catalog] object GraftScan {
 }
 
 /** The scan: builds the SAME DataFrame the Scala API would
-  * (`scanAsOf(readVersion)` + pushed filters + required projection)
+  * (`asOfMor(readVersion)` + pushed filters + required projection)
   * and hands its execution to Spark through [[V1Scan]].
   * `needConversion = false` → rows flow as InternalRow straight from
   * the parquet reader (no per-row external-Row conversion). */
@@ -887,16 +893,15 @@ private[catalog] final class GraftScan(table: GraftSqlTable,
 
   private def prunedFrame(spark: SparkSession): DataFrame = {
     val v = table.readVersion
-    // scanAsOfMor, NOT scanAsOf: the raw pruned read does not apply
-    // active deletion vectors, and SQL serving MOR-deleted rows back
-    // is a silent correctness hole (caught by the round-13 interplay
-    // probe). With no active DVs scanAsOfMor IS scanAsOf — zero
-    // overhead on the common path.
+    // asOfMor, NOT asOf: the raw read does not apply active deletion
+    // vectors, and SQL serving MOR-deleted rows back is a silent
+    // correctness hole (caught by the round-13 interplay probe). With
+    // no active DVs asOfMor IS asOf — zero overhead on the common path.
     val base =
       if (v == 0 || table.log.liveFiles(v).isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], table.schema())
-      else table.log.scanAsOfMor(v)
+      else table.log.asOfMor(v, table.partTypes)
     val filtered = pushed.flatMap(GraftScan.toColumn)
       .foldLeft(base)(_.filter(_))
     // project to the pruned schema IN ITS ORDER (the V1 relation's

@@ -612,7 +612,9 @@ final case class GraftMergeCondCommand(root: String, partCol: String,
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{broadcast, count, countDistinct, lit, when}
+    import org.apache.spark.sql.functions.{broadcast, count, countDistinct, lit,
+      raise_error, when}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val t = GraftSqlTable.handleFor(spark, root)
     val src0 = org.apache.spark.sql.GraftBridge.ofRows(spark, source)
       .transform(localCheckpoint) // guards and commit must see the same batch
@@ -694,7 +696,8 @@ final case class GraftMergeCondCommand(root: String, partCol: String,
       if (nmbsClauses.isEmpty || tgtEmpty) None
       else {
         val conds = nmbsClauses.map(_.condition)
-        val full0 = t.scanAsOfMor(t.version)
+        val full0 = t.asOfMor(t.version, StructType(Seq(
+          StructField(partCol, StringType))))
         val full =
           if (conds.exists(_.isEmpty)) full0
           else full0.filter(conds.flatten.map(cc).reduce(_ || _))
@@ -713,15 +716,22 @@ final case class GraftMergeCondCommand(root: String, partCol: String,
       case Some(c) => c
       case None => return Seq.empty // no applicable clauses: no-op
     }
-    val batch = changes.transform(localCheckpoint)
-    val nullPart = batch.filter(col("__op") =!= "D" &&
-      col(partCol).isNull).limit(1).count()
-    if (nullPart > 0) throw new IllegalArgumentException(
-      s"MERGE produced a row with NULL partition column $partCol — " +
-        "a NULL partition value has no directory; fix the INSERT/SET " +
-        "expressions")
-    t.commitApplyChanges(batch, partCol, keyCol,
+    // the NULL-partition refusal rides the commit's one evaluation of
+    // the batch (its pin), which runs before any file is written
+    val nullPart = s"MERGE produced a row with NULL partition column " +
+      s"$partCol — a NULL partition value has no directory; fix the " +
+      "INSERT/SET expressions"
+    val batch = changes.withColumn(partCol,
+      when(col("__op") =!= "D" && col(partCol).isNull,
+        raise_error(lit(nullPart))).otherwise(col(partCol)))
+    try t.commitApplyChanges(batch, partCol, keyCol,
       identityCol = identityCol)
+    catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(c =>
+            c.getMessage != null && c.getMessage.contains(nullPart)) =>
+        throw new IllegalArgumentException(nullPart)
+    }
     Seq.empty
   }
 }

@@ -514,10 +514,9 @@ object FileIndex {
          |GROUP BY o_orderstatus
          |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
       val t = idxStagedTable(spark, dir)
-      val pruned = t.asOfPoint(t.version, "o_orderkey", LookupKeys)
-        .getOrElse(sys.error("lookup keys must land in some file"))
-      pruned
-        .filter(col("o_orderkey").isin(LookupKeys: _*)) // rows, not files
+      // the IN-list prunes files by bloom at plan time, and rows
+      t.asOf(t.version)
+        .filter(col("o_orderkey").isin(LookupKeys: _*))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("price_cents")).as("sum_cents"),
@@ -547,14 +546,11 @@ object FileIndex {
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
       val t = idxStagedTable(spark, dir)
-      val (lo, hi) = (Wave8.days("1997-06-01"), Wave8.days("1998-06-01"))
-      val pruned = t.asOfWhere(t.version,
-        KeyRange.Dates("o_date", lo.toInt, hi.toInt))
-        .getOrElse(sys.error("range must intersect the table"))
-      pruned
+      // the band prunes files by zone map at plan time, and rows
+      t.asOf(t.version)
         .filter(col("o_date").between(
           lit("1997-06-01").cast("date"),
-          lit("1998-06-01").cast("date"))) // rows, not files
+          lit("1998-06-01").cast("date")))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("price_cents")).as("sum_cents"),
@@ -591,11 +587,9 @@ object FileIndex {
         |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
       val t = clusterStagedTable(spark, dir)
       val (lo, hi) = (10000000L, 20000000L) // the $100k..$200k band
-      val pruned = t.asOfWhere(t.version,
-        KeyRange.Longs("price_cents", lo, hi))
-        .getOrElse(sys.error("band must intersect the table"))
-      pruned
-        .filter(col("price_cents").between(lo, hi)) // rows, not files
+      // the band prunes files by zone map at plan time, and rows
+      t.asOf(t.version)
+        .filter(col("price_cents").between(lo, hi))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("price_cents")).as("sum_cents"),
@@ -692,7 +686,7 @@ object FileIndex {
       require(t.pointLookupFiles(v, "order_id", Seq(11L, 97L, 123L))
         .size < live, "bloom prune must survive the rename")
       t.resetScanPrune()
-      t.scanAsOf(v).filter(col("order_id").isin(11L, 97L, 123L))
+      t.asOf(v).filter(col("order_id").isin(11L, 97L, 123L))
         .transform(localCheckpoint)
       val Some((scanned, _)) = t.lastScanPrune
       require(scanned < live,
@@ -848,11 +842,11 @@ object FileIndex {
       out
     },
 
-    // ---- AMBIENT file pruning (round 11): the same skipping the
-    //      dedicated helpers prove (q_snapshot_skipping_date = zone
-    //      maps via asOfWhere, q_snapshot_point_lookup = blooms via
-    //      asOfPoint), but with NO helper in sight — plain
-    //      `scanAsOf(v).filter(...)` DataFrames whose predicates reach
+    // ---- AMBIENT file pruning (round 11): the same skipping
+    //      q_snapshot_skipping_date (zone maps) and
+    //      q_snapshot_point_lookup (blooms) rely on, here made
+    //      correctness conditions — plain `asOf(v).filter(...)`
+    //      DataFrames whose predicates reach
     //      the manifest at PLAN time through the snapshot FileIndex
     //      (`listFiles` consults zone maps + bloom sidecars; stock
     //      parquet vectorized scan + PushedFilters below it). Two
@@ -898,10 +892,10 @@ object FileIndex {
           max(col("o_orderkey")).as("max_key"))
         .select(lit(probe).as("probe"), col("o_orderstatus"),
           col("n_rows"), col("sum_cents"), col("min_key"), col("max_key"))
-      val band = agg(t.scanAsOf(v).filter(
+      val band = agg(t.asOf(v).filter(
         col("o_date").between(lit("1997-06-01").cast("date"),
           lit("1998-06-01").cast("date"))), "band")
-      val point = agg(t.scanAsOf(v).filter(
+      val point = agg(t.asOf(v).filter(
         col("o_orderkey").isin(LookupKeys: _*)), "point")
       // prune proofs: ONE planning+execution pass per probe — the
       // eager localCheckpoint both triggers listFiles (recording the
@@ -1070,7 +1064,7 @@ object FileIndex {
         "z-order must make the price dimension prune")
       require(t.pruneFiles(v, dayBand).size < live,
         "z-order must make the day dimension prune")
-      val rect = t.scanAsOf(v)
+      val rect = t.asOf(v)
         .filter(col("price_cents").between(loP, hiP) &&
           col("o_date_days").between(loD, hiD))
         .groupBy("o_orderstatus")
@@ -1160,7 +1154,7 @@ object FileIndex {
       require(pruned.nonEmpty && pruned.size < live.size,
         s"INT64 probe must prune the INT32-era files " +
           s"(${pruned.size} of ${live.size} survived)")
-      t.scanAsOf(4)
+      t.asOf(4)
         .groupBy("part")
         .agg(count(lit(1)).as("n_rows"), sum("k").as("sum_k"),
           sum("cents").as("sum_cents"))
@@ -1192,7 +1186,7 @@ object FileIndex {
         |GROUP BY part
         |ORDER BY part""".stripMargin) { (spark, dir) =>
       val t = evoStagedTable(spark, dir)
-      t.scanAsOf(4)
+      t.asOf(4)
         .groupBy("part")
         .agg(count(lit(1)).as("n_rows"),
           sum("score").as("sum_score"),

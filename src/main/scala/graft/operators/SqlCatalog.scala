@@ -10,7 +10,7 @@ import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
   * `ALTER TABLE … RENAME COLUMN`) must produce bit-identical results
   * to the Scala storage API and to DuckDB recomputing from the raw
   * parquet. CatalogSqlSpec carries the plan-parity burden (same files
-  * pruned via SQL as via `scanAsOf`); these queries carry the
+  * pruned via SQL as via `asOf`); these queries carry the
   * hash-checked END RESULT through the driver's DuckDB gate.
   *
   * Cf. reference `clone_databases.sh:870-1027` — the reference

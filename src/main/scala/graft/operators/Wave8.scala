@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Checkpoint.localCheckpoint
 import graft.Tables
-import graft.sources.{KeyRange, SnapshotLog}
+import graft.sources.SnapshotLog
 
 /** Round-7 additions, second wave: snapshot versioning. A commit log
   * over immutable parquet files ([[graft.sources.SnapshotLog]]) gives
@@ -380,11 +380,9 @@ object Wave8 {
          |ORDER BY o_orderstatus""".stripMargin) { (spark, dir) =>
       val t = skipStagedTable(spark, dir)
       val (lo, hi) = (days("1997-06-01"), days("1998-06-01"))
-      val pruned = t.asOfWhere(t.version,
-        KeyRange.Longs("o_date_days", lo, hi))
-        .getOrElse(sys.error("range must intersect the table"))
-      pruned
-        .filter(col("o_date_days").between(lo, hi)) // rows, not files
+      // the filter prunes files at plan time and filters rows
+      t.asOf(t.version)
+        .filter(col("o_date_days").between(lo, hi))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("price_cents")).as("sum_cents"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions
 
 /** A bounded key region of a snapshot table — the one predicate the
   * region-scoped operations of [[SnapshotLog.Table]] take
-  * (`pruneFiles`, `asOfWhere`, `commitDeleteRange`,
+  * (`pruneFiles`, `commitDeleteRange`,
   * `commitReplaceWhere`, `commitUpdate`), in place of one method per
   * key type. Each case carries the two halves those operations need:
   *  - its MANIFEST prune ([[prune]]): the live files that can hold a

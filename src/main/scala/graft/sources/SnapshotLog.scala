@@ -9,7 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders,
   Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, DecimalType,
-  IntegerType, LongType, StringType, TimestampNTZType, TimestampType}
+  IntegerType, LongType, StringType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Minimal snapshot-versioned parquet table: an append-only commit log
   * over immutable data files, giving AS-OF reads (time travel) and a
@@ -95,11 +96,11 @@ object SnapshotLog {
     * AT MOST ONCE per state: the live-file fold per version, the zone
     * maps, null counts and manifest sizes. This is what makes the
     * manifest read path scale-credible — without it, every
-    * `asOf`/`scanAsOf`/CDF poll re-listed the log directory and
-    * re-parsed checkpoint + tail text on the driver (kilobytes at test
-    * scale; hundreds of MB per QUERY at 10⁵–10⁶ live files), and
-    * `scanRelations` alone folded the same entries five times (live
-    * set + four stat maps). States are value-keyed by the exact
+    * `asOf`/CDF poll re-listed the log directory and re-parsed
+    * checkpoint + tail text on the driver (kilobytes at test scale;
+    * hundreds of MB per QUERY at 10⁵–10⁶ live files), and one pruned
+    * read folded the same entries five times (live set + four stat
+    * maps). States are value-keyed by the exact
     * (checkpoint file, tail segment files) listing, which changes with
     * every commit — so a stale state can never be served: a new
     * segment or checkpoint produces a new key, and immutable published
@@ -930,7 +931,7 @@ object SnapshotLog {
       // collision/existence check against the CURRENT logical schema:
       // one footer + the layout's partition columns (conservative —
       // additive evolution may hide a column in a non-head file, the
-      // same one-footer contract scanAsOf uses)
+      // same one-footer contract asOf uses)
       val live = liveFiles(v - 1)
       if (live.nonEmpty) {
         val phys = footerSchemaOf(live.head).fieldNames.toSet ++
@@ -1083,10 +1084,11 @@ object SnapshotLog {
       * Files with no stats at all (foreign imports) conservatively
       * count as carrying: a wrong "carries" surfaces NULLs (honest),
       * a wrong "absent" would overwrite real NULLs with the default. */
-    private def carriesCol(rel: String, c: String): Boolean = {
-      val zl = zoneMaps.get(rel)
-      val zs = zoneMapsStr.get(rel)
-      val zn = nullCounts.get(rel)
+    private def carriesCol(fold: FoldState, rel: String, c: String)
+        : Boolean = {
+      val zl = fold.zoneMaps.get(rel)
+      val zs = fold.zoneMapsStr.get(rel)
+      val zn = fold.nullCounts.get(rel)
       if (zl.isEmpty && zs.isEmpty && zn.isEmpty) true
       else zl.exists(_.contains(c)) || zs.exists(_.contains(c)) ||
         zn.exists(_.contains(c))
@@ -1137,19 +1139,6 @@ object SnapshotLog {
       }
     }
 
-    /** Raw multi-file read under the widened declared schema of `at`
-      * — the helper the point-lookup probes ride ([[asOfPoint]],
-      * [[asOfWhere]]): a candidate set that straddles a widening
-      * holds INT32 and INT64 footers for the same column, and schema
-      * INFERENCE over such a set picks an arbitrary footer and dies
-      * downcasting the wide files. Key-probe contract (no DEFAULT
-      * fill — these return candidate FILES' rows for a key test, not
-      * the logical table view; [[asOf]]/[[scanAsOf]] are that). */
-    private def readRawAt(files: Seq[String], at: Int): DataFrame = {
-      relationOf(files, widenSchema(footerSchemaOf(files.head),
-        widenings(at)))
-    }
-
     /** Reads: project PHYSICAL columns to the logical view of `v` —
       * dropped columns vanish, renamed ones surface under their
       * logical-at-v name. Identity (and zero plan overhead) for
@@ -1196,35 +1185,57 @@ object SnapshotLog {
         .map(lg => col(lg).as(m.getOrElse(lg, lg))): _*)
     }
 
-    /** Time-travel read: exactly the files live at `v`, with the
-      * partition column recovered through `basePath`. Pass
-      * `mergeSchema = true` when commits evolved the schema (columns
-      * added over time): the read unions all file schemas and fills
-      * pre-evolution rows with nulls — the standard
-      * additive-schema-evolution contract. Off by default because
-      * schema union costs a footer pass per distinct schema.
+    /** Time-travel read: the rows of the files live at `v`, under the
+      * logical column names of `v`, planned from the manifest with no
+      * listing (see [[readAt]]). Any reader predicate prunes files at
+      * PLAN time: `asOf(v).filter(col("day") === x)`, a join key's
+      * pushed-down equality or an IN-list on a bloom-indexed column
+      * reach the [[org.apache.spark.sql.graft.SnapshotFileIndex]] of
+      * each layout, which keeps only the files whose zone maps and
+      * bloom sidecars can hold a match. Raw: active deletion vectors
+      * are NOT applied ([[asOfMor]] is the MOR read).
+      *
+      * Pass `mergeSchema = true` when commits evolved the schema
+      * (columns added over time): each layout then reads under the
+      * merge of its files' footer schemas, and rows of files without a
+      * column read NULL — the additive-evolution contract. Off by
+      * default: the merge reads every file's (cached) footer.
       *
       * PARTITION EVOLUTION: commits may use different partition
       * columns over the table's life (the Iceberg contract — old
       * files keep the old layout, new commits write the new one,
       * nothing rewrites). Each file's layout is its `col=` path
-      * prefix, so the read groups live files by layout, reads each
-      * group with its own partition discovery, and unions by name
-      * with missing columns nulled. A row's dir-encoded partition
-      * value comes from ITS layout; writers that want both columns
-      * queryable on every row carry the non-partition one as a data
-      * column (partitionBy removes only the column it shards by). */
-    def asOf(v: Int, mergeSchema: Boolean = false): DataFrame = {
-      val files = liveFiles(v)
+      * prefix; each layout is read with its own partition columns and
+      * the layouts union by name with missing columns nulled. A row's
+      * dir-encoded partition value comes from ITS layout; writers that
+      * want both columns queryable on every row carry the
+      * non-partition one as a data column (partitionBy removes only
+      * the column it shards by).
+      *
+      * Partition columns are typed as `spark.read` types them; columns
+      * named in `partTypes` (logical names) take the declared type, as
+      * a user-specified schema gives them — the SQL catalog declares
+      * its STRING partition column this way. */
+    def asOf(v: Int, mergeSchema: Boolean = false,
+        partTypes: StructType = new StructType()): DataFrame = {
+      val fold = foldState()
+      val files = fold.liveFiles(v)
       require(files.nonEmpty, s"version $v of $root has no live files")
-      applyMapping(v, readFiles(files, mergeSchema, v))
+      applyMapping(v, readAt(files, v, fold, recordScanPrune,
+        physicalTypes(v, partTypes), mergeSchema = mergeSchema))
     }
 
+    /** `partTypes` under the physical names of `v`: partition
+      * directories keep the name a column was first written as. */
+    private def physicalTypes(v: Int, partTypes: StructType): StructType =
+      StructType(partTypes.map(f => f.copy(name = physicalAt(v, f.name))))
+
     /** Read-path prune telemetry: (files scanned, files live)
-      * accumulated across the layout groups of [[scanAsOf]] plans —
-      * the read twin of [[lastMergeScan]]. Planning may re-list on a
-      * second action over the same frame; call [[resetScanPrune]]
-      * before the measured action. */
+      * accumulated across the layout groups of [[asOf]] and
+      * [[asOfMor]] plans — the read twin of [[lastMergeScan]]. Commit
+      * reads do not count. Planning may re-list on a second action
+      * over the same frame; call [[resetScanPrune]] before the
+      * measured action. */
     @volatile private[graft] var lastScanPrune: Option[(Int, Int)] = None
     private[graft] def resetScanPrune(): Unit = lastScanPrune = None
     private def recordScanPrune(survivors: Int, total: Int): Unit =
@@ -1256,108 +1267,6 @@ object SnapshotLog {
       else files
     }
 
-    /** AS-OF read whose file set is resolved by a manifest-backed
-      * [[org.apache.spark.sql.graft.SnapshotFileIndex]]: ANY reader
-      * predicate — `scanAsOf(v).filter(col("day") === x)`, a join
-      * key's pushed-down equality, an IN-list on a bloom-indexed id —
-      * prunes files at PLAN time through the zone maps and bloom
-      * sidecars the write path records, with no helper calls in query
-      * code. This is [[asOf]]'s contract ("no directory listing, no
-      * dead-file scan") extended to arbitrary predicates: [[asOf]]
-      * hands Spark the exact live set; scanAsOf hands Spark the live
-      * set MINUS every file the manifest proves irrelevant. Partition
-      * evolution is handled as in [[asOf]]: one relation per layout,
-      * unioned by name (Catalyst pushes filters through the union into
-      * each relation's listFiles). Raw-read semantics like [[asOf]]
-      * (active DVs are NOT applied — [[asOfMor]] is the MOR read). */
-    def scanAsOf(v: Int): DataFrame = scanRelations(v, withPos = false)
-
-    /** [[scanAsOf]] at a tagged / wall-clock-resolved version — the
-      * pruned-scan twins of [[asOfTag]] and [[asOfTimestamp]]. NOTE:
-      * partition columns surface as STRING on the pruned path (the
-      * manifest stores the `col=value` path segment verbatim; cast in
-      * the query if a typed comparison is needed). */
-    def scanAsOfTag(name: String): DataFrame =
-      scanAsOf(tags.getOrElse(name,
-        throw new IllegalArgumentException(s"no tag $name")))
-    def scanAsOfTimestamp(tsMillis: Long): DataFrame =
-      scanAsOf(versionAsOfTimestamp(tsMillis))
-
-    /** [[scanAsOfMor]]'s raw building block and [[scanAsOf]]'s body:
-      * one pruned relation per layout, optionally tagged with the
-      * (__f, __pos) identity the DV anti-join keys on — materialized
-      * PER RELATION before the union, as in [[readFilesWithPos]]. */
-    private def scanRelations(v: Int, withPos: Boolean): DataFrame = {
-      val files = liveFiles(v)
-      require(files.nonEmpty, s"version $v of $root has no live files")
-      val zl = zoneMaps
-      val zs = zoneMapsStr
-      val zn = nullCounts
-      val sizes = fileSizes
-      // identity columns from _metadata (DETERMINISTIC, unlike
-      // input_file_name()): a projection carrying a nondeterministic
-      // expression blocks every filter from pushing below it, which
-      // would disconnect the pruned scan from the very predicates the
-      // FileIndex prunes on
-      // schema evolution on the pruned path: widened declared types
-      // (parquet upcasts narrow footers in-reader; zone probes keep
-      // long-stat semantics) and DEFAULT-era grouping (files whose
-      // footers predate a defaulted column project the literal —
-      // same contract as readGroups, one relation per era)
-      val w = widenings(v)
-      val dfl = columnDefaults(v)
-      files.groupBy(f => (layoutKey(f),
-          dfl.map(d => carriesCol(f, d._1))))
-        .toSeq.sortBy { case ((lk, era), _) => (lk, era.mkString) }
-        .map { case ((lk, era), rels) =>
-          val partCols = if (lk.isEmpty) Array.empty[String]
-            else lk.split('/')
-          val partSchema = org.apache.spark.sql.types.StructType(
-            partCols.map(org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.StringType, nullable = true)))
-          // file-column schema from ONE footer (no basePath, so the
-          // partition column stays out); mergeSchema-false contract
-          // as asOf: later files missing a column null-fill in the
-          // parquet reader, extra columns are ignored
-          val dataSchema = widenSchema(footerSchemaOf(rels.head), w)
-          val index = new org.apache.spark.sql.graft.SnapshotFileIndex(
-            spark, dataDir, rels, partSchema, zl, zs, zn, sizes,
-            bloomCols.toSet, bloomSurvivorsAny, recordScanPrune)
-          val rel0 = org.apache.spark.sql.graft.SparkInternals
-            .parquetRelation(spark, index, partSchema, dataSchema)
-          val rel = dfl.zip(era).collect { case (d, false) => d }
-            .foldLeft(rel0) { case (df, (c, t, dft, _)) =>
-              df.withColumn(c, lit(dft).cast(t))
-            }
-          if (!withPos) rel
-          else rel
-            .withColumn("__f", fileRel(col("_metadata.file_path")))
-            .withColumn("__pos", col("_metadata.row_index"))
-        }
-        .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-        // logical view last: the rename is a Project ABOVE the pruned
-        // relations, and Catalyst rewrites pushed filters through the
-        // alias — so predicates reach the FileIndex under the PHYSICAL
-        // name the zone maps and bloom sidecars are keyed by
-        .transform(applyMapping(v, _))
-    }
-
-    /** Merge-on-read twin of [[scanAsOf]]: the pruned scan with the
-      * version's active deletion vectors applied, so a table carrying
-      * live DVs gets ambient file skipping WITHOUT resurrecting
-      * MOR-deleted rows ([[scanAsOf]], like [[asOf]], reads raw).
-      * With no active DVs this IS [[scanAsOf]] — zero overhead. The
-      * anti-join's (__f, __pos) key rides `_metadata.row_index` from
-      * the pruned relation itself, so file pruning still happens at
-      * plan time; the DV relation is delta-scale and broadcasts. */
-    def scanAsOfMor(v: Int): DataFrame = dvRelation(v) match {
-      case None => scanAsOf(v)
-      case Some(dv) =>
-        scanRelations(v, withPos = true)
-          .join(dv, Seq("__f", "__pos"), "left_anti")
-          .drop("__f", "__pos")
-    }
-
     /** A file's LAYOUT key: the sequence of partition-column names in
       * its directory path (`status=F/f.parquet` → "status",
       * `a=1/b=2/f.parquet` → "a/b", an unpartitioned `f.parquet` →
@@ -1381,72 +1290,76 @@ object SnapshotLog {
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(seg)
 
-    /** Layout-aware multi-file read (see [[asOf]] on evolution). */
-    /** The shared direct-read core: group `rels` by (partition
-      * layout, DEFAULT-era), read each group under the WIDENED
-      * declared schema of `at`, fill defaulted columns the group's
-      * footers predate, and union by name.
+    /** The one read of snapshot data files: `rels` at version `at`,
+      * planned from the manifest `fold` (file sizes, stats) and cached
+      * footers, so building it starts no Spark job. Files are grouped
+      * by (partition layout, DEFAULT era), and each group is one
+      * parquet relation over a
+      * [[org.apache.spark.sql.graft.SnapshotFileIndex]], which prunes
+      * by the query's partition and data filters at plan time and
+      * reports each plan's (files scanned, files given) to
+      * `recordPrune`. Per group:
       *
-      *  - Widening: the declared schema is the group's head footer
-      *    with [[widenings]] applied — Spark 4's parquet readers
-      *    upcast narrow footers transparently, so pre- and
-      *    post-widening files read in ONE relation (schema inference
-      *    over a mixed group would pick an arbitrary footer and die
-      *    downcasting the wide files). Under mergeSchema the widening
-      *    is a cast above the merged read instead (a declared schema
-      *    would defeat the merge).
+      *  - Widening: the data schema is the head file's footer schema
+      *    (with `mergeSchema`, the merge of every file's, in path
+      *    order) with [[widenings]] applied — Spark 4's parquet
+      *    readers upcast narrow footers, so pre- and post-widening
+      *    files read in ONE relation (schema inference over a mixed
+      *    group would pick an arbitrary footer and die downcasting the
+      *    wide files).
+      *  - Partition columns: typed by Spark's partition parser, with
+      *    `partTypes` (physical names) declared.
       *  - Defaults: a file that predates a defaulted column (per the
       *    manifest stats — see [[carriesCol]]) lacks the column in
       *    its footer entirely, so the whole group projects the
       *    default literal; carrying groups read it physically and
       *    real NULLs are never overwritten. Era is part of the group
       *    key because one layout can hold files on both sides.
-      * `decorate` runs per group BEFORE the union (file-source
-      * pseudo-columns like `_metadata` do not survive a union). */
-    private def readGroups(rels: Seq[String], at: Int,
-        mergeSchema: Boolean,
-        decorate: DataFrame => DataFrame): DataFrame = {
+      *  - `withPos` adds (__f, __pos) = (file rel, row position) from
+      *    the deterministic `_metadata` columns — `input_file_name()`
+      *    is not deterministic, and a projection carrying it stops
+      *    every filter from reaching the scan. `_metadata` does not
+      *    survive a union, so this happens per group.
+      *
+      * Groups union by name. Names stay PHYSICAL: [[asOf]] and
+      * [[asOfMor]] apply [[applyMapping]] last (its rename Project
+      * sits above the relations, and Catalyst rewrites pushed filters
+      * through the alias to the physical names the stats are keyed
+      * by); commits read their victims raw. */
+    private def readAt(rels: Seq[String], at: Int, fold: FoldState,
+        recordPrune: (Int, Int) => Unit = (_, _) => (),
+        partTypes: StructType = new StructType(),
+        mergeSchema: Boolean = false,
+        withPos: Boolean = false): DataFrame = {
       val w = widenings(at)
       val dfl = columnDefaults(at)
-      rels.groupBy(r => (layoutKey(r),
-          dfl.map(d => carriesCol(r, d._1))))
+      def footerSchema(rel: String): StructType = widenSchema(
+        ParquetFiles.schema(spark, ParquetFiles.statusOf(fs, dataBase, rel,
+          fold.fileSizes.get(rel))), w)
+      rels.groupBy(r => (layoutKey(r), dfl.map(d => carriesCol(fold, r, d._1))))
         .toSeq.sortBy { case ((lk, era), _) => (lk, era.mkString) }
-        .map { case ((_, era), fs) =>
-          val base =
-            if (!mergeSchema)
-              // declared schema from one CACHED footer: bit-identical
-              // to what inference would pick (same head file, same
-              // footer decoder) without inference's per-read Spark
-              // job, over manifest statuses without a listing job
-              relationOf(fs, widenSchema(footerSchemaOf(fs.head), w))
-            else {
-              val merged = spark.read.option("basePath", dataDir)
-                .option("mergeSchema", "true")
-                .parquet(fs.map(p => s"$dataDir/$p"): _*)
-              merged.select(merged.columns.toIndexedSeq.map(c =>
-                w.get(c).map(t => col(c).cast(t).as(c))
-                  .getOrElse(col(c))): _*)
-            }
+        .map { case ((_, era), group) =>
+          val dataSchema =
+            if (mergeSchema) group.sorted.map(footerSchema)
+              .reduce(ParquetFiles.merge)
+            else footerSchema(group.head)
+          val index = new org.apache.spark.sql.graft.SnapshotFileIndex(
+            spark, dataDir, group, partTypes, fold.zoneMaps,
+            fold.zoneMapsStr, fold.nullCounts, fold.fileSizes,
+            bloomCols.toSet, bloomSurvivorsAny, recordPrune)
+          val rel = org.apache.spark.sql.graft.SparkInternals
+            .parquetRelation(spark, index, index.partitionSchema, dataSchema)
+          val tagged =
+            if (!withPos) rel
+            else rel
+              .withColumn("__f", fileRel(col("_metadata.file_path")))
+              .withColumn("__pos", col("_metadata.row_index"))
           dfl.zip(era).collect { case (d, false) => d }
-            .foldLeft(decorate(base)) { case (df, (c, t, dft, _)) =>
+            .foldLeft(tagged) { case (df, (c, t, dft, _)) =>
               df.withColumn(c, lit(dft).cast(t))
             }
         }
         .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    }
-
-    private[graft] def readFiles(rels: Seq[String],
-        mergeSchema: Boolean, at: Int): DataFrame =
-      readGroups(rels, at, mergeSchema, identity)
-
-    /** [[readFiles]] with (__f, __pos) = (file rel, row position)
-      * materialized PER LAYOUT GROUP before the union — `_metadata`
-      * is a file-source pseudo-column and does not survive a union. */
-    private[graft] def readFilesWithPos(rels: Seq[String],
-        at: Int): DataFrame = {
-      readGroups(rels, at, mergeSchema = false, df => df
-        .withColumn("__f", fileRel(input_file_name()))
-        .withColumn("__pos", col("_metadata.row_index")))
     }
 
     /** Resolve a wall-clock instant to the last version published at
@@ -1540,11 +1453,11 @@ object SnapshotLog {
       * physical names, and an auditor (or the publish-time constraint
       * check) speaks the table's current names. */
     def stagedRead(branch: String): DataFrame = {
-      val files = stagedEntries(branch).filter(_.action == "add")
-        .map(e => s"$dataDir/${e.path}")
+      val staged = new FoldState(stagedEntries(branch).toVector)
+      val files = staged.liveFiles(0)
       require(files.nonEmpty, s"staged branch $branch has no files")
-      applyMapping(version,
-        spark.read.option("basePath", dataDir).parquet(files: _*))
+      val v = version
+      applyMapping(v, readAt(files, v, staged))
     }
 
     /** PUBLISH step: turn the staged batch into a real commit — its
@@ -1721,16 +1634,13 @@ object SnapshotLog {
         : org.apache.spark.sql.types.StructType =
       ParquetFiles.schema(spark, statusesOf(Seq(rel)).head)
 
-    /** A parquet relation over data files with no listing job:
-      * statuses from [[statusesOf]], partition columns discovered
-      * under `dataDir` with inferred types, as
-      * `spark.read.option("basePath", dataDir).parquet(files)` reads
-      * them — which lists every file, and above 32 paths does it in a
-      * Spark job. */
-    private def relationOf(rels: Seq[String],
-        dataSchema: org.apache.spark.sql.types.StructType): DataFrame =
-      ParquetFiles.relation(spark, statusesOf(rels), Some(dataDir),
-        dataSchema)
+    /** Tasks for a sidecar writer over `files` files: one per file up
+      * to the session's shuffle partitions. The count is explicit
+      * because AQE coalesces a `repartition(col)` of these few small
+      * rows into ONE partition, whose task would then write every
+      * sidecar in series; AQE keeps an explicit count. */
+    private def sidecarTasks(files: Int): Int =
+      math.max(1, math.min(files, spark.sessionState.conf.numShufflePartitions))
 
     /** Build one bloom sidecar per (adopted file, indexed column) in a
       * SINGLE distributed pass per column: hash → k positions → 64-bit
@@ -1756,7 +1666,7 @@ object SnapshotLog {
             ParquetFiles.footer(hadoopConf, st)))
           rel -> (((n * BloomBitsPerRow + 63) / 64) * 64)
       }.toMap
-      val rel = fileRel(input_file_name())
+      val rel = fileRel(col("_metadata.file_path"))
       // file -> m as a broadcast join, not a literal map expression: a
       // thousand-file commit must not inflate the plan itself
       import spark.implicits._
@@ -1788,7 +1698,8 @@ object SnapshotLog {
               col("__p").bitwiseAND(lit(63L)).cast("int")).as("__b"))
           .groupBy("__f", "__m", "__w")
           .agg(call_function("bit_or", col("__b")).as("__bits"))
-        words.repartition(col("__f")).sortWithinPartitions("__f", "__w")
+        words.repartition(sidecarTasks(added.size), col("__f"))
+          .sortWithinPartitions("__f", "__w")
           .foreachPartition {
             (it: Iterator[org.apache.spark.sql.Row]) =>
               val pfs = new Path(idxRoot)
@@ -1879,16 +1790,6 @@ object SnapshotLog {
         } catch { case scala.util.control.NonFatal(_) => true }
       }
 
-    /** [[asOf]] restricted to bloom-surviving files for
-      * `col IN (keys)`. The row-level filter must still be applied
-      * downstream; None when no file can match. */
-    def asOfPoint(v: Int, c: String, keys: Seq[Long]):
-        Option[DataFrame] = {
-      val files = pointLookupFiles(v, c, keys)
-      if (files.isEmpty) None
-      else Some(readRawAt(files, v))
-    }
-
     /** Delete every bloom and deletion-vector sidecar of a reclaimed
       * data file — sidecars die with their data bytes. */
     private def dropSidecars(rel: String): Unit =
@@ -1968,17 +1869,6 @@ object SnapshotLog {
         : Seq[String] = {
       val fold = foldState()
       range.prune(fold.liveFiles(v), ph, fold)
-    }
-
-    /** [[asOf]] restricted to the files [[pruneFiles]] keeps for
-      * `range`. The row-level filter must still be applied downstream
-      * (the prune bounds files, not rows); returns None when no file
-      * can match (the empty relation needs a schema the manifest
-      * doesn't carry). */
-    def asOfWhere(v: Int, range: KeyRange): Option[DataFrame] = {
-      val files = pruneFiles(v, range)
-      if (files.isEmpty) None
-      else Some(readRawAt(files, v))
     }
 
     /** Bound of chars kept for string zone-map bounds: enough to
@@ -3056,7 +2946,7 @@ object SnapshotLog {
       * hold the keys, else a broadcast semi join against the pin. */
     private def hitRows(v: Int, candidates: Seq[String], source: DataFrame,
         keyCol: String, facts: SourceFacts): DataFrame = {
-      val rows = readFilesWithPos(candidates, v)
+      val rows = readAt(candidates, v, foldState(), withPos = true)
         .select(col("__f"), col("__pos"), col(keyCol))
       facts.keys match {
         case Some(ks) => rows.where(col(keyCol).isin(ks: _*))
@@ -3233,17 +3123,17 @@ object SnapshotLog {
       * or read over hundreds of DV'd files must not build a
       * hundreds-arm union plan). The data-file rel is recoverable from
       * the sidecar's own path (dv/<part=val>/<file>.<id>.dv): last two
-      * segments, id suffix stripped. input_file_name() is URI-shaped,
-      * so never string-compare it against raw paths — segment
-      * extraction is the one transform both representations agree
-      * on. */
+      * segments, id suffix stripped. `_metadata.file_path` is
+      * URI-shaped, so never string-compare it against raw paths —
+      * segment extraction is the one transform both representations
+      * agree on. */
     private def dvRelationFor(dvs: Map[String, String]): DataFrame = {
       val paths = dvs.toSeq.sortBy(_._1).map { case (rel, id) =>
         dvPath(rel, id).toString
       }
-      spark.read.textFile(paths: _*)
+      spark.read.text(paths: _*)
         .select(
-          regexp_replace(fileRel(input_file_name()),
+          regexp_replace(fileRel(col("_metadata.file_path")),
             "\\.\\d+(-[0-9a-f]+)?\\.dv$", "").as("__f"),
           col("value").cast("long").as("__pos"))
     }
@@ -3254,21 +3144,24 @@ object SnapshotLog {
       if (dvs.isEmpty) None else Some(dvRelationFor(dvs))
     }
 
-    /** [[readFiles]] with the deletion vectors active at `v` APPLIED
-      * for exactly `rels` — the mandatory victim-read of every rewrite
-      * path (merge, CDC apply, range/partition delete, compact,
-      * cluster, materialize). The dvFor fold retires a file's DV on
+    /** The raw read of `rels` at `v` ([[readAt]]) with the deletion
+      * vectors active at `v` APPLIED for exactly those files — the
+      * mandatory victim-read of every rewrite path (merge, CDC apply,
+      * range/partition delete, compact, cluster, materialize). Not
+      * counted in [[lastScanPrune]]. The dvFor fold retires a file's DV on
       * its `remove` entry, so a rewrite that read its victims raw
       * would copy MOR-deleted rows into the new file and then silently
       * retire the only record of their deletion — resurrecting them
       * for every reader AND double-counting them in the change feed.
       * Production formats apply DVs in every rewrite (Delta OPTIMIZE /
       * MERGE, Iceberg rewrites) for exactly this reason. */
-    private[graft] def readFilesMorAt(v: Int, rels: Seq[String],
-        mergeSchema: Boolean = false): DataFrame = {
-      val dvs = dvFor(v).filter { case (rel, _) => rels.contains(rel) }
-      if (dvs.isEmpty) readFiles(rels, mergeSchema, v)
-      else readFilesWithPos(rels, v)
+    private[graft] def readFilesMorAt(v: Int, rels: Seq[String])
+        : DataFrame = {
+      val fold = foldState()
+      val keep = rels.toSet
+      val dvs = fold.dvFor(v).filter { case (rel, _) => keep(rel) }
+      if (dvs.isEmpty) readAt(rels, v, fold)
+      else readAt(rels, v, fold, withPos = true)
         .join(dvRelationFor(dvs), Seq("__f", "__pos"), "left_anti")
         .drop("__f", "__pos")
     }
@@ -3336,7 +3229,8 @@ object SnapshotLog {
       val dvId = s"$v-${java.util.UUID.randomUUID.toString
         .replace("-", "").take(8)}"
       val written = matched.select("__f", "__pos")
-        .repartition(col("__f")).sortWithinPartitions("__f", "__pos")
+        .repartition(sidecarTasks(candidates.size), col("__f"))
+        .sortWithinPartitions("__f", "__pos")
         .mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
           val pfs = new Path(dvRoot).getFileSystem(conf.value)
           val done = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -3475,17 +3369,22 @@ object SnapshotLog {
 
     /** Merge-on-read AS-OF: [[asOf]] with the version's active
       * deletion vectors applied — an anti-join on (file, position)
-      * against the delta-scale DV relation. With no active DVs this
-      * IS [[asOf]] (zero overhead). The join key is synthetic and
-      * collision-free, so the anti-join is exact; Spark plans it as a
-      * broadcast when the DV side is small (the common case — DVs are
-      * deferred rewrites, compaction keeps them bounded). */
-    def asOfMor(v: Int): DataFrame = dvRelation(v) match {
-      case None => asOf(v)
+      * against the delta-scale DV relation, so a table carrying live
+      * DVs keeps plan-time file pruning WITHOUT resurrecting
+      * MOR-deleted rows. With no active DVs this IS [[asOf]] (zero
+      * overhead). The join key is synthetic and collision-free, so the
+      * anti-join is exact; Spark plans it as a broadcast when the DV
+      * side is small (the common case — DVs are deferred rewrites,
+      * compaction keeps them bounded). */
+    def asOfMor(v: Int, partTypes: StructType = new StructType())
+        : DataFrame = dvRelation(v) match {
+      case None => asOf(v, partTypes = partTypes)
       case Some(dv) =>
-        val files = liveFiles(v)
+        val fold = foldState()
+        val files = fold.liveFiles(v)
         require(files.nonEmpty, s"version $v of $root has no live files")
-        applyMapping(v, readFilesWithPos(files, v)
+        applyMapping(v, readAt(files, v, fold, recordScanPrune,
+          physicalTypes(v, partTypes), withPos = true)
           .join(dv, Seq("__f", "__pos"), "left_anti")
           .drop("__f", "__pos"))
     }

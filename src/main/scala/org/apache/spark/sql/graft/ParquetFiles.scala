@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{
   ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.util.ThreadUtils
 
@@ -104,6 +105,12 @@ object ParquetFiles {
       footer: ParquetMetadata): StructType =
     nullable(ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+
+  /** `a` with `b`'s fields merged in, as parquet schema merging
+    * (`mergeSchema`) merges the footer schemas it reads: `a`'s fields
+    * first, then the ones only `b` has. */
+  def merge(a: StructType, b: StructType): StructType =
+    a.merge(b, SQLConf.get.caseSensitiveAnalysis)
 
   /** `StructType.asNullable` (private to Spark): nested slots too. */
   private def nullable(s: StructType): StructType = {

@@ -7,9 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
   BoundReference, EqualNullSafe, EqualTo, Expression, GreaterThan,
   GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal,
   Predicate}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.{FileIndex,
-  PartitionDirectory}
+  GraftPartitioning, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,6 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * matching files — every unsupported predicate shape, missing stat,
   * or unparseable sidecar degrades to "keep", never to "drop".
   *
+  * @param declaredPartitions partition columns whose type is declared
+  *   (as a user-specified schema declares them to `spark.read`); the
+  *   others are inferred from the directory values.
   * @param bloomProbe (files, col, point keys) => files whose sidecar
   *   admits any key; identity when the column carries no bloom index.
   *   A closure so the sidecar format stays private to the table.
@@ -47,7 +49,7 @@ final class SnapshotFileIndex(
     spark: SparkSession,
     dataDir: String,
     files: Seq[String],
-    override val partitionSchema: StructType,
+    declaredPartitions: StructType,
     zoneL: Map[String, Map[String, (Long, Long)]],
     zoneS: Map[String, Map[String, (String, String)]],
     zoneN: Map[String, Map[String, (Long, Long)]],
@@ -83,28 +85,29 @@ final class SnapshotFileIndex(
 
   private lazy val base = fs.makeQualified(new Path(dataDir))
 
-  /** Each file's partition values in `partitionSchema` order, parsed
-    * from its own `col=value` path segments (files are grouped by
-    * layout before the index is built, so the segments align).
-    * Segments are UNESCAPED with the same rules Spark's partitioned
-    * writer escapes them with (`%`, `:`, `/`, `=`, … travel as %XX in
-    * the path): partition FILTERS compare against the logical value,
-    * and `listFiles` must apply them exactly — an escaped comparison
-    * would silently drop every partition whose value needed escaping
-    * and surface `%3A`-style strings as column values, diverging from
-    * the discovery-based asOf read. */
-  private lazy val partValues: Map[String, Array[Any]] = files.map { rel =>
-    val segs = rel.split('/').dropRight(1)
-    val vals: Array[Any] = partitionSchema.fields.map { f =>
-      segs.collectFirst {
-        case s if s.startsWith(f.name + "=") =>
-          UTF8String.fromString(
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(s.substring(f.name.length + 1)))
-      }.orNull
-    }
-    rel -> vals
-  }.toMap
+  /** The directory of data file `rel` relative to the data dir. */
+  private def dirOf(rel: String): String =
+    rel.substring(0, math.max(0, rel.lastIndexOf('/')))
+
+  /** Partition columns and each directory's values, from Spark's own
+    * partition parser ([[GraftPartitioning]]) with `basePath` = the
+    * data dir: a `spark.read.option("basePath", …)` read of the same
+    * files sees the same columns, types and unescaped values (`%`,
+    * `:`, `=`, … travel as %XX in the path). Files are grouped by
+    * layout before the index is built, so every directory names the
+    * same columns. Partition filters compare against these values,
+    * and `listFiles` must apply them exactly. */
+  private lazy val partitions: (StructType, Map[String, InternalRow]) = {
+    val dirs = files.map(dirOf).distinct
+    val paths = dirs.map(d => if (d.isEmpty) base else new Path(base, d))
+    val spec = GraftPartitioning.parse(spark, paths, base, declaredPartitions)
+    val byPath = spec.partitions.map(p => p.path -> p.values).toMap
+    (spec.partitionColumns, dirs.zip(paths).map { case (d, p) =>
+      d -> byPath.getOrElse(p, InternalRow.empty)
+    }.toMap)
+  }
+
+  override def partitionSchema: StructType = partitions._1
 
   /** Literal widened into the INT64 zone-map domain of `dt` — the
     * exact widenings the write path records (DATE as epoch days,
@@ -258,22 +261,17 @@ final class SnapshotFileIndex(
       p.initialize(0)
       p
     }
-    val partSurvivors = files.filter { f =>
-      partPred.forall(_.eval(new GenericInternalRow(partValues(f))))
-    }
+    val partSurvivors = files.filter(f =>
+      partPred.forall(_.eval(partitions._2(dirOf(f)))))
     // data-filter skipping: each conjunct narrows independently
     // (conjunction = sequential passes); unsupported conjuncts are
     // identity, so the result is always a superset of matching files
     val survivors = dataFilters.map(prunePass)
       .foldLeft(partSurvivors)((fs, pass) => pass(fs))
     recordPrune(survivors.size, files.size)
-    survivors.groupBy(f => partValues(f).toSeq).toSeq
-      .sortBy(_._2.head)
-      .map { case (vals, fsOfPart) =>
-        PartitionDirectory(
-          new GenericInternalRow(vals.toArray),
-          fsOfPart.sorted.map(statusOf).toArray)
-      }
+    survivors.groupBy(dirOf).toSeq.sortBy(_._1).map { case (d, fsOfDir) =>
+      PartitionDirectory(partitions._2(d), fsOfDir.sorted.map(statusOf).toArray)
+    }
   }
 
   override def inputFiles: Array[String] =

@@ -39,7 +39,7 @@ class CatalogSqlSpec extends SparkSpec {
     val sqlRows = spark.sql(
       "SELECT k, part, v FROM gsql.ev VERSION AS OF 2 ORDER BY k")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val apiRows = api.scanAsOf(2).select("k", "part", "v").orderBy("k")
+    val apiRows = api.asOf(2).select("k", "part", "v").orderBy("k")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(sqlRows.toSeq == apiRows.toSeq)
     // TIMESTAMP AS OF (micros) resolves through publish timestamps
@@ -65,7 +65,7 @@ class CatalogSqlSpec extends SparkSpec {
 
     // API path: predicate k = 102 prunes to commit 2's file
     api.resetScanPrune()
-    val apiRows = api.scanAsOf(3).filter(col("k") === 102L)
+    val apiRows = api.asOf(3).filter(col("k") === 102L)
       .select("v").collect().map(_.getLong(0)).toSeq
     val apiPrune = api.lastScanPrune
       .getOrElse(sys.error("API scan recorded no prune"))
@@ -368,6 +368,87 @@ class CatalogSqlSpec extends SparkSpec {
       org.apache.spark.sql.SparkSession.setDefaultSession(old)
       org.apache.spark.sql.SparkSession.setActiveSession(old)
     }
+  }
+
+  test("a conditional MERGE evaluates its change batch once and " +
+    "refuses a NULL partition before writing") {
+    val old = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val es = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .withExtensions(new GraftExtensions().apply(_))
+      .getOrCreate()
+    try {
+      val wh = java.nio.file.Files
+        .createTempDirectory("graft_sqlmq_").toString
+      es.conf.set("spark.sql.catalog.gq", "graft.catalog.GraftCatalog")
+      es.conf.set("spark.sql.catalog.gq.warehouse", wh)
+      es.sql("CREATE TABLE gq.t (k BIGINT, part STRING, v BIGINT) " +
+        "PARTITIONED BY (part)")
+      es.sql("INSERT INTO gq.t SELECT id, CAST(id % 4 AS STRING), id " +
+        "FROM range(1000)")
+      es.range(500, 1500).selectExpr("id AS k",
+        "CAST(id % 4 AS STRING) AS part", "id * 2 AS v")
+        .createOrReplaceTempView("qsrc")
+      // the source pin and the commit's pin of the change batch: the
+      // command no longer pins the batch a second time
+      val (_, report) = org.apache.spark.sql.graft.Trace(es)(es.sql(
+        "MERGE INTO gq.t USING qsrc ON t.k = qsrc.k " +
+          "WHEN MATCHED AND qsrc.v > 0 THEN UPDATE SET v = qsrc.v " +
+          "WHEN NOT MATCHED THEN INSERT (k, part, v) " +
+          "VALUES (qsrc.k, qsrc.part, qsrc.v)"))
+      assert(report.checkpointJobs.size == 2,
+        s"barrier jobs: ${report.checkpointJobs.map(_.callSite)}")
+      val want = (0L until 500L).sum + (500L until 1500L).map(_ * 2).sum
+      val got = es.sql("SELECT count(*), sum(v) FROM gq.t").head()
+      assert(got.getLong(0) == 1500 && got.getLong(1) == want, s"$got")
+
+      // an INSERT that yields a NULL partition: refused with the table
+      // and its data directory untouched
+      def dataFiles(): Long = {
+        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(wh, "t"))
+        try s.filter(java.nio.file.Files.isRegularFile(_)).count()
+        finally s.close()
+      }
+      val v0 = new SnapshotLog.Table(es, s"$wh/t").version
+      val files0 = dataFiles()
+      es.range(5000, 5001).selectExpr("id AS k", "id AS v")
+        .createOrReplaceTempView("nsrc")
+      val e = intercept[IllegalArgumentException](es.sql(
+        "MERGE INTO gq.t USING nsrc ON t.k = nsrc.k " +
+          "WHEN MATCHED AND nsrc.v > 0 THEN UPDATE SET v = nsrc.v " +
+          "WHEN NOT MATCHED THEN INSERT (k, part, v) " +
+          "VALUES (nsrc.k, NULL, nsrc.v)"))
+      assert(e.getMessage.contains("NULL partition column part"),
+        s"wrong failure: ${e.getMessage.take(300)}")
+      assert(new SnapshotLog.Table(es, s"$wh/t").version == v0)
+      assert(dataFiles() == files0, "the refused MERGE wrote files")
+      rm(wh)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(old)
+      org.apache.spark.sql.SparkSession.setActiveSession(old)
+    }
+  }
+
+  test("a STRING partition column whose values look numeric reads as " +
+    "STRING and prunes") {
+    val wh = freshWarehouse()
+    spark.sql("CREATE TABLE gsql.np (k BIGINT, part STRING, v BIGINT) " +
+      "PARTITIONED BY (part)")
+    spark.sql("INSERT INTO gsql.np VALUES (1, '1', 10), (2, '2', 20), " +
+      "(3, '01', 30)")
+    assert(spark.table("gsql.np").schema("part").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(spark.sql("SELECT part FROM gsql.np ORDER BY k").collect()
+      .map(_.getString(0)).toSeq == Seq("1", "2", "01"))
+    val h = graft.catalog.GraftSqlTable.handleFor(spark, s"$wh/np")
+    h.resetScanPrune()
+    assert(spark.sql("SELECT k FROM gsql.np WHERE part = '1'").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L))
+    assert(h.lastScanPrune == Some((1, 3)), s"${h.lastScanPrune}")
+    rm(wh)
   }
 
   test("SQL UPDATE routes to the pruned COW range update " +
@@ -708,7 +789,7 @@ class CatalogSqlSpec extends SparkSpec {
       "CDF did not serve the streamed epochs")
     // zone maps / stats ride the adopted files: a point read prunes
     api.resetScanPrune()
-    assert(api.scanAsOf(api.version).filter(col("k") === 3L)
+    assert(api.asOf(api.version).filter(col("k") === 3L)
       .select("v").collect().map(_.getLong(0)).toSeq == Seq(30L))
     assert(api.lastScanPrune.exists(p => p._1 < p._2),
       s"streamed files carry no prunable stats: ${api.lastScanPrune}")

@@ -38,10 +38,6 @@ class EvolutionSpec extends SparkSpec {
     val df = t.asOf(4)
     assert(df.schema("k").dataType == LongType)
     assert(df.select(sum("k")).head().getLong(0) == 5_000_000_010L)
-    // pruned path agrees
-    assert(t.scanAsOf(4).schema("k").dataType == LongType)
-    assert(t.scanAsOf(4).select(sum("k")).head().getLong(0) ==
-      5_000_000_010L)
     // time travel BELOW the widening still reads (narrow footers)
     assert(t.asOf(2).select(sum("k")).head().getLong(0) == 10L)
 
@@ -150,8 +146,8 @@ class EvolutionSpec extends SparkSpec {
     assert(rows == Map(1 -> Some(7L), 2 -> Some(7L), 3 -> Some(55L),
       4 -> None, 5 -> Some(7L)),
       s"default semantics broken: $rows")
-    // the pruned path agrees, including a filter ON the default
-    assert(t.scanAsOf(4).filter(col("score") === 7L).count() == 3)
+    // a filter ON the default agrees
+    assert(t.asOf(4).filter(col("score") === 7L).count() == 3)
     // time travel below the default: the column simply is not there
     assert(!t.asOf(1).columns.contains("score"))
     rm(root)
@@ -237,7 +233,7 @@ class EvolutionSpec extends SparkSpec {
     // batch read). CONTRACT for the defaulted column: the feed serves
     // rows AS WRITTEN at their version — pre-default inserts carry
     // NULL score (the column did not exist at v1), it is the READ
-    // views (asOf/scanAsOf) that apply the initial-default.
+    // views (asOf/asOfMor) that apply the initial-default.
     val feed = spark.read.format("graft.sources.SnapshotCdfSource")
       .option("path", root).option("partCol", "part")
       .option("schema.ddl", "k LONG, v LONG, score LONG")

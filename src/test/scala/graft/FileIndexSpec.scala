@@ -601,13 +601,8 @@ class FileIndexSpec extends SparkSpec {
         s"manifest fsize for $rel: ${sizes.get(rel)} != $phys")
     }
 
-    // 1. unfiltered parity: same rows as asOf, nothing pruned
-    t.resetScanPrune()
-    assert(t.scanAsOf(v).select("k", "day", "part")
-      .collect().map(_.toSeq).toSet == full)
-
     // 2. date range: a PLAIN filter prunes to band 2's files
-    val band = t.scanAsOf(v).filter(col("day") >= lit(d(8)) &&
+    val band = t.asOf(v).filter(col("day") >= lit(d(8)) &&
       col("day") <= lit(d(10))).select("k", "day", "part")
     t.resetScanPrune()
     val bandRows = band.collect().map(_.toSeq).toSet
@@ -619,7 +614,7 @@ class FileIndexSpec extends SparkSpec {
 
     // 3. point lookup on the bloom-indexed key: range stats keep
     //    everything (uniform keys), the bloom prunes below live
-    val pt = t.scanAsOf(v).filter(col("k") === 42L)
+    val pt = t.asOf(v).filter(col("k") === 42L)
     t.resetScanPrune()
     assert(pt.count() == 1)
     val Some((s2, l2)) = t.lastScanPrune
@@ -627,31 +622,31 @@ class FileIndexSpec extends SparkSpec {
 
     // 4. partition filter: exact (Spark trusts listFiles and drops
     //    the predicate from the residual — extra files = wrong ROWS)
-    val px = t.scanAsOf(v).filter(col("part") === "x")
+    val px = t.asOf(v).filter(col("part") === "x")
     assert(px.collect().map(_.getAs[Long]("k")).forall(_ % 2 == 0))
     assert(px.count() == full.count(_(2) == "x"))
 
     // 5. unsupported predicate shapes degrade to keep-all, not wrong
-    assert(t.scanAsOf(v).filter(col("k") % 7 === 0).count() ==
+    assert(t.asOf(v).filter(col("k") % 7 === 0).count() ==
       full.count(_(0).asInstanceOf[Long] % 7 == 0))
 
     // 6. IN-list routes through range + bloom and stays exact
-    assert(t.scanAsOf(v).filter(col("k").isin(3L, 42L, 8888L))
+    assert(t.asOf(v).filter(col("k").isin(3L, 42L, 8888L))
       .count() == 2)
 
     // 7. tag / timestamp addressing resolves to the same pruned scan
     t.commitTagVersion("ga", v)
-    assert(t.scanAsOfTag("ga").count() == 90)
-    assert(t.scanAsOfTimestamp(t.publishTimestamp(v)).count() == 90)
+    assert(t.asOfTag("ga").count() == 90)
+    assert(t.asOfTimestamp(t.publishTimestamp(v)).count() == 90)
 
     // 8. adversarial shapes stay conservative AND correct: a cast on
     //    the attribute (no bare AttributeReference to match), an OR
     //    (one non-conjunct), and a negation
-    assert(t.scanAsOfTag("ga").filter(col("k").cast("int") === 42)
+    assert(t.asOfTag("ga").filter(col("k").cast("int") === 42)
       .count() == 1)
-    assert(t.scanAsOfTag("ga").filter(col("k") === 43L ||
+    assert(t.asOfTag("ga").filter(col("k") === 43L ||
       col("day") === lit(d(1))).count() == 31) // 43 is in band 1
-    assert(t.scanAsOfTag("ga").filter(!(col("k") < 45L)).count() == 45)
+    assert(t.asOfTag("ga").filter(!(col("k") < 45L)).count() == 45)
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
   }
@@ -807,15 +802,15 @@ class FileIndexSpec extends SparkSpec {
     }
     t.commitDeleteKeysMor(Seq(42L, 43L).toDF("k"), "k")
     val v = t.version
-    // raw pruned scan (like asOf) still sees the tombstoned rows;
-    // the MOR twin must not — and must equal the unpruned MOR read
-    assert(t.scanAsOf(v).filter(col("k").isin(42L, 43L)).count() == 2)
-    assert(t.scanAsOfMor(v).filter(col("k").isin(42L, 43L)).count() == 0)
-    assert(t.scanAsOfMor(v).select("k").collect().map(_.getLong(0)).toSet
-      == t.asOfMor(v).select("k").collect().map(_.getLong(0)).toSet)
+    // the raw read still sees the tombstoned rows; the MOR read must
+    // not — and must lose exactly them
+    assert(t.asOf(v).filter(col("k").isin(42L, 43L)).count() == 2)
+    assert(t.asOfMor(v).filter(col("k").isin(42L, 43L)).count() == 0)
+    assert(t.asOfMor(v).select("k").collect().map(_.getLong(0)).toSet
+      == (0L until 90L).toSet -- Set(42L, 43L))
     // and the pruning is still ambient through the anti-join
     // (band 1 holds keys k % 3 == 1 — 30 keys, minus tombstoned 43)
-    val probe = t.scanAsOfMor(v).filter(col("band") === 1L)
+    val probe = t.asOfMor(v).filter(col("band") === 1L)
     t.resetScanPrune()
     assert(probe.count() == 29)
     val Some((s, l)) = t.lastScanPrune
@@ -854,8 +849,8 @@ class FileIndexSpec extends SparkSpec {
     assert(pa < live, s"z-order did not make dim a prune: $pa/$live")
     assert(pb < live, s"z-order did not make dim b prune: $pb/$live")
     // ... and the ambient path composes: a rectangle query through
-    // scanAsOf opens fewer files than live
-    val rect = t.scanAsOf(v).filter(
+    // asOf opens fewer files than live
+    val rect = t.asOf(v).filter(
       col("a").between(10L, 15L) && col("b").between(10L, 15L))
     t.resetScanPrune()
     assert(rect.count() == 36)
@@ -958,20 +953,20 @@ class FileIndexSpec extends SparkSpec {
       s"every file must carry a label null stat: $nc")
     // IS NOT NULL drops the all-null file (Spark injects this predicate
     // under every pushed filter, so the skip is ambient)
-    val notNull = t.scanAsOf(v).filter(col("label").isNotNull)
+    val notNull = t.asOf(v).filter(col("label").isNotNull)
     t.resetScanPrune()
     assert(notNull.count() == 30)
     val Some((s1, l1)) = t.lastScanPrune
     assert(s1 == 2 && l1 == 3, s"IS NOT NULL kept $s1 of $l1")
     // IS NULL drops the fully-populated file
-    val isNull = t.scanAsOf(v).filter(col("label").isNull)
+    val isNull = t.asOf(v).filter(col("label").isNull)
     t.resetScanPrune()
     assert(isNull.count() == 30)
     val Some((s2, _)) = t.lastScanPrune
     assert(s2 == 2, s"IS NULL kept $s2 of 3")
     // and an equality filter composes: its implicit IsNotNull plus the
     // range pass must never open the all-null file
-    val eq = t.scanAsOf(v).filter(col("label") === "l5")
+    val eq = t.asOf(v).filter(col("label") === "l5")
     t.resetScanPrune()
     assert(eq.count() == 1)
     val Some((s3, _)) = t.lastScanPrune
@@ -990,7 +985,7 @@ class FileIndexSpec extends SparkSpec {
       .toDF("k", "part"), "part")
     // file pruning happens in listFiles; ROW pruning must still reach
     // the parquet reader (PushedFilters) — the two layers compose
-    val plan = t.scanAsOf(1).filter(col("k") === 5L)
+    val plan = t.asOf(1).filter(col("k") === 5L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(k), EqualTo(k,5)]"),
       s"row filter did not reach the parquet scan:\n$plan")
@@ -1110,16 +1105,13 @@ class FileIndexSpec extends SparkSpec {
     t.commitAppend(vals.zipWithIndex
       .map { case (p, i) => (i.toLong, p, i * 10L) }
       .toDF("k", "part", "v"), "part")
-    // discovery read (asOf) and pruned read (scanAsOf) agree on the
-    // logical value, and the partition FILTER matches it
-    val byAsOf = t.asOf(1).filter(col("part") === "12:30")
-      .select("k").collect().map(_.getLong(0)).toSeq
-    assert(byAsOf == Seq(0L), s"asOf saw $byAsOf")
-    val pruned = t.scanAsOf(1).filter(col("part") === "12:30")
+    // the read speaks the logical value, and the partition FILTER
+    // matches it
+    val pruned = t.asOf(1).filter(col("part") === "12:30")
     assert(pruned.select("k").collect().map(_.getLong(0)).toSeq == Seq(0L))
     assert(pruned.select("part").collect().map(_.getString(0)).toSeq ==
       Seq("12:30"), "pruned scan must surface the unescaped value")
-    val vals2 = t.scanAsOf(1).select("part").distinct()
+    val vals2 = t.asOf(1).select("part").distinct()
       .collect().map(_.getString(0)).toSet
     assert(vals2 == vals.toSet, s"escaped values leaked: $vals2")
     // CDF feed surfaces the logical value too

@@ -31,6 +31,35 @@ class MergeOnReadSpec extends SparkSpec {
     assert(t.asOf(6).count() == full)
   }
 
+  test("a MOR delete over several files writes its DVs in parallel tasks") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_dv_tasks_").toString
+    val t = new SnapshotLog.Table(spark, root)
+    t.commitAppend(spark.range(0, 800).selectExpr("id AS k",
+      "CAST(id % 8 AS STRING) AS p"), "p")
+    // the second delete supersedes the first one's sidecars
+    t.commitDeleteKeysMor(spark.range(0, 8).toDF("k"), "k")
+    val (v, report) = org.apache.spark.sql.graft.Trace(spark)(
+      t.commitDeleteKeysMor(spark.range(8, 16).toDF("k"), "k"))
+    val dvs = t.dvFor(v)
+    assert(dvs.size >= 4, s"${dvs.size} files carry a DV")
+    // the writer is the delete's last job (the result stage after the
+    // hit scan's shuffle)
+    assert(report.jobs.last.tasks > 1,
+      s"(call site, tasks): ${report.jobs.map(j => (j.callSite, j.tasks))}")
+    // every sidecar lists ascending distinct positions, both rounds' in all
+    val positions = dvs.toSeq.map { case (rel, id) =>
+      val src = scala.io.Source.fromFile(s"$root/dv/$rel.$id.dv", "UTF-8")
+      try src.getLines().filter(_.nonEmpty).map(_.toLong).toVector
+      finally src.close()
+    }
+    assert(positions.forall(ps => ps == ps.distinct.sorted))
+    assert(positions.map(_.size).sum == 16)
+    assert(t.asOfMor(v).count() == 784)
+    assert(t.asOfMor(v).filter(col("k") < 16).count() == 0)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("materialization rewrites ONLY DV-carrying files, retires DVs") {
     q("q_snapshot_mor_compact").collect() // force the staged build
     val t = MergeOnRead.morCompactStagedTable(spark, sf)

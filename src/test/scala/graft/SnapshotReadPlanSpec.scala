@@ -3,8 +3,12 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.{ParquetFiles, Trace}
-import graft.sources.SnapshotLog
+import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.sources.{KeyRange, SnapshotLog}
 
 /** Reads planned from metadata the engine already holds: snapshot
   * reads take file statuses from the manifest and schemas from cached
@@ -15,7 +19,8 @@ import graft.sources.SnapshotLog
   * `Tables` read must follow its file when the file is rewritten. */
 class SnapshotReadPlanSpec extends SparkSpec {
 
-  /** One append of 4000 rows over 40 partition values: 40 live files. */
+  /** One append of 4000 rows over 40 partition values (a file per
+    * partition value and write task). */
   private def table(partType: String): (SnapshotLog.Table, Int) = {
     val root = Files.createTempDirectory("graft_read_plan_").toString
     val t = new SnapshotLog.Table(spark, root)
@@ -28,28 +33,95 @@ class SnapshotReadPlanSpec extends SparkSpec {
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   test("delete-keys candidate and compaction reads over > 32 files start no job") {
-    val (t, v) = table("int")
+    val (t, v0) = table("int")
+    // MOR-deleted keys in 20 files (the DV sidecars are read by a
+    // `spark.read.text`, which lists above 32 paths): the reads below
+    // tag row positions and anti-join them
+    val v = t.commitDeleteKeysMor(spark.range(0, 20).toDF("k"), "k")
     val live = t.liveFiles(v)
-    assert(live.size > 32, s"${live.size} live files")
-    val (candidates, candidateJobs) =
-      Trace.jobCount(spark)(t.readFilesWithPos(live, v))
-    assert(candidateJobs == 0, s"$candidateJobs jobs building the candidate read")
+    assert(live.size > 32 && t.dvFor(v).size > 1,
+      s"${live.size} live files, ${t.dvFor(v).size} with a DV")
+    val (mor, morJobs) = Trace.jobCount(spark)(t.asOfMor(v))
+    assert(morJobs == 0, s"$morJobs jobs building the position-tagged read")
     val (victims, compactJobs) = Trace.jobCount(spark)(t.readFilesMorAt(v, live))
     assert(compactJobs == 0, s"$compactJobs jobs building the compaction read")
-    assert(candidates.count() == 4000 && victims.count() == 4000)
-    assert(candidates.select("__f").distinct().count() == live.size)
+    assert(mor.count() == 3980 && victims.count() == 3980)
+    assert(sameRows(mor, t.asOf(v0).where("k >= 20")))
   }
 
   for (partType <- Seq("int", "string"))
     test(s"readGroups over a $partType-partitioned table reads as spark.read with basePath") {
       val (t, v) = table(partType)
       val live = t.liveFiles(v)
-      val ours = t.readFiles(live, mergeSchema = false, v)
+      val ours = t.asOf(v)
       val theirs = spark.read.option("basePath", s"${t.root}/data")
         .parquet(live.map(r => s"${t.root}/data/$r"): _*)
       assert(ours.schema == theirs.schema)
       assert(sameRows(ours, theirs))
     }
+
+  test("a partition filter on an int-partitioned table prunes at plan time") {
+    val (t, v) = table("int")
+    assert(t.asOf(v).schema("p").dataType == IntegerType)
+    val live = t.liveFiles(v)
+    t.resetScanPrune()
+    assert(t.asOf(v).filter(col("p") === 7).count() == 100)
+    assert(t.lastScanPrune == Some((live.count(_.startsWith("p=7/")),
+      live.size)), s"${t.lastScanPrune}")
+  }
+
+  test("a data filter prunes the time-travel read by zone map") {
+    val root = Files.createTempDirectory("graft_read_zone_").toString
+    val t = new SnapshotLog.Table(spark, root)
+    // four appends of disjoint key ranges: one file each, zone maps on k
+    (0 until 4).foreach(i => t.commitAppend(spark.range(i * 100, i * 100 + 100)
+      .selectExpr("id AS k", "'x' AS p").coalesce(1), "p"))
+    t.resetScanPrune()
+    assert(t.asOf(4).filter(col("k").between(150L, 160L)).count() == 11)
+    assert(t.lastScanPrune == Some((1, 4)), s"${t.lastScanPrune}")
+    // commit reads do not count as reads of the table
+    t.resetScanPrune()
+    t.commitDeleteRange("p", KeyRange.Longs("k", 150L, 160L))
+    assert(t.lastScanPrune.isEmpty, s"${t.lastScanPrune}")
+  }
+
+  test("a staged read over > 32 files starts no job and reads as spark.read") {
+    val root = Files.createTempDirectory("graft_read_staged_").toString
+    val t = new SnapshotLog.Table(spark, root)
+    t.commitAppend(spark.range(0, 10).selectExpr("id AS k", "0 AS p"), "p")
+    val live = t.liveFiles(t.version).toSet
+    t.stageAppend(spark.range(100, 4100).selectExpr("id AS k",
+      "CAST(id % 40 AS int) AS p"), "p", "audit")
+    val data = s"$root/data"
+    val staged = ParquetFiles.dataFiles(spark, data).map(_.getPath.toString)
+      .filterNot(p => live.exists(p.endsWith))
+    assert(staged.size > 32, s"${staged.size} staged files")
+    val (ours, jobs) = Trace.jobCount(spark)(t.stagedRead("audit"))
+    assert(jobs == 0, s"$jobs jobs building the staged read")
+    val theirs = spark.read.option("basePath", data).parquet(staged: _*)
+    assert(ours.schema == theirs.schema)
+    assert(sameRows(ours, theirs))
+  }
+
+  test("the merge hit scan pushes its key filter into the parquet scan") {
+    val (t, _) = table("int")
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Trace(spark)(t.commitMerge(spark.range(5, 8).selectExpr("id AS k",
+      "CAST(id % 40 AS int) AS p", "-id AS v"), "p", "k"))
+    finally spark.listenerManager.unregister(listener)
+    val scans = plans.synchronized(plans.toList).flatMap(_.split("\n"))
+      .filter(_.contains("PushedFilters:"))
+    assert(scans.exists(_.matches(".*PushedFilters: \\[.*In\\(k, \\[5,6,7\\]\\).*")),
+      s"no scan pushed the key filter:\n${scans.mkString("\n")}")
+    assert(t.asOf(t.version).where("k BETWEEN 5 AND 7")
+      .selectExpr("sum(v)").head().getLong(0) == -18)
+  }
 
   /** Write `df` as one parquet file and move it to `dest`. */
   private def put(df: DataFrame, dest: String): Unit = {

@@ -231,8 +231,6 @@ class Wave8Spec extends SparkSpec {
     // a range beyond the data proves files can be skipped entirely
     assert(t.pruneFiles(t.version,
       KeyRange.Longs("o_date_days", -5000, -4000)).isEmpty)
-    assert(t.asOfWhere(t.version,
-      KeyRange.Longs("o_date_days", -5000, -4000)).isEmpty)
   }
 
   test("commit protocol: two writers race, exactly one wins") {
@@ -416,15 +414,14 @@ class Wave8Spec extends SparkSpec {
     val sHi = t.pruneFiles(2, KeyRange.Strings("nm", "zulu-with-a-suffix-l", "zz"))
     assert(sHi.nonEmpty && sHi.forall(_.contains("/v2-")))
     assert(t.pruneFiles(2, KeyRange.Strings("nm", "zzz", "zzzz")).isEmpty)
-    // the pruned read + row filter equals the full read + row filter
-    val full = t.asOf(2)
+    // the filtered read prunes to v1's files and keeps exactly its rows
+    t.resetScanPrune()
+    val pruned = t.asOf(2)
       .filter(col("d").between(day("1997-01-01"), day("1997-12-31")))
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
-    val pruned = t.asOfWhere(2, KeyRange.Longs("d", days("1997-01-01"),
-      days("1997-12-31"))).get
-      .filter(col("d").between(day("1997-01-01"), day("1997-12-31")))
-      .select("k").collect().map(_.getLong(0)).sorted.toSeq
-    assert(full == pruned && full == Seq(1L, 2L))
+    assert(pruned == Seq(1L, 2L))
+    assert(t.lastScanPrune == Some((d97.size, all.size)),
+      s"the date filter did not prune: ${t.lastScanPrune}")
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
   }

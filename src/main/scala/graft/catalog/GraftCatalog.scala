@@ -374,17 +374,11 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
         val parts = tbl.split('.')
         Identifier.of(parts.init, parts.last)
       }
-      override def resolve(tbl: String)
-          : (SnapshotLog.Table, String) = {
+      override def resolve(tbl: String): SnapshotLog.Table = {
         val id = identOf(tbl)
         val root = rootFor(id)
         if (!isTableDir(root)) throw new NoSuchTableException(id)
-        val pc = readMeta(root).map(_.partCol).getOrElse(
-          throw new IllegalStateException(
-            s"$tbl has no _catalog.json sidecar — maintenance needs " +
-              "the partition column; CREATE the table via SQL or add " +
-              "the sidecar"))
-        (GraftSqlTable.handleFor(spark, root), pc)
+        GraftSqlTable.handleFor(spark, root)
       }
       /** Zero-copy table clone behind `CALL graft.system.clone`:
         * hard-link the source's live state at `version` (default:
@@ -583,6 +577,19 @@ private[graft] object GraftSqlTable {
   private[graft] def handleFor(spark: SparkSession,
       root: String): SnapshotLog.Table =
     handles.computeIfAbsent(root, r => new SnapshotLog.Table(spark, r))
+
+  /** Before a MERGE lands rows: a rewrite writes under the log's
+    * partition spec, which only an append declares, so a table no
+    * append has written (MERGE right after CREATE TABLE) first takes
+    * an empty append by its `_catalog.json` partition column. */
+  private[catalog] def declarePartitioning(spark: SparkSession,
+      root: String): Unit = {
+    val t = handleFor(spark, root)
+    if (t.partitionSpec(t.version).isEmpty && t.liveFiles(t.version).isEmpty)
+      GraftCatalog.readMeta(spark.sparkContext.hadoopConfiguration, root)
+        .foreach(m => t.commitAppend(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row], m.schema), m.partCol))
+  }
 }
 
 /** One resolved (optionally version-pinned) snapshot table. */
@@ -653,7 +660,8 @@ private[catalog] final class GraftSqlTable(tableName: String,
 
   /** The declared partition column, handed to every read as a
     * user-specified schema is handed to `spark.read`: a STRING column
-    * whose values look numeric still reads as STRING. */
+    * whose values look numeric still reads as STRING (a log's `spec`
+    * entry does the same; logs written before it need this). */
   private[catalog] def partTypes: StructType =
     StructType(meta.map(m => StructField(m.partCol, StringType)).toSeq)
 
@@ -792,10 +800,7 @@ private[catalog] final class GraftSqlTable(tableName: String,
         else {
           val range = ranges.flatten.reduce(_ intersect _)
           if (range.isEmpty) Some(() => ()) // provably zero rows
-          else {
-            val pc = partColOrFail
-            Some(() => { log.commitDeleteRange(pc, range); () })
-          }
+          else Some(() => { log.commitDeleteRange(range); () })
         }
       case _ => None
     }

@@ -257,11 +257,11 @@ object GraftMergeRule extends Rule[LogicalPlan] {
     cond match {
       case EqualTo(a, v) if nameOf(a).exists(_.equalsIgnoreCase(pc)) &&
           strLit(v).isDefined =>
-        GraftUpdateCommand(t.rootPath, pc,
+        GraftUpdateCommand(t.rootPath,
           KeyRange.Partitions(pc, Seq(strLit(v).get)), set, rowPred)
       case In(a, vs) if nameOf(a).exists(_.equalsIgnoreCase(pc)) &&
           vs.nonEmpty && vs.forall(strLit(_).isDefined) =>
-        GraftUpdateCommand(t.rootPath, pc,
+        GraftUpdateCommand(t.rootPath,
           KeyRange.Partitions(pc, vs.flatMap(strLit(_))), set, rowPred)
       case InSubquery(Seq(a), lq: ListQuery)
           if a.resolved && lq.plan.resolved && lq.outerAttrs.isEmpty =>
@@ -270,7 +270,7 @@ object GraftMergeRule extends Rule[LogicalPlan] {
         if (keyCol.equalsIgnoreCase(pc))
           unsupported("partition-column IN (subquery) — collect the " +
             "values into the literal IN form")
-        GraftUpdateKeysCommand(t.rootPath, pc, keyCol, lq.plan, set)
+        GraftUpdateKeysCommand(t.rootPath, keyCol, lq.plan, set)
       case In(a, vs) if vs.nonEmpty && vs.forall(_.foldable) &&
           nameOf(a).isDefined =>
         val keyCol = nameOf(a).get
@@ -280,7 +280,7 @@ object GraftMergeRule extends Rule[LogicalPlan] {
         // NULL literals never match IN (SQL semantics) — drop them
         val rows = vs.flatMap(v => Option(v.eval()))
           .map(x => org.apache.spark.sql.catalyst.InternalRow(x))
-        GraftUpdateKeysCommand(t.rootPath, pc, keyCol,
+        GraftUpdateKeysCommand(t.rootPath, keyCol,
           LocalRelation(Seq(AttributeReference(keyCol, dt)()), rows),
           set)
       case _ =>
@@ -311,7 +311,7 @@ object GraftMergeRule extends Rule[LogicalPlan] {
           .orElse(typed.headOption)
           .orElse(ints.headOption)
           .getOrElse(unsupported(s"condition ${cond.sql}"))
-        GraftUpdateCommand(t.rootPath, pc, range, set, rowPred)
+        GraftUpdateCommand(t.rootPath, range, set, rowPred)
     }
   }
 
@@ -427,11 +427,9 @@ object GraftMergeRule extends Rule[LogicalPlan] {
                 "explicit ids — use explicit clause column lists that " +
                 s"omit $ic; the engine assigns inserted ids past the " +
                 "watermark"))
-          GraftMergeCommand(t.rootPath, t.partColOrFail, keyOpt.get,
-            source, delete = false)
+          GraftMergeCommand(t.rootPath, keyOpt.get, source, delete = false)
         case _ =>
-          GraftMergeCommand(t.rootPath, t.partColOrFail, keyOpt.get,
-            source, delete = true)
+          GraftMergeCommand(t.rootPath, keyOpt.get, source, delete = true)
       }
       // conditional clauses / partial SET lists need fully-resolved
       // expressions (exprIds decide which SIDE each attribute binds
@@ -567,8 +565,8 @@ object GraftMergeRule extends Rule[LogicalPlan] {
 
 /** The executable half: resolves the source subtree back to a
   * DataFrame and routes to the MOR merge / MOR key-delete commit. */
-final case class GraftMergeCommand(root: String, partCol: String,
-    keyCol: String, source: LogicalPlan, delete: Boolean)
+final case class GraftMergeCommand(root: String, keyCol: String,
+    source: LogicalPlan, delete: Boolean)
     extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] = {
@@ -578,11 +576,13 @@ final case class GraftMergeCommand(root: String, partCol: String,
     val src = org.apache.spark.sql.GraftBridge.ofRows(spark, source)
     val t = GraftSqlTable.handleFor(spark, root)
     if (delete) t.commitDeleteKeysMor(src.select(col(keyCol)), keyCol)
-    // guardUniqueness: SQL MERGE refuses duplicate source keys and
-    // duplicate-matched target rows (the Delta multiple-match error);
-    // the checks ride the pinned batch and the candidate-pruned join
-    // inside the commit, never a table scan
-    else t.commitMergeMor(src, partCol, keyCol, guardUniqueness = true)
+    else {
+      GraftSqlTable.declarePartitioning(spark, root)
+      // guardUniqueness: SQL MERGE refuses duplicate source keys and
+      // duplicate-matched target rows (the Delta multiple-match error)
+      // on the pinned batch and the candidate-pruned join
+      t.commitMergeMor(src, keyCol, guardUniqueness = true)
+    }
     Seq.empty
   }
 }
@@ -724,8 +724,8 @@ final case class GraftMergeCondCommand(root: String, partCol: String,
     val batch = changes.withColumn(partCol,
       when(col("__op") =!= "D" && col(partCol).isNull,
         raise_error(lit(nullPart))).otherwise(col(partCol)))
-    try t.commitApplyChanges(batch, partCol, keyCol,
-      identityCol = identityCol)
+    if (tgtEmpty) GraftSqlTable.declarePartitioning(spark, root)
+    try t.commitApplyChanges(batch, keyCol, identityCol = identityCol)
     catch {
       case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
           .takeWhile(_ != null).exists(c =>
@@ -761,14 +761,14 @@ final case class GraftDeleteKeysCommand(root: String, keyCol: String,
   * integer range (`k > 5 AND k < 3`, `k > Long.MaxValue`) is zero
   * rows and no commit — the DELETE path's provably-empty contract
   * (overflow/crossed bounds must never degrade into a rewrite). */
-final case class GraftUpdateCommand(root: String, partCol: String,
-    range: KeyRange, set: Map[String, Expression], cond: GraftExpr)
+final case class GraftUpdateCommand(root: String, range: KeyRange,
+    set: Map[String, Expression], cond: GraftExpr)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     range match {
       case r: KeyRange.Longs if r.isEmpty => ()
       case _ =>
-        GraftSqlTable.handleFor(spark, root).commitUpdate(partCol, range,
+        GraftSqlTable.handleFor(spark, root).commitUpdate(range,
           set.map { case (k, e) => k -> ColumnBridge.column(e) },
           Some(ColumnBridge.column(cond.e)))
     }
@@ -785,8 +785,8 @@ final case class GraftUpdateCommand(root: String, partCol: String,
   * (op U per matched row — duplicate-keyed target rows each keep
   * their own updated copy). The exact mirror of the key-set DELETE's
   * cost model, O(candidate files). */
-final case class GraftUpdateKeysCommand(root: String, partCol: String,
-    keyCol: String, keys: LogicalPlan, set: Map[String, Expression])
+final case class GraftUpdateKeysCommand(root: String, keyCol: String,
+    keys: LogicalPlan, set: Map[String, Expression])
     extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(keys)
   override def run(spark: SparkSession): Seq[Row] = {
@@ -809,7 +809,7 @@ final case class GraftUpdateKeysCommand(root: String, partCol: String,
       .withColumn("__op", lit("U"))
     // the commit pins the batch, so its key probe, tombstone join and
     // rewrite share one evaluation
-    t.commitApplyChanges(changes, partCol, keyCol)
+    t.commitApplyChanges(changes, keyCol)
     Seq.empty
   }
 }

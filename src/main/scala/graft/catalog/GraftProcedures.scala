@@ -35,7 +35,7 @@ private[catalog] object GraftProcedures {
     * name to its log handle, or run the clone transactions (which
     * need path resolution + sidecar plumbing only the catalog has). */
   trait Context {
-    def resolve(tbl: String): (SnapshotLog.Table, String)
+    def resolve(tbl: String): SnapshotLog.Table
     def cloneTable(srcTbl: String, dstTbl: String, version: Int): Int
     def cloneNamespace(srcNs: String, dstNs: String): Seq[(String, Int)]
   }
@@ -83,8 +83,7 @@ private[catalog] object GraftProcedures {
   private def versionRow(v: Int): Seq[InternalRow] =
     Seq(new GenericInternalRow(Array[Any](v)))
 
-  private final class CompactProc(
-      resolve: String => (SnapshotLog.Table, String))
+  private final class CompactProc(resolve: String => SnapshotLog.Table)
       extends GraftProc("compact") {
     override def description(): String =
       "rewrite each partition's live files into at most " +
@@ -94,14 +93,12 @@ private[catalog] object GraftProcedures {
       ProcedureParameter.in("files_per_partition", IntegerType)
         .defaultValue("1").build())
     override def call(input: InternalRow): JIterator[Scan] = {
-      val (t, pc) = resolve(str(input, 0))
-      result(versionSchema,
-        versionRow(t.commitCompact(pc, input.getInt(1))))
+      result(versionSchema, versionRow(
+        resolve(str(input, 0)).commitCompact(input.getInt(1))))
     }
   }
 
-  private final class ClusterProc(
-      resolve: String => (SnapshotLog.Table, String))
+  private final class ClusterProc(resolve: String => SnapshotLog.Table)
       extends GraftProc("cluster") {
     override def description(): String =
       "range-cluster the table on one column (zone maps then prune " +
@@ -112,14 +109,12 @@ private[catalog] object GraftProcedures {
       ProcedureParameter.in("files_per_range", IntegerType)
         .defaultValue("4").build())
     override def call(input: InternalRow): JIterator[Scan] = {
-      val (t, pc) = resolve(str(input, 0))
-      result(versionSchema, versionRow(
-        t.commitCluster(pc, str(input, 1), input.getInt(2))))
+      result(versionSchema, versionRow(resolve(str(input, 0))
+        .commitCluster(str(input, 1), input.getInt(2))))
     }
   }
 
-  private final class ZorderProc(
-      resolve: String => (SnapshotLog.Table, String))
+  private final class ZorderProc(resolve: String => SnapshotLog.Table)
       extends GraftProc("zorder") {
     override def description(): String =
       "interleaved-bit cluster on two columns (both dimensions prune)"
@@ -129,14 +124,12 @@ private[catalog] object GraftProcedures {
       ProcedureParameter.in("files_per_range", IntegerType)
         .defaultValue("4").build())
     override def call(input: InternalRow): JIterator[Scan] = {
-      val (t, pc) = resolve(str(input, 0))
-      result(versionSchema, versionRow(t.commitClusterZ(pc,
-        str(input, 1), str(input, 2), input.getInt(3))))
+      result(versionSchema, versionRow(resolve(str(input, 0))
+        .commitClusterZ(str(input, 1), str(input, 2), input.getInt(3))))
     }
   }
 
-  private final class VacuumProc(
-      resolve: String => (SnapshotLog.Table, String))
+  private final class VacuumProc(resolve: String => SnapshotLog.Table)
       extends GraftProc("vacuum") {
     override def description(): String =
       "physically delete files unreferenced by the retained versions " +
@@ -154,7 +147,7 @@ private[catalog] object GraftProcedures {
       StructField("deleted_files", LongType, nullable = false),
       StructField("retained_versions", IntegerType, nullable = false)))
     override def call(input: InternalRow): JIterator[Scan] = {
-      val (t, _) = resolve(str(input, 0))
+      val t = resolve(str(input, 0))
       val rv = input.getInt(1)
       val rh = input.getInt(2)
       require((rv >= 0) != (rh >= 0),
@@ -233,8 +226,7 @@ private[catalog] object GraftProcedures {
     }
   }
 
-  private final class RestoreProc(
-      resolve: String => (SnapshotLog.Table, String))
+  private final class RestoreProc(resolve: String => SnapshotLog.Table)
       extends GraftProc("restore") {
     override def description(): String =
       "restore the table to a prior version as a new metadata-only " +
@@ -243,13 +235,12 @@ private[catalog] object GraftProcedures {
       in("table", StringType),
       in("version", IntegerType))
     override def call(input: InternalRow): JIterator[Scan] = {
-      val (t, _) = resolve(str(input, 0))
+      val t = resolve(str(input, 0))
       result(versionSchema, versionRow(t.commitRestore(input.getInt(1))))
     }
   }
 
-  private final class HistoryProc(
-      resolve: String => (SnapshotLog.Table, String))
+  private final class HistoryProc(resolve: String => SnapshotLog.Table)
       extends GraftProc("history") {
     override def description(): String =
       "one row per commit: timestamp + entry-kind counts (DESCRIBE " +
@@ -266,7 +257,7 @@ private[catalog] object GraftProcedures {
       StructField("n_meta", IntegerType, nullable = false),
       StructField("txn_id", StringType, nullable = true)))
     override def call(input: InternalRow): JIterator[Scan] = {
-      val (t, _) = resolve(str(input, 0))
+      val t = resolve(str(input, 0))
       val byV = t.entries.groupBy(_.version)
       val rows = (1 to t.version).map { v =>
         val es = byV.getOrElse(v, Seq.empty)

@@ -151,7 +151,7 @@ object FileIndex {
         t.commitAppend(orders.filter(col("o_orderkey") % 4 === r),
           "o_orderstatus")
       }
-      t.commitCluster("o_orderstatus", "price_cents", filesPerRange = 8)
+      t.commitCluster("price_cents", filesPerRange = 8)
       fs.create(marker, true).close()
     }
     t
@@ -300,7 +300,7 @@ object FileIndex {
           col("o_date_days") >= lo && col("o_date_days") < hi),
           "o_orderstatus")
       }
-      t.commitDeleteRange("o_orderstatus", KeyRange.Longs("o_date_days",
+      t.commitDeleteRange(KeyRange.Longs("o_date_days",
         Wave8.days("1997-06-01"), Wave8.days("1997-12-31")))
       fs.create(marker, true).close()
     }
@@ -335,7 +335,7 @@ object FileIndex {
         t.commitAppend(orders.filter(col("o_orderkey") % 4 === h),
           "o_orderstatus")
       }
-      t.commitClusterZ("o_orderstatus", "price_cents", "o_date_days",
+      t.commitClusterZ("price_cents", "o_date_days",
         filesPerRange = 16)
       fs.create(marker, true).close()
     }
@@ -400,8 +400,7 @@ object FileIndex {
           "o_orderstatus")
       }
       val (lo, hi) = (Wave8.days("1997-06-01"), Wave8.days("1997-12-31"))
-      t.commitReplaceWhere("o_orderstatus",
-        KeyRange.Longs("o_date_days", lo, hi),
+      t.commitReplaceWhere(KeyRange.Longs("o_date_days", lo, hi),
         orders.filter(col("o_date_days").between(lo, hi))
           .withColumn("price_cents", col("price_cents") + 100))
       fs.create(marker, true).close()

@@ -88,7 +88,7 @@ object MergeOnRead {
         fs.delete(new Path(s"$root/$d"), true))
       buildBands(spark, t, factPath)
       deleteMor(spark, t)
-      t.commitMaterializeDv("o_orderstatus")
+      t.commitMaterializeDv()
       fs.create(marker, true).close()
     }
     t
@@ -149,7 +149,7 @@ object MergeOnRead {
           "o_orderstatus")
       }
       t.commitApplyChanges(
-        changeBatch(t.asOf(t.version), mx), "o_orderstatus", "o_orderkey")
+        changeBatch(t.asOf(t.version), mx), "o_orderkey")
       fs.create(marker, true).close()
     }
     t
@@ -216,8 +216,7 @@ object MergeOnRead {
         .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
           (col("price_cents") + 7).as("price_cents"),
           col("o_orderstatus"))
-      t.commitMergeMor(upds.unionByName(ins), "o_orderstatus",
-        "o_orderkey")
+      t.commitMergeMor(upds.unionByName(ins), "o_orderkey")
       fs.create(marker, true).close()
     }
     t
@@ -460,7 +459,7 @@ object MergeOnRead {
         live.filter(col("event_id") % 11 === 0), "event_id") // v3
       t.commitDeleteKeysMor(
         live.filter(col("event_id") % 13 === 0), "event_id") // v4
-      t.commitMaterializeDv("event_type")                    // v5
+      t.commitMaterializeDv()                                // v5
       val ckpt = base.resolve("ckpt").toString
       val q = spark.readStream
         .format("graft.sources.SnapshotCdfSource")
@@ -571,7 +570,7 @@ object MergeOnRead {
         "o_orderkey") // v3: merge-on-read, zero rewrites
       t.commitMerge(orders.filter(col("o_orderkey") % 89 === 0)
         .withColumn("price_cents", col("price_cents") + 11),
-        "o_orderstatus", "o_orderkey") // v4: the rewrite under test
+        "o_orderkey") // v4: the rewrite under test
       val out = t.asOfMor(t.version)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_rows"),
@@ -630,7 +629,7 @@ object MergeOnRead {
       val src = ev.filter(col("event_id") > mx / 3 &&
         col("event_id") <= 2 * (mx / 3) && col("event_id") % 7 === 0)
         .withColumn("cents", col("cents") + 5)
-      t.commitMerge(src, "event_type", "tskey")
+      t.commitMerge(src, "tskey")
       val Some((cand, live)) = t.lastMergeScan
       require(cand < live,
         s"timestamp zone maps did not prune: scanned $cand of $live")
@@ -695,12 +694,12 @@ object MergeOnRead {
       t.commitTagVersion("ga", 3)           // v4: name it
       t.commitMerge(orders.filter(col("o_orderkey") % 11 === 0)
         .withColumn("price_cents", col("price_cents") + 999),
-        "o_orderstatus", "o_orderkey")      // v5: bad bump (rewrites files)
+        "o_orderkey")                       // v5: bad bump (rewrites files)
       t.commitApplyChanges(
         orders.filter(col("o_orderkey") % 13 === 0)
           .select(col("o_orderkey"), col("price_cents"),
             col("o_orderstatus"), lit("D").as("__op")),
-        "o_orderstatus", "o_orderkey")      // v6: bad tombstones
+        "o_orderkey")                       // v6: bad tombstones
       val rv = t.commitRestoreTag("ga")     // v7: metadata-only undo
       require(t.liveFiles(rv).toSet == t.liveFiles(3).toSet,
         "restore must resolve exactly the tagged live set")
@@ -847,8 +846,8 @@ object MergeOnRead {
           e.getMessage.contains("nonneg_price") }
       require(bounced(t.commitAppend(poisoned, "o_orderstatus")),
         "append of violating rows must be rejected")
-      require(bounced(t.commitMerge(poisoned, "o_orderstatus",
-        "o_orderkey")), "merge of violating rows must be rejected")
+      require(bounced(t.commitMerge(poisoned, "o_orderkey")),
+        "merge of violating rows must be rejected")
       t.commitAppend(orders.filter(col("o_orderkey") % 2 === 1),
         "o_orderstatus")
       val out = t.asOf(t.version)

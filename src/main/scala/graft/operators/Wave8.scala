@@ -289,7 +289,7 @@ object Wave8 {
           .filter(col("o_orderdate") < lit(D2).cast("timestamp") &&
             col("o_orderkey") % 5 === 0)
           .withColumn("price_cents", col("price_cents") + 7)
-        t.commitMerge(src, "o_orderstatus", "o_orderkey")
+        t.commitMerge(src, "o_orderkey")
         fs.create(marker, true).close()
       }
       (1 to 2).map { v =>

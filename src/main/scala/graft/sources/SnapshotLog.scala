@@ -9,8 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders,
   Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, DecimalType,
-  IntegerType, LongType, StringType, StructType, TimestampNTZType,
-  TimestampType}
+  IntegerType, LongType, StringType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 
 /** Minimal snapshot-versioned parquet table: an append-only commit log
   * over immutable data files, giving AS-OF reads (time travel) and a
@@ -146,35 +146,28 @@ object SnapshotLog {
         s.iterator().asScala.toVector
       }
 
-    lazy val zoneMaps: Map[String, Map[String, (Long, Long)]] =
-      entries.filter(_.action == "stats")
+    /** file -> column -> stat, from the `path|col|a|b` entries of
+      * one stats action. */
+    private def statsOf[T](action: String)(stat: (String, String) => T)
+        : Map[String, Map[String, T]] =
+      entries.filter(_.action == action)
         .groupBy(_.path.split('|')(0))
         .map { case (p, es) =>
           p -> es.map { e =>
-            val Array(_, c, lo, hi) = e.path.split('|')
-            c -> (lo.toLong, hi.toLong)
+            val Array(_, c, a, b) = e.path.split('|')
+            c -> stat(a, b)
           }.toMap
         }
+
+    lazy val zoneMaps: Map[String, Map[String, (Long, Long)]] =
+      statsOf("stats")((lo, hi) => (lo.toLong, hi.toLong))
 
     lazy val zoneMapsStr: Map[String, Map[String, (String, String)]] =
-      entries.filter(_.action == "stats_s")
-        .groupBy(_.path.split('|')(0))
-        .map { case (p, es) =>
-          p -> es.map { e =>
-            val Array(_, c, lo, hi) = e.path.split('|')
-            c -> (unhexStr(lo), unhexStr(hi))
-          }.toMap
-        }
+      statsOf("stats_s")((lo, hi) => (unhexStr(lo), unhexStr(hi)))
 
+    /** (null count, row count) per file and column. */
     lazy val nullCounts: Map[String, Map[String, (Long, Long)]] =
-      entries.filter(_.action == "stats_n")
-        .groupBy(_.path.split('|')(0))
-        .map { case (p, es) =>
-          p -> es.map { e =>
-            val Array(_, c, n, rows) = e.path.split('|')
-            c -> (n.toLong, rows.toLong)
-          }.toMap
-        }
+      statsOf("stats_n")((n, rows) => (n.toLong, rows.toLong))
 
     lazy val fileSizes: Map[String, Long] =
       entries.filter(_.action == "fsize").map { e =>
@@ -195,6 +188,11 @@ object SnapshotLog {
     /** DEFAULT-column entries (`coldefault|phys|ddl|hex(default)`). */
     lazy val defaultEntries: Vector[Entry] =
       entries.filter(_.action == "coldefault")
+
+    /** Partition-spec entries (`spec|phys|ddl`) — one per partition
+      * column change, same O(#evolutions) fold scale as colmap. */
+    lazy val specEntries: Vector[Entry] =
+      entries.filter(_.action == "spec")
 
     private val dvAt = new VersionLru[Map[String, String]](64)
 
@@ -489,14 +487,8 @@ object SnapshotLog {
         if (n.endsWith(".csv")) n.stripSuffix(".csv").toIntOption.map(_ -> st)
         else None // in-flight temps and checkpoints are not segments
       }.sortBy(_._1)
-      val ckpt = stats.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.endsWith(".ckpt.pq"))
-          n.stripSuffix(".ckpt.pq").toIntOption.map(v => (v, 1, st))
-        else if (n.endsWith(".ckpt"))
-          n.stripSuffix(".ckpt").toIntOption.map(v => (v, 0, st))
-        else None
-      }.sortBy(c => (c._1, c._2)).lastOption.map(c => (c._1, c._3))
+      val ckpt = stats.flatMap(st => ckptOf(st.getPath.getName).map(_ -> st))
+        .sortBy(_._1).lastOption.map { case ((v, _), st) => (v, st) }
       // the table-INSTANCE identity: `length:modtime` content keys
       // collide for same-length same-second rewrites (S3 mtimes are
       // second-granular), so a delete-and-recreate in one tick could
@@ -508,6 +500,15 @@ object SnapshotLog {
         .filter(_.startsWith("_instance-")).sorted.mkString(",")
       (ckpt, segs, instance)
     }
+
+    /** A checkpoint file name's (version, format rank — columnar 1
+      * wins over CSV 0 at equal versions). */
+    private def ckptOf(name: String): Option[(Int, Int)] =
+      if (name.endsWith(".ckpt.pq"))
+        name.stripSuffix(".ckpt.pq").toIntOption.map(_ -> 1)
+      else if (name.endsWith(".ckpt"))
+        name.stripSuffix(".ckpt").toIntOption.map(_ -> 0)
+      else None
 
     /** The published segment files, sorted by version. */
     private def segments: Seq[(Int, Path)] =
@@ -629,12 +630,7 @@ object SnapshotLog {
       * column — [[segmentObservedInCheckpoint]]'s sequence-equality
       * contract needs entry ORDER preserved exactly). */
     private def parseCheckpoint(p: Path): Seq[Entry] =
-      if (p.getName.endsWith(".ckpt.pq"))
-        spark.read.schema(CheckpointSchema).parquet(p.toString)
-          .orderBy("seq")
-          .select("version", "action", "path")
-          .collect().toSeq
-          .map(r => Entry(r.getInt(0), r.getString(1), r.getString(2)))
+      if (p.getName.endsWith(".ckpt.pq")) parquetEntries(p, lit(true))
       else parseLines(p)
 
     /** A checkpoint's entries for exactly version `v`. On the
@@ -643,12 +639,16 @@ object SnapshotLog {
       * row-group slice, not the whole manifest. */
     private def checkpointEntriesFor(cp: Path, v: Int): Seq[Entry] =
       if (cp.getName.endsWith(".ckpt.pq"))
-        spark.read.schema(CheckpointSchema).parquet(cp.toString)
-          .filter(col("version") === v).orderBy("seq")
-          .select("version", "action", "path")
-          .collect().toSeq
-          .map(r => Entry(r.getInt(0), r.getString(1), r.getString(2)))
+        parquetEntries(cp, col("version") === v)
       else parseLines(cp).filter(_.version == v)
+
+    /** The entries of columnar checkpoint `p` that satisfy `where`,
+      * in write order. */
+    private def parquetEntries(p: Path, where: Column): Seq[Entry] =
+      spark.read.schema(CheckpointSchema).parquet(p.toString)
+        .filter(where).orderBy("seq")
+        .select("version", "action", "path").collect().toSeq
+        .map(r => Entry(r.getInt(0), r.getString(1), r.getString(2)))
 
     def version: Int = {
       val (ck, segs, _) = listLog()
@@ -720,14 +720,7 @@ object SnapshotLog {
         val victims = segments.filter(_._1 <= cv)
         victims.foreach { case (_, p) => fs.delete(p, false) }
         fs.listStatus(logDir).toSeq.map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            val v =
-              if (n.endsWith(".ckpt.pq")) n.stripSuffix(".ckpt.pq")
-              else if (n.endsWith(".ckpt")) n.stripSuffix(".ckpt")
-              else ""
-            v.toIntOption.exists(_ < cv)
-          }
+          .filter(p => ckptOf(p.getName).exists(_._1 < cv))
           .foreach(p => fs.delete(p, false))
         victims.map(_._1)
     }
@@ -928,14 +921,9 @@ object SnapshotLog {
       val (m, dropped) = columnMapping(v - 1)
       require(!m.contains(to) && !dropped.contains(to),
         s"logical name $to already in use (or dropped) at v${v - 1}")
-      // collision/existence check against the CURRENT logical schema:
-      // one footer + the layout's partition columns (conservative —
-      // additive evolution may hide a column in a non-head file, the
-      // same one-footer contract asOf uses)
-      val live = liveFiles(v - 1)
-      if (live.nonEmpty) {
-        val phys = footerSchemaOf(live.head).fieldNames.toSet ++
-          live.head.split('/').dropRight(1).map(_.takeWhile(_ != '='))
+      // collision/existence check against the CURRENT logical schema
+      val phys = livePhysicalColumns(v - 1)
+      if (phys.nonEmpty) {
         val logical = phys.filterNot(dropped.contains)
           .map(ph => m.find(_._2 == ph).map(_._1).getOrElse(ph)) ++ m.keys
         require(!logical.contains(to),
@@ -946,6 +934,15 @@ object SnapshotLog {
       publishSegment(v, Seq(Entry(v, "colmap", s"rename|$from|$to")))
       v
     }
+
+    /** The physical columns of the live schema at `at`: one footer
+      * plus the layout's partition columns (conservative — additive
+      * evolution may hide a column in a non-head file, the same
+      * one-footer contract reads use); empty for an empty table. */
+    private def livePhysicalColumns(at: Int): Set[String] =
+      liveFiles(at).headOption.fold(Set.empty[String])(h =>
+        footerSchemaOf(h).fieldNames.toSet ++
+          h.split('/').dropRight(1).map(_.takeWhile(_ != '=')))
 
     /** DROP COLUMN — metadata-only commit: the physical column stays
       * in every file (old versions still time-travel to it); reads at
@@ -981,6 +978,46 @@ object SnapshotLog {
         (c, org.apache.spark.sql.types.DataType.fromDDL(t),
           unhexStr(d), e.version)
       }
+
+    // ---- partition spec ---------------------------------------------
+
+    /** The partition column (physical name, so a rename needs no new
+      * entry) of the newest `spec` entry at `v`. An append publishes
+      * one in its own segment when it names a column the log does not
+      * record yet (Delta's `metaData.partitionColumns`, Iceberg's
+      * partition spec); every rewrite writes under it. None for a log
+      * written before spec entries, until its next append. */
+    def partitionSpec(v: Int): Option[String] =
+      foldState().specEntries.filter(_.version <= v).lastOption
+        .map(_.path.split('|')(0))
+
+    /** The type each partition column had in its declaring append's
+      * batch (physical names; newest entry wins): what reads declare. */
+    private def partTypesOf(specs: Seq[Entry]): StructType = StructType(
+      specs.map(_.path.split('|')).collect { case Array(c, t) => c -> t }
+        .toMap.toSeq.sortBy(_._1)
+        .map { case (c, t) => StructField(c, DataType.fromDDL(t)) })
+
+    /** The `spec` entry an append at `v` publishes with its adds: its
+      * partition column `pc` (physical) and the column's type in the
+      * batch `schema` — none when the log already records `pc`. */
+    private def declareSpec(v: Int, pc: String, schema: StructType)
+        : Seq[Entry] =
+      if (partitionSpec(v - 1).contains(pc)) Nil
+      else Seq(Entry(v, "spec", s"$pc|${schema(pc).dataType.sql}"))
+
+    /** The partition column (physical) a commit planned at `at` writes
+      * under: its own `spec` entry (an append), else the log's spec,
+      * else — a log written before spec entries — the layout of its
+      * newest live file. */
+    private def writeLayout(at: Int, spec: Seq[Entry]): String =
+      spec.headOption.map(_.path.split('|')(0))
+        .orElse(partitionSpec(at))
+        .orElse(liveFiles(at).lastOption.map(layoutKey)
+          .filter(l => l.nonEmpty && !l.contains('/')))
+        .getOrElse(throw new IllegalStateException(s"$root has no " +
+          s"partition spec or partitioned file at v$at: declare the " +
+          "partition column with commitAppend (or another append) first"))
 
     /** Lossless widening lattice (the Delta/Iceberg type-promotion
       * set restricted to what parquet's INT32/INT64/FLOAT/DOUBLE
@@ -1065,15 +1102,8 @@ object SnapshotLog {
         s"logical name $name already in use (or dropped) at v${v - 1}")
       require(!columnDefaults(v - 1).exists(_._1 == name),
         s"column $name already has a default")
-      // collision check against the live physical schema (one footer,
-      // same conservative contract as renameColumn)
-      val live = liveFiles(v - 1)
-      if (live.nonEmpty) {
-        val phys = footerSchemaOf(live.head).fieldNames.toSet ++
-          live.head.split('/').dropRight(1).map(_.takeWhile(_ != '='))
-        require(!phys.contains(name),
-          s"column $name already exists in the live schema")
-      }
+      require(!livePhysicalColumns(v - 1).contains(name),
+        s"column $name already exists in the live schema")
       publishSegment(v,
         Seq(Entry(v, "coldefault", s"$name|$typeDdl|${hexStr(default)}")))
       v
@@ -1201,34 +1231,31 @@ object SnapshotLog {
       * column read NULL — the additive-evolution contract. Off by
       * default: the merge reads every file's (cached) footer.
       *
-      * PARTITION EVOLUTION: commits may use different partition
+      * PARTITION EVOLUTION: appends may use different partition
       * columns over the table's life (the Iceberg contract — old
-      * files keep the old layout, new commits write the new one,
-      * nothing rewrites). Each file's layout is its `col=` path
-      * prefix; each layout is read with its own partition columns and
-      * the layouts union by name with missing columns nulled. A row's
-      * dir-encoded partition value comes from ITS layout; writers that
-      * want both columns queryable on every row carry the
-      * non-partition one as a data column (partitionBy removes only
-      * the column it shards by).
+      * files keep the old layout, new appends and every rewrite write
+      * the log's current [[partitionSpec]]). Each file's layout is its
+      * `col=` path prefix; each layout is read with its own partition
+      * columns and the layouts union by name with missing columns
+      * nulled. A row's dir-encoded partition value comes from ITS
+      * layout; writers that want both columns queryable on every row
+      * carry the non-partition one as a data column (partitionBy
+      * removes only the column it shards by).
       *
-      * Partition columns are typed as `spark.read` types them; columns
-      * named in `partTypes` (logical names) take the declared type, as
-      * a user-specified schema gives them — the SQL catalog declares
-      * its STRING partition column this way. */
+      * Partition columns read with the type their declaring append's
+      * batch gave them, so a STRING '01' reads '01'. A column the log
+      * records no type for takes its `partTypes` type (logical names),
+      * as a user-specified schema gives it — the SQL catalog declares
+      * its STRING partition column this way for logs written before
+      * `spec` entries — else `spark.read`'s inferred one. */
     def asOf(v: Int, mergeSchema: Boolean = false,
         partTypes: StructType = new StructType()): DataFrame = {
       val fold = foldState()
       val files = fold.liveFiles(v)
       require(files.nonEmpty, s"version $v of $root has no live files")
-      applyMapping(v, readAt(files, v, fold, recordScanPrune,
-        physicalTypes(v, partTypes), mergeSchema = mergeSchema))
+      applyMapping(v, readAt(files, v, fold, recordScanPrune, partTypes,
+        mergeSchema = mergeSchema))
     }
-
-    /** `partTypes` under the physical names of `v`: partition
-      * directories keep the name a column was first written as. */
-    private def physicalTypes(v: Int, partTypes: StructType): StructType =
-      StructType(partTypes.map(f => f.copy(name = physicalAt(v, f.name))))
 
     /** Read-path prune telemetry: (files scanned, files live)
       * accumulated across the layout groups of [[asOf]] and
@@ -1246,10 +1273,11 @@ object SnapshotLog {
           })
       }
 
-    /** Bloom probe over runtime-typed point keys (the plan-time twin
-      * of [[pointLookupFiles]]/[[pointLookupFilesStr]]): LONG-family
-      * and STRING keys hash through the exact build-side expressions;
-      * a mixed or unsupported key set keeps everything. */
+    /** Bloom probe over runtime-typed point keys (plan-time pruning
+      * and the merge candidate pass; [[pointLookupFiles]] is the
+      * typed twin): LONG-family and STRING keys hash through the exact
+      * build-side expressions; a mixed or unsupported key set keeps
+      * everything. */
     private[sources] def bloomSurvivorsAny(files: Seq[String], c: String,
         keys: Seq[Any]): Seq[String] = {
       val longs = keys.collect {
@@ -1261,9 +1289,9 @@ object SnapshotLog {
         case u: org.apache.spark.unsafe.types.UTF8String => u.toString
       }
       if (longs.size == keys.size && longs.nonEmpty)
-        bloomSurvivors(files, c, keyHashes(longs).values.toSeq)
+        bloomSurvivors(files, c, keyHashes(longs)(Encoders.scalaLong))
       else if (strs.size == keys.size && strs.nonEmpty)
-        bloomSurvivors(files, c, keyHashesStr(strs))
+        bloomSurvivors(files, c, keyHashes(strs)(Encoders.STRING))
       else files
     }
 
@@ -1307,8 +1335,9 @@ object SnapshotLog {
       *    files read in ONE relation (schema inference over a mixed
       *    group would pick an arbitrary footer and die downcasting the
       *    wide files).
-      *  - Partition columns: typed by Spark's partition parser, with
-      *    `partTypes` (physical names) declared.
+      *  - Partition columns: typed as the `spec` entries up to `at`
+      *    record them, else as `partTypes` (logical names) declares,
+      *    else by Spark's partition parser.
       *  - Defaults: a file that predates a defaulted column (per the
       *    manifest stats — see [[carriesCol]]) lacks the column in
       *    its footer entirely, so the whole group projects the
@@ -1333,6 +1362,10 @@ object SnapshotLog {
         withPos: Boolean = false): DataFrame = {
       val w = widenings(at)
       val dfl = columnDefaults(at)
+      val logged = partTypesOf(fold.specEntries.filter(_.version <= at))
+      val declared = StructType(logged ++ partTypes
+        .map(f => f.copy(name = physicalAt(at, f.name)))
+        .filterNot(f => logged.fieldNames.contains(f.name)))
       def footerSchema(rel: String): StructType = widenSchema(
         ParquetFiles.schema(spark, ParquetFiles.statusOf(fs, dataBase, rel,
           fold.fileSizes.get(rel))), w)
@@ -1344,7 +1377,7 @@ object SnapshotLog {
               .reduce(ParquetFiles.merge)
             else footerSchema(group.head)
           val index = new org.apache.spark.sql.graft.SnapshotFileIndex(
-            spark, dataDir, group, partTypes, fold.zoneMaps,
+            spark, dataDir, group, declared, fold.zoneMaps,
             fold.zoneMapsStr, fold.nullCounts, fold.fileSizes,
             bloomCols.toSet, bloomSurvivorsAny, recordPrune)
           val rel = org.apache.spark.sql.graft.SparkInternals
@@ -1429,13 +1462,16 @@ object SnapshotLog {
       val tmp = new Path(s"$root/_tmp_b$branch-${
         java.util.UUID.randomUUID.toString.take(8)}")
       val at = version
-      writeTmp(toPhysical(df, at), partCol, tmp, at)
+      val phys = toPhysical(df, at)
+      val spec = declareSpec(at + 1, physicalAt(at, partCol), phys.schema)
+      writeTmp(phys, tmp, at, spec)
       // adopt with a branch prefix (no version exists yet — the
       // version is assigned at publish time)
       val added = adoptAs(tmp, s"b$branch")
       fs.delete(tmp, true)
       val out = fs.create(sp, false)
-      try (added.map(Entry(0, "add", _)) ++ statsEntries(0, added))
+      try (added.map(Entry(0, "add", _)) ++ statsEntries(0, added) ++
+          spec.map(_.copy(version = 0)))
         .foreach(e =>
           out.write(s"${e.version},${e.action},${e.path}\n".getBytes("UTF-8")))
       finally out.close()
@@ -1453,7 +1489,8 @@ object SnapshotLog {
       * physical names, and an auditor (or the publish-time constraint
       * check) speaks the table's current names. */
     def stagedRead(branch: String): DataFrame = {
-      val staged = new FoldState(stagedEntries(branch).toVector)
+      val staged = new FoldState(
+        foldState().specEntries ++ stagedEntries(branch))
       val files = staged.liveFiles(0)
       require(files.nonEmpty, s"staged branch $branch has no files")
       val v = version
@@ -1523,12 +1560,16 @@ object SnapshotLog {
       val known = (entries.filter(e =>
         e.action == "add" || e.action == "remove").map(_.path) ++
         staged).toSet
-      fs.listStatus(dd).filter(_.isDirectory).toSeq.flatMap { d =>
+      filesUnder(dd).filterNot(known.contains)
+    }
+
+    /** `part=val/file` names of the files one directory level under
+      * `dir` (the data and DV trees). */
+    private def filesUnder(dir: Path): Seq[String] =
+      fs.listStatus(dir).filter(_.isDirectory).toSeq.flatMap { d =>
         fs.listStatus(d.getPath).filter(_.isFile).toSeq
           .map(f => s"${d.getPath.getName}/${f.getPath.getName}")
-          .filterNot(known.contains)
       }
-    }
 
     /** Physically delete orphans. Operator-invoked and separate from
       * [[vacuum]] on purpose: a concurrent writer's adopted-but-not-
@@ -1587,22 +1628,13 @@ object SnapshotLog {
       (0 until k).map(i => java.lang.Math.floorMod(h + i * d, m))
     }
 
-    /** xxhash64 of each key EXACTLY as the build job computed it for
-      * the column values — one tiny Spark job, so driver and executor
-      * hashing can never drift. */
-    private def keyHashes(keys: Seq[Long]): Map[Long, Long] = {
-      import spark.implicits._
-      keys.toDF("k").select(col("k"), xxhash64(col("k")))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
-
-    /** String twin of [[keyHashes]]: xxhash64 over the UTF8 bytes, the
-      * same expression the sidecar build applies to a STRING column. */
-    private def keyHashesStr(keys: Seq[String]): Seq[Long] = {
-      import spark.implicits._
-      keys.toDF("k").select(xxhash64(col("k")))
+    /** xxhash64 of each LONG or STRING key (`enc` picks the column
+      * type) EXACTLY as the build job computes it for the column
+      * values — one tiny Spark job, so driver and executor hashing can
+      * never drift. */
+    private def keyHashes[K](keys: Seq[K])(enc: Encoder[K]): Seq[Long] =
+      spark.createDataset(keys)(enc).toDF("k").select(xxhash64(col("k")))
         .collect().map(_.getLong(0)).toSeq
-    }
 
     /** Each new file's length from [[adopt]]'s own listing, handed to
       * [[statsEntries]], which takes it out when it records the
@@ -1682,7 +1714,7 @@ object SnapshotLog {
           dt == org.apache.spark.sql.types.StringType,
           s"bloom index supports LONG and STRING columns, got $dt for $c")
         // xxhash64 covers both physical types; the probe side hashes
-        // through the identical expression (keyHashes/keyHashesStr)
+        // through the identical expression ([[keyHashes]])
         val h = xxhash64(col(c))
         val d = shiftrightunsigned(h, 32).bitwiseOR(lit(1L))
         val poss = (0 until BloomK).map(i => pmod(h + lit(i.toLong) * d,
@@ -1750,18 +1782,16 @@ object SnapshotLog {
       * formats do) — the sidecar layout already supports that move,
       * and composing with [[pruneFiles]] first bounds the candidate
       * set whenever any range column correlates with the key. */
-    def pointLookupFiles(v: Int, c: String, keys: Seq[Long]):
-        Seq[String] = {
-      val hs = keyHashes(keys).values.toSeq
-      bloomSurvivors(liveFiles(v), physicalAt(v, c), hs)
-    }
+    def pointLookupFiles(v: Int, c: String, keys: Seq[Long]): Seq[String] =
+      bloomSurvivors(liveFiles(v), physicalAt(v, c),
+        keyHashes(keys)(Encoders.scalaLong))
 
     /** [[pointLookupFiles]] for STRING keys — the erasure-queue shape
       * (document/user ids are strings as often as longs, and
       * hash-shaped ids are exactly the keys range stats cannot prune). */
-    def pointLookupFilesStr(v: Int, c: String, keys: Seq[String]):
-        Seq[String] =
-      bloomSurvivors(liveFiles(v), physicalAt(v, c), keyHashesStr(keys))
+    def pointLookupFilesStr(v: Int, c: String, keys: Seq[String])
+        : Seq[String] = bloomSurvivors(liveFiles(v), physicalAt(v, c),
+        keyHashes(keys)(Encoders.STRING))
 
     /** The subset of `files` whose bloom sidecar for `c` admits ANY of
       * the pre-hashed `hs`. Kept conservatively on a missing sidecar
@@ -1816,7 +1846,7 @@ object SnapshotLog {
           (longs.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
             Entry(v, "stats", s"$rel|$c|$lo|$hi")
           } ++ strs.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-            Entry(v, "stats_s", s"$rel|$c|${hex(lo)}|${hex(hi)}")
+            Entry(v, "stats_s", s"$rel|$c|${hexStr(lo)}|${hexStr(hi)}")
           } ++ nulls.toSeq.sortBy(_._1).map { case (c, (n, rows)) =>
             Entry(v, "stats_n", s"$rel|$c|$n|$rows")
           })
@@ -1835,9 +1865,6 @@ object SnapshotLog {
       * relative path. Files from commits predating the entry type
       * simply miss here — readers fall back to a status call. */
     def fileSizes: Map[String, Long] = foldState().fileSizes
-
-    private def hex(s: String): String = hexStr(s)
-    private def unhex(h: String): String = unhexStr(h)
 
     /** Per-file zone maps recorded at commit time: `stats` log entries
       * carry `path|col|min|max` for integer-physical columns (INT64,
@@ -1935,18 +1962,11 @@ object SnapshotLog {
             val pt = c.getPrimitiveType.getPrimitiveTypeName
             val usable = s != null && s.hasNonNullValue
             (pt, usable) match {
-              case (INT64, true) =>
-                val (lo, hi) = (s.genericGetMin.asInstanceOf[Long],
-                  s.genericGetMax.asInstanceOf[Long])
-                ok += name
-                accL(name) = accL.get(name) match {
-                  case Some((a, b2)) => (math.min(a, lo), math.max(b2, hi))
-                  case None          => (lo, hi)
-                }
-              case (INT32, true) =>
+              case (INT64 | INT32, true) =>
+                // both box as java.lang.Number (Long / Integer)
                 val (lo, hi) =
-                  (s.genericGetMin.asInstanceOf[Integer].longValue,
-                    s.genericGetMax.asInstanceOf[Integer].longValue)
+                  (s.genericGetMin.asInstanceOf[Number].longValue,
+                    s.genericGetMax.asInstanceOf[Number].longValue)
                 ok += name
                 accL(name) = accL.get(name) match {
                   case Some((a, b2)) => (math.min(a, lo), math.max(b2, hi))
@@ -1983,10 +2003,11 @@ object SnapshotLog {
       }
     }
 
-    /** Write `df` under `tmp` partitioned by `partCol`, with TIMESTAMP
-      * columns emitted as INT64 micros instead of Spark's default
-      * INT96: INT96 is deprecated and carries NO parquet column
-      * statistics, which would leave timestamp columns permanently
+    /** Write `df` under `tmp` partitioned by [[writeLayout]]`(at,
+      * spec)`, with TIMESTAMP columns emitted as INT64 micros
+      * instead of Spark's default INT96: INT96 is deprecated and
+      * carries NO parquet column statistics, which would leave
+      * timestamp columns permanently
       * invisible to the footer zone maps (and so to merge/delete
       * pruning on event-time keys). Parquet exposes no per-write knob
       * (`ParquetUtils.prepareWrite` re-reads the SESSION conf into the
@@ -1998,8 +2019,8 @@ object SnapshotLog {
       * and two concurrent table writes can't see each other's value.
       * Clone cost is driver-side milliseconds against a commit that
       * runs a Spark job. */
-    private def writeTmp(phys0: DataFrame, partCol: String, tmp: Path,
-        at: Int, distribute: Boolean = true): Unit = {
+    private def writeTmp(phys0: DataFrame, tmp: Path, at: Int,
+        spec: Seq[Entry], distribute: Boolean = true): Unit = {
       // schema evolution at the write boundary: widened columns are
       // CAST so post-widening footers carry the wide type (readers
       // would upcast anyway — this keeps footer stats at the declared
@@ -2017,7 +2038,7 @@ object SnapshotLog {
         .foldLeft(normalized) { case (acc, (c, t, dft, _)) =>
           acc.withColumn(c, lit(dft).cast(t))
         }
-      val pc = physicalAt(at, partCol)
+      val pc = writeLayout(at, spec)
       val out = org.apache.spark.sql.graft.SparkInternals
         .ofRows(writeSession(phys.sparkSession), phys.queryExecution.analyzed)
       // hash-distribute the batch by the partition column before the
@@ -2125,18 +2146,19 @@ object SnapshotLog {
       * temp dir (see [[writeTmp]]; `distribute = false` keeps a
       * caller-shaped layout), adopt its leaves as version `v`'s files,
       * and drop the temp dir. Returns the adopted relative paths.
-      * `op` names the commit in its [[Trace]] spans. `df` must speak
-      * PHYSICAL column names (`partCol` stays logical): rewrites read
-      * raw files, and a logical batch is mapped once, by
-      * [[toPhysical]] at v - 1, before it lands. Mapping a raw frame
+      * `op` names the commit in its [[Trace]] spans; `spec` is an
+      * append's own entry ([[writeLayout]]). `df` must speak
+      * PHYSICAL column names: rewrites read raw files, and a logical
+      * batch is mapped once, by [[toPhysical]] at v - 1, before it
+      * lands. Mapping a raw frame
       * again breaks once a logical name is another column's physical
       * one (after `rename a -> b`, `rename c -> a`). */
-    private def land(df: DataFrame, partCol: String, v: Int, op: String,
-        distribute: Boolean = true): Seq[String] = {
+    private def land(df: DataFrame, v: Int, op: String,
+        spec: Seq[Entry] = Nil, distribute: Boolean = true): Seq[String] = {
       val tmp = new Path(s"$root/_tmp_v$v-${
         java.util.UUID.randomUUID.toString.take(8)}")
       Trace.span(s"$op:writeTmp")(
-        writeTmp(df, partCol, tmp, v - 1, distribute))
+        writeTmp(df, tmp, v - 1, spec, distribute))
       val added = Trace.span(s"$op:adopt")(adopt(tmp, v))
       fs.delete(tmp, true)
       added
@@ -2155,6 +2177,20 @@ object SnapshotLog {
           added.map(Entry(v, "add", _)) ++ statsEntries(v, added) ++
           extra, added))
       buildBlooms(v, added)
+    }
+
+    /** The rewrite every file-scoped commit (range and partition
+      * delete, DV materialization, compaction, clustering) shares:
+      * read `victims` at v - 1 through their DVs, reshape the rows
+      * with `f`, land them under the spec and swap them in as one
+      * segment. No victims: the honest no-op commit (the version
+      * advances, the fold is unchanged). */
+    private def rewriteFiles(v: Int, victims: Seq[String], op: String,
+        distribute: Boolean = true)(f: DataFrame => DataFrame): Int = {
+      if (victims.isEmpty) publishSegment(v, Seq.empty)
+      else publishRewrite(v, victims, land(f(readFilesMorAt(v - 1,
+        victims)), v, op, distribute = distribute), Nil, op)
+      v
     }
 
     /** Rebase-on-conflict publish for APPEND-shaped commits: a pure
@@ -2195,7 +2231,8 @@ object SnapshotLog {
     }
 
     /** Append commit: write `df` partitioned by `partCol`, adopt the
-      * files, publish the segment. Nothing existing is touched. With
+      * files, publish the segment (with a `spec` entry when `partCol`
+      * is new to the log). Nothing existing is touched. With
       * no `expectedVersion` (the default), a lost version race
       * REBASES onto the new tip metadata-only (see
       * [[publishAppendRebase]]); an explicit expectation surfaces the
@@ -2204,15 +2241,17 @@ object SnapshotLog {
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
       checkConstraints(df)
-      val added = land(toPhysical(df, v - 1), partCol, v, "append")
+      val phys = toPhysical(df, v - 1)
+      val spec = declareSpec(v, physicalAt(v - 1, partCol), phys.schema)
+      val added = land(phys, v, "append", spec)
       val base = added.map(Entry(v, "add", _)) ++
-        Trace.span("append:stats")(statsEntries(v, added))
+        Trace.span("append:stats")(statsEntries(v, added)) ++ spec
       val ver = Trace.span("append:publish") {
         if (expectedVersion >= 0) { publishOrCleanup(v, base, added); v }
         else publishAppendRebase(v, base, added)
       }
       buildBlooms(ver, added)
-      maybeAutoCompact(partCol)
+      maybeAutoCompact()
       ver
     }
 
@@ -2230,8 +2269,10 @@ object SnapshotLog {
       val v = casCheck(expectedVersion)
       checkConstraints(df)
       val victims = liveFiles(v - 1)
-      val added = land(toPhysical(df, v - 1), partCol, v, "overwrite")
-      publishRewrite(v, victims, added, Nil, "overwrite")
+      val phys = toPhysical(df, v - 1)
+      val spec = declareSpec(v, physicalAt(v - 1, partCol), phys.schema)
+      val added = land(phys, v, "overwrite", spec)
+      publishRewrite(v, victims, added, spec, "overwrite")
       v
     }
 
@@ -2281,10 +2322,12 @@ object SnapshotLog {
       val withId = ranked
         .withColumn(idCol, col("__id_rn") + lit(wm)).drop("__id_rn")
       checkConstraints(withId)
-      val added = land(toPhysical(withId, v - 1), partCol, v, "identity")
+      val phys = toPhysical(withId, v - 1)
+      val spec = declareSpec(v, physicalAt(v - 1, partCol), phys.schema)
+      val added = land(phys, v, "identity", spec)
       publishRewrite(v, Nil, added,
-        Seq(Entry(v, "idwm", s"$idPhys|${wm + total}")), "identity")
-      maybeAutoCompact(partCol)
+        Entry(v, "idwm", s"$idPhys|${wm + total}") +: spec, "identity")
+      maybeAutoCompact()
       v
     }
 
@@ -2317,7 +2360,8 @@ object SnapshotLog {
         require(bad == 0,
           s"constraint $name is violated by existing rows")
       }
-      publishSegment(v, Seq(Entry(v, "constraint", s"$name|${hex(sqlExpr)}")))
+      publishSegment(v,
+        Seq(Entry(v, "constraint", s"$name|${hexStr(sqlExpr)}")))
       v
     }
 
@@ -2334,7 +2378,7 @@ object SnapshotLog {
       entries.foldLeft(Map.empty[String, String]) {
         case (acc, Entry(_, "constraint", p)) =>
           val Array(n, ex) = p.split('|')
-          acc + (n -> unhex(ex))
+          acc + (n -> unhexStr(ex))
         case (acc, Entry(_, "unconstraint", n)) => acc - n
         case (acc, _)                           => acc
       }
@@ -2415,11 +2459,6 @@ object SnapshotLog {
     /** [[asOf]] at the version a tag names. */
     def asOfTag(name: String): DataFrame =
       asOf(tags.getOrElse(name,
-        throw new IllegalArgumentException(s"no tag $name")))
-
-    /** [[asOfMor]] at the version a tag names. */
-    def asOfMorTag(name: String): DataFrame =
-      asOfMor(tags.getOrElse(name,
         throw new IllegalArgumentException(s"no tag $name")))
 
     /** RESTORE the table to the live state of `targetVersion` as a
@@ -2505,15 +2544,17 @@ object SnapshotLog {
       else {
         val v = version + 1
         checkConstraints(df)
-        val added = land(toPhysical(df, v - 1), partCol, v, "txn")
+        val phys = toPhysical(df, v - 1)
+        val spec = declareSpec(v, physicalAt(v - 1, partCol), phys.schema)
+        val added = land(phys, v, "txn", spec)
         // rebase-safe: only THIS writer ever publishes this txnId (the
         // sink owns its batch ids), so re-stamping onto a new tip can
         // never race a duplicate of itself into the log
         val ver = publishAppendRebase(v,
-          added.map(Entry(v, "add", _)) ++ statsEntries(v, added) :+
+          added.map(Entry(v, "add", _)) ++ statsEntries(v, added) ++ spec :+
             Entry(v, "txn", txnId), added)
         buildBlooms(ver, added)
-        maybeAutoCompact(partCol)
+        maybeAutoCompact()
         true
       }
     }
@@ -2558,12 +2599,15 @@ object SnapshotLog {
           s"streamed-file adopt failed: $rel")
         dest
       }
+      // the streaming writer encodes a STRING partition column
+      val pc = physicalAt(v - 1, partCol)
+      val spec = declareSpec(v, pc, new StructType().add(pc, StringType))
       val ver = publishAppendRebase(v,
-        added.map(Entry(v, "add", _)) ++ statsEntries(v, added) :+
+        added.map(Entry(v, "add", _)) ++ statsEntries(v, added) ++ spec :+
           Entry(v, "txn", txnId), added)
       buildBlooms(ver, added)
       fs.delete(staging, true)
-      maybeAutoCompact(partCol)
+      maybeAutoCompact()
       true
     }
 
@@ -2612,7 +2656,8 @@ object SnapshotLog {
       * partition's live files with only the rows satisfying `keep`;
       * one version carries remove(old)+add(survivors). Files of other
       * partition values are untouched — the COW blast radius is the
-      * set of files that can contain victims. */
+      * set of files that can contain victims. Survivors land under
+      * the current [[partitionSpec]]. */
     def commitDeleteWhere(partCol: String, value: String, keep: Column,
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
@@ -2621,10 +2666,7 @@ object SnapshotLog {
       require(victims.nonEmpty, s"no live files under $prefix")
       // read exactly the victim files (they ARE the partition's live
       // set), through their active DVs — the rewrite retires them
-      val added = land(readFilesMorAt(v - 1, victims).filter(keep),
-        partCol, v, "deleteWhere")
-      publishRewrite(v, victims, added, Nil, "deleteWhere")
-      v
+      rewriteFiles(v, victims, "deleteWhere")(_.filter(keep))
     }
 
     /** Row-level DELETE of the rows in `range` ACROSS partitions: the
@@ -2644,7 +2686,7 @@ object SnapshotLog {
       * the fold is unchanged — an honest audit record of the no-op).
       * A [[KeyRange.Partitions]] range needs no rewrite at all: it is
       * the metadata-only [[commitDeletePartitions]]. */
-    def commitDeleteRange(partCol: String, range: KeyRange,
+    def commitDeleteRange(range: KeyRange,
         expectedVersion: Int = -1): Int = range match {
       case KeyRange.Partitions(c, values) =>
         commitDeletePartitions(c, values, expectedVersion)
@@ -2654,12 +2696,8 @@ object SnapshotLog {
         // v - 1 snapshot as the candidate prune — never the live
         // `version`
         val pc = physicalAt(v - 1, range.col)
-        val victims = prunePhysical(v - 1, range, pc)
-        if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
-        val added = land(readFilesMorAt(v - 1, victims) // DV-applied
-          .filter(outside(range, pc)), partCol, v, "delete")
-        publishRewrite(v, victims, added, Nil, "delete")
-        v
+        rewriteFiles(v, prunePhysical(v - 1, range, pc), "delete")(
+          _.filter(outside(range, pc)))
     }
 
     /** The rows a range delete or replace keeps, over physical column
@@ -2693,7 +2731,7 @@ object SnapshotLog {
       * batch that smuggled rows into the UNTOUCHED region would
       * silently duplicate keys there, so it is rejected loudly before
       * any byte moves. */
-    def commitReplaceWhere(partCol: String, range: KeyRange, df0: DataFrame,
+    def commitReplaceWhere(range: KeyRange, df0: DataFrame,
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
       val pc = physicalAt(v - 1, range.col)
@@ -2710,7 +2748,7 @@ object SnapshotLog {
         else readFilesMorAt(v - 1, victims)
           .filter(keep)
           .select(df.columns.toIndexedSeq.map(col): _*)
-      val added = land(survivors.unionByName(df), partCol, v, "replace")
+      val added = land(survivors.unionByName(df), v, "replace")
       publishRewrite(v, victims, added, Nil, "replace")
       v
     }
@@ -2733,9 +2771,8 @@ object SnapshotLog {
       * [[writeTmp]] maps back to physical — so UPDATE composes with
       * renames, widenings, defaults and MOR deletes for free. Updated
       * rows re-validate the table's CHECK constraints. */
-    def commitUpdate(partCol: String, range: KeyRange,
-        set: Map[String, Column], cond: Option[Column] = None,
-        expectedVersion: Int = -1): Int = {
+    def commitUpdate(range: KeyRange, set: Map[String, Column],
+        cond: Option[Column] = None, expectedVersion: Int = -1): Int = {
       require(set.nonEmpty, "UPDATE needs at least one assignment")
       val v = casCheck(expectedVersion)
       val victims = pruneFiles(v - 1, range)
@@ -2753,7 +2790,7 @@ object SnapshotLog {
           .map(e => when(inRange, e).otherwise(col(cn)).as(cn))
           .getOrElse(col(cn))): _*)
       checkConstraints(updated)
-      val added = land(toPhysical(updated, v - 1), partCol, v, "update")
+      val added = land(toPhysical(updated, v - 1), v, "update")
       publishRewrite(v, victims, added, Nil, "update")
       v
     }
@@ -2783,7 +2820,7 @@ object SnapshotLog {
       * the candidate probe, the hit scan, the survivors' anti join and
       * the write all read the same rows, even from a nondeterministic
       * source. */
-    def commitMerge(source0: DataFrame, partCol: String, keyCol0: String,
+    def commitMerge(source0: DataFrame, keyCol0: String,
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
       val (pinned, facts) = pinSource(source0, keyCol0)
@@ -2812,7 +2849,7 @@ object SnapshotLog {
             "left_anti")
           .select(source.columns.toIndexedSeq.map(col): _*)
           .unionByName(source)
-      val added = land(rewritten, partCol, v, "merge")
+      val added = land(rewritten, v, "merge")
       publishRewrite(v, hits, added, Nil, "merge")
       v
     }
@@ -2933,10 +2970,7 @@ object SnapshotLog {
       // hauls its key set to the driver
       facts.keys match {
         case Some(ks) if bloomCols.contains(keyCol) && rangeCand.nonEmpty =>
-          bloomSurvivors(rangeCand, keyCol,
-            if (facts.dt == LongType)
-              keyHashes(ks.map(_.asInstanceOf[Long])).values.toSeq
-            else keyHashesStr(ks.map(_.asInstanceOf[String])))
+          bloomSurvivorsAny(rangeCand, keyCol, ks)
         case _ => rangeCand
       }
     }
@@ -3009,11 +3043,10 @@ object SnapshotLog {
       * their existing id through a MERGE UPDATE) pass through
       * untouched — identity values are assigned once, never
       * reassigned. */
-    def commitApplyChanges(changes: DataFrame, partCol: String,
-        keyCol: String, opCol: String = "__op",
-        expectedVersion: Int = -1,
+    def commitApplyChanges(changes: DataFrame, keyCol: String,
+        opCol: String = "__op", expectedVersion: Int = -1,
         identityCol: Option[String] = None): Int =
-      applyChangesImpl(changes, partCol, keyCol, opCol,
+      applyChangesImpl(changes, keyCol, opCol,
         casCheck(expectedVersion), Seq.empty, identityCol)
 
     /** [[commitApplyChanges]] keyed by `txnId` — the exactly-once CDC
@@ -3024,22 +3057,21 @@ object SnapshotLog {
       * later batch). Returns false when the txn was already
       * committed; the marker rides the same segment as the rewrite,
       * so apply and dedup record are one atomic publish. */
-    def commitApplyChangesIdempotent(changes: DataFrame, partCol: String,
-        keyCol: String, txnId: String, opCol: String = "__op"): Boolean = {
+    def commitApplyChangesIdempotent(changes: DataFrame, keyCol: String,
+        txnId: String, opCol: String = "__op"): Boolean = {
       require(!txnId.contains(",") && !txnId.contains("\n"),
         s"txnId must be log-safe: $txnId")
       if (committedTxns.contains(txnId)) false
       else {
         val v = version + 1
-        applyChangesImpl(changes, partCol, keyCol, opCol, v,
+        applyChangesImpl(changes, keyCol, opCol, v,
           Seq(Entry(v, "txn", txnId)))
         true
       }
     }
 
-    private def applyChangesImpl(changes0: DataFrame, partCol: String,
-        keyCol0: String, opCol: String, v: Int,
-        extraEntries: Seq[Entry],
+    private def applyChangesImpl(changes0: DataFrame, keyCol0: String,
+        opCol: String, v: Int, extraEntries: Seq[Entry],
         identityCol: Option[String] = None): Int = {
       // one evaluation of the batch (see [[pinSource]]); column
       // mapping at the boundary (identity unless renamed); opCol is
@@ -3090,7 +3122,7 @@ object SnapshotLog {
       val rewritten = survivors
         .select(upserts.columns.toIndexedSeq.map(col): _*)
         .unionByName(upserts)
-      val added = land(rewritten, partCol, v, "applyChanges")
+      val added = land(rewritten, v, "applyChanges")
       publishRewrite(v, hits, added, idEntries ++ extraEntries,
         "applyChanges")
       v
@@ -3138,30 +3170,26 @@ object SnapshotLog {
           col("value").cast("long").as("__pos"))
     }
 
-    /** The active delete relation at `v`; None when no DVs are live. */
-    private def dvRelation(v: Int): Option[DataFrame] = {
-      val dvs = dvFor(v)
-      if (dvs.isEmpty) None else Some(dvRelationFor(dvs))
-    }
-
     /** The raw read of `rels` at `v` ([[readAt]]) with the deletion
       * vectors active at `v` APPLIED for exactly those files — the
       * mandatory victim-read of every rewrite path (merge, CDC apply,
-      * range/partition delete, compact, cluster, materialize). Not
-      * counted in [[lastScanPrune]]. The dvFor fold retires a file's DV on
+      * range/partition delete, compact, cluster, materialize) and of
+      * [[asOfMor]], which alone passes `recordPrune` and `partTypes`
+      * (see [[readAt]]). The dvFor fold retires a file's DV on
       * its `remove` entry, so a rewrite that read its victims raw
       * would copy MOR-deleted rows into the new file and then silently
       * retire the only record of their deletion — resurrecting them
       * for every reader AND double-counting them in the change feed.
       * Production formats apply DVs in every rewrite (Delta OPTIMIZE /
       * MERGE, Iceberg rewrites) for exactly this reason. */
-    private[graft] def readFilesMorAt(v: Int, rels: Seq[String])
-        : DataFrame = {
+    private[graft] def readFilesMorAt(v: Int, rels: Seq[String],
+        recordPrune: (Int, Int) => Unit = (_, _) => (),
+        partTypes: StructType = new StructType()): DataFrame = {
       val fold = foldState()
       val keep = rels.toSet
       val dvs = fold.dvFor(v).filter { case (rel, _) => keep(rel) }
-      if (dvs.isEmpty) readAt(rels, v, fold)
-      else readAt(rels, v, fold, withPos = true)
+      if (dvs.isEmpty) readAt(rels, v, fold, recordPrune, partTypes)
+      else readAt(rels, v, fold, recordPrune, partTypes, withPos = true)
         .join(dvRelationFor(dvs), Seq("__f", "__pos"), "left_anti")
         .drop("__f", "__pos")
     }
@@ -3339,9 +3367,8 @@ object SnapshotLog {
       * target that breaks it ([[guardMerge]]). The source is evaluated
       * once ([[pinSource]]), and the candidate scan once: the hit rows
       * are persisted across the guard and the DV build. */
-    def commitMergeMor(source0: DataFrame, partCol: String,
-        keyCol0: String, expectedVersion: Int = -1,
-        guardUniqueness: Boolean = false): Int = {
+    def commitMergeMor(source0: DataFrame, keyCol0: String,
+        expectedVersion: Int = -1, guardUniqueness: Boolean = false): Int = {
       val v = casCheck(expectedVersion)
       val (pinned, facts) = pinSource(source0, keyCol0)
       checkConstraints(pinned)
@@ -3358,7 +3385,7 @@ object SnapshotLog {
         if (guardUniqueness)
           guardMerge(source, matched, keyCol, keyCol0, facts.rows)
         // adopt the source batch first (plain adds), then the tombstones
-        val added = land(source, partCol, v, "mergeMor")
+        val added = land(source, v, "mergeMor")
         val dvEntries =
           matched.map(buildDvSidecars(v, _, candidates)).getOrElse(Nil)
         // a lost race reclaims the adds AND the (writer-unique) sidecars
@@ -3376,17 +3403,10 @@ object SnapshotLog {
       * anti-join is exact; Spark plans it as a broadcast when the DV
       * side is small (the common case — DVs are deferred rewrites,
       * compaction keeps them bounded). */
-    def asOfMor(v: Int, partTypes: StructType = new StructType())
-        : DataFrame = dvRelation(v) match {
-      case None => asOf(v, partTypes = partTypes)
-      case Some(dv) =>
-        val fold = foldState()
-        val files = fold.liveFiles(v)
-        require(files.nonEmpty, s"version $v of $root has no live files")
-        applyMapping(v, readAt(files, v, fold, recordScanPrune,
-          physicalTypes(v, partTypes), withPos = true)
-          .join(dv, Seq("__f", "__pos"), "left_anti")
-          .drop("__f", "__pos"))
+    def asOfMor(v: Int, partTypes: StructType = new StructType()): DataFrame = {
+      val files = liveFiles(v)
+      require(files.nonEmpty, s"version $v of $root has no live files")
+      applyMapping(v, readFilesMorAt(v, files, recordScanPrune, partTypes))
     }
 
     /** Materialize the active deletion vectors: rewrite ONLY the
@@ -3397,16 +3417,10 @@ object SnapshotLog {
       * compaction half of the merge-on-read bargain. Pure
       * reorganization of surviving rows: the change feed shows
       * remove(dv'd files) + add(survivors). */
-    def commitMaterializeDv(partCol: String,
-        expectedVersion: Int = -1): Int = {
+    def commitMaterializeDv(expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
-      val dvs = dvFor(v - 1)
-      if (dvs.isEmpty) { publishSegment(v, Seq.empty); return v }
-      val victims = dvs.keys.toSeq.sorted
-      val added = land(readFilesMorAt(v - 1, victims), partCol, v,
-        "materializeDv")
-      publishRewrite(v, victims, added, Nil, "materializeDv")
-      v
+      rewriteFiles(v, dvFor(v - 1).keys.toSeq.sorted, "materializeDv")(
+        identity)
     }
 
     /** Vacuum: physically delete files whose `remove` version is at or
@@ -3485,11 +3499,7 @@ object SnapshotLog {
       val bound = entries.collect { case Entry(_, "dv", p) =>
         val Array(rel, id) = p.split('|'); s"$rel.$id.dv"
       }.toSet
-      fs.listStatus(dd).filter(_.isDirectory).toSeq.flatMap { d =>
-        fs.listStatus(d.getPath).filter(_.isFile).toSeq
-          .map(f => s"${d.getPath.getName}/${f.getPath.getName}")
-          .filter(p => p.endsWith(".dv") && !bound.contains(p))
-      }
+      filesUnder(dd).filter(p => p.endsWith(".dv") && !bound.contains(p))
     }
 
     /** Compaction: bin-pack each partition's live files into
@@ -3500,15 +3510,11 @@ object SnapshotLog {
       * sees a net_delta of exactly 0. The small-files problem is the
       * canonical failure mode of long-lived append logs at 100 TB —
       * thousands of commit-sized files per partition — and compaction
-      * is the answer that does NOT lose history. */
-    def commitCompact(partCol: String,
-        filesPerPartition: Int = 1, expectedVersion: Int = -1): Int = {
+      * is the answer that does NOT lose history. Old-layout rows move
+      * to the current [[partitionSpec]]. */
+    def commitCompact(filesPerPartition: Int = 1,
+        expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
-      val victims = liveFiles(v - 1)
-      // empty table: nothing to reorganize — publish the honest no-op
-      // commit (version advances, fold unchanged), as the range
-      // delete does for a range no file can contain
-      if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
       // rows of one partition value spread over at most
       // filesPerPartition shuffle tasks (the __bin column), so each
       // partition dir compacts to at most that many files — one task
@@ -3516,13 +3522,11 @@ object SnapshotLog {
       // through their DVs: compaction removes every file, retiring
       // every DV binding, so it must apply them (it doubles as a
       // materialization — exactly Delta's OPTIMIZE contract).
-      val added = land(readFilesMorAt(v - 1, victims)
-        .withColumn("__bin", pmod(monotonically_increasing_id(),
+      rewriteFiles(v, liveFiles(v - 1), "compact", distribute = false)(
+        _.withColumn("__bin", pmod(monotonically_increasing_id(),
           lit(filesPerPartition.toLong)).cast("int"))
-        .repartition(col(physicalAt(v - 1, partCol)), col("__bin"))
-        .drop("__bin"), partCol, v, "compact", distribute = false)
-      publishRewrite(v, victims, added, Nil, "compact")
-      v
+        .repartition(col(writeLayout(v - 1, Nil)), col("__bin"))
+        .drop("__bin"))
     }
 
     /** Zero-copy snapshot CLONE: populate THIS (empty) table with the
@@ -3589,18 +3593,14 @@ object SnapshotLog {
       // original order): the same entries fold to the same mapping by
       // definition — emitting the FOLDED state as fresh renames would
       // need a topological order and a temp name for rename cycles
-      // (a→tmp, b→a, tmp→b swaps are legal history).
-      val colmap = src.entries
-        .filter(e => e.action == "colmap" && e.version <= srcVersion)
-        .map(e => Entry(1, "colmap", e.path))
-      // TYPE WIDENING and DEFAULT columns clone too (same reasoning:
-      // linked files carry the PHYSICAL truth — narrow footers and
-      // absent columns — so without these entries the clone would
-      // read narrow types and drop default fills). DEFAULT-era is
-      // keyed on the stats entries carried above, NOT on add
-      // versions, precisely so this re-stamp-to-v1 is harmless.
+      // (a→tmp, b→a, tmp→b swaps are legal history). TYPE WIDENING,
+      // DEFAULT columns and the PARTITION SPEC clone the same way
+      // (linked files carry narrow footers, absent columns and untyped
+      // `col=value` dirs). DEFAULT-era is keyed on the stats entries
+      // carried above, NOT on add versions, precisely so this
+      // re-stamp-to-v1 is harmless.
       val evolution = src.entries
-        .filter(e => (e.action == "widen" || e.action == "coldefault")
+        .filter(e => Set("colmap", "widen", "coldefault", "spec")(e.action)
           && e.version <= srcVersion)
         .map(e => Entry(1, e.action, e.path))
       // a lost publish race (two cloners, or a concurrent writer that
@@ -3608,8 +3608,7 @@ object SnapshotLog {
       // bound — links are cheap to re-create and the winner's state
       // must not inherit a loser's unreferenced names
       try publishSegment(1,
-        files.sorted.map(Entry(1, "add", _)) ++ stats ++ colmap ++
-          evolution ++
+        files.sorted.map(Entry(1, "add", _)) ++ stats ++ evolution ++
           dvs.toSeq.sortBy(_._1).map { case (rel, id) =>
             Entry(1, "dv", s"$rel|$id") })
       catch {
@@ -3638,7 +3637,8 @@ object SnapshotLog {
       * Pass `targetFileBytes` > 0 to size bins by BYTES instead of
       * count (production OPTIMIZE's contract — ~1 GB output files
       * regardless of how many inputs there are), computed from the
-      * manifest's recorded file lengths with zero filesystem calls. */
+      * manifest's recorded file lengths with zero filesystem calls.
+      * Bins land under the current [[partitionSpec]]. */
     def commitCompactPartition(partCol: String, value: String,
         filesPerPartition: Int = 1, expectedVersion: Int = -1,
         targetFileBytes: Long = 0): Int = {
@@ -3667,25 +3667,26 @@ object SnapshotLog {
       // one task (the output would have FEWER, larger files than the
       // byte target sized — harmless for count-targeted whole-table
       // compaction, wrong for a byte-targeted contract)
-      val added = land(readFilesMorAt(v - 1, victims)
-        .withColumn("__bin", pmod(monotonically_increasing_id(),
+      rewriteFiles(v, victims, "compactPartition", distribute = false)(
+        _.withColumn("__bin", pmod(monotonically_increasing_id(),
           lit(bins.toLong)).cast("int"))
         .repartitionByRange(bins, col("__bin"))
-        .drop("__bin"), partCol, v, "compactPartition", distribute = false)
-      publishRewrite(v, victims, added, Nil, "compactPartition")
-      v
+        .drop("__bin"))
     }
 
     /** The [[autoCompactAt]] trigger, run after each append-shaped
-      * commit: any partition of THIS commit's layout holding >= the
-      * threshold compacts to one file. Failures (including lost CAS
-      * races against a concurrent writer) never fail the triggering
-      * commit — the policy is best-effort per commit, convergent
-      * across commits. Compaction commits do not re-trigger. */
-    private def maybeAutoCompact(partCol: String): Unit =
+      * commit: any partition of the current [[partitionSpec]] holding
+      * >= the threshold compacts to one file. Failures (including
+      * lost CAS races against a concurrent writer) never fail the
+      * triggering commit — the policy is best-effort per commit,
+      * convergent across commits. Compaction commits do not
+      * re-trigger. */
+    private def maybeAutoCompact(): Unit =
       if (autoCompactAt > 0) try {
-        val ppc = physicalAt(version, partCol) // dirs speak physical
-        liveFiles(version).groupBy(_.split('/').head)
+        val v = version
+        val ppc = writeLayout(v, Nil) // dirs speak physical
+        val logical = columnMapping(v)._1.find(_._2 == ppc).fold(ppc)(_._1)
+        liveFiles(v).groupBy(_.split('/').head)
           .foreach { case (dir, fs) =>
             if (fs.size >= autoCompactAt &&
                 dir.startsWith(s"$ppc="))
@@ -3693,7 +3694,7 @@ object SnapshotLog {
               // the logical one (and re-escapes) — unescape here or
               // a value that needed escaping double-escapes and the
               // compaction never matches its own partition
-              commitCompactPartition(partCol,
+              commitCompactPartition(logical,
                 unescapePart(dir.substring(ppc.length + 1)))
           }
       } catch { case scala.util.control.NonFatal(_) => () }
@@ -3728,17 +3729,11 @@ object SnapshotLog {
       * with no new index structure. Pure reorganization: AS-OF row
       * identity, net-zero change feed, DVs applied, history readable —
       * the [[commitCompact]] invariants. */
-    def commitClusterZ(partCol: String, colA0: String, colB0: String,
+    def commitClusterZ(colA0: String, colB0: String,
         filesPerRange: Int, expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
       val colA = physicalAt(v - 1, colA0) // rewrite reads raw (physical)
       val colB = physicalAt(v - 1, colB0)
-      val victims = liveFiles(v - 1)
-      if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
-      val src = readFilesMorAt(v - 1, victims)
-      val r = src.agg(
-        min(col(colA).cast("long")), max(col(colA).cast("long")),
-        min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
       // bucketization must SCALE EVERY DOMAIN TO THE FULL 16 BITS, not
       // merely divide wide ones down: a narrow domain (epoch days span
       // ~2.4k values) left with its natural magnitude has constant-0
@@ -3777,28 +3772,26 @@ object SnapshotLog {
         val s3 = s2.bitwiseOR(shiftleft(s2, 2)).bitwiseAND(lit(0x33333333L))
         s3.bitwiseOR(shiftleft(s3, 1)).bitwiseAND(lit(0x55555555L))
       }
-      val z =
-        if (r.isNullAt(0) || r.isNullAt(2)) lit(0L) // all-null dims
-        else shiftleft(spread(bucket(colA, r.getLong(0), r.getLong(1))), 1)
-          .bitwiseOR(spread(bucket(colB, r.getLong(2), r.getLong(3))))
-      val added = land(src.withColumn("__z", z)
-        .repartitionByRange(filesPerRange, col("__z"))
-        .drop("__z"), partCol, v, "clusterZ", distribute = false)
-      publishRewrite(v, victims, added, Nil, "clusterZ")
-      v
+      rewriteFiles(v, liveFiles(v - 1), "clusterZ", distribute = false) {
+        src =>
+          val r = src.agg(
+            min(col(colA).cast("long")), max(col(colA).cast("long")),
+            min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
+          val z =
+            if (r.isNullAt(0) || r.isNullAt(2)) lit(0L) // all-null dims
+            else shiftleft(spread(bucket(colA, r.getLong(0), r.getLong(1))), 1)
+              .bitwiseOR(spread(bucket(colB, r.getLong(2), r.getLong(3))))
+          src.withColumn("__z", z)
+            .repartitionByRange(filesPerRange, col("__z")).drop("__z")
+      }
     }
 
-    def commitCluster(partCol: String, clusterCol: String,
+    def commitCluster(clusterCol: String,
         filesPerRange: Int, expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
-      val victims = liveFiles(v - 1)
-      if (victims.isEmpty) { publishSegment(v, Seq.empty); return v }
-      val added = land(readFilesMorAt(v - 1, victims) // DV-applied
-        .repartitionByRange(filesPerRange,
-          col(physicalAt(v - 1, clusterCol))), partCol, v, "cluster",
-        distribute = false)
-      publishRewrite(v, victims, added, Nil, "cluster")
-      v
+      rewriteFiles(v, liveFiles(v - 1), "cluster", distribute = false)(
+        _.repartitionByRange(filesPerRange,
+          col(physicalAt(v - 1, clusterCol))))
     }
   }
 

@@ -1201,7 +1201,7 @@ object StreamingOps {
                       .as("sum_cents"))
               if (summary.version == 0)
                 summary.commitAppend(merged, "event_type")
-              else summary.commitMerge(merged, "event_type", "event_type")
+              else summary.commitMerge(merged, "event_type")
             }
             ()
           }
@@ -1253,6 +1253,9 @@ object StreamingOps {
         .select(col("event_id"), col("event_type"),
           expr("cast(round(value * 100) as bigint)").as("cents"))
         .transform(localCheckpoint) // feeds all four slices + the tombstone scan
+      // v1, empty: only an append declares the partition column the
+      // CDC commits rewrite under
+      t.commitAppend(ev.limit(0), "event_type")
       // slice k: own upserts + tombstones for earlier slices' %7==k keys
       def land(k: Int): Unit = {
         val ups = ev.filter(col("event_id") % 4 === k)
@@ -1274,8 +1277,7 @@ object StreamingOps {
             .option("maxFilesPerTrigger", "1").parquet(srcDir)
             .writeStream
             .foreachBatch { (bdf: DataFrame, bid: Long) =>
-              t.commitApplyChangesIdempotent(
-                bdf, "event_type", "event_id", s"cdc-$bid")
+              t.commitApplyChangesIdempotent(bdf, "event_id", s"cdc-$bid")
               ()
             }
             .option("checkpointLocation", ckpt)
@@ -1292,7 +1294,7 @@ object StreamingOps {
       // tombstoned
       val dup = t.commitApplyChangesIdempotent(
         ev.filter(col("event_id") % 4 === 0).withColumn("__op", lit("U")),
-        "event_type", "event_id", "cdc-0")
+        "event_id", "cdc-0")
       require(!dup, "duplicate CDC txn was admitted — exactly-once broken")
       val out = t.asOf(t.version)
         .groupBy("event_type")

@@ -451,6 +451,104 @@ class CatalogSqlSpec extends SparkSpec {
     rm(wh)
   }
 
+  test("an UPDATE, a MERGE and a compaction keep a STRING partition " +
+    "value that looks numeric") {
+    val old = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val es = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .withExtensions(new GraftExtensions().apply(_))
+      .getOrCreate()
+    try {
+      val wh = java.nio.file.Files
+        .createTempDirectory("graft_sqlnum_").toString
+      es.conf.set("spark.sql.catalog.gn", "graft.catalog.GraftCatalog")
+      es.conf.set("spark.sql.catalog.gn.warehouse", wh)
+      import es.implicits._
+      Seq((1L, "01", 11L)).toDF("k", "part", "v")
+        .createOrReplaceTempView("nsrc")
+      // each rewrite reads its victims back and writes them again:
+      // '01' must come back as '01' and land under part=01/
+      Seq(
+        "update" -> "UPDATE gn.t SET v = v + 1 WHERE k >= 1 AND k <= 1",
+        "merge" -> ("MERGE INTO gn.t USING nsrc ON t.k = nsrc.k " +
+          "WHEN MATCHED THEN UPDATE SET v = t.v + 1"),
+        "compact" -> "CALL gn.system.compact(table => 't')"
+      ).foreach { case (what, stmt) =>
+        es.sql("DROP TABLE IF EXISTS gn.t")
+        es.sql("CREATE TABLE gn.t (k BIGINT, part STRING, v BIGINT) " +
+          "PARTITIONED BY (part)")
+        es.sql("INSERT INTO gn.t VALUES (1, '01', 10), (2, '1', 20)")
+        es.sql(stmt).collect()
+        val rows = es.sql("SELECT k, part, v FROM gn.t ORDER BY k")
+          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+          .toSeq
+        val v1 = if (what == "compact") 10L else 11L
+        assert(rows == Seq((1L, "01", v1), (2L, "1", 20L)),
+          s"$what re-typed the partition value: $rows")
+        val api = new SnapshotLog.Table(es, s"$wh/t")
+        assert(api.version == 2)
+        val k1File = api.asOf(2).where(col("k") === 1L)
+          .select(input_file_name()).head().getString(0)
+        assert(api.entries.exists(e => e.version == 2 &&
+          e.action == "add" && k1File.endsWith(e.path)),
+          s"$what did not rewrite k=1's file: $k1File")
+        assert(k1File.contains("/part=01/"),
+          s"$what wrote k=1 outside part=01/: $k1File")
+      }
+      rm(wh)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(old)
+      org.apache.spark.sql.SparkSession.setActiveSession(old)
+    }
+  }
+
+  test("MERGE INTO a table no INSERT has written declares its " +
+    "partition column with an empty append first") {
+    val old = spark
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    val es = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .withExtensions(new GraftExtensions().apply(_))
+      .getOrCreate()
+    try {
+      val wh = java.nio.file.Files
+        .createTempDirectory("graft_sqlfresh_").toString
+      es.conf.set("spark.sql.catalog.gf", "graft.catalog.GraftCatalog")
+      es.conf.set("spark.sql.catalog.gf.warehouse", wh)
+      import es.implicits._
+      Seq((1L, "01", 10L), (2L, "b", 20L)).toDF("k", "part", "v")
+        .createOrReplaceTempView("fsrc")
+      Seq(
+        "mor" -> ("MERGE INTO gf.t USING fsrc ON t.k = fsrc.k WHEN " +
+          "MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"),
+        "cond" -> ("MERGE INTO gf.t USING fsrc ON t.k = fsrc.k " +
+          "WHEN NOT MATCHED THEN INSERT (k, part, v) " +
+          "VALUES (fsrc.k, fsrc.part, fsrc.v)")
+      ).foreach { case (what, stmt) =>
+        es.sql("DROP TABLE IF EXISTS gf.t")
+        es.sql("CREATE TABLE gf.t (k BIGINT, part STRING, v BIGINT) " +
+          "PARTITIONED BY (part)")
+        es.sql(stmt)
+        val api = new SnapshotLog.Table(es, s"$wh/t")
+        assert(api.version == 2, s"$what: v${api.version}")
+        assert(api.liveFiles(1).isEmpty && api.partitionSpec(1) ==
+          Some("part"), s"$what: v1 is not the empty declaring append")
+        assert(es.sql("SELECT k, part, v FROM gf.t ORDER BY k").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
+          Seq((1L, "01", 10L), (2L, "b", 20L)), what)
+      }
+      rm(wh)
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(old)
+      org.apache.spark.sql.SparkSession.setActiveSession(old)
+    }
+  }
+
   test("SQL UPDATE routes to the pruned COW range update " +
     "(extension rule)") {
     val old = spark

@@ -388,16 +388,15 @@ class CommitRaceSpec extends SparkSpec {
   // Each op is (table, expectedVersion) => committed version.
   private val k23 = KeyRange.Longs("k", 2L, 3L)
   for ((op, rewrite) <- Seq[(String, (SnapshotLog.Table, Int) => Int)](
-      "range delete" -> ((t, e) => t.commitDeleteRange("part", k23, e)),
-      "range update" -> ((t, e) => t.commitUpdate("part", k23,
+      "range delete" -> ((t, e) => t.commitDeleteRange(k23, e)),
+      "range update" -> ((t, e) => t.commitUpdate(k23,
         Map("v" -> (col("v") + 1)), expectedVersion = e)),
       "replace-where" -> ((t, e) => {
         import spark.implicits._
-        t.commitReplaceWhere("part", k23,
+        t.commitReplaceWhere(k23,
           Seq((2L, "a", 99L)).toDF("k", "part", "v"), e)
       }),
-      "compaction" -> ((t, e) => t.commitCompact("part",
-        expectedVersion = e)))) {
+      "compaction" -> ((t, e) => t.commitCompact(expectedVersion = e)))) {
   test(s"crashed $op at the publish seam: tip unchanged, version " +
     "recoverable, orphans reclaimable [s3sim]") {
     import spark.implicits._

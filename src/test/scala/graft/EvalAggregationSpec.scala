@@ -80,9 +80,8 @@ class EvalAggregationSpec extends SparkSpec {
       assert(ex.getMessage.contains("pos_v"))
     }
     bounces(t.commitAppend(bad, "part"))
-    bounces(t.commitMerge(bad, "part", "k"))
-    bounces(t.commitApplyChanges(bad.withColumn("__op", lit("U")),
-      "part", "k"))
+    bounces(t.commitMerge(bad, "k"))
+    bounces(t.commitApplyChanges(bad.withColumn("__op", lit("U")), "k"))
     bounces {
       t.stageAppend(bad, "part", "audit")
       try t.publishStaged("audit")
@@ -92,8 +91,7 @@ class EvalAggregationSpec extends SparkSpec {
     // constraint must not block it even though the batch's data
     // columns are garbage
     t.commitApplyChanges(
-      Seq((2L, "x", -1L, "D")).toDF("k", "part", "v", "__op"),
-      "part", "k")
+      Seq((2L, "x", -1L, "D")).toDF("k", "part", "v", "__op"), "k")
     assert(t.asOf(t.version).count() == 1)
     // registering a constraint the EXISTING data violates is refused
     val ex = intercept[IllegalArgumentException](

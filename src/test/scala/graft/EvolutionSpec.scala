@@ -93,8 +93,7 @@ class EvolutionSpec extends SparkSpec {
     t.widenColumn("k", "bigint")                                 // v2
     t.commitAppend(wideBatch(Seq(6_000_000_000L)).coalesce(1), "part")
     // COW merge over a candidate set that spans narrow AND wide files
-    t.commitMerge(Seq((2L, "a", 222L)).toDF("k", "part", "v"),
-      "part", "k")                                               // v4
+    t.commitMerge(Seq((2L, "a", 222L)).toDF("k", "part", "v"), "k") // v4
     assert(t.asOf(4).filter(col("k") === 2L).select("v")
       .head().getLong(0) == 222L)
     assert(t.asOf(4).count() == 3)
@@ -263,7 +262,7 @@ class EvolutionSpec extends SparkSpec {
     // the update: victims span a narrow pre-evolution file (with a
     // MOR-deleted row and default-filled scores) and a wide file;
     // SET speaks the RENAMED name and reads the row's own columns
-    t.commitUpdate("part", KeyRange.Longs("k", 2L, Long.MaxValue),
+    t.commitUpdate(KeyRange.Longs("k", 2L, Long.MaxValue),
       Map("metric" -> (col("metric") * 10 + col("score"))))          // v7
 
     val rows = t.asOfMor(7).select("k", "metric", "score").collect()
@@ -296,5 +295,108 @@ class EvolutionSpec extends SparkSpec {
     assert(rows == Set((1L, 7L), (3L, 7L)),
       s"MOR read lost widening or default: $rows")
     rm(root)
+  }
+
+  test("partition spec: after partition evolution MERGE, UPDATE and " +
+    "compaction write the newest layout and keep every value") {
+    val root = tmp("graft_specevo_")
+    val t = new SnapshotLog.Table(spark, root)
+    // both columns ride in every file: the one a layout shards by is
+    // dir-encoded, the other is a data column
+    def batch(ks: Seq[Long]) =
+      ks.map(k => (k, s"s${k % 2}", (k % 3).toInt, k * 10))
+        .toDF("k", "status", "band", "v")
+    t.commitAppend(batch(1L to 10L).coalesce(1), "status")       // v1
+    t.commitAppend(batch(11L to 20L).coalesce(1), "band")        // v2
+    assert(t.partitionSpec(1) == Some("status"))
+    assert(t.partitionSpec(2) == Some("band"))
+    assert(t.entries.filter(_.action == "spec")
+      .map(e => (e.version, e.path)) ==
+      Seq((1, "status|STRING"), (2, "band|INT")))
+    var want = (1L to 20L)
+      .map(k => k -> (s"s${k % 2}", (k % 3).toInt, k * 10)).toMap
+    // keys in both layouts
+    t.commitMerge(batch(Seq(3L, 13L)).withColumn("v", col("v") + 1),
+      "k")                                                       // v3
+    Seq(3L, 13L).foreach(k =>
+      want += k -> want(k).copy(_3 = want(k)._3 + 1))
+    t.commitUpdate(KeyRange.Longs("k", 5L, 15L),
+      Map("v" -> (col("v") + 100)))                              // v4
+    (5L to 15L).foreach(k =>
+      want += k -> want(k).copy(_3 = want(k)._3 + 100))
+    t.commitCompact()                                            // v5
+    (3 to 5).foreach { v =>
+      val adds = t.entries.filter(e => e.version == v && e.action == "add")
+      assert(adds.nonEmpty && adds.forall(_.path.startsWith("band=")),
+        s"v$v wrote outside the band layout: ${adds.map(_.path)}")
+      val got = t.asOf(v).select("k", "status", "band", "v").collect()
+        .map(r => r.getLong(0) -> (r.getString(1), r.getInt(2),
+          r.getLong(3))).toMap
+      if (v == 5) assert(got == want, s"values changed: $got")
+    }
+    assert(t.liveFiles(5).forall(_.startsWith("band=")))
+    assert(t.asOf(5).schema("band").dataType == IntegerType)
+    assert(t.entries.count(_.action == "spec") == 2)
+    rm(root)
+  }
+
+  test("partition spec: a renamed partition column keeps its entry " +
+    "through UPDATE, compaction and an append") {
+    val root = tmp("graft_specren_")
+    val t = new SnapshotLog.Table(spark, root)
+    t.commitAppend(Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L))
+      .toDF("k", "part", "v").coalesce(1), "part")                // v1
+    t.renameColumn("part", "region")                             // v2
+    t.commitUpdate(KeyRange.Longs("k", 2L, 2L),
+      Map("v" -> (col("v") + 1)))                                // v3
+    t.commitCompact()                                            // v4
+    def rows(v: Int) = t.asOf(v).select("k", "region", "v").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(rows(4) == Set((1L, "a", 10L), (2L, "b", 21L), (3L, "a", 30L)))
+    // the entry is keyed by the physical name, like colmap and stats
+    assert(t.partitionSpec(4) == Some("part"))
+    assert(t.liveFiles(4).forall(_.startsWith("part=")))
+    t.commitAppend(Seq((4L, "c", 40L)).toDF("k", "region", "v"),
+      "region")                                                  // v5
+    assert(rows(5).contains((4L, "c", 40L)))
+    assert(t.entries.filter(_.action == "spec").map(_.path) ==
+      Seq("part|STRING"))
+    rm(root)
+  }
+
+  test("partition spec travels with a clone, a log checkpoint and a " +
+    "restore") {
+    val root = tmp("graft_specsrc_")
+    val croot = tmp("graft_specclone_")
+    val t = new SnapshotLog.Table(spark, root)
+    t.commitAppend(Seq((1L, "01", 10L), (2L, "1", 20L))
+      .toDF("k", "part", "v"), "part")                            // v1
+    def parts(tb: SnapshotLog.Table, v: Int) = tb.asOf(v).orderBy("k")
+      .select("part").collect().map(_.getString(0)).toSeq
+    // a zero-copy clone types '01' as its source does, and so does a
+    // copy-on-write rewrite on the clone
+    val c = new SnapshotLog.Table(spark, croot)
+    c.commitCloneFrom(t, 1)
+    assert(c.partitionSpec(1) == Some("part"))
+    assert(parts(c, 1) == Seq("01", "1"))
+    c.commitUpdate(KeyRange.Longs("k", 1L, 1L),
+      Map("v" -> (col("v") + 1)))                                // clone v2
+    assert(parts(c, 2) == Seq("01", "1"))
+    assert(c.entries.filter(e => e.version == 2 && e.action == "add")
+      .map(_.path).forall(_.startsWith("part=01/")))
+    // a restore changes data, not partitioning
+    t.commitAppend(Seq((3L, "2", 30L, 7)).toDF("k", "part", "v", "band"),
+      "band")                                                    // v2
+    t.commitRestore(1)                                           // v3
+    assert(t.partitionSpec(3) == Some("band"))
+    assert(parts(t, 3) == Seq("01", "1"))
+    // checkpoint + vacuum of the log keep every entry
+    t.checkpointLog()
+    assert(t.vacuumLog().nonEmpty)
+    val fresh = new SnapshotLog.Table(spark, root)
+    assert(fresh.partitionSpec(3) == Some("band"))
+    assert(fresh.partitionSpec(1) == Some("part"))
+    assert(parts(fresh, 3) == Seq("01", "1"))
+    rm(root); rm(croot)
   }
 }

@@ -68,7 +68,7 @@ class FileIndexSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$root/index/$p.k.bloom"))))
     // compact (removes v1 files), vacuum at retention 0: the reclaimed
     // data files take their sidecars with them
-    t.commitCompact("part")
+    t.commitCompact()
     val reclaimed = t.vacuum(retainVersions = 0)
     assert(reclaimed.toSet == f1.toSet)
     f1.foreach(p => assert(!java.nio.file.Files.exists(
@@ -146,7 +146,7 @@ class FileIndexSpec extends SparkSpec {
     // a merge carrying only day-2 keys must scan ~day 2's file
     val src = (0 until 100 by 10).map(i => (day(2, i), "x", 1000L + i))
       .toDF("ts", "part", "v")
-    t.commitMerge(src, "part", "ts")
+    t.commitMerge(src, "ts")
     val Some((cand, live)) = t.lastMergeScan
     assert(cand < live, s"timestamp zone maps did not prune: $cand of $live")
     // and the merge semantics held: updated rows carry the new value
@@ -176,7 +176,7 @@ class FileIndexSpec extends SparkSpec {
       .toDF("i", "part")
       .select(col("i").cast("decimal(12,2)").as("k"),
         col("part"), (col("i") + 100000L).as("v"))
-    t.commitMerge(src, "part", "k")
+    t.commitMerge(src, "k")
     val Some((cand, live)) = t.lastMergeScan
     assert(cand < live, s"decimal zone maps did not prune: $cand of $live")
     assert(t.asOf(t.version).count() == 300)
@@ -279,7 +279,7 @@ class FileIndexSpec extends SparkSpec {
       .createTempDirectory("graft_droprange_nop_").toString
     val s = new SnapshotLog.Table(spark, root)
     s.commitAppend(Seq((1L, "a", 5L)).toDF("k", "part", "v"), "part")
-    val nop = s.commitDeleteRange("part", KeyRange.Longs("v", -99L, -90L))
+    val nop = s.commitDeleteRange(KeyRange.Longs("v", -99L, -90L))
     assert(nop == 2)
     assert(s.entries.filter(e => e.version == nop &&
       (e.action == "add" || e.action == "remove")).isEmpty)
@@ -298,7 +298,7 @@ class FileIndexSpec extends SparkSpec {
       "part")
     t.commitAppend((41L to 80L).map(k => (k, "a", k)).toDF("k", "part", "v"),
       "part")
-    t.commitDeleteRange("part", KeyRange.Longs("k", 10L, 20L))
+    t.commitDeleteRange(KeyRange.Longs("k", 10L, 20L))
     val es0 = t.entries
     val live0 = t.liveFiles(t.version)
     // checkpoint consolidates verbatim: entries identical
@@ -502,7 +502,7 @@ class FileIndexSpec extends SparkSpec {
         "NTZ columns must carry footer zone maps (INT64 wall micros)")
       val src = (0 until 100 by 10).map(i => (day(2, i), "x", 1000L + i))
         .toDF("ts", "part", "v")
-      t.commitMerge(src, "part", "ts")
+      t.commitMerge(src, "ts")
       val Some((cand, live)) = t.lastMergeScan
       assert(cand < live, s"NTZ zone maps did not prune: $cand of $live")
       // the correctness half: a zone-SHIFTED probe would have pruned
@@ -664,7 +664,7 @@ class FileIndexSpec extends SparkSpec {
     }
     val repl = (100L to 120L).map(v => (v, "x")).toDF("v", "part")
     val v0 = t.version
-    t.commitReplaceWhere("part", KeyRange.Longs("v", 100L, 199L), repl)
+    t.commitReplaceWhere(KeyRange.Longs("v", 100L, 199L), repl)
     // ATOMIC: exactly one version carries the whole swap
     assert(t.version == v0 + 1, "replace-where must be one commit")
     // blast radius: bands 1 and 3 carried over by log reference
@@ -685,7 +685,7 @@ class FileIndexSpec extends SparkSpec {
     // contract: a batch outside the region is rejected before commit
     val bad = Seq((999L, "x")).toDF("v", "part")
     intercept[IllegalArgumentException](
-      t.commitReplaceWhere("part", KeyRange.Longs("v", 100L, 199L), bad))
+      t.commitReplaceWhere(KeyRange.Longs("v", 100L, 199L), bad))
     assert(t.version == v0 + 1, "rejected batch must not commit")
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
@@ -702,7 +702,7 @@ class FileIndexSpec extends SparkSpec {
         .toDF("src", "n", "part").coalesce(1), "part")
     }
     // reload the 'mike' source region atomically, string-keyed
-    t.commitReplaceWhere("part", KeyRange.Strings("src", "mike", "mike"),
+    t.commitReplaceWhere(KeyRange.Strings("src", "mike", "mike"),
       (0L until 5L).map(i => (s"mike-$i", 100L + i, "x"))
         .toDF("src", "n", "part"))
     val rem = t.entries.filter(e =>
@@ -714,7 +714,7 @@ class FileIndexSpec extends SparkSpec {
       !got.contains("mike-19") && got("alpha-3") == 3L)
     // out-of-region batch rejected
     intercept[IllegalArgumentException](
-      t.commitReplaceWhere("part", KeyRange.Strings("src", "mike", "mike"),
+      t.commitReplaceWhere(KeyRange.Strings("src", "mike", "mike"),
         Seq(("zulu-99", 1L, "x")).toDF("src", "n", "part")))
     // vacuum dry-run: names the replaced file and its manifest bytes,
     // deletes nothing
@@ -776,14 +776,13 @@ class FileIndexSpec extends SparkSpec {
     t.commitAppend((1 to 20).map(i => (i.toDouble, i.toLong, "a"))
       .toDF("dk", "v", "part").coalesce(1), "part")
     // DOUBLE merge key: correct, but unprunable — the marker must say so
-    t.commitMerge(Seq((5.0, 500L, "a")).toDF("dk", "v", "part"),
-      "part", "dk")
+    t.commitMerge(Seq((5.0, 500L, "a")).toDF("dk", "v", "part"), "dk")
     assert(t.lastMergeFallback.contains("double"),
       s"fallback marker missing: ${t.lastMergeFallback}")
     assert(t.asOf(t.version).filter(col("v") === 500L).count() == 1)
     // LONG key: pruning ran, marker clear
     t.commitMerge(Seq((6L, 600L, "a", 6.0)).toDF("v", "v2", "part", "dk")
-      .select(col("v"), col("part"), col("dk")), "part", "v")
+      .select(col("v"), col("part"), col("dk")), "v")
     assert(t.lastMergeFallback.isEmpty)
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
@@ -840,7 +839,7 @@ class FileIndexSpec extends SparkSpec {
       t.liveFiles(pre).size)
     assert(t.pruneFiles(pre, KeyRange.Longs("b", 10L, 15L)).size ==
       t.liveFiles(pre).size)
-    t.commitClusterZ("part", "a", "b", filesPerRange = 16)
+    t.commitClusterZ("a", "b", filesPerRange = 16)
     val v = t.version
     val live = t.liveFiles(v).size
     // post-cluster: a narrow band on EITHER dimension prunes files
@@ -896,7 +895,7 @@ class FileIndexSpec extends SparkSpec {
     assert(keys(src) == want - 7L)
     // lifecycle independence: source rewrites + vacuums ALL its
     // original bytes; the clone (hard links) still reads every row
-    src.commitCompact("part")
+    src.commitCompact()
     src.vacuum(0)
     assert(keys(dst) == want + 999L,
       "source vacuum must not reach through the clone's hard links")

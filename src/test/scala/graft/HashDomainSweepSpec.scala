@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.types.{DecimalType, DataType, ArrayType,
-  StructType}
-
 /** Fleet-wide gate for the r8 correctness regression class: the
   * driver's hash canonicalization is only exact for integers up to
   * 2^53 (float64 mantissa), and the two r8 queries whose DECIMAL(38,0)
@@ -22,29 +19,16 @@ import org.apache.spark.sql.types.{DecimalType, DataType, ArrayType,
   */
 class HashDomainSweepSpec extends SparkSpec {
 
-  private def wideDecimals(dt: DataType, path: String): Seq[String] =
-    dt match {
-      case d: DecimalType if d.precision > 15 => Seq(s"$path: $d")
-      case a: ArrayType => wideDecimals(a.elementType, s"$path[]")
-      case s: StructType =>
-        s.fields.toSeq.flatMap(f =>
-          wideDecimals(f.dataType, s"$path.${f.name}"))
-      case _ => Seq.empty
-    }
-
+  // the queries are built once for this sweep and
+  // SinglePartitionSweepSpec's (see SinglePartitionSweepSpec.sweep)
   test("no query emits a decimal wider than the hash's exact domain") {
-    val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val df =
-        try SparkEntry.queries(name)(spark, sf)
-        catch {
-          case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: ${e.getMessage}")
-        }
-      val wide = df.schema.fields.toSeq.flatMap(f =>
-        wideDecimals(f.dataType, f.name))
-      if (wide.nonEmpty) offenders += s"$name (${wide.mkString("; ")})"
-      DevSession.dropPinnedBlocks(spark)
+    val offenders = SinglePartitionSweepSpec.sweep(spark, sf).flatMap {
+      case (name, Left(err)) =>
+        fail(s"$name failed to build at sf0.001: $err")
+      case (name, Right(b)) =>
+        if (b.wideDecimals.nonEmpty)
+          Some(s"$name (${b.wideDecimals.mkString("; ")})")
+        else None
     }
     assert(offenders.isEmpty,
       "queries emitting >15-digit decimals (cast the statistic to " +

@@ -102,7 +102,7 @@ class MergeOnReadSpec extends SparkSpec {
     }
     val changes = Seq((5L, "x", 500L, "U"), (7L, "x", 0L, "D"))
       .toDF("k", "part", "v", "__op")
-    t.commitApplyChanges(changes, "part", "k")
+    t.commitApplyChanges(changes, "k")
     val Some((cand, live)) = t.lastMergeScan
     assert(cand < live, s"scanned $cand of $live")
     assert(t.asOf(t.version).count() == 299)
@@ -121,7 +121,7 @@ class MergeOnReadSpec extends SparkSpec {
     // not throw, not insert, not disturb k=1
     val changes = Seq((999L, "x", 0L, "D"), (2L, "x", 22L, "U"))
       .toDF("k", "part", "v", "__op")
-    t.commitApplyChanges(changes, "part", "k")
+    t.commitApplyChanges(changes, "k")
     val rows = t.asOf(t.version).orderBy("k").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L))
     assert(rows.map(_.getAs[Long]("v")).toSeq == Seq(10L, 22L))
@@ -198,25 +198,24 @@ class MergeOnReadSpec extends SparkSpec {
       } else assert(t.dvFor(t.version).isEmpty)
     }
     val (r1, t1) = fresh("mrg") // upsert MERGE hits file 1 via k=7
-    t1.commitMerge(Seq((7L, "a", 700L)).toDF("k", "part", "v"),
-      "part", "k")
+    t1.commitMerge(Seq((7L, "a", 700L)).toDF("k", "part", "v"), "k")
     check(t1, file2Rewritten = false)
     val (r2, t2) = fresh("cdc") // CDC tombstone on k=8 rewrites file 1
     t2.commitApplyChanges(Seq((8L, "a", 0L, "D"))
-      .toDF("k", "part", "v", "__op"), "part", "k")
+      .toDF("k", "part", "v", "__op"), "k")
     check(t2, file2Rewritten = false)
     val (r3, t3) = fresh("rng") // range delete v∈[50,60] prunes to file 1
-    t3.commitDeleteRange("part", KeyRange.Longs("v", 50L, 60L))
+    t3.commitDeleteRange(KeyRange.Longs("v", 50L, 60L))
     check(t3, file2Rewritten = false)
     val (r4, t4) = fresh("whr") // partition-scoped COW delete on file 1;
     // the keep predicate RETAINS k=5 — only the DV may kill it
     t4.commitDeleteWhere("part", "a", col("v") =!= 50L)
     check(t4, file2Rewritten = false)
     val (r5, t5) = fresh("cmp") // compaction rewrites everything:
-    t5.commitCompact("part")    // doubles as a materialization
+    t5.commitCompact()    // doubles as a materialization
     check(t5, file2Rewritten = true)
     val (r6, t6) = fresh("cls")
-    t6.commitCluster("part", "v", filesPerRange = 2)
+    t6.commitCluster("v", filesPerRange = 2)
     check(t6, file2Rewritten = true)
     Seq(r1, r2, r3, r4, r5, r6).foreach(r =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
@@ -239,7 +238,7 @@ class MergeOnReadSpec extends SparkSpec {
     assert(t.asOfMor(2).count() == 8,
       "a legacy-named sidecar must still bind and apply")
     // and a rewrite applies it like any current-format DV
-    t.commitCompact("part")
+    t.commitCompact()
     assert(t.asOf(3).count() == 8 && t.dvFor(3).isEmpty)
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
@@ -263,7 +262,7 @@ class MergeOnReadSpec extends SparkSpec {
     assert(t.tags.isEmpty)
     intercept[IllegalArgumentException] { t.asOfTag("ga") }
     // restore past the vacuum horizon fails loudly, not silently
-    t.commitCompact("part")                                   // v6
+    t.commitCompact()                                   // v6
     t.vacuum(retainVersions = 0)
     intercept[IllegalArgumentException] { t.commitRestore(1) }
     // and a restore to a still-reachable version works
@@ -357,7 +356,7 @@ class MergeOnReadSpec extends SparkSpec {
       .toDF("k", "part", "v").coalesce(1), "part")            // v1
     t.commitDeleteKeysMor(Seq(4L, 9L).toDF("k"), "k")         // v2: DV
     t.commitMerge((1L to 30L by 3).map(k => (k, "a", k * 1000))
-      .toDF("k", "part", "v").coalesce(1), "part", "k")       // v3: bad
+      .toDF("k", "part", "v").coalesce(1), "k")       // v3: bad
     t.commitRestore(2)                                        // v4: undo
     val q = spark.readStream
       .format("graft.sources.SnapshotCdfSource")
@@ -405,7 +404,7 @@ class MergeOnReadSpec extends SparkSpec {
     val Seq(side) = sidecars()
     assert(side.matches(""".*\.2-[0-9a-f]{8}\.dv"""), side)
     assert(t.asOfMor(2).count() == 38)
-    t.commitMaterializeDv("part")
+    t.commitMaterializeDv()
     t.vacuum(retainVersions = 0)
     assert(sidecars().isEmpty,
       "the removed file's DV sidecar must die with its data bytes")
@@ -426,7 +425,7 @@ class MergeOnReadSpec extends SparkSpec {
     val preLive = t.liveFiles(2).toSet
     // v3: upsert keys 3 (resurrect with new value), 7 (update), 99 (insert)
     t.commitMergeMor(Seq((3L, 333L, "a"), (7L, 777L, "a"),
-      (99L, 999L, "a")).toDF("k", "v", "part").coalesce(1), "part", "k")
+      (99L, 999L, "a")).toDF("k", "v", "part").coalesce(1), "k")
     val state = t.asOfMor(3).select("k", "v").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // semantics: (target \ src-keys) ⊎ src — including the key whose
@@ -445,7 +444,7 @@ class MergeOnReadSpec extends SparkSpec {
     assert(v2 == (1L to 40L).filterNot(_ == 3L)
       .map(k => k -> k * 10).toMap)
     // materialization converges MOR to COW with identical content
-    t.commitMaterializeDv("part")
+    t.commitMaterializeDv()
     assert(t.asOf(t.version).select("k", "v").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap == state)
     org.apache.commons.io.FileUtils.deleteDirectory(

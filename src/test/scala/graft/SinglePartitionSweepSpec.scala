@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType,
+  StructType}
 
 /** Fleet-wide regression gate for the #1 scale killer: a window with an
   * empty partitionSpec requires ALL rows on one partition (the plan
@@ -22,26 +25,13 @@ class SinglePartitionSweepSpec extends SparkSpec {
   private val boundedAllowlist: Set[String] = SinglePartitionSweepSpec.allow
 
   test("no query plans a global window over an unreviewed relation") {
-    val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val df =
-        try SparkEntry.queries(name)(spark, sf)
-        catch {
-          case e: Throwable =>
-            fail(s"$name failed to build at sf0.001: ${e.getMessage}")
-        }
-      // pre-AQE physical plan: structural, no execution needed (AQE can
-      // only keep or coalesce these exchanges, never remove a global
-      // window's SinglePartition requirement)
-      val globals = df.queryExecution.sparkPlan.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => "Window"
-        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-          "WindowGroupLimit"
-      }
-      if (globals.nonEmpty && !boundedAllowlist.contains(name))
-        offenders += s"$name (${globals.mkString(",")})"
-      // mirror Verify's per-query cleanup: some builders pin/collect
-      DevSession.dropPinnedBlocks(spark)
+    val offenders = SinglePartitionSweepSpec.sweep(spark, sf).flatMap {
+      case (name, Left(err)) =>
+        fail(s"$name failed to build at sf0.001: $err")
+      case (name, Right(b)) =>
+        if (b.globals.nonEmpty && !boundedAllowlist.contains(name))
+          Some(s"$name (${b.globals.mkString(",")})")
+        else None
     }
     assert(offenders.isEmpty,
       s"unreviewed global windows (add to allowlist ONLY with a bounded-" +
@@ -56,6 +46,58 @@ class SinglePartitionSweepSpec extends SparkSpec {
 }
 
 object SinglePartitionSweepSpec {
+
+  /** What the sweeps check of one query's DataFrame: its global
+    * windows, and its output columns of decimals wider than the
+    * hash's exact domain ([[HashDomainSweepSpec]]). */
+  final case class Built(globals: Seq[String], wideDecimals: Seq[String])
+
+  private var swept: Option[Seq[(String, Either[String, Built])]] = None
+
+  /** Every SparkEntry query built ONCE at `sf` for both sweeps, in name
+    * order; building the DataFrames is nearly all of either sweep's
+    * time. A query that fails to build ends the sweep, as it failed
+    * each sweep's test before. */
+  def sweep(spark: SparkSession, sf: String)
+      : Seq[(String, Either[String, Built])] = synchronized {
+    if (swept.isEmpty) {
+      val out = scala.collection.mutable.ListBuffer
+        .empty[(String, Either[String, Built])]
+      val names = SparkEntry.queries.keys.toSeq.sorted.iterator
+      while (names.hasNext && out.forall(_._2.isRight)) {
+        val name = names.next()
+        out += name -> (
+          try {
+            val df = SparkEntry.queries(name)(spark, sf)
+            // pre-AQE physical plan: structural, no execution needed
+            // (AQE can only keep or coalesce these exchanges, never
+            // remove a global window's SinglePartition requirement)
+            val globals = df.queryExecution.sparkPlan.collect {
+              case w: WindowExec if w.partitionSpec.isEmpty => "Window"
+              case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+                "WindowGroupLimit"
+            }
+            Right(Built(globals, df.schema.fields.toSeq.flatMap(f =>
+              wideDecimals(f.dataType, f.name))))
+          } catch { case e: Throwable => Left(e.getMessage) })
+        // mirror Verify's per-query cleanup: some builders pin/collect
+        DevSession.dropPinnedBlocks(spark)
+      }
+      swept = Some(out.toList)
+    }
+    swept.get
+  }
+
+  private def wideDecimals(dt: DataType, path: String): Seq[String] =
+    dt match {
+      case d: DecimalType if d.precision > 15 => Seq(s"$path: $d")
+      case a: ArrayType => wideDecimals(a.elementType, s"$path[]")
+      case s: StructType =>
+        s.fields.toSeq.flatMap(f =>
+          wideDecimals(f.dataType, s"$path.${f.name}"))
+      case _ => Seq.empty
+    }
+
   // Every name below was individually reviewed, and in round 7 every
   // windowed relation was MEASURED at two scales with
   // `graft.tools.PlanProbe <sfDir> <names>` (it counts the rows feeding

@@ -149,13 +149,13 @@ class SnapshotFoldSpec extends SparkSpec {
     t.renameColumn("v", "val2")                             // v2
     // range delete addressed by the NEW logical name: victims carry
     // the physical column, the keep predicate must still hit it
-    t.commitDeleteRange("part", KeyRange.Longs("val2", 10L, 30L)) // v3: k=1..3
+    t.commitDeleteRange(KeyRange.Longs("val2", 10L, 30L)) // v3: k=1..3
     // merge (COW) with the batch speaking the new name
     t.commitMerge(Seq((4L, "x", 999L), (21L, "x", 210L))
-      .toDF("k", "part", "val2").coalesce(1), "part", "k")  // v4
+      .toDF("k", "part", "val2").coalesce(1), "k")  // v4
     // MOR upsert, same contract
     t.commitMergeMor(Seq((5L, "x", 888L)).toDF("k", "part", "val2")
-      .coalesce(1), "part", "k")                            // v5
+      .coalesce(1), "k")                            // v5
     val now = t.asOfMor(t.version).select("k", "val2").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expect = (4L to 20L).map(k => k -> k * 10).toMap ++
@@ -191,17 +191,17 @@ class SnapshotFoldSpec extends SparkSpec {
     val inB = KeyRange.Longs("b", 1L, 5L)
     // each rewrite over the swapped history, with the rows it must leave
     val ops: Seq[(String, SnapshotLog.Table => Unit, Seq[(Long, Long, Long)])] = Seq(
-      ("range update", _.commitUpdate("part", inB,
+      ("range update", _.commitUpdate(inB,
         Map("k" -> (col("k") + 1000L))),
         file1.map { case (k, b, a) => (k + 1000L, b, a) } ++ file2),
-      ("range delete", _.commitDeleteRange("part", inB), file2),
-      ("replace-where", _.commitReplaceWhere("part", inB,
+      ("range delete", _.commitDeleteRange(inB), file2),
+      ("replace-where", _.commitReplaceWhere(inB,
         Seq((100L, "x", 3L, 7L)).toDF("k", "part", "b", "a")),
         file2 :+ ((100L, 3L, 7L))),
       ("merge", _.commitMerge(Seq((1L, "x", 1L, 500L))
-        .toDF("k", "part", "b", "a"), "part", "k"),
+        .toDF("k", "part", "b", "a"), "k"),
         ((1L, 1L, 500L) +: file1.tail) ++ file2),
-      ("compaction", _.commitCompact("part"), file1 ++ file2))
+      ("compaction", _.commitCompact(), file1 ++ file2))
     ops.foreach { case (name, op, expected) =>
       val root = tmp("graft_colmap_swap_")
       val t = new SnapshotLog.Table(spark, root)
@@ -280,7 +280,7 @@ class SnapshotFoldSpec extends SparkSpec {
     assert(t.asOf(4).select("k").collect().map(_.getLong(0)).toSeq.sorted ==
       Seq(1L, 3L))
     // compaction bins its raw read by the PHYSICAL partition column
-    t.commitCompact("grp")                                    // v5
+    t.commitCompact()                                    // v5
     assert(t.liveFiles(5).map(_.split('/').head).distinct == Seq("part=x"))
     assert(t.asOf(5).select("k").collect().map(_.getLong(0)).toSeq.sorted ==
       Seq(1L, 3L))

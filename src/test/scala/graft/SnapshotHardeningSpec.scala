@@ -28,7 +28,7 @@ class SnapshotHardeningSpec extends SparkSpec {
     val live = t.liveFiles(t.version).size
     val src = Seq(("b005", "x", 999L), ("b017", "x", 888L))
       .toDF("k", "part", "v")
-    t.commitMerge(src, "part", "k")
+    t.commitMerge(src, "k")
     val Some((cand, liveAt)) = t.lastMergeScan
     assert(liveAt == live)
     assert(cand < live, s"string merge scanned $cand of $live — no pruning")
@@ -53,7 +53,7 @@ class SnapshotHardeningSpec extends SparkSpec {
     val live = t.liveFiles(t.version).size
     val src = Seq((java.sql.Date.valueOf("1996-01-05"), "x", 777L))
       .toDF("k", "part", "v")
-    t.commitMerge(src, "part", "k")
+    t.commitMerge(src, "k")
     val Some((cand, liveAt)) = t.lastMergeScan
     assert(cand < liveAt, s"date merge scanned $cand of $liveAt")
     val after = t.asOf(t.version)
@@ -91,8 +91,8 @@ class SnapshotHardeningSpec extends SparkSpec {
       assert(r.getLong(2) == 40 && r.getLong(3) == 40, s"source rows: $r")
       rm(root)
     }
-    merged((t, _) => t.commitMerge(src, "part", "k"), t => t.asOf(t.version))
-    merged((t, _) => t.commitMergeMor(src, "part", "k"),
+    merged((t, _) => t.commitMerge(src, "k"), t => t.asOf(t.version))
+    merged((t, _) => t.commitMergeMor(src, "k"),
       t => t.asOfMor(t.version))
   }
 
@@ -133,7 +133,7 @@ class SnapshotHardeningSpec extends SparkSpec {
     assert(t.pruneFiles(t.version, KeyRange.Longs("k", 30L, 31L)).size == live,
       "fixture broken: range stats were supposed to be useless here")
     val src = Seq((30L, "x", 123L)).toDF("k", "part", "v") // lives in r=0
-    t.commitMerge(src, "part", "k")
+    t.commitMerge(src, "k")
     val Some((cand, liveAt)) = t.lastMergeScan
     assert(cand < liveAt,
       s"bloom probe kept $cand of $liveAt — no gain over range stats")
@@ -163,7 +163,7 @@ class SnapshotHardeningSpec extends SparkSpec {
       // the file HAS stats for k (nulls plus values), intersects the
       // range → it is rewritten; SQL DELETE WHERE k BETWEEN lo AND hi
       // must not match the NULL rows
-      t.commitDeleteRange("part", range)
+      t.commitDeleteRange(range)
       val after = t.asOf(t.version)
       assert(after.count() == 4, s"[$kind] NULL-keyed rows were destroyed")
       assert(after.filter(col("k").isNull).count() == 2)
@@ -181,7 +181,7 @@ class SnapshotHardeningSpec extends SparkSpec {
         .toDF("k", "part").coalesce(1), "part")
     }
     val before = t.liveFiles(t.version)
-    val v = t.commitDeleteRange("part", KeyRange.Strings("k", "b000", "b009"))
+    val v = t.commitDeleteRange(KeyRange.Strings("k", "b000", "b009"))
     // only the b-file was rewritten: the others carry over by reference
     val removed = before.filterNot(t.liveFiles(v).contains)
     assert(removed.size == 1, s"rewrote ${removed.size} files, wanted 1")
@@ -249,7 +249,7 @@ class SnapshotHardeningSpec extends SparkSpec {
     assert(t.asOfMor(2).count() == 28) // v2 time travel still resolves
     assert(before.length == 27 && !before.contains(9L))
     // materialization after the round-trip still bounds to DV'd files
-    t.commitMaterializeDv("part")
+    t.commitMaterializeDv()
     assert(t.dvFor(t.version).isEmpty)
     assert(t.asOf(t.version).count() == 27)
     rm(root)

@@ -88,7 +88,7 @@ class SnapshotModelSpec extends SparkSpec {
           val ins = (nextKey until nextKey + rnd.nextInt(3))
             .map(k => k -> (k * 10 + seed))
           nextKey = ins.lastOption.map(_._1 + 1).getOrElse(nextKey)
-          t.commitMerge(df(upd ++ ins), "part", "k")
+          t.commitMerge(df(upd ++ ins), "k")
           model ++= upd ++ ins
         case 7 => // tri-clause CDC: tombstones + updates + inserts
           val dels = existing(rnd.nextInt(3))
@@ -102,12 +102,11 @@ class SnapshotModelSpec extends SparkSpec {
               (upd ++ ins).map { case (k, v) => (k, "x", v, "U") }
           t.commitApplyChanges(
             changes.toDF("k", "part", vName, "__op")
-              .withColumn(vName, col(vName).cast(vType)).coalesce(1),
-            "part", "k")
+              .withColumn(vName, col(vName).cast(vType)).coalesce(1), "k")
           model = model -- dels ++ upd ++ ins
         case 8 => // reorganization / DV retirement
-          if (rnd.nextBoolean()) t.commitCompact("part")
-          else t.commitMaterializeDv("part")
+          if (rnd.nextBoolean()) t.commitCompact()
+          else t.commitMaterializeDv()
         case 9 => // restore to a random earlier version
           if (hist.nonEmpty) {
             val target = 1 + rnd.nextInt(hist.size)
@@ -115,20 +114,20 @@ class SnapshotModelSpec extends SparkSpec {
             model = hist(target - 1)._1
             // restore replays DATA, not the column mapping: the
             // logical name stays the current one
-          } else t.commitCompact("part")
+          } else t.commitCompact()
         case 10 => // value-range COW delete (zone-map-pruned path)
           val lo = rnd.nextLong(math.max(1L, nextKey * 10))
           val hi = lo + 500
-          t.commitDeleteRange("part", KeyRange.Longs(vName, lo, hi))
+          t.commitDeleteRange(KeyRange.Longs(vName, lo, hi))
           model = model.filterNot { case (_, v) => v >= lo && v <= hi }
         case 11 => // clustered rewrite (pure reorganization)
-          t.commitCluster("part", "k", filesPerRange = 2)
+          t.commitCluster("k", filesPerRange = 2)
         case 14 => // merge-on-read upsert (DV tombstones + adds)
           val upd = existing(rnd.nextInt(4)).map(k => k -> (k + 333))
           val ins = (nextKey until nextKey + rnd.nextInt(3))
             .map(k => k -> (k * 10 + seed))
           nextKey = ins.lastOption.map(_._1 + 1).getOrElse(nextKey)
-          t.commitMergeMor(df(upd ++ ins), "part", "k")
+          t.commitMergeMor(df(upd ++ ins), "k")
           model ++= upd ++ ins
         case 13 => // atomic replace-where on a value range
           val lo = rnd.nextLong(math.max(1L, nextKey * 10))
@@ -136,7 +135,7 @@ class SnapshotModelSpec extends SparkSpec {
           val ks = (nextKey until nextKey + 1 + rnd.nextInt(3))
           nextKey = ks.last + 1
           val rows = ks.map(k => k -> (lo + k % 501)) // inside [lo, hi]
-          t.commitReplaceWhere("part", KeyRange.Longs(vName, lo, hi), df(rows))
+          t.commitReplaceWhere(KeyRange.Longs(vName, lo, hi), df(rows))
           model = model.filterNot { case (_, v) =>
             v >= lo && v <= hi } ++ rows
         case 15 => // metadata-only RENAME COLUMN of the value column
@@ -152,7 +151,7 @@ class SnapshotModelSpec extends SparkSpec {
         case 19 => // pruned COW range UPDATE on the key
           val lo = rnd.nextLong(math.max(1L, nextKey))
           val hi = lo + 20
-          t.commitUpdate("part", KeyRange.Longs("k", lo, hi),
+          t.commitUpdate(KeyRange.Longs("k", lo, hi),
             Map(vName -> (col(vName) + lit(9))))
           model = model.map { case (k, v) =>
             k -> (if (k >= lo && k <= hi) v + 9 else v) }
@@ -160,7 +159,7 @@ class SnapshotModelSpec extends SparkSpec {
           if (vType == "int" && model.nonEmpty) {
             t.widenColumn(vName, "bigint")
             vType = "bigint"
-          } else t.commitCompact("part")
+          } else t.commitCompact()
         case 17 => // DEFAULT column: must read 7 everywhere, forever
           val dn = s"d$i"
           t.addColumnDefault(dn, "bigint", "7")
@@ -170,7 +169,7 @@ class SnapshotModelSpec extends SparkSpec {
           // degrades conservatively to every live file and the row
           // predicate does the filtering — the typed variant soaked
           // against DVs, widening, defaults and renames
-          t.commitUpdate("part", KeyRange.Strings("part", "a", "z"),
+          t.commitUpdate(KeyRange.Strings("part", "a", "z"),
             Map(vName -> (col(vName) + lit(4))))
           model = model.map { case (k, v) => k -> (v + 4) }
         case 21 => // absent-partition delete: zero rows, honest

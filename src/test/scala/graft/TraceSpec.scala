@@ -18,7 +18,7 @@ class TraceSpec extends SparkSpec {
     t.commitAppend((6L to 10L).map(k => (k, "x", k * 10)).toDF("k", "part", "v")
       .coalesce(1), "part")
     val (_, report) = Trace(spark)(
-      t.commitDeleteRange("part", KeyRange.Longs("k", 1L, 3L)))
+      t.commitDeleteRange(KeyRange.Longs("k", 1L, 3L)))
     val spans = report.spans.filter(_.label.startsWith("delete:"))
     assert(spans.map(_.label) ==
       Seq("delete:writeTmp", "delete:adopt", "delete:stats+publish"),

@@ -92,7 +92,7 @@ class Wave8Spec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("s"))
       .collect().map(_.toSeq).toSet
     val nFilesBefore = t.liveFiles(2).size
-    assert(t.commitCompact("o_orderstatus", expectedVersion = 2) == 3)
+    assert(t.commitCompact(expectedVersion = 2) == 3)
     val after = t.asOf(3).groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), sum(col("o_orderkey")).as("s"))
       .collect().map(_.toSeq).toSet
@@ -153,8 +153,7 @@ class Wave8Spec extends SparkSpec {
     t.commitAppend(Seq((4L, "b", 40L)).toDF("k", "part", "v"), "part")
     // update k=3 AND move it from partition b to c; insert k=5
     val merged = t.commitMerge(
-      Seq((3L, "c", 99L), (5L, "a", 50L)).toDF("k", "part", "v"),
-      "part", "k")
+      Seq((3L, "c", 99L), (5L, "a", 50L)).toDF("k", "part", "v"), "k")
     val out = t.asOf(merged).orderBy("k")
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("part"),
         r.getAs[Long]("v"))).toSeq
@@ -169,8 +168,7 @@ class Wave8Spec extends SparkSpec {
     assert(t.asOf(2).filter(col("k") === 3L).select("v")
       .head().getLong(0) == 30L)
     // pure-insert merge (no key overlap) removes nothing
-    val v4 = t.commitMerge(Seq((9L, "a", 90L)).toDF("k", "part", "v"),
-      "part", "k")
+    val v4 = t.commitMerge(Seq((9L, "a", 90L)).toDF("k", "part", "v"), "k")
     assert(t.entries.filter(_.version == v4).forall(_.action != "remove"))
     assert(t.asOf(v4).count() == 6)
   }
@@ -358,7 +356,7 @@ class Wave8Spec extends SparkSpec {
     // the hit-finding scan must read strictly fewer files than live
     val v3 = t.commitMerge(
       Seq((150L, "a", 9999L), (160L, "a", 8888L)).toDF("k", "part", "v"),
-      "part", "k")
+      "k")
     val (scanned, total) = t.lastMergeScan.get
     assert(total == live && scanned < live && scanned > 0,
       s"scanned $scanned of $total")
@@ -371,8 +369,7 @@ class Wave8Spec extends SparkSpec {
     assert(!t.entries.exists(e => e.version == v3 &&
       e.action == "remove" && e.path.contains("/v1-")))
     // a source OUTSIDE every file's range: zero candidates, pure insert
-    val v4 = t.commitMerge(Seq((999L, "a", 1L)).toDF("k", "part", "v"),
-      "part", "k")
+    val v4 = t.commitMerge(Seq((999L, "a", 1L)).toDF("k", "part", "v"), "k")
     assert(t.lastMergeScan.get._1 == 0)
     assert(t.asOf(v4).count() == 201)
     org.apache.commons.io.FileUtils.deleteDirectory(

@@ -236,7 +236,7 @@ final class SnapshotCdfStream(root: String, partCol: String, ddl: String,
 
   /** (start, end] resolved against the manifest. Merge-on-read aware:
     * a `dv` commit surfaces as DELETE rows for exactly the positions
-    * NEWLY tombstoned (new sidecar minus the superseded one — a
+    * NEWLY tombstoned (new DV minus the superseded one — a
     * superseding DV repeats prior positions by design, and repeating
     * them in the feed would double-delete); a `remove` of a file that
     * carried an active DV emits deletes only for its still-live rows
@@ -266,8 +266,8 @@ final class SnapshotCdfStream(root: String, partCol: String, ddl: String,
 }
 
 /** @param dvNew when set, this partition surfaces a DELETION-VECTOR
-  *   commit: emit only rows whose position is in dvNew's sidecar and
-  *   NOT in dvOld's (the newly tombstoned delta).
+  *   commit: emit only rows whose position is in dvNew and
+  *   NOT in dvOld (the newly tombstoned delta).
   * @param dvOld without dvNew: the file is being REMOVED while a DV
   *   was active — emit only rows outside dvOld (the still-live ones;
   *   the DV'd rows already left the feed). */
@@ -275,18 +275,17 @@ object SnapshotCdfStream {
   /** The change partitions of window (s, e]: one per changed FILE,
     * resolved against the manifest on the driver. Merge-on-read
     * aware: a `dv` commit surfaces only the NEWLY tombstoned
-    * positions (new sidecar minus superseded — repeating prior
+    * positions (new DV minus superseded — repeating prior
     * positions would double-delete), a `remove` of a DV-carrying
     * file emits only its still-live rows. Shared verbatim by the
     * streaming source's micro-batches and the bounded BATCH read. */
   private[graft] def planWindow(table: SnapshotLog.Table, root: String,
       s: Int, e: Int): Array[InputPartition] = {
-    // sidecar ids are strings: `<v>` legacy, `<v>-<writer-uid>` current
-    def dvPath(rel: String, id: String) = s"$root/dv/$rel.$id.dv"
     val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    // one ordered fold tracks each file's ACTIVE sidecar so every
+    // one ordered fold tracks each file's ACTIVE DV so every
     // window emission knows its predecessor — O(log), driver-side
-    val dvActive = scala.collection.mutable.Map.empty[String, String]
+    val dvActive = scala.collection.mutable.Map.empty[String,
+      DeletionVectors.Loc]
     table.entries.filter(_.version <= e).foreach { en =>
       val inWindow = en.version > s
       en.action match {
@@ -297,15 +296,14 @@ object SnapshotCdfStream {
           val prior = dvActive.remove(en.path)
           if (inWindow)
             parts += CdfPart(s"$root/data/${en.path}", en.version,
-              "delete", dvNew = None, dvOld = prior.map(dvPath(en.path, _)))
+              "delete", dvNew = None, dvOld = prior)
         case "dv" =>
-          val Array(rel, id) = en.path.split('|')
-          val prior = dvActive.get(rel)
+          val (rel, dv) = DeletionVectors.parse(en.path)
+          val loc = dv.loc(root, rel)
           if (inWindow)
             parts += CdfPart(s"$root/data/$rel", en.version, "delete",
-              dvNew = Some(dvPath(rel, id)),
-              dvOld = prior.map(dvPath(rel, _)))
-          dvActive(rel) = id
+              dvNew = Some(loc), dvOld = dvActive.get(rel))
+          dvActive(rel) = loc
         case _ => ()
       }
     }
@@ -327,7 +325,8 @@ final class CdfReaderFactory(fileSchema: StructType, partCol: String,
 }
 
 final case class CdfPart(file: String, version: Int, change: String,
-    dvNew: Option[String] = None, dvOld: Option[String] = None)
+    dvNew: Option[DeletionVectors.Loc] = None,
+    dvOld: Option[DeletionVectors.Loc] = None)
     extends InputPartition
 
 /** Reads one parquet file via the parquet-hadoop Group API and emits
@@ -335,7 +334,7 @@ final case class CdfPart(file: String, version: Int, change: String,
   * example-Group reader is fine here because CDF partitions are
   * commit-sized; a bulk path would use the vectorized reader. Row
   * position = sequential read order, the same contract as
-  * `_metadata.row_index`, so DV sidecar positions apply directly. */
+  * `_metadata.row_index`, so DV positions apply directly. */
 /** @param nameMap declared (LOGICAL) column name -> PHYSICAL name in
   *   the files, resolved once at plan time from the table's column
   *   mapping — a renamed column's feed reads the physical bytes and
@@ -371,38 +370,22 @@ final class CdfReader(part: CdfPart, fileSchema: StructType,
   }
   private var cur: Group = _
 
-  private def loadPositions(p: String): java.util.BitSet = {
-    val fs = new Path(p).getFileSystem(conf)
-    val in = fs.open(new Path(p))
-    val bits = new java.util.BitSet()
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .foreach { l =>
-        val pos = l.trim.toLong
-        // the BitSet is Int-indexed; the sidecar WRITER guards the
-        // same bound, so a violation here means a corrupt sidecar —
-        // fail loudly rather than mis-filter
-        require(pos <= Int.MaxValue, s"DV position $pos out of range in $p")
-        bits.set(pos.toInt)
-      }
-    finally in.close()
-    bits
-  }
-
   /** Whether the row at sequential position `i` belongs to this
     * partition's change set (see [[CdfPart]]). A position beyond Int
-    * range can never be IN a (guarded) sidecar, so the membership
-    * tests are exact for all longs. */
+    * range can never be IN a DV (its writer refuses one), so the
+    * membership tests are exact for all longs. */
   private val admit: Long => Boolean = {
-    def in(b: java.util.BitSet, i: Long): Boolean =
-      i <= Int.MaxValue && b.get(i.toInt)
+    def load(l: DeletionVectors.Loc) = DeletionVectors.load(l, conf)
+    def in(b: org.roaringbitmap.RoaringBitmap, i: Long): Boolean =
+      i <= Int.MaxValue && b.contains(i.toInt)
     (part.dvNew, part.dvOld) match {
       case (None, None) => _ => true
       case (Some(nw), old) =>
-        val n = loadPositions(nw)
-        val o = old.map(loadPositions).getOrElse(new java.util.BitSet())
+        val n = load(nw)
+        val o = old.map(load).getOrElse(new org.roaringbitmap.RoaringBitmap())
         i => in(n, i) && !in(o, i)
       case (None, Some(old)) =>
-        val o = loadPositions(old)
+        val o = load(old)
         i => !in(o, i)
     }
   }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, DecimalType,
   IntegerType, LongType, StringType, StructField, StructType,
   TimestampNTZType, TimestampType}
+import graft.sources.DeletionVectors.Dv
 
 /** Minimal snapshot-versioned parquet table: an append-only commit log
   * over immutable data files, giving AS-OF reads (time travel) and a
@@ -86,6 +87,15 @@ object SnapshotLog {
     * cut out without building an array per row. */
   private[graft] def fileRel(path: Column): Column =
     substring_index(path, "/", -2)
+
+  /** A data file's log rel from its `_metadata.file_path`, which is a
+    * URI: a partition dir escaped on disk reads escaped once more there
+    * (`part=t%3A1` as `part=t%253A1`, `part=a b` as `part=a%20b`). `+`
+    * is literal in a URI, so it is kept from `url_decode`'s form
+    * decoding. [[DeletionVectors]] decodes its scan's paths the same
+    * way. */
+  private[graft] def metadataRel(path: Column): Column =
+    fileRel(url_decode(regexp_replace(path, "\\+", "%2B")))
 
   private[graft] def unhexStr(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
@@ -194,18 +204,17 @@ object SnapshotLog {
     lazy val specEntries: Vector[Entry] =
       entries.filter(_.action == "spec")
 
-    private val dvAt = new VersionLru[Map[String, String]](64)
+    private val dvAt = new VersionLru[Map[String, Dv]](64)
 
     /** Active deletion vector per live file at `v` (dv binds newest-
       * wins, a remove of the file retires it) — memoized per version:
       * every MOR read resolves this, and an unmemoized fold is
       * O(manifest) per read at scale. */
-    def dvFor(v: Int): Map[String, String] =
+    def dvFor(v: Int): Map[String, Dv] =
       dvAt.getOrCompute(v) {
-        entries.foldLeft(Map.empty[String, String]) {
+        entries.foldLeft(Map.empty[String, Dv]) {
           case (acc, Entry(ev, "dv", p)) if ev <= v =>
-            val Array(rel, id) = p.split('|')
-            acc + (rel -> id)
+            acc + DeletionVectors.parse(p)
           case (acc, Entry(ev, "remove", p)) if ev <= v => acc - p
           case (acc, _)                                 => acc
         }
@@ -852,18 +861,18 @@ object SnapshotLog {
     /** Publish, and on a lost race reclaim what this writer made for
       * the commit: the data files it adopted, then the DV sidecars its
       * `dv` lines bind (each a writer-unique name this writer just
-      * built). Both are covered by no segment — orphans by
-      * construction — and this writer knows their exact names. */
+      * built; an inline DV has none). Both are covered by no segment —
+      * orphans by construction — and this writer knows their exact
+      * names. */
     private def publishOrCleanup(v: Int, lines: Seq[Entry],
         added: Seq[String]): Unit =
       try publishSegment(v, lines)
       catch {
         case e: java.util.ConcurrentModificationException =>
           added.foreach(p => fs.delete(new Path(s"$dataDir/$p"), false))
-          lines.filter(_.action == "dv").foreach { en =>
-            val Array(rel, id) = en.path.split('|')
-            fs.delete(dvPath(rel, id), false)
-          }
+          lines.filter(_.action == "dv").map(e => DeletionVectors.parse(e.path))
+            .foreach { case (rel, dv) =>
+              if (dv.onDisk) fs.delete(dvPath(rel, dv.id), false) }
           throw e
       }
 
@@ -1344,11 +1353,14 @@ object SnapshotLog {
       *    default literal; carrying groups read it physically and
       *    real NULLs are never overwritten. Era is part of the group
       *    key because one layout can hold files on both sides.
+      *  - `dvs`: the deletion vectors to apply, by file
+      *    ([[DeletionVectors.keepRows]], one broadcast for the read). A
+      *    group that holds a DV'd file filters its scan by them.
       *  - `withPos` adds (__f, __pos) = (file rel, row position) from
       *    the deterministic `_metadata` columns — `input_file_name()`
       *    is not deterministic, and a projection carrying it stops
       *    every filter from reaching the scan. `_metadata` does not
-      *    survive a union, so this happens per group.
+      *    survive a union, so both happen per group.
       *
       * Groups union by name. Names stay PHYSICAL: [[asOf]] and
       * [[asOfMor]] apply [[applyMapping]] last (its rename Project
@@ -1359,13 +1371,17 @@ object SnapshotLog {
         recordPrune: (Int, Int) => Unit = (_, _) => (),
         partTypes: StructType = new StructType(),
         mergeSchema: Boolean = false,
-        withPos: Boolean = false): DataFrame = {
+        withPos: Boolean = false,
+        dvs: Map[String, Dv] = Map.empty): DataFrame = {
       val w = widenings(at)
       val dfl = columnDefaults(at)
       val logged = partTypesOf(fold.specEntries.filter(_.version <= at))
       val declared = StructType(logged ++ partTypes
         .map(f => f.copy(name = physicalAt(at, f.name)))
         .filterNot(f => logged.fieldNames.contains(f.name)))
+      val keep =
+        if (dvs.isEmpty) None
+        else Some(DeletionVectors.keepRows(spark, root, dvs))
       def footerSchema(rel: String): StructType = widenSchema(
         ParquetFiles.schema(spark, ParquetFiles.statusOf(fs, dataBase, rel,
           fold.fileSizes.get(rel))), w)
@@ -1380,12 +1396,14 @@ object SnapshotLog {
             spark, dataDir, group, declared, fold.zoneMaps,
             fold.zoneMapsStr, fold.nullCounts, fold.fileSizes,
             bloomCols.toSet, bloomSurvivorsAny, recordPrune)
-          val rel = org.apache.spark.sql.graft.SparkInternals
+          val scan = org.apache.spark.sql.graft.SparkInternals
             .parquetRelation(spark, index, index.partitionSchema, dataSchema)
+          val rel = keep.filter(_ => group.exists(dvs.contains))
+            .fold(scan)(scan.where)
           val tagged =
             if (!withPos) rel
             else rel
-              .withColumn("__f", fileRel(col("_metadata.file_path")))
+              .withColumn("__f", metadataRel(col("_metadata.file_path")))
               .withColumn("__pos", col("_metadata.row_index"))
           dfl.zip(era).collect { case (d, false) => d }
             .foldLeft(tagged) { case (df, (c, t, dft, _)) =>
@@ -1666,13 +1684,14 @@ object SnapshotLog {
         : org.apache.spark.sql.types.StructType =
       ParquetFiles.schema(spark, statusesOf(Seq(rel)).head)
 
-    /** Tasks for a sidecar writer over `files` files: one per file up
-      * to the session's shuffle partitions. The count is explicit
-      * because AQE coalesces a `repartition(col)` of these few small
-      * rows into ONE partition, whose task would then write every
-      * sidecar in series; AQE keeps an explicit count. */
-    private def sidecarTasks(files: Int): Int =
-      math.max(1, math.min(files, spark.sessionState.conf.numShufflePartitions))
+    /** Tasks for a write of `outputs` independent outputs (sidecars,
+      * compacted files) the manifest counts: one per output up to the
+      * session's shuffle partitions. The count is explicit because AQE
+      * coalesces a `repartition(col)` of these few small rows into ONE
+      * partition, whose task would then write every output in series;
+      * AQE keeps an explicit count. */
+    private def writeTasks(outputs: Int): Int =
+      math.max(1, math.min(outputs, spark.sessionState.conf.numShufflePartitions))
 
     /** Build one bloom sidecar per (adopted file, indexed column) in a
       * SINGLE distributed pass per column: hash → k positions → 64-bit
@@ -1698,7 +1717,7 @@ object SnapshotLog {
             ParquetFiles.footer(hadoopConf, st)))
           rel -> (((n * BloomBitsPerRow + 63) / 64) * 64)
       }.toMap
-      val rel = fileRel(col("_metadata.file_path"))
+      val rel = metadataRel(col("_metadata.file_path"))
       // file -> m as a broadcast join, not a literal map expression: a
       // thousand-file commit must not inflate the plan itself
       import spark.implicits._
@@ -1730,7 +1749,7 @@ object SnapshotLog {
               col("__p").bitwiseAND(lit(63L)).cast("int")).as("__b"))
           .groupBy("__f", "__m", "__w")
           .agg(call_function("bit_or", col("__b")).as("__bits"))
-        words.repartition(sidecarTasks(added.size), col("__f"))
+        words.repartition(writeTasks(added.size), col("__f"))
           .sortWithinPartitions("__f", "__w")
           .foreachPartition {
             (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -2504,21 +2523,20 @@ object SnapshotLog {
       // remove; staying files may carry a newer binding)
       val rebinds = tgt.filter(p => tgtDv.contains(p) &&
           (!cur.contains(p) || cycle.contains(p) ||
-            curDv.get(p) != tgtDv.get(p)))
-        .sorted.map(p => Entry(v, "dv", s"$p|${tgtDv(p)}"))
+            curDv.get(p) != tgtDv.get(p))).sorted
       // the sidecars being re-bound must still exist — a superseded
       // binding past the retention horizon may have been reclaimed by
       // vacuum's sidecar aging even while the data files all survive.
       // Restore promises a LOUD failure at restore time, not a reader
-      // FileNotFound later in the multi-path DV scan.
-      rebinds.foreach { e =>
-        val Array(rel, id) = e.path.split('|')
-        require(fs.exists(dvPath(rel, id)),
+      // FileNotFound later in the scan. An inline DV has no sidecar.
+      rebinds.foreach { p =>
+        val dv = tgtDv(p)
+        require(!dv.onDisk || fs.exists(dvPath(p, dv.id)),
           s"cannot restore to $targetVersion: deletion-vector sidecar " +
-            s"${dvPath(rel, id)} was vacuumed")
+            s"${dvPath(p, dv.id)} was vacuumed")
       }
-      Trace.span("restore:publish")(
-        publishSegment(v, removes ++ adds ++ rebinds))
+      Trace.span("restore:publish")(publishSegment(v,
+        removes ++ adds ++ rebinds.map(p => tgtDv(p).entry(v, p))))
       v
     }
 
@@ -3130,49 +3148,22 @@ object SnapshotLog {
 
     // ---- merge-on-read deletion vectors ------------------------------
 
-    /** DV sidecar path for data file `rel` under sidecar id `id`
-      * (`<version>` legacy, `<version>-<writer-uid>` current):
-      * ascending row positions, one per line. Versioned names make DV
-      * files immutable — an AS-OF read at an older version resolves
-      * the OLDER sidecar, so row-level deletes time-travel exactly
-      * like file-level ones. The writer-unique uid is the race guard:
-      * two commits CASing for the same version write DIFFERENTLY named
-      * sidecars, so the publish loser's executor job can only leave an
-      * orphan — never overwrite the winner's bytes under the name the
-      * winner's log entry binds. */
+    /** The sidecar file of DV `id` of data file `rel`
+      * ([[DeletionVectors]] has the format). */
     private def dvPath(rel: String, id: String): Path =
-      new Path(s"$root/dv/$rel.$id.dv")
+      new Path(DeletionVectors.sidecar(root, rel, id))
 
     /** The active deletion vector per live file at `v`: a `dv` entry
-      * (`rel|sidecar-id`) binds a sidecar to a file, newest wins; a
+      * binds a DV to a file, newest wins; a
       * `remove` of the file retires it (every rewrite path reads its
       * victims through [[readFilesMorAt]], so the rewrite that removed
       * the file APPLIED the deletes — see that method's contract). */
-    def dvFor(v: Int): Map[String, String] = foldState().dvFor(v)
-
-    /** The (file, position) delete relation of exactly `dvs` — ONE
-      * multi-path text scan regardless of sidecar count (a supersede
-      * or read over hundreds of DV'd files must not build a
-      * hundreds-arm union plan). The data-file rel is recoverable from
-      * the sidecar's own path (dv/<part=val>/<file>.<id>.dv): last two
-      * segments, id suffix stripped. `_metadata.file_path` is
-      * URI-shaped, so never string-compare it against raw paths —
-      * segment extraction is the one transform both representations
-      * agree on. */
-    private def dvRelationFor(dvs: Map[String, String]): DataFrame = {
-      val paths = dvs.toSeq.sortBy(_._1).map { case (rel, id) =>
-        dvPath(rel, id).toString
-      }
-      spark.read.text(paths: _*)
-        .select(
-          regexp_replace(fileRel(col("_metadata.file_path")),
-            "\\.\\d+(-[0-9a-f]+)?\\.dv$", "").as("__f"),
-          col("value").cast("long").as("__pos"))
-    }
+    def dvFor(v: Int): Map[String, Dv] = foldState().dvFor(v)
 
     /** The raw read of `rels` at `v` ([[readAt]]) with the deletion
-      * vectors active at `v` APPLIED for exactly those files — the
-      * mandatory victim-read of every rewrite path (merge, CDC apply,
+      * vectors active at `v` APPLIED for exactly those files, inside
+      * the scan ([[DeletionVectors.keepRows]]) — the mandatory
+      * victim-read of every rewrite path (merge, CDC apply,
       * range/partition delete, compact, cluster, materialize) and of
       * [[asOfMor]], which alone passes `recordPrune` and `partTypes`
       * (see [[readAt]]). The dvFor fold retires a file's DV on
@@ -3187,17 +3178,14 @@ object SnapshotLog {
         partTypes: StructType = new StructType()): DataFrame = {
       val fold = foldState()
       val keep = rels.toSet
-      val dvs = fold.dvFor(v).filter { case (rel, _) => keep(rel) }
-      if (dvs.isEmpty) readAt(rels, v, fold, recordPrune, partTypes)
-      else readAt(rels, v, fold, recordPrune, partTypes, withPos = true)
-        .join(dvRelationFor(dvs), Seq("__f", "__pos"), "left_anti")
-        .drop("__f", "__pos")
+      readAt(rels, v, fold, recordPrune, partTypes,
+        dvs = fold.dvFor(v).filter { case (rel, _) => keep(rel) })
     }
 
     /** Merge-on-read row-level DELETE by key set: instead of
       * rewriting every file that contains a victim (copy-on-write,
       * [[commitDeleteRange]]), record the victims' ROW POSITIONS in
-      * per-file deletion-vector sidecars and leave every data byte in
+      * per-file deletion vectors and leave every data byte in
       * place — the delete commits in O(victim rows), and the rewrite
       * cost is deferred to [[commitMaterializeDv]] (or the next
       * compaction), where it amortizes over many deletes. This is the
@@ -3209,8 +3197,8 @@ object SnapshotLog {
       * Mechanics: the key set is pinned once ([[pinSource]]);
       * candidate files = the same zone-map + bloom pruning as
       * [[commitMerge]]; positions come from `_metadata.row_index`
-      * (stable per immutable parquet file); a file's new sidecar is
-      * the UNION of its previous positions and this batch's, written
+      * (stable per immutable parquet file); a file's new DV is
+      * the UNION of its previous positions and this batch's, built
       * executor-side (repartitioned by file), so no position rides
       * the driver. Readers go through [[asOfMor]]. */
     def commitDeleteKeysMor(keys0: DataFrame, keyCol0: String,
@@ -3232,83 +3220,31 @@ object SnapshotLog {
       v
     }
 
-    /** Write one superseding DV sidecar for each file that `matched`
-      * (__f, __pos) hits: its new positions merged with the positions
-      * of its prior sidecar at v - 1 (the newest-wins fold reads exactly
-      * one dv per file), which the writer task reads itself. Rows are
-      * repartitioned by file and sorted by position, and the job
-      * returns the files it wrote, so no position rides the driver and
-      * the affected-file list needs no job of its own. Returns one dv
-      * entry per affected file, under a writer-unique sidecar id: a
-      * racing committer targeting the same version writes under a
-      * DIFFERENT name, so the CAS loser's sidecar job leaves an
-      * orphan, never bytes under the winner's binding (task retries
-      * within ONE job still converge — same id, identical content,
-      * delete-then-rename). Shared by the MOR delete and MOR merge. */
+    /** Write one superseding DV for each file that `matched`
+      * (__f, __pos) hits: its new positions unioned with its prior DV
+      * at v - 1, in one writer task per file
+      * ([[DeletionVectors.writeTask]]). Rows are hashed by file, and
+      * the job returns the entries it wrote, so no position rides the
+      * driver and the affected-file list needs no job of its own. A
+      * sidecar goes under a writer-unique id: a racing committer
+      * targeting the same version writes under a DIFFERENT name, so
+      * the CAS loser's sidecar job leaves an orphan, never bytes under
+      * the winner's binding. Shared by the MOR delete and MOR merge. */
     private def buildDvSidecars(v: Int, matched: DataFrame,
         candidates: Seq[String]): Seq[Entry] = {
       val cand = candidates.toSet
       val prior = dvFor(v - 1).collect {
-        case (rel, id) if cand(rel) => rel -> dvPath(rel, id).toString
+        case (rel, dv) if cand(rel) => rel -> dv.loc(root, rel)
       }
       val conf = new org.apache.spark.util.SerializableConfiguration(
         hadoopConf)
-      val dvRoot = s"$root/dv"
       val dvId = s"$v-${java.util.UUID.randomUUID.toString
         .replace("-", "").take(8)}"
-      val written = matched.select("__f", "__pos")
-        .repartition(sidecarTasks(candidates.size), col("__f"))
-        .sortWithinPartitions("__f", "__pos")
-        .mapPartitions { (it: Iterator[org.apache.spark.sql.Row]) =>
-          val pfs = new Path(dvRoot).getFileSystem(conf.value)
-          val done = scala.collection.mutable.ArrayBuffer.empty[String]
-          var cur: String = null
-          var out: org.apache.hadoop.fs.FSDataOutputStream = null
-          var tmp: Path = null
-          var olds: BufferedIterator[Long] = Iterator.empty.buffered
-          var last = -1L
-          def emit(pos: Long): Unit = if (pos != last) {
-            // the sidecar format (and the CDF reader's BitSet) is
-            // Int-indexed; a single parquet file holding > 2^31 rows
-            // must fail loudly at build time, not mis-filter at read
-            require(pos <= Int.MaxValue,
-              s"DV position $pos exceeds Int range for file $cur")
-            out.write(s"$pos\n".getBytes("UTF-8"))
-            last = pos
-          }
-          def flush(): Unit = if (cur != null) {
-            olds.foreach(emit)
-            out.close()
-            val dst = new Path(s"$dvRoot/$cur.$dvId.dv")
-            pfs.mkdirs(dst.getParent) // rel carries the part=val subdir
-            pfs.delete(dst, false) // retried attempt: identical content
-            require(pfs.rename(tmp, dst), s"dv publish failed: $dst")
-            done += cur
-          }
-          it.foreach { r =>
-            val f = r.getString(0)
-            if (f != cur) {
-              flush(); cur = f; last = -1L
-              tmp = new Path(s"$dvRoot/.tmp-${
-                java.util.UUID.randomUUID.toString.take(12)}")
-              pfs.mkdirs(tmp.getParent)
-              out = pfs.create(tmp, false)
-              olds = prior.get(f).map { p =>
-                val in = scala.io.Source.fromInputStream(
-                  pfs.open(new Path(p)), "UTF-8")
-                try in.getLines().filter(_.nonEmpty).map(_.toLong)
-                  .toArray.sorted
-                finally in.close()
-              }.getOrElse(Array.empty[Long]).iterator.buffered
-            }
-            val pos = r.getLong(1)
-            while (olds.hasNext && olds.head < pos) emit(olds.next())
-            emit(pos)
-          }
-          flush()
-          done.iterator
-        }(org.apache.spark.sql.Encoders.STRING).collect()
-      written.sorted.toSeq.map(rel => Entry(v, "dv", s"$rel|$dvId"))
+      matched.select("__f", "__pos")
+        .repartition(writeTasks(candidates.size), col("__f"))
+        .mapPartitions(DeletionVectors.writeTask(s"$root/dv", dvId,
+          prior, conf))(Encoders.STRING)
+        .collect().sorted.toSeq.map(Entry(v, "dv", _))
     }
 
     /** SQL MERGE's two refusals (the Delta multiple-match error), in
@@ -3352,14 +3288,14 @@ object SnapshotLog {
       * upserts, ~10⁸× write amplification for a trickle of targeted
       * ones); this lands the same logical result as ONE commit that
       * moves O(victim rows + batch) bytes: matched target rows are
-      * TOMBSTONED into deletion-vector sidecars (positions via
+      * TOMBSTONED into deletion vectors (positions via
       * `_metadata.row_index`, zone-map + bloom pruned candidates,
-      * prior sidecars superseded) and the source batch lands as
+      * prior DVs superseded) and the source batch lands as
       * ordinary adds — no existing data file is read for rewrite,
       * none is removed. The dv entries and add entries ride one
       * segment, so readers see tombstones and replacements atomically;
       * [[commitMaterializeDv]] / compaction amortize the read-side
-      * anti-join away later, exactly as for MOR deletes. This is the
+      * DV filter away later, exactly as for MOR deletes. This is the
       * DV-based MERGE of production formats — the shape that keeps a
       * high-frequency upsert stream from rewriting the table once per
       * batch. Assumes `keyCol` unique within `source` (as
@@ -3395,14 +3331,11 @@ object SnapshotLog {
     }
 
     /** Merge-on-read AS-OF: [[asOf]] with the version's active
-      * deletion vectors applied — an anti-join on (file, position)
-      * against the delta-scale DV relation, so a table carrying live
-      * DVs keeps plan-time file pruning WITHOUT resurrecting
-      * MOR-deleted rows. With no active DVs this IS [[asOf]] (zero
-      * overhead). The join key is synthetic and collision-free, so the
-      * anti-join is exact; Spark plans it as a broadcast when the DV
-      * side is small (the common case — DVs are deferred rewrites,
-      * compaction keeps them bounded). */
+      * deletion vectors applied inside the scan of each DV'd file's
+      * group ([[readFilesMorAt]]), so a table carrying live DVs keeps
+      * plan-time file pruning WITHOUT resurrecting MOR-deleted rows,
+      * and building or planning the read starts no job. With no
+      * active DVs this IS [[asOf]] (zero overhead). */
     def asOfMor(v: Int, partTypes: StructType = new StructType()): DataFrame = {
       val files = liveFiles(v)
       require(files.nonEmpty, s"version $v of $root has no live files")
@@ -3413,7 +3346,7 @@ object SnapshotLog {
       * files that carry a DV (applying their deletes), leave every
       * other file by log reference, and retire the DVs via the
       * remove-entry fold. After this commit [[asOf]] ≡ [[asOfMor]]
-      * again and read-side anti-join overhead is zero — the
+      * again and the read-side DV filter is gone — the
       * compaction half of the merge-on-read bargain. Pure
       * reorganization of surviving rows: the change feed shows
       * remove(dv'd files) + add(survivors). */
@@ -3462,10 +3395,12 @@ object SnapshotLog {
       // under the same horizon: a sidecar bound at vs is needed by
       // reads in [vs, next-binding-or-remove); when that window closes
       // at or before the horizon, no retained AS-OF can resolve it.
-      // (Sidecars of vacuumed files died with their data above.)
+      // (Sidecars of vacuumed files died with their data above; an
+      // inline DV has no sidecar.)
       val dvEvents = entries.collect {
         case Entry(ev, "dv", p) =>
-          val Array(rel, id) = p.split('|'); (rel, ev, Some(id))
+          val (rel, dv) = DeletionVectors.parse(p)
+          (rel, ev, Some(dv.id).filter(_ => dv.onDisk))
         case Entry(ev, "remove", p) => (p, ev, None)
       }
       dvEvents.groupBy(_._1).foreach { case (rel, evs) =>
@@ -3497,7 +3432,7 @@ object SnapshotLog {
       val dd = new Path(s"$root/dv")
       if (!fs.exists(dd)) return Seq.empty
       val bound = entries.collect { case Entry(_, "dv", p) =>
-        val Array(rel, id) = p.split('|'); s"$rel.$id.dv"
+        val (rel, dv) = DeletionVectors.parse(p); s"$rel.${dv.id}.dv"
       }.toSet
       filesUnder(dd).filter(p => p.endsWith(".dv") && !bound.contains(p))
     }
@@ -3515,18 +3450,26 @@ object SnapshotLog {
     def commitCompact(filesPerPartition: Int = 1,
         expectedVersion: Int = -1): Int = {
       val v = casCheck(expectedVersion)
-      // rows of one partition value spread over at most
-      // filesPerPartition shuffle tasks (the __bin column), so each
-      // partition dir compacts to at most that many files — one task
-      // per (value, bin), not one global task per value. Victims read
-      // through their DVs: compaction removes every file, retiring
-      // every DV binding, so it must apply them (it doubles as a
-      // materialization — exactly Delta's OPTIMIZE contract).
-      rewriteFiles(v, liveFiles(v - 1), "compact", distribute = false)(
-        _.withColumn("__bin", pmod(monotonically_increasing_id(),
-          lit(filesPerPartition.toLong)).cast("int"))
-        .repartition(col(writeLayout(v - 1, Nil)), col("__bin"))
-        .drop("__bin"))
+      val victims = liveFiles(v - 1)
+      // rows of one partition value spread round-robin over
+      // filesPerPartition bins, and each (value, bin) goes to its own
+      // write task: the bins of one value take consecutive task ids,
+      // so no task holds two bins of a value and each bin is one file.
+      // The write runs one task per (partition dir of the victims,
+      // bin), up to the shuffle partitions ([[writeTasks]]). Victims
+      // read through their DVs: compaction removes every file,
+      // retiring every DV binding, so it must apply them (it doubles as
+      // a materialization — exactly Delta's OPTIMIZE contract).
+      val tasks = writeTasks(filesPerPartition *
+        victims.map(_.split('/').dropRight(1).mkString("/")).distinct.size)
+      val fpp = filesPerPartition.toLong
+      rewriteFiles(v, victims, "compact", distribute = false)(
+        _.withColumn("__task", pmod(
+          hash(col(writeLayout(v - 1, Nil))).cast("long") * fpp +
+            pmod(monotonically_increasing_id(), lit(fpp)),
+          lit(tasks.toLong)).cast("int"))
+        .repartitionById(tasks, col("__task"))
+        .drop("__task"))
     }
 
     /** Zero-copy snapshot CLONE: populate THIS (empty) table with the
@@ -3534,8 +3477,8 @@ object SnapshotLog {
       * — the engine-native generalization of the reference's
       * clone_database (clone_databases.sh:220-253 dumps and re-loads
       * every row; here the "dump" is a manifest fold and the "load" is
-      * one hard link per live file). Each data file, its active DV
-      * sidecar, and its bloom sidecars are bound into the clone's tree
+      * one hard link per live file). Each data file, its active DV's
+      * sidecar (an inline DV has none), and its bloom sidecars are bound into the clone's tree
       * via `link(2)` (falling back to a byte copy off local
       * filesystems), the source's recorded zone-map stats are carried
       * VERBATIM (no footer re-read — the clone commit is metadata
@@ -3575,8 +3518,10 @@ object SnapshotLog {
         }
       }
       val dvs = src.dvFor(srcVersion)
-      dvs.foreach { case (rel, id) =>
-        bind(s"${src.root}/dv/$rel.$id.dv", s"$root/dv/$rel.$id.dv")
+      val dvFiles = dvs.toSeq.collect {
+        case (rel, dv) if dv.onDisk => (rel, dv.id) }
+      dvFiles.foreach { case (rel, id) =>
+        bind(src.dvPath(rel, id).toString, dvPath(rel, id).toString)
       }
       // stats carried verbatim from the source manifest — the clone
       // never opens a parquet footer
@@ -3609,15 +3554,14 @@ object SnapshotLog {
       // must not inherit a loser's unreferenced names
       try publishSegment(1,
         files.sorted.map(Entry(1, "add", _)) ++ stats ++ evolution ++
-          dvs.toSeq.sortBy(_._1).map { case (rel, id) =>
-            Entry(1, "dv", s"$rel|$id") })
+          dvs.toSeq.sortBy(_._1).map { case (rel, dv) => dv.entry(1, rel) })
       catch {
         case e: java.util.ConcurrentModificationException =>
           files.foreach { rel =>
             fs.delete(new Path(s"$dataDir/$rel"), false)
             dropSidecars(rel)
           }
-          dvs.foreach { case (rel, id) =>
+          dvFiles.foreach { case (rel, id) =>
             fs.delete(dvPath(rel, id), false) }
           throw e
       }

@@ -552,11 +552,13 @@ class FileIndexSpec extends SparkSpec {
     import graft.sources.SnapshotLog
     val root = java.nio.file.Files
       .createTempDirectory("graft_dvres_spec_").toString
+    // 600 scattered positions per delete: each DV is a sidecar file
+    def scattered(from: Long) = (from until from + 1200L by 2L).toDF("k")
     val t = new SnapshotLog.Table(spark, root)
-    t.commitAppend((1L to 40L).map(k => (k, "a")).toDF("k", "part")
+    t.commitAppend((1L to 4000L).map(k => (k, "a")).toDF("k", "part")
       .coalesce(1), "part")                       // v1
-    t.commitDeleteKeysMor(Seq(4L).toDF("k"), "k") // v2: binding A
-    t.commitDeleteKeysMor(Seq(8L).toDF("k"), "k") // v3: binding B supersedes A
+    t.commitDeleteKeysMor(scattered(1L), "k")     // v2: binding A
+    t.commitDeleteKeysMor(scattered(2001L), "k")  // v3: binding B supersedes A
     // age binding A out: its window [v2, v3) closes at v3 <= horizon.
     // Data files are never removed here, so they all survive — exactly
     // the case where the data-file existence check alone passes.
@@ -565,9 +567,19 @@ class FileIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("sidecar"), e.getMessage)
     // restoring to the CURRENT binding still works (B is alive)
     t.commitRestore(3)
-    assert(t.asOfMor(t.version).count() == 38)
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(root))
+    assert(t.asOfMor(t.version).count() == 2800)
+    // an inline DV lives in the log itself: vacuum cannot age it out,
+    // so the same restore succeeds
+    val small = new SnapshotLog.Table(spark, s"$root-inline")
+    small.commitAppend((1L to 40L).map(k => (k, "a")).toDF("k", "part")
+      .coalesce(1), "part")                       // v1
+    small.commitDeleteKeysMor(Seq(4L).toDF("k"), "k") // v2
+    small.commitDeleteKeysMor(Seq(8L).toDF("k"), "k") // v3
+    small.vacuum(0)
+    small.commitRestore(2)
+    assert(small.asOfMor(small.version).count() == 39)
+    Seq(root, s"$root-inline").foreach(r =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
   }
 
   test("scanAsOf: any reader predicate prunes files at plan time") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.MergeOnRead
-import graft.sources.{KeyRange, SnapshotLog}
+import graft.sources.{DeletionVectors, KeyRange, SnapshotLog}
 
 /** Structural contracts of the merge-on-read wave: the oracle proves
   * the VALUES; these prove the deletes were actually deferred (zero
@@ -10,6 +10,11 @@ import graft.sources.{KeyRange, SnapshotLog}
   * (only DV files rewritten), and the CDC blast radius actually
   * pruned. */
 class MergeOnReadSpec extends SparkSpec {
+
+  /** 600 keys two apart from `from`: their positions in a file of
+    * consecutive keys serialize above [[DeletionVectors.InlineMaxBytes]],
+    * so their DV is a sidecar file. */
+  private def scattered(from: Long): Seq[Long] = from until from + 1200L by 2L
 
   test("DV delete commits move zero data bytes and time-travel") {
     q("q_snapshot_mor_delete").collect() // force the staged build
@@ -47,13 +52,13 @@ class MergeOnReadSpec extends SparkSpec {
     // hit scan's shuffle)
     assert(report.jobs.last.tasks > 1,
       s"(call site, tasks): ${report.jobs.map(j => (j.callSite, j.tasks))}")
-    // every sidecar lists ascending distinct positions, both rounds' in all
-    val positions = dvs.toSeq.map { case (rel, id) =>
-      val src = scala.io.Source.fromFile(s"$root/dv/$rel.$id.dv", "UTF-8")
-      try src.getLines().filter(_.nonEmpty).map(_.toLong).toVector
-      finally src.close()
+    // every DV records its bitmap's cardinality, both rounds' in all
+    val positions = dvs.toSeq.map { case (rel, dv) =>
+      val bm = DeletionVectors.load(dv.loc(root, rel),
+        spark.sparkContext.hadoopConfiguration)
+      assert(!dv.isText && dv.card == bm.getLongCardinality, s"$rel: $dv")
+      bm.toArray.toVector
     }
-    assert(positions.forall(ps => ps == ps.distinct.sorted))
     assert(positions.map(_.size).sum == 16)
     assert(t.asOfMor(v).count() == 784)
     assert(t.asOfMor(v).filter(col("k") < 16).count() == 0)
@@ -221,6 +226,25 @@ class MergeOnReadSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r)))
   }
 
+  test("a MOR delete applies in partitions whose values the path escapes") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_dvescape_").toString
+    val t = new SnapshotLog.Table(spark, root)
+    val values = Seq("t:1", "a b", "x%y", "a+b")
+    t.commitAppend((1L to 12L).map(k => (k, values((k % 4).toInt)))
+      .toDF("k", "part").coalesce(1), "part")
+    // `_metadata.file_path` escapes these dirs once more (a%20b,
+    // t%253A1): the DVs must bind and apply under the log's rels
+    val v = t.commitDeleteKeysMor((1L to 4L).toDF("k"), "k")
+    assert(t.dvFor(v).keySet == t.liveFiles(v).toSet, s"${t.dvFor(v).keys}")
+    assert(t.asOfMor(v).select("k").as[Long].collect().sorted.toSeq ==
+      (5L to 12L))
+    t.commitMaterializeDv()
+    assert(t.asOf(t.version).count() == 8 && t.dvFor(t.version).isEmpty)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("legacy unsuffixed DV bindings still resolve after the rename") {
     import spark.implicits._
     val root = java.nio.file.Files
@@ -300,11 +324,13 @@ class MergeOnReadSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_dvret_").toString
     val t = new SnapshotLog.Table(spark, root)
-    t.commitAppend((1L to 40L).map(k => (k, "a")).toDF("k", "part")
+    t.commitAppend((1L to 4000L).map(k => (k, "a")).toDF("k", "part")
       .coalesce(1), "part")                                  // v1
     val Seq(f) = t.liveFiles(1)
-    t.commitDeleteKeysMor(Seq(3L).toDF("k"), "k")            // v2: dv A
-    t.commitDeleteKeysMor(Seq(5L).toDF("k"), "k")            // v3: dv B ⊇ A
+    // 600 scattered positions serialize above the inline limit, so
+    // each DV is a sidecar
+    t.commitDeleteKeysMor(scattered(1L).toDF("k"), "k")      // v2: dv A
+    t.commitDeleteKeysMor(scattered(2001L).toDF("k"), "k")   // v3: dv B ⊇ A
     def sidecars() = {
       val d = new java.io.File(s"$root/dv/${f.split('/').head}")
       if (!d.exists()) Seq.empty
@@ -315,13 +341,13 @@ class MergeOnReadSpec extends SparkSpec {
     t.commitAppend(Seq((99L, "a")).toDF("k", "part"), "part") // v4
     t.vacuum(retainVersions = 2)                    // horizon = 2
     assert(sidecars().size == 2, "v2 is retained; its sidecar must live")
-    assert(t.asOfMor(2).count() == 39)
+    assert(t.asOfMor(2).count() == 3400)
     // horizon passes v2: only the ACTIVE sidecar remains, reads intact
     t.vacuum(retainVersions = 0)
     assert(sidecars().size == 1, s"superseded sidecar must age out")
-    assert(t.asOfMor(t.version).count() == 39)
+    assert(t.asOfMor(t.version).count() == 2801)
     assert(t.asOfMor(t.version)
-      .filter(col("k").isin(3L, 5L)).count() == 0)
+      .filter(col("k").isin(3L, 2003L)).count() == 0)
     // an unbound (race-orphaned) sidecar is invisible and swept
     val orphan = java.nio.file.Paths.get(
       s"$root/dv/${f.split('/').head}/ghost.parquet.9-deadbeef.dv")
@@ -334,13 +360,13 @@ class MergeOnReadSpec extends SparkSpec {
     val t2root = java.nio.file.Files
       .createTempDirectory("graft_dvret2_").toString
     val t2 = new SnapshotLog.Table(spark, t2root)
-    t2.commitAppend((1L to 20L).map(k => (k, "a")).toDF("k", "part")
+    t2.commitAppend((1L to 4000L).map(k => (k, "a")).toDF("k", "part")
       .coalesce(1), "part")                                  // v1
-    t2.commitDeleteKeysMor(Seq(2L).toDF("k"), "k")           // v2: id X
-    t2.commitDeleteKeysMor(Seq(4L).toDF("k"), "k")           // v3: id Y
+    t2.commitDeleteKeysMor(scattered(1L).toDF("k"), "k")     // v2: id X
+    t2.commitDeleteKeysMor(scattered(2001L).toDF("k"), "k")  // v3: id Y
     t2.commitRestore(2)                                      // v4: rebind X
     t2.vacuum(retainVersions = 0)
-    assert(t2.asOfMor(t2.version).count() == 19,
+    assert(t2.asOfMor(t2.version).count() == 3400,
       "the re-bound sidecar must survive vacuum (open window)")
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
@@ -390,9 +416,9 @@ class MergeOnReadSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_dvvac_").toString
     val t = new SnapshotLog.Table(spark, root)
-    t.commitAppend((1L to 40L).map(k => (k, "x")).toDF("k", "part")
+    t.commitAppend((1L to 4000L).map(k => (k, "x")).toDF("k", "part")
       .coalesce(1), "part")
-    t.commitDeleteKeysMor(Seq(3L, 7L).toDF("k"), "k")
+    t.commitDeleteKeysMor(scattered(1L).toDF("k"), "k") // a sidecar DV
     val Seq(f) = t.liveFiles(1)
     // sidecar names are writer-unique (<v>-<uid>): a CAS-losing racer
     // can only orphan its own name, never overwrite the winner's bytes
@@ -403,12 +429,12 @@ class MergeOnReadSpec extends SparkSpec {
     }
     val Seq(side) = sidecars()
     assert(side.matches(""".*\.2-[0-9a-f]{8}\.dv"""), side)
-    assert(t.asOfMor(2).count() == 38)
+    assert(t.asOfMor(2).count() == 3400)
     t.commitMaterializeDv()
     t.vacuum(retainVersions = 0)
     assert(sidecars().isEmpty,
       "the removed file's DV sidecar must die with its data bytes")
-    assert(t.asOf(t.version).count() == 38)
+    assert(t.asOf(t.version).count() == 3400)
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(root))
   }

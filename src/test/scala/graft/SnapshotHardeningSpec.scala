@@ -115,6 +115,25 @@ class SnapshotHardeningSpec extends SparkSpec {
       "data/v7-part-00002-unpartitioned.parquet"))
   }
 
+  test("compaction writes in one task per (partition value, bin), a file each") {
+    val root = tmpRoot("scompact")
+    val t = new SnapshotLog.Table(spark, root)
+    (0 until 4).foreach(i => t.commitAppend(spark.range(i * 1000, i * 1000 + 1000)
+      .selectExpr("id AS k", "CAST(id % 2 AS STRING) AS part"), "part"))
+    val (v, report) = org.apache.spark.sql.graft.Trace(spark)(
+      t.commitCompact(filesPerPartition = 2))
+    // 2 partition values x 2 bins = 4 write tasks (AQE would coalesce
+    // an uncounted repartition of these rows into one)
+    val writes = report.stages.filter(_.shuffleReadBytes > 0)
+    assert(writes.map(_.tasks) == Seq(4), s"write stages: $writes")
+    val perPart = t.liveFiles(v).groupBy(_.split('/').head)
+      .map { case (p, fs) => p -> fs.size }
+    assert(perPart == Map("part=0" -> 2, "part=1" -> 2), s"$perPart")
+    assert(t.asOf(v).count() == 4000 &&
+      t.asOf(v).agg(sum("k")).head().getLong(0) == (0L until 4000L).sum)
+    rm(root)
+  }
+
   test("bloom probe cuts merge candidates below the range-stat set") {
     import spark.implicits._
     val root = tmpRoot("smergebloom")

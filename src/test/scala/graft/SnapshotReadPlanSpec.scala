@@ -34,19 +34,52 @@ class SnapshotReadPlanSpec extends SparkSpec {
 
   test("delete-keys candidate and compaction reads over > 32 files start no job") {
     val (t, v0) = table("int")
-    // MOR-deleted keys in 20 files (the DV sidecars are read by a
-    // `spark.read.text`, which lists above 32 paths): the reads below
-    // tag row positions and anti-join them
-    val v = t.commitDeleteKeysMor(spark.range(0, 20).toDF("k"), "k")
+    val v = t.commitDeleteKeysMor(spark.range(0, 40).toDF("k"), "k")
     val live = t.liveFiles(v)
-    assert(live.size > 32 && t.dvFor(v).size > 1,
+    assert(live.size > 32 && t.dvFor(v).size == 40,
       s"${live.size} live files, ${t.dvFor(v).size} with a DV")
     val (mor, morJobs) = Trace.jobCount(spark)(t.asOfMor(v))
     assert(morJobs == 0, s"$morJobs jobs building the position-tagged read")
     val (victims, compactJobs) = Trace.jobCount(spark)(t.readFilesMorAt(v, live))
     assert(compactJobs == 0, s"$compactJobs jobs building the compaction read")
-    assert(mor.count() == 3980 && victims.count() == 3980)
-    assert(sameRows(mor, t.asOf(v0).where("k >= 20")))
+    assert(mor.count() == 3960 && victims.count() == 3960)
+    assert(sameRows(mor, t.asOf(v0).where("k >= 40")))
+  }
+
+  /** The joins of `df`'s physical plan, and whether the plan applies
+    * deletion vectors in its scans. */
+  private def joinsAndDvFilter(df: DataFrame): (Int, Boolean) = {
+    val plan = df.queryExecution.sparkPlan
+    (plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      .size, plan.toString.contains("dv_keep"))
+  }
+
+  test("the merge-on-read read and a rewrite's victim read plan no join") {
+    val (t, _) = table("int")
+    val v = t.commitDeleteKeysMor(spark.range(0, 40).toDF("k"), "k")
+    assert(joinsAndDvFilter(t.asOfMor(v)) == ((0, true)))
+    assert(joinsAndDvFilter(t.readFilesMorAt(v, t.liveFiles(v))) == ((0, true)))
+  }
+
+  test("planning a SQL aggregate over a table with live DVs starts no job") {
+    val wh = Files.createTempDirectory("graft_read_plan_sql_").toString
+    spark.conf.set("spark.sql.catalog.gplan", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gplan.warehouse", wh)
+    spark.sql("CREATE TABLE gplan.t (k BIGINT, part STRING, v BIGINT) " +
+      "PARTITIONED BY (part)")
+    spark.sql("INSERT INTO gplan.t SELECT id, CAST(id % 40 AS STRING), " +
+      "id * 3 FROM range(0, 4000)")
+    spark.sql(s"DELETE FROM gplan.t WHERE k IN (${(0 until 40).mkString(", ")})")
+    val t = new SnapshotLog.Table(spark, s"$wh/t")
+    assert(t.dvFor(t.version).size == 40)
+    val df = spark.sql(
+      "SELECT part, count(*), sum(k) FROM gplan.t GROUP BY part")
+    val (_, jobs) = Trace.jobCount(spark)(df.queryExecution.executedPlan)
+    assert(jobs == 0, s"$jobs jobs planning the read")
+    val rows = df.collect()
+    assert(rows.length == 40 && rows.map(_.getLong(1)).sum == 3960 &&
+      rows.map(_.getLong(2)).sum == (40L until 4000L).sum)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wh))
   }
 
   for (partType <- Seq("int", "string"))
